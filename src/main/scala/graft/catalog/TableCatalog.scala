@@ -2476,9 +2476,6 @@ class TableCatalog(spark: SparkSession, root: String,
     * rewritten rows into the stream. */
   def versionGlob(fq: String): String = new Path(tableDir(fq), "v_*").toString
 
-  /** Append a single metadata/log row (log-table writer W7). */
-  def appendRow(fq: String, row: DataFrame): Unit = append(fq, row)
-
   // ---- DataSource V2 connector surface (graft.connector) ------------------
   // Planning-time metadata reads for [[graft.connector.GraftSource]]:
   // the connector resolves versions, file lists, `_STATS` intervals,

@@ -17,17 +17,31 @@ final case class RunContext(
   def newLogId(): String = UUID.randomUUID().toString
 }
 
+/** One IngestLog row: a step's outcome, row count and error text. */
+final case class LogEntry(step: String, status: String, rowCount: Long = -1,
+    error: String = "")
+
 /** Append-only run/step logging to a catalog log table (W7).
-  * reference: RAW_ADLS_TO_RAW_SNOWFLAKE.py:316-382 (+3 variants). */
+  * reference: RAW_ADLS_TO_RAW_SNOWFLAKE.py:316-382 (+3 variants).
+  * Every write is one versioned catalog commit, so callers with many
+  * rows (the precheck battery) hand them all to [[logAll]] at once. */
 final class IngestLog(spark: SparkSession, catalog: TableCatalog, logTable: String) {
   def log(ctx: RunContext, practice: String, fileType: String, step: String,
-      status: String, rowCount: Long = -1, error: String = ""): Unit = {
+      status: String, rowCount: Long = -1, error: String = ""): Unit =
+    logAll(ctx, practice, fileType, Seq(LogEntry(step, status, rowCount, error)))
+
+  /** All `entries` in ONE commit of one data file (coalesce(1): a local
+    * frame otherwise splits into one file per core); each row gets its
+    * own LOG_ID, all share one LOG_TIME. No entries, no commit. */
+  def logAll(ctx: RunContext, practice: String, fileType: String,
+      entries: Seq[LogEntry]): Unit = if (entries.nonEmpty) {
     import spark.implicits._
-    val row = Seq((ctx.newLogId(), ctx.parentRunId, practice, fileType, step,
-      status, rowCount, error, new java.sql.Timestamp(System.currentTimeMillis())))
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    val rows = entries.map(e => (ctx.newLogId(), ctx.parentRunId, practice,
+      fileType, e.step, e.status, e.rowCount, e.error, now))
       .toDF("LOG_ID", "PARENT_RUN_ID", "PRACTICE_NAME", "FILE_TYPE",
         "STEP_NAME", "STATUS", "ROW_COUNT", "ERROR_MESSAGE", "LOG_TIME")
-    catalog.append(logTable, row)
+    catalog.append(logTable, rows.coalesce(1))
   }
 }
 
@@ -289,25 +303,28 @@ final class PrecheckStage(spark: SparkSession, log: Option[IngestLog] = None) {
     if (files.isEmpty) return (true, Map.empty)
     // ONE Spark job for every file's line count (the old shape ran two
     // sequential jobs PER FILE — 2 000 jobs for a thousand-file drop);
-    // the 7-line heads are direct store reads, no job at all
+    // the 7-line heads are direct store reads, no job at all; and ONE
+    // log commit for every file's checks (a log row is a catalog commit).
+    // input_file_name() is URL-encoded (`a b.csv` reads `a%20b.csv`), so
+    // the key is decoded to match the listing's path.
     val totals = spark.read.textFile(files.map(_.path): _*)
       .groupBy(input_file_name().as("f")).count()
       .collect()
-      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath
-        -> r.getLong(1)).toMap
+      .map(r => new java.net.URI(r.getString(0)).getPath -> r.getLong(1)).toMap
     val heads = graft.util.Concurrent.forEach(files, 16)(
       f => f.path -> readHead(f.path, 7)).toMap
     val results = files.map { f =>
       val lines = heads(f.path)
-      val total = totals.getOrElse(
-        new org.apache.hadoop.fs.Path(f.path).toUri.getPath, 0L)
-      val checks = Precheck.checkFile(f.name, f.size, lines, total, delimiter, pc)
-      checks.foreach { c =>
-        log.foreach(_.log(ctx, practice, spec.fileType, s"PRECHECK:${c.checkName}",
-          c.status, -1, c.details))
-      }
-      f -> checks
+      // a file with a first line has a count; only a lineless one has none
+      val total = if (lines.isEmpty) 0L else totals.getOrElse(
+        new org.apache.hadoop.fs.Path(f.path).toUri.getPath,
+        throw new IllegalStateException(s"precheck: no line count for ${f.path}"))
+      f -> Precheck.checkFile(f.name, f.size, lines, total, delimiter, pc)
     }
+    // logged before any error move, so a moved file's rows are visible
+    log.foreach(_.logAll(ctx, practice, spec.fileType,
+      results.flatMap(_._2).map(c =>
+        LogEntry(s"PRECHECK:${c.checkName}", c.status, -1, c.details))))
     val failed = results.filter(_._2.exists(_.failed))
     failed.foreach { case (f, _) =>
       errorDir.foreach(ed => ArchiveMover.moveToError(spark, f.path, ed, ctx.parentRunId))

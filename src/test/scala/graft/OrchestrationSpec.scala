@@ -128,6 +128,100 @@ class OrchestrationSpec extends SparkTestBase {
     assert(!Files.exists(Paths.get(stage, "good.csv")))
   }
 
+  test("precheck logs every file's checks in one log commit") {
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val stage = tempDir("stage")
+    val errDir = tempDir("err")
+    writeFile(stage, "a.csv", "id,name\n1,a\n2,b\n")
+    writeFile(stage, "b.csv", "id,name\n3,c\n4,d\n")
+    writeFile(stage, "bad.csv", "id\n5\n6\n") // required `name` missing
+    val spec = IngestConfig.parse(gatedConfig).practices.head.ingest.head
+    val logTable = "LOGDB.S.PRECHECK_INGEST_LOG"
+    val log = new IngestLog(spark, cat, logTable)
+    log.log(RunContext(), "p", "F", "SEED", "SUCCESS") // the table exists
+    val v0 = cat.version(logTable).get
+    // at the error move the log rows must already be readable
+    var atMove = -1L
+    val notifier = new Notifier {
+      def notify(event: String, payload: Map[String, String]): Unit =
+        if (event == "precheck_failed") {
+          assert(new java.io.File(errDir).list().exists(_.startsWith("bad_PRI_")))
+          atMove = cat.count(logTable)
+        }
+    }
+    val ctx = RunContext(notifier = notifier)
+    val (ok, checks) = new PrecheckStage(spark, Some(log)).run(ctx, "p", spec,
+      stage, Some(errDir))
+    assert(!ok)
+    assert(cat.version(logTable).contains(v0 + 1))
+    val before = cat.dataFilePathsAt(logTable, v0).toSet
+    val after = cat.dataFilePathsAt(logTable, v0 + 1).toSet
+    assert(before.subsetOf(after) && (after -- before).size == 1)
+    val rows = cat.read(logTable).filter(col("PARENT_RUN_ID") === ctx.parentRunId)
+      .select("LOG_ID", "STEP_NAME", "STATUS", "ROW_COUNT", "ERROR_MESSAGE", "LOG_TIME")
+      .as[(String, String, String, Long, String, java.sql.Timestamp)].collect().toSeq
+    val all = checks.values.flatten.toSeq
+    assert(all.size == 9 + 9 + 8)
+    assert(rows.size == all.size)
+    assert(atMove == 1 + all.size)
+    assert(rows.map(r => (r._2, r._3)).sorted ==
+      all.map(c => (s"PRECHECK:${c.checkName}", c.status)).sorted)
+    assert(rows.map(_._1).distinct.size == rows.size)
+    assert(rows.map(_._6).distinct.size == 1)
+    assert(rows.forall(_._4 == -1L))
+    assert(rows.filter(_._3 == "FAIL").map(r => (r._2, r._5)) ==
+      Seq("PRECHECK:columns_required" -> "missing: name"))
+  }
+
+  test("logAll with no entries commits nothing") {
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val log = new IngestLog(spark, cat, "LOGDB.S.EMPTY_LOG")
+    log.logAll(RunContext(), "p", "F", Nil)
+    assert(!cat.exists("LOGDB.S.EMPTY_LOG"))
+    log.log(RunContext(), "p", "F", "RAW_LOAD", "SUCCESS", 1)
+    val v = cat.version("LOGDB.S.EMPTY_LOG")
+    log.logAll(RunContext(), "p", "F", Nil)
+    assert(cat.version("LOGDB.S.EMPTY_LOG") == v)
+  }
+
+  test("precheck accepts file names with a space or a percent sign") {
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val stage = tempDir("stage")
+    val errDir = tempDir("err")
+    writeFile(stage, "with space.csv", "id,name\n1,a\n2,b\n3,c\n")
+    writeFile(stage, "pct%41.csv", "id,name\n4,d\n5,e\n")
+    val spec = IngestConfig.parse(gatedConfig).practices.head.ingest.head
+    val (ok, checks) = new PrecheckStage(spark).run(RunContext(), "p", spec,
+      stage, Some(errDir))
+    assert(ok, checks)
+    assert(checks.map { case (f, cs) =>
+      f -> cs.find(_.checkName == "row_count").map(_.actual) } ==
+      Map("with space.csv" -> Some("3"), "pct%41.csv" -> Some("2")))
+    val results = new Pipeline(spark, cat).run(RunContext(), "p", spec, stage,
+      Some(errDir), None)
+    assert(results.map(_._1) == Seq("PRECHECK", "RAW"))
+    assert(results.forall(_._2.status == "SUCCESS"), results)
+    assert(results(1)._2.rowCount == 5)
+    assert(cat.count("R.S.T") == 5)
+    assert(new java.io.File(errDir).list().isEmpty)
+  }
+
+  test("precheck rejects an empty file, which has no line count") {
+    val stage = tempDir("stage")
+    val errDir = tempDir("err")
+    writeFile(stage, "empty.csv", "")
+    writeFile(stage, "good.csv", "id,name\n1,a\n2,b\n")
+    val spec = IngestConfig.parse(gatedConfig).practices.head.ingest.head
+    val (ok, checks) = new PrecheckStage(spark).run(RunContext(), "p", spec,
+      stage, Some(errDir))
+    assert(!ok)
+    assert(checks("empty.csv").map(c => (c.checkName, c.status)) ==
+      Seq("file_size" -> "FAIL"))
+    assert(!checks("good.csv").exists(_.failed))
+    assert(new java.io.File(errDir).list().filterNot(_.startsWith("."))
+      .exists(_.startsWith("empty_PRI_")))
+  }
+
   test("parallel archive mover relocates a many-file drop") {
     val stage = tempDir("stage")
     val arcDir = tempDir("arc")

@@ -125,6 +125,34 @@ class PipelineSpec extends SparkTestBase {
     assert(fields.flatMap(_.get("crm_office_tag")).exists(_.startsWith("OFF_")))
   }
 
+  test("accepted pipeline run commits the ingest log once per stage") {
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val stage = tempDir("stage")
+    Seq("a.csv", "b.csv").foreach(f => writeFile(stage, f,
+      s"appt_id,Appt Provider,Appt Location,Appt Status\n{$f},P,L,Scheduled\n"))
+    // CRM sync off: its own log row would be a fifth stage commit
+    val spec = IngestConfig.parse(configJson.replace(
+      "\"enabled\": true", "\"enabled\": false")).practices.head.ingest.head
+    assert(!spec.target.sync.exists(_.enabled))
+    import spark.implicits._
+    cat.append("LK.S.PATIENTS", Seq("zz").toDF("KNOWN_ID"))
+    val logTable = "LOGDB.S.INGEST_LOG"
+    val log = new IngestLog(spark, cat, logTable)
+    log.log(RunContext(), "p", "F", "SEED", "SUCCESS") // the table exists
+    val v0 = cat.version(logTable).get
+    val ctx = RunContext()
+    val results = new Pipeline(spark, cat, Some(log)).run(ctx, "p", spec, stage)
+    assert(results.map(_._1) == Seq("PRECHECK", "RAW", "REFINED", "CURATED"))
+    assert(results.forall(_._2.status == "SUCCESS"))
+    // PRECHECK (both files' checks in one commit), RAW, REFINED, CURATED
+    assert(cat.version(logTable).contains(v0 + 4))
+    val steps = cat.read(logTable).filter(col("PARENT_RUN_ID") === ctx.parentRunId)
+      .select("STEP_NAME").as[String].collect().toSeq
+    assert(steps.count(_.startsWith("PRECHECK:")) == 2 * 9)
+    assert(steps.filterNot(_.startsWith("PRECHECK:")).sorted ==
+      Seq("CURATED_LOAD", "RAW_LOAD", "REFINED_LOAD"))
+  }
+
   test("curated flag clear is scoped to consumed runs (read-clear race)") {
     val root = tempDir("wh")
     val cat = new TableCatalog(spark, root)
