@@ -1,43 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local FS without the per-file chmod fork (see GraftLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.GraftLocalFileSystem")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // size-based post-shuffle coalescing (see Verify)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // Long-lived-driver hygiene (this JVM executes 269 queries × 3
-      // passes): the default 100-entry codegen cache thrashes across
-      // queries, so the warm-up pass's compilations are evicted before
-      // the timed runs — defeating the bench's own warm-up contract —
-      // and broadcast/shuffle blocks of finished queries linger until a
-      // full GC lets the ContextCleaner's weak references fire (48 GiB
-      // heap ⇒ rarely). Same knobs any long-lived Spark driver
-      // (Thrift server, notebook kernel) runs with; neither changes
-      // what a query computes.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Single-session driver: per-session artifact isolation (Spark 4
-      // default) routes executor-side codegen class resolution through
-      // an ExecutorClassLoader that PROBES the driver's RPC file server
-      // for every unresolved name janino tries — thread dumps of slow
-      // bench runs showed task threads serialized on that classloader
-      // monitor inside FileDownloadChannel.read while the rest of the
-      // JVM idled. No artifacts are ever added here; disable the
-      // isolation machinery so codegen resolves classes in-process.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
     // Warm-up: run every query once at the smallest SF so whole-stage
     // codegen (janino) compiles each plan before timing — the timed
     // sf run then measures execution, not compilation. Falls back to

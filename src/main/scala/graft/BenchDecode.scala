@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark for the connector's decode paths on a DV-masked
@@ -11,11 +10,7 @@ import org.apache.spark.sql.functions._
   * `DECODE_DV columnar=<s> row=<s> win=<x>`. */
 object BenchDecode {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = Harness.session(Harness.cpus)
     s.sparkContext.setLogLevel("ERROR")
     val work = java.nio.file.Files.createTempDirectory("decbench").toString
     val cat = new graft.catalog.TableCatalog(s, work)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan/timing diagnostics: `runMain graft.Explain <sfDir> [query ...]`
   * prints each query's formatted physical plan and wall time (two runs —
   * cold and warm). With no query names, runs all. */
@@ -10,29 +8,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Single-session driver: per-session artifact isolation (Spark 4
-      // default) routes executor-side codegen class resolution through
-      // an ExecutorClassLoader that PROBES the driver's RPC file server
-      // for every unresolved name janino tries — thread dumps of slow
-      // bench runs showed task threads serialized on that classloader
-      // monitor inside FileDownloadChannel.read while the rest of the
-      // JVM idled. No artifacts are ever added here; disable the
-      // isolation machinery so codegen resolves classes in-process.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      // local FS without the per-file chmod fork (see GraftLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.GraftLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     spark.range(100000).selectExpr("sum(id)").collect() // warm
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Wall-clock attribution for a query: per-Spark-job durations with
   * call sites, plus the driver-side gap (time not covered by any job).
@@ -20,31 +19,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local FS without the per-file chmod fork (see GraftLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.GraftLocalFileSystem")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Single-session driver: per-session artifact isolation (Spark 4
-      // default) routes executor-side codegen class resolution through
-      // an ExecutorClassLoader that PROBES the driver's RPC file server
-      // for every unresolved name janino tries — thread dumps of slow
-      // bench runs showed task threads serialized on that classloader
-      // monitor inside FileDownloadChannel.read while the rest of the
-      // JVM idled. No artifacts are ever added here; disable the
-      // isolation machinery so codegen resolves classes in-process.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     // per-stage-name aggregation of task metrics: the sandbox's stand-in
     // for the UI's Stages tab (executor time, shuffle bytes, input bytes)

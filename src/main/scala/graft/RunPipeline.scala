@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.catalog.TableCatalog
 import graft.config.IngestConfig
 import graft.plans.{IngestLog, Pipeline, RunContext}
@@ -39,17 +38,7 @@ object RunPipeline {
       .ingest.find(_.fileType == fileType)
       .getOrElse(sys.error(s"unknown file_type: $fileType"))
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // local FS without the per-file chmod fork (see GraftLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.GraftLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     val catalog = new TableCatalog(spark, warehouse)
     val log = new IngestLog(spark, catalog, "GRAFT.LOGS.INGEST_LOG")

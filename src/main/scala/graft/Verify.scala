@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,34 +15,7 @@ object Verify {
       if (args.length == 3) { val ps = args(2).split(",").toSeq
         name => ps.exists(name.startsWith) }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local FS without the per-file chmod fork (see GraftLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.GraftLocalFileSystem")
-      // events.parquet uses TIMESTAMP(NANOS); read as long, converted
-      // to micros in Queries.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Single-session driver: per-session artifact isolation (Spark 4
-      // default) routes executor-side codegen class resolution through
-      // an ExecutorClassLoader that PROBES the driver's RPC file server
-      // for every unresolved name janino tries — thread dumps of slow
-      // bench runs showed task threads serialized on that classloader
-      // monitor inside FileDownloadChannel.read while the rest of the
-      // JVM idled. No artifacts are ever added here; disable the
-      // isolation machinery so codegen resolves classes in-process.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // size-based post-shuffle coalescing: writes after a shuffle
-      // produce right-sized files instead of one per shuffle partition
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
     // A query that throws must still leave a visible artifact: a marker
     // parquet whose schema (`__error`) can never match an oracle, so the

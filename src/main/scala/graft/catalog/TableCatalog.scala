@@ -711,7 +711,7 @@ class TableCatalog(spark: SparkSession, root: String,
     * (explicit manifests apply no tombstones — see
     * [[resolvedFlatFiles]]'s fold, which filters only deeper levels). */
   private def writeFlatRef(fq: String, dir: Path, prev: Int,
-      retired: Seq[Path] = Nil): Unit = {
+      retired: Seq[Path]): Unit = {
     val vNum = dir.getName.stripPrefix("v_").toInt
     val interval = flatCheckpointInterval
     if (interval > 0 && vNum > 0 && vNum % interval == 0) {
@@ -850,13 +850,9 @@ class TableCatalog(spark: SparkSession, root: String,
           spark.read.parquet(versionDir(fq, v).toString)
         else readMaskedFiles(fq, v, files) // chain-union schema: covers
           // evolved (declared-column) AND type-widened heterogeneity
-      // dropped columns hidden, renamed columns exposed logically
-      val df = toLogical(df0, m)
-      // declared (ALTER ADD COLUMNS) columns no file carries yet read
-      // as typed nulls
-      val have = df.columns.map(_.toLowerCase).toSet
-      m.adds.map(_._2).filterNot(f => have(f.name.toLowerCase))
-        .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+      // dropped columns hidden, renamed columns exposed logically,
+      // declared columns no file carries yet read as typed nulls
+      withDeclared(toLogical(df0, m), m)
     case None => throw new IllegalArgumentException(s"table not found: $fq")
   }
 
@@ -881,10 +877,7 @@ class TableCatalog(spark: SparkSession, root: String,
     val df0 =
       if (files.isEmpty) spark.read.parquet(dir.toString)
       else readMaskedFiles(fq, version, files) // each version sees ITS masks
-    val df = toLogical(df0, m)
-    val have = df.columns.map(_.toLowerCase).toSet
-    m.adds.map(_._2).filterNot(f => have(f.name.toLowerCase))
-      .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+    withDeclared(toLogical(df0, m), m)
   }
 
   /** The live committed version number (None = table absent). */
@@ -917,166 +910,12 @@ class TableCatalog(spark: SparkSession, root: String,
   def count(fq: String): Long =
     readIfExists(fq).map(_.count()).getOrElse(0L)
 
-  /** Write a brand-new version then atomically swap the pointer.
-    * Single-writer per table (the reference's pipeline model); readers
-    * are isolated by the pointer swap at any concurrency. */
   private def claimPath(fq: String, v: Int) =
     new Path(tableDir(fq), f"_COMMIT_$v%06d")
 
-  private def commitVersion(fq: String, write: Path => Unit): Unit =
-    commitVersionFrom(fq, currentVersion(fq).getOrElse(-1), write)
-
-  /** Commit a version COMPUTED AGAINST snapshot `basedOn` (-1 = table
-    * absent). Snapshot-conflict check: if any other writer committed
-    * since the caller read `basedOn`, this commit would carry a stale
-    * manifest (lost update) or stage DV addresses into files a
-    * concurrent rewrite already retired — so it FAILS with
-    * ConcurrentModificationException instead (Delta/Iceberg's
-    * optimistic-concurrency abort). The caller re-runs its whole
-    * operation against the winner's snapshot. Two layers: the version
-    * check catches a committed racer, the atomic create-exclusive
-    * claim marker serializes in-flight racers (the loser errors
-    * instead of overwriting the winner's pointer); the check re-runs
-    * UNDER the claim because a racer may commit-and-release between
-    * our first check and our claim. A claim left by a crashed writer
-    * goes stale after `staleClaimMs` and is swept here. */
-  private def commitVersionFrom(fq: String, basedOn: Int,
-      write: Path => Unit): Unit = {
-    def conflict(cur: Int) = new java.util.ConcurrentModificationException(
-      s"$fq advanced to v$cur since this operation read v$basedOn — " +
-        "rerun the operation against the current version")
-    val cur0 = currentVersion(fq).getOrElse(-1)
-    if (cur0 != basedOn) throw conflict(cur0)
-    val next = basedOn + 1
-    val dir = versionDir(fq, next)
-    val claim = claimPath(fq, next)
-    fs.mkdirs(tableDir(fq))
-    if (fs.exists(claim) && System.currentTimeMillis() -
-        fs.getFileStatus(claim).getModificationTime > staleClaimMs) {
-      // sweep a crashed writer's claim by ATOMIC RENAME to a unique
-      // tombstone: at most one sweeper wins the rename; losers fall
-      // through to the (atomic) create race below. A delete-then-create
-      // sweep could remove the FIRST sweeper's freshly recreated claim
-      // and let two writers commit the same version (lost update).
-      val tomb = new Path(tableDir(fq),
-        s"_SWEPT_${java.util.UUID.randomUUID()}")
-      try { if (fs.rename(claim, tomb)) fs.delete(tomb, false) }
-      catch { case _: java.io.IOException => () }
-    }
-    // the claim create must be ATOMIC check-and-create: HDFS/object
-    // stores give that via create(overwrite=false), but Hadoop's local
-    // filesystem implements it as a non-atomic exists()-then-create —
-    // two in-process racers could BOTH win and corrupt the commit.
-    // File.createNewFile is the local atomic primitive.
-    val claimed =
-      try {
-        if (fs.getUri.getScheme == "file")
-          new java.io.File(fs.makeQualified(claim).toUri.getPath)
-            .createNewFile()
-        else { fs.create(claim, false).close(); true }
-      } catch { case _: java.io.IOException => false }
-    if (!claimed) throw new java.util.ConcurrentModificationException(
-      s"concurrent commit in flight for $fq v$next — rerun the operation")
-    // ownership tag: write our UUID into the claim and verify it reads
-    // back — belt-and-braces against the residual sweep race (a slow
-    // second sweeper renaming OUR fresh claim away and recreating);
-    // re-verified immediately before the pointer swap in commitClaimed
-    val writerId = java.util.UUID.randomUUID().toString
-    def ownsClaim(): Boolean =
-      try {
-        val in = fs.open(claim)
-        val tag = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-        tag == writerId
-      } catch { case _: java.io.IOException => false }
-    try {
-      val out = fs.create(claim, true)
-      try out.write(writerId.getBytes("UTF-8")) finally out.close()
-      if (!ownsClaim()) throw new java.util.ConcurrentModificationException(
-        s"commit claim for $fq v$next stolen by a concurrent sweeper — " +
-          "rerun the operation")
-      val cur1 = currentVersion(fq).getOrElse(-1)
-      if (cur1 != basedOn) throw conflict(cur1)
-      commitClaimed(fq, next, dir, write, verifyOwner = () =>
-        if (!ownsClaim()) throw new java.util.ConcurrentModificationException(
-          s"commit claim for $fq v$next stolen before pointer swap — " +
-            "rerun the operation"))
-    } finally {
-      // release ONLY a claim we still own: after a detected steal the
-      // THIEF owns this path — an unconditional delete would re-open
-      // the version slot to a third writer while the thief may already
-      // be past its final verifyOwner check (double commit of v_next)
-      if (ownsClaim()) fs.delete(claim, false)
-    }
-  }
-
-  /** Commit with Delta-style conflict RESOLUTION for COMMUTING pairs:
-    * on a snapshot-conflict abort, re-validate against the winner —
-    * if every data file in `readFiles` (the files this operation's
-    * already-computed OUTPUT depends on) is still live and no NEW
-    * deletion-vector sidecar addresses any of them, the operation
-    * commutes with the winner (a blind append, typically) and REBASES:
-    * `write(dir, head)` re-runs against the advanced head, recomputing
-    * only the carried manifests — the expensive distributed output is
-    * reused. Genuine conflicts (the winner rewrote or newly masked a
-    * read file) abort exactly as before. Without this, maintenance
-    * commits (compact / z-order / DV mutations) STARVE under a
-    * continuous append stream — the first liveness property a 100 TB
-    * ingest-while-maintaining table needs. `readFiles = Nil` (blind
-    * append) rebases unconditionally. */
-  private[graft] def commitRebase(fq: String, basedOn: Int,
-      readFiles: Seq[Path], readDvs: Seq[Path],
-      write: (Path, Int) => Unit, maxRetries: Int = 50): Unit = {
-    def qp(p: Path) = fs.makeQualified(p).toUri.getPath
-    val readSet = readFiles.map(qp).toSet
-    val knownDvs = readDvs.map(qp).toSet
-    val basePcols =
-      if (basedOn < 0) Nil else partitionColsOf(fq, basedOn)
-    var head = basedOn
-    var attempts = 0
-    while (true) {
-      try {
-        commitVersionFrom(fq, head, dir => write(dir, head))
-        return
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempts += 1
-          if (attempts > maxRetries) throw e
-          val cur = currentVersion(fq).getOrElse(-1)
-          if (cur != head) {
-            // a winner COMMITTED: validate commutativity before rebasing
-            // (a blind append — empty read set — recomputes the layout
-            // in its closure, so only snapshot-bound ops need the
-            // layout guard)
-            if (readSet.nonEmpty) {
-              if (basedOn >= 0 && partitionColsOf(fq, cur) != basePcols)
-                throw new java.util.ConcurrentModificationException(
-                  s"$fq: a concurrent commit changed the partition layout — " +
-                    "rerun the operation against the current version")
-              val liveNow = dataFiles(fq, cur).map(qp).toSet
-              if (!readSet.subsetOf(liveNow)) throw new
-                  java.util.ConcurrentModificationException(
-                s"$fq: a concurrent commit rewrote file(s) this operation " +
-                  "read — rerun the operation against the current version")
-              val newDvs = dvFiles(fq, cur).filterNot(p => knownDvs(qp(p)))
-              if (newDvs.nonEmpty) {
-                val addressed = graft.connector.GraftParquetIO
-                  .readDvPairs(newDvs.map(_.toString),
-                    spark.sparkContext.hadoopConfiguration)
-                  .exists { case (f, _) => readSet(new Path(f).toUri.getPath) }
-                if (addressed) throw new
-                    java.util.ConcurrentModificationException(
-                  s"$fq: a concurrent commit masked row(s) in file(s) this " +
-                    "operation read — rerun against the current version")
-              }
-            }
-            head = cur
-          } else Thread.sleep(25L * math.min(attempts, 8)) // in-flight
-          // claim contention: wait for the holder to commit or release
-      }
-    }
-  }
+  /** The live version, -1 when the table is absent — the `basedOn` of
+    * a commit that reads nothing. */
+  private def headOf(fq: String): Int = currentVersion(fq).getOrElse(-1)
 
   /** Every catalog write goes out as TIMESTAMP_MICROS int64, not
     * Spark's default INT96: INT96 is deprecated AND stat-less (parquet
@@ -1094,76 +933,247 @@ class TableCatalog(spark: SparkSession, root: String,
     }
   }
 
-  private def commitClaimed(fq: String, next: Int, dir: Path,
-      write: Path => Unit, verifyOwner: () => Unit = () => ()): Unit = {
-    // crash recovery: a commit that died after writing data but before
-    // the pointer swap leaves a partial v_next dir the pointer never
-    // referenced — clear it, or this commit would fail on the existing
-    // path (or silently absorb the orphan's files into its manifest).
-    // The crashed attempt's CDC log entry must clear too, or a
-    // different operation re-committing this version number would
-    // serve the ORPHAN's change rows to the feed.
-    if (fs.exists(dir)) fs.delete(dir, true)
-    val staleCdc = new Path(cdcLogDir(fq), dir.getName)
-    if (fs.exists(staleCdc)) fs.delete(staleCdc, true)
-    val staleCdcEmpty = new Path(cdcLogDir(fq), s"${dir.getName}._EMPTY")
-    if (fs.exists(staleCdcEmpty)) fs.delete(staleCdcEmpty, false)
-    // ... and the crashed attempt's `_SCHEMAS` action files: a died
-    // ALTER wrote `v{next}_*` actions the pointer never referenced —
-    // left in place they'd apply to whatever unrelated commit reuses
-    // this version number (an orphan `reset` would wipe the mapping).
-    val staleSchemas = schemasDir(fq)
-    if (fs.exists(staleSchemas))
-      fs.listStatus(staleSchemas).map(_.getPath)
-        .filter(_.getName.startsWith(f"v$next%06d_"))
-        .foreach(fs.delete(_, false))
-    withMicrosTimestamps { write(dir) }
-    try harvestStats(dir) catch { case _: Exception => () } // advisory
-    verifyOwner() // claim still ours? (stale-claim sweeper race)
-    val tmp = new Path(tableDir(fq), s"_CURRENT.tmp$next")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(currentPointer(fq))) fs.delete(currentPointer(fq), false)
-    if (!fs.rename(tmp, currentPointer(fq)))
-      throw new IllegalStateException(s"failed to commit $fq v$next")
-    // prune old versions (keeping one back for in-flight readers) —
-    // but NEVER a directory holding data referenced by the new
-    // version's manifest chain, nor by the kept-back previous
-    // version's. Ancestor-prefix check: partitioned chains nest data
-    // under partition subdirectories of old version dirs.
-    val live = (dataFiles(fq, next) ++ dvFiles(fq, next) ++
-      (if (next > 0 && fs.exists(versionDir(fq, next - 1)))
-        dataFiles(fq, next - 1) ++ dvFiles(fq, next - 1) else Nil))
-      .map(p => fs.makeQualified(p).toString).toSet
-    // flat dir-reference chains: every LINK dir must survive, even
-    // one holding no data files of its own (a metadata commit) —
-    // deleting it would break every later version's resolution
-    val linkDirs = flatChainDirNames(fq, next) ++
-      (if (next > 0 && fs.exists(versionDir(fq, next - 1)))
-        flatChainDirNames(fq, next - 1) else Set.empty)
-    // one listing of the table dir (not an existence probe per historic
-    // version number — O(live dirs) however long the commit history).
-    // A retired dir must also be OLDER than the reclamation grace
-    // before the commit-path pruner may delete it: a reader pinned
-    // more than one version back — a multi-hour job planned two
-    // commits ago, a time-travel query across a rewrite — must not
-    // race deletion (Delta's retention-clock shape). Explicit
-    // [[vacuum]] remains the real reclaimer; `graft.reclaimGraceMs`
-    // <= 0 restores eager reclamation.
-    val graceMs = spark.conf.getOption("graft.reclaimGraceMs")
-      .map(_.toLong).getOrElse(TableCatalog.DefaultReclaimGraceMs)
-    val cutoff = System.currentTimeMillis() - graceMs
-    fs.listStatus(tableDir(fq)).filter(_.isDirectory)
-      .filter(st => st.getPath.getName.matches("v_\\d{6}") &&
-        st.getPath.getName.stripPrefix("v_").toInt < next - 1 &&
-        !linkDirs.contains(st.getPath.getName) &&
-        st.getModificationTime <= cutoff)
-      .foreach { st =>
-        val p = st.getPath
-        val old = fs.makeQualified(p).toString
-        val referenced = live.exists(lp => lp == old || lp.startsWith(old + "/"))
-        if (!referenced) fs.delete(p, true)
+  /** THE commit protocol — every catalog write goes through here.
+    * `write(dir, head)` materializes version head+1 into `dir`
+    * against snapshot `head` (-1 = table absent); this function alone
+    * claims the version, checks it, clears a crashed attempt's debris,
+    * harvests stats, swaps the pointer and prunes.
+    *
+    * Snapshot conflicts: if any other writer committed since the caller
+    * read `basedOn`, this commit would carry a stale manifest (lost
+    * update) or stage DV addresses into files a concurrent rewrite
+    * already retired. Two layers catch it: the version check catches a
+    * committed racer, the atomic create-exclusive claim marker
+    * serializes in-flight racers (the loser errors instead of
+    * overwriting the winner's pointer); the check re-runs UNDER the
+    * claim because a racer may commit-and-release between our first
+    * check and our claim. A claim left by a crashed writer goes stale
+    * after `staleClaimMs` and is swept here. What a conflict does
+    * depends on `rebaseIf`:
+    *  - `None`: FAIL with ConcurrentModificationException
+    *    (Delta/Iceberg's optimistic-concurrency abort); the caller
+    *    re-runs its whole operation against the winner's snapshot.
+    *  - `Some((readFiles, readDvs))`: Delta-style conflict RESOLUTION
+    *    for commuting pairs — if every data file in `readFiles` (the
+    *    files the operation's already-computed OUTPUT depends on) is
+    *    still live, the layout is unchanged, and no NEW deletion-vector
+    *    sidecar addresses any of them, the operation commutes with the
+    *    winner and REBASES: `write` re-runs against the advanced head,
+    *    recomputing only the carried manifests — the expensive
+    *    distributed output is reused. Genuine conflicts (the winner
+    *    rewrote or newly masked a read file) abort as above. Without
+    *    this, maintenance commits (compact / z-order / DV mutations)
+    *    STARVE under a continuous append stream. `Some((Nil, Nil))`
+    *    (blind append) rebases unconditionally; a claim held in flight
+    *    is waited out. */
+  private[graft] def commit(fq: String, basedOn: Int,
+      rebaseIf: Option[(Seq[Path], Seq[Path])])(
+      write: (Path, Int) => Unit): Unit = {
+    def qp(p: Path) = fs.makeQualified(p).toUri.getPath
+    val readSet = rebaseIf.toSeq.flatMap(_._1).map(qp).toSet
+    val knownDvs = rebaseIf.toSeq.flatMap(_._2).map(qp).toSet
+    val basePcols =
+      if (readSet.isEmpty || basedOn < 0) Nil else partitionColsOf(fq, basedOn)
+    var head = basedOn
+    var attempts = 0
+    while (true) {
+      def conflict(cur: Int) = new java.util.ConcurrentModificationException(
+        s"$fq advanced to v$cur since this operation read v$head — " +
+          "rerun the operation against the current version")
+      val next = head + 1
+      val dir = versionDir(fq, next)
+      val claim = claimPath(fq, next)
+      try {
+        val cur0 = headOf(fq)
+        if (cur0 != head) throw conflict(cur0)
+        fs.mkdirs(tableDir(fq))
+        if (fs.exists(claim) && System.currentTimeMillis() -
+            fs.getFileStatus(claim).getModificationTime > staleClaimMs) {
+          // sweep a crashed writer's claim by ATOMIC RENAME to a unique
+          // tombstone: at most one sweeper wins the rename; losers fall
+          // through to the (atomic) create race below. A delete-then-
+          // create sweep could remove the FIRST sweeper's freshly
+          // recreated claim and let two writers commit the same version
+          // (lost update).
+          val tomb = new Path(tableDir(fq),
+            s"_SWEPT_${java.util.UUID.randomUUID()}")
+          try { if (fs.rename(claim, tomb)) fs.delete(tomb, false) }
+          catch { case _: java.io.IOException => () }
+        }
+        // the claim create must be ATOMIC check-and-create: HDFS/object
+        // stores give that via create(overwrite=false), but Hadoop's
+        // local filesystem implements it as a non-atomic
+        // exists()-then-create — two in-process racers could BOTH win
+        // and corrupt the commit. File.createNewFile is the local atomic
+        // primitive.
+        val claimed =
+          try {
+            if (fs.getUri.getScheme == "file")
+              new java.io.File(fs.makeQualified(claim).toUri.getPath)
+                .createNewFile()
+            else { fs.create(claim, false).close(); true }
+          } catch { case _: java.io.IOException => false }
+        if (!claimed) throw new java.util.ConcurrentModificationException(
+          s"concurrent commit in flight for $fq v$next — rerun the operation")
+        // ownership tag: write our UUID into the claim and verify it
+        // reads back — belt-and-braces against the residual sweep race
+        // (a slow second sweeper renaming OUR fresh claim away and
+        // recreating); re-verified immediately before the pointer swap
+        val writerId = java.util.UUID.randomUUID().toString
+        def ownsClaim(): Boolean =
+          try {
+            val in = fs.open(claim)
+            val tag = try new String(
+              org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
+            finally in.close()
+            tag == writerId
+          } catch { case _: java.io.IOException => false }
+        def verifyOwner(when: String): Unit =
+          if (!ownsClaim()) throw new java.util.ConcurrentModificationException(
+            s"commit claim for $fq v$next stolen $when — rerun the operation")
+        try {
+          val out = fs.create(claim, true)
+          try out.write(writerId.getBytes("UTF-8")) finally out.close()
+          verifyOwner("by a concurrent sweeper")
+          val cur1 = headOf(fq)
+          if (cur1 != head) throw conflict(cur1)
+          // crash recovery: a commit that died after writing data but
+          // before the pointer swap leaves a partial v_next dir the
+          // pointer never referenced — clear it, or this commit would
+          // fail on the existing path (or silently absorb the orphan's
+          // files into its manifest). The crashed attempt's CDC log
+          // entry must clear too, or a different operation re-committing
+          // this version number would serve the ORPHAN's change rows to
+          // the feed.
+          if (fs.exists(dir)) fs.delete(dir, true)
+          val staleCdc = new Path(cdcLogDir(fq), dir.getName)
+          if (fs.exists(staleCdc)) fs.delete(staleCdc, true)
+          val staleCdcEmpty = new Path(cdcLogDir(fq), s"${dir.getName}._EMPTY")
+          if (fs.exists(staleCdcEmpty)) fs.delete(staleCdcEmpty, false)
+          // ... and the crashed attempt's `_SCHEMAS` action files: a died
+          // ALTER wrote `v{next}_*` actions the pointer never referenced
+          // — left in place they'd apply to whatever unrelated commit
+          // reuses this version number (an orphan `reset` would wipe
+          // the mapping).
+          val staleSchemas = schemasDir(fq)
+          if (fs.exists(staleSchemas))
+            fs.listStatus(staleSchemas).map(_.getPath)
+              .filter(_.getName.startsWith(f"v$next%06d_"))
+              .foreach(fs.delete(_, false))
+          withMicrosTimestamps { write(dir, head) }
+          try harvestStats(dir) catch { case _: Exception => () } // advisory
+          verifyOwner("before pointer swap")
+          val tmp = new Path(tableDir(fq), s"_CURRENT.tmp$next")
+          val out2 = fs.create(tmp, true)
+          try out2.write(next.toString.getBytes("UTF-8")) finally out2.close()
+          if (fs.exists(currentPointer(fq))) fs.delete(currentPointer(fq), false)
+          if (!fs.rename(tmp, currentPointer(fq)))
+            throw new IllegalStateException(s"failed to commit $fq v$next")
+          // prune old versions (keeping one back for in-flight readers)
+          // — but NEVER a directory holding data referenced by the new
+          // version's manifest chain, nor by the kept-back previous
+          // version's. Ancestor-prefix check: partitioned chains nest
+          // data under partition subdirectories of old version dirs.
+          val kept = next +: (if (next > 0 && fs.exists(versionDir(fq, next - 1)))
+            Seq(next - 1) else Nil)
+          val live = kept.flatMap(k => dataFiles(fq, k) ++ dvFiles(fq, k))
+            .map(p => fs.makeQualified(p).toString).toSet
+          // flat dir-reference chains: every LINK dir must survive, even
+          // one holding no data files of its own (a metadata commit) —
+          // deleting it would break every later version's resolution
+          val linkDirs = kept.flatMap(flatChainDirNames(fq, _)).toSet
+          // one listing of the table dir (not an existence probe per
+          // historic version number — O(live dirs) however long the
+          // commit history). A retired dir must also be OLDER than the
+          // reclamation grace before the commit-path pruner may delete
+          // it: a reader pinned more than one version back — a
+          // multi-hour job planned two commits ago, a time-travel query
+          // across a rewrite — must not race deletion (Delta's
+          // retention-clock shape). Explicit [[vacuum]] remains the real
+          // reclaimer; `graft.reclaimGraceMs` <= 0 restores eager
+          // reclamation.
+          val graceMs = spark.conf.getOption("graft.reclaimGraceMs")
+            .map(_.toLong).getOrElse(TableCatalog.DefaultReclaimGraceMs)
+          val cutoff = System.currentTimeMillis() - graceMs
+          fs.listStatus(tableDir(fq)).filter(_.isDirectory)
+            .filter(st => st.getPath.getName.matches("v_\\d{6}") &&
+              st.getPath.getName.stripPrefix("v_").toInt < next - 1 &&
+              !linkDirs.contains(st.getPath.getName) &&
+              st.getModificationTime <= cutoff)
+            .foreach { st =>
+              val old = fs.makeQualified(st.getPath).toString
+              if (!live.exists(lp => lp == old || lp.startsWith(old + "/")))
+                fs.delete(st.getPath, true)
+            }
+          return
+        } finally {
+          // release ONLY a claim we still own: after a detected steal
+          // the THIEF owns this path — an unconditional delete would
+          // re-open the version slot to a third writer while the thief
+          // may already be past its final owner check (double commit of
+          // v_next)
+          if (ownsClaim()) fs.delete(claim, false)
+        }
+      } catch {
+        case e: java.util.ConcurrentModificationException
+            if rebaseIf.isDefined =>
+          attempts += 1
+          if (attempts > TableCatalog.MaxRebaseAttempts) throw e
+          val cur = headOf(fq)
+          if (cur != head) {
+            // a winner COMMITTED: validate commutativity before rebasing
+            // (a blind append — empty read set — recomputes the layout
+            // in its write, so only snapshot-bound ops need the guard)
+            if (readSet.nonEmpty) {
+              def abort(what: String) =
+                new java.util.ConcurrentModificationException(
+                  s"$fq: a concurrent commit $what — rerun the operation " +
+                    "against the current version")
+              if (basedOn >= 0 && partitionColsOf(fq, cur) != basePcols)
+                throw abort("changed the partition layout")
+              if (!readSet.subsetOf(dataFiles(fq, cur).map(qp).toSet))
+                throw abort("rewrote file(s) this operation read")
+              val newDvs = dvFiles(fq, cur).filterNot(p => knownDvs(qp(p)))
+              if (newDvs.nonEmpty && graft.connector.GraftParquetIO
+                  .readDvPairs(newDvs.map(_.toString),
+                    spark.sparkContext.hadoopConfiguration)
+                  .exists { case (f, _) => readSet(new Path(f).toUri.getPath) })
+                throw abort("masked row(s) in file(s) this operation read")
+            }
+            head = cur
+          } else Thread.sleep(25L * math.min(attempts, 8)) // in-flight
+          // claim contention: wait for the holder to commit or release
       }
+    }
+  }
+
+  /** Carry version `head`'s whole chain into the new version `dir`
+    * unchanged: a partitioned head's layout and chain directories, a
+    * flat head's O(1) back-reference (every Nth version a checkpoint;
+    * `retired` = the files a copy-on-write rewrite tombstones), and the
+    * head's DV manifest — outstanding masks stay valid, the files they
+    * address ride along unmodified. */
+  private def carryChain(fq: String, dir: Path, head: Int,
+      retired: Seq[Path] = Nil): Unit = {
+    val pcols = partitionColsOf(fq, head)
+    if (pcols.nonEmpty) {
+      writeLayout(fq, head, dir, pcols)
+      writeManifest(dir, chainDirs(fq, head))
+    } else writeFlatRef(fq, dir, head, retired)
+    val dvs = dvFiles(fq, head)
+    if (dvs.nonEmpty) writeDvManifest(dir, dvs)
+  }
+
+  /** Move executor-staged files into `dir` at their relative paths
+    * (rename: O(files) metadata ops, no byte copied). */
+  private def adoptStaged(dir: Path, staged: Seq[(Path, String)]): Unit = {
+    fs.mkdirs(dir)
+    staged.foreach { case (f, rel) =>
+      val dest = new Path(dir, rel)
+      fs.mkdirs(dest.getParent)
+      if (!fs.rename(f, dest))
+        throw new IllegalStateException(s"failed to adopt staged file $f")
+    }
   }
 
   /** Append (creating the table if absent — save_as_table semantics).
@@ -1174,46 +1184,32 @@ class TableCatalog(spark: SparkSession, root: String,
     * at the advanced head) instead of aborting — two racing appends
     * both land, in commit order. */
   def append(fq: String, df: DataFrame): Unit =
-    commitRebase(fq, currentVersion(fq).getOrElse(-1), Nil, Nil,
-      (dir, head) => {
-        if (head < 0)
-          df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-        else {
-          val pcols = partitionColsOf(fq, head)
-          val dvs = dvFiles(fq, head) // outstanding masks stay valid:
-          // the files they address are carried unmodified
-          // data files always carry PHYSICAL names (column mapping);
-          // constraints enforce on the logical view, inside the write;
-          // narrower numeric types upcast / wider ones widen the chain
-          val pdf = toPhysical(enforceConstraints(fq, head,
-            alignWriteTypes(fq, head, df)), columnMappingAt(fq, head))
-          if (pcols.nonEmpty) {
-            // partitioned chain: the delta lands partitioned in the new
-            // version dir; prior data rides along as whole directories
-            pdf.write.mode(SaveMode.Overwrite)
-              .partitionBy(pcols: _*).parquet(dir.toString)
-            writeLayout(fq, head, dir, pcols)
-            writeManifest(dir, chainDirs(fq, head))
-          } else {
-            pdf.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-            // O(delta) metadata: ONE dir-reference line however many
-            // files the chain holds (resolution walks the chain);
-            // every Nth version checkpoints the resolved list
-            writeFlatRef(fq, dir, head)
-          }
-          if (dvs.nonEmpty) writeDvManifest(dir, dvs)
-        }
-      })
+    commit(fq, headOf(fq), Some((Nil, Nil))) { (dir, head) =>
+      if (head < 0)
+        df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
+      else {
+        // data files always carry PHYSICAL names (column mapping);
+        // constraints enforce on the logical view, inside the write;
+        // narrower numeric types upcast / wider ones widen the chain.
+        // A partitioned chain's delta lands partitioned in the new
+        // version dir.
+        toPhysical(enforceConstraints(fq, head,
+          alignWriteTypes(fq, head, df)), columnMappingAt(fq, head))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy(partitionColsOf(fq, head): _*).parquet(dir.toString)
+        carryChain(fq, dir, head)
+      }
+    }
 
   /** Overwrite = drop + recreate with df's schema (unpartitioned).
     * Starts a fresh chain under the caller's own column names — any
     * prior rename/drop mapping is reset from this version on. */
   def overwrite(fq: String, df: DataFrame): Unit = {
     val edf = enforceOnOverwrite(fq, df)
-    commitVersion(fq, dir => {
+    commit(fq, headOf(fq), None) { (dir, _) =>
       edf.write.mode(SaveMode.Overwrite).parquet(dir.toString)
       resetSchemaActions(fq, dir, carryConstraints = true)
-    })
+    }
   }
 
   /** PARTITION EVOLUTION (Iceberg-style): append `df` under a NEW
@@ -1253,13 +1249,13 @@ class TableCatalog(spark: SparkSession, root: String,
       else dataFiles(fq, v)
     val pdf = toPhysical(enforceConstraints(fq, v, df),
       columnMappingAt(fq, v))
-    commitVersionFrom(fq, v, dir => {
+    commit(fq, v, None) { (dir, _) =>
       pdf.write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCols: _*).parquet(dir.toString)
       writePartitions(dir, partitionCols)
       writeManifest(dir, carried)
       if (dvs.nonEmpty) writeDvManifest(dir, dvs)
-    })
+    }
   }
 
   /** Overwrite with hive-style partitioning — the 100 TB layout: RAW/
@@ -1270,12 +1266,12 @@ class TableCatalog(spark: SparkSession, root: String,
     * version in `_PARTITIONS`). */
   def overwritePartitioned(fq: String, df: DataFrame, partitionCols: Seq[String]): Unit = {
     val edf = enforceOnOverwrite(fq, df)
-    commitVersion(fq, dir => {
+    commit(fq, headOf(fq), None) { (dir, _) =>
       edf.write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCols: _*).parquet(dir.toString)
       writePartitions(dir, partitionCols)
       resetSchemaActions(fq, dir, carryConstraints = true)
-    })
+    }
   }
 
   // ---- BUCKETED layout (Iceberg's bucket transform) ----------------------
@@ -1365,13 +1361,13 @@ class TableCatalog(spark: SparkSession, root: String,
       s"bucket column $bucketCol cannot also be an identity partition")
     val withB = bucketed(enforceOnOverwrite(fq, df), bucketCol, numBuckets)
     val layout = partitionCols :+ BucketCol
-    commitVersion(fq, dir => {
+    commit(fq, headOf(fq), None) { (dir, _) =>
       withB.repartition(layout.map(col): _*).write.mode(SaveMode.Overwrite)
         .partitionBy(layout: _*).parquet(dir.toString)
       writePartitions(dir, layout)
       writeBucketSpec(dir, bucketCol, numBuckets)
       resetSchemaActions(fq, dir, carryConstraints = true)
-    })
+    }
   }
 
   /** Change the bucket layout (count and/or key, optionally the
@@ -1412,10 +1408,10 @@ class TableCatalog(spark: SparkSession, root: String,
       throw new IllegalArgumentException(s"table not found: $fq"))
     val pcols = partitionColsOf(fq, v)
     val empty = toPhysical(read(fq).limit(0), columnMappingAt(fq, v))
-    commitVersionFrom(fq, v, dir => {
+    commit(fq, v, None) { (dir, _) =>
       empty.write.mode(SaveMode.Overwrite).parquet(dir.toString)
       if (pcols.nonEmpty) writeLayout(fq, v, dir, pcols)
-    })
+    }
   }
 
   // ---- CDC sidecars: the change feed survives rewrites --------------------
@@ -1533,14 +1529,14 @@ class TableCatalog(spark: SparkSession, root: String,
         .unionByName(assignments.foldLeft(changed) { case (d, (c, value)) =>
           d.withColumn(c, value) // rows already filtered: unconditional
         }.withColumn("_change_type", lit("insert")))
-      commitVersionFrom(fq, v, dir => {
+      commit(fq, v, None) { (dir, _) =>
         updated.write.mode(SaveMode.Overwrite)
           .partitionBy(pcols: _*).parquet(dir.toString)
         writeCdc(fq, dir, toPhysical(cdc, m))
         writeLayout(fq, v, dir, pcols)
         if (carriedDirs.nonEmpty) writeManifest(dir, carriedDirs)
         if (carriedDirs.nonEmpty && dvs.nonEmpty) writeDvManifest(dir, dvs)
-      })
+      }
       return
     }
     val files = dataFiles(fq, v)
@@ -1564,18 +1560,15 @@ class TableCatalog(spark: SparkSession, root: String,
       .unionByName(assignments.foldLeft(changed) { case (d, (c, value)) =>
         d.withColumn(c, value)
       }.withColumn("_change_type", lit("insert")))
-    commitVersionFrom(fq, v, dir => {
+    commit(fq, v, None) { (dir, _) =>
       updated.write.mode(SaveMode.Overwrite).parquet(dir.toString)
       writeCdc(fq, dir, toPhysical(cdc, m))
-      if (carried.nonEmpty) {
-        // O(touched) metadata: reference the prior version, tombstone
-        // only the rewritten files (Delta's remove-action shape)
-        writeFlatRef(fq, dir, v, retired = hit)
-      }
-      // carry masks for the carried files; entries addressing rewritten
-      // files no longer match any chain path and are inert
-      if (carried.nonEmpty && dvs.nonEmpty) writeDvManifest(dir, dvs)
-    })
+      // O(touched) metadata: reference the prior version, tombstone
+      // only the rewritten files (Delta's remove-action shape); the
+      // carried masks' entries addressing rewritten files no longer
+      // match any chain path and are inert
+      if (carried.nonEmpty) carryChain(fq, dir, v, retired = hit)
+    }
   }
 
   /** DELETE FROM fq WHERE — the GDPR/right-to-erasure shape. Same
@@ -1606,14 +1599,14 @@ class TableCatalog(spark: SparkSession, root: String,
       // CDC: the erased rows, recorded at commit time
       val cdc = dropRouting(hitRows).filter(where)
         .withColumn("_change_type", lit("delete"))
-      commitVersionFrom(fq, v, dir => {
+      commit(fq, v, None) { (dir, _) =>
         kept.write.mode(SaveMode.Overwrite)
           .partitionBy(pcols: _*).parquet(dir.toString)
         writeCdc(fq, dir, toPhysical(cdc, m))
         writeLayout(fq, v, dir, pcols)
         if (carriedDirs.nonEmpty) writeManifest(dir, carriedDirs)
         if (carriedDirs.nonEmpty && dvs.nonEmpty) writeDvManifest(dir, dvs)
-      })
+      }
       return
     }
     val files = dataFiles(fq, v)
@@ -1627,13 +1620,25 @@ class TableCatalog(spark: SparkSession, root: String,
     val kept = toPhysical(hitRows.filter(!where), m)
     val cdc = hitRows.filter(where) // the erased rows
       .withColumn("_change_type", lit("delete"))
-    commitVersionFrom(fq, v, dir => {
+    commit(fq, v, None) { (dir, _) =>
       kept.write.mode(SaveMode.Overwrite).parquet(dir.toString)
       writeCdc(fq, dir, toPhysical(cdc, m))
       if (carried.nonEmpty) // prior-version reference + tombstones
-        writeFlatRef(fq, dir, v, retired = hit)
-      if (carried.nonEmpty && dvs.nonEmpty) writeDvManifest(dir, dvs)
-    })
+        carryChain(fq, dir, v, retired = hit)
+    }
+  }
+
+  /** Version v's live rows under their logical names, each carrying
+    * its `__fp`/`__ri` DV address — the scan every merge-on-read
+    * mutation masks from. Partitioned chains project the address per
+    * scan before the layout union. */
+  private def addressedRows(fq: String, v: Int): DataFrame = {
+    val withPos =
+      if (partitionColsOf(fq, v).nonEmpty)
+        readPartitionedDirs(chainDirs(fq, v), withRowPos = true)
+      else withRowPos(readPhysical(fq, v, dataFiles(fq, v)))
+    toLogical(maskDvPos(withPos, dvFiles(fq, v), keepPos = true),
+      columnMappingAt(fq, v))
   }
 
   /** DELETE with merge-on-read deletion vectors: NO data file is
@@ -1654,33 +1659,6 @@ class TableCatalog(spark: SparkSession, root: String,
   def deleteWhereDV(fq: String, where: Column): Unit = {
     val v = currentVersion(fq).getOrElse(
       throw new IllegalArgumentException(s"table not found: $fq"))
-    val mDv = columnMappingAt(fq, v) // predicate binds to the logical view
-    val pcolsDv = partitionColsOf(fq, v)
-    if (pcolsDv.nonEmpty) {
-      val dvs = dvFiles(fq, v)
-      val carried = chainDirs(fq, v)
-      val newDv = toLogical(maskDvPos(
-          readPartitionedDirs(carried, withRowPos = true), dvs, keepPos = true),
-          mDv)
-        .filter(where)
-        .select(col("__fp").as("file"), col("__ri").as("row_index"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        if (newDv.count() == 0) return
-        // rebase across commuting winners (blind appends): the DV
-        // addresses stay valid iff no winner rewrote/re-masked the
-        // files we scanned — commitRebase validates exactly that
-        commitRebase(fq, v, dataFiles(fq, v), dvs, (dir, head) => {
-          fs.mkdirs(dir)
-          newDv.write.mode(SaveMode.Overwrite).parquet(dvDir(dir).toString)
-          writeLayout(fq, v, dir, pcolsDv)
-          writeManifest(dir, chainDirs(fq, head))
-          val headDvs = dvFiles(fq, head)
-          if (headDvs.nonEmpty) writeDvManifest(dir, headDvs)
-        })
-      } finally newDv.unpersist()
-      return
-    }
     val files = dataFiles(fq, v)
     if (files.isEmpty) return
     val dvs = dvFiles(fq, v)
@@ -1690,23 +1668,21 @@ class TableCatalog(spark: SparkSession, root: String,
     // sidecar write below reads the cache — the data files are read
     // exactly once per mutation, not once per downstream action.
     // (already-masked rows are excluded, so re-deleting is a no-op)
-    val newDv = toLogical(maskDv(readPhysical(fq, v, files),
-        dvs, keepPos = true), mDv)
-      .filter(where)
+    val newDv = addressedRows(fq, v).filter(where)
       .select(col("__fp").as("file"), col("__ri").as("row_index"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (newDv.count() == 0) return // nothing matches: version stands
-      // rebase across commuting winners (see partitioned branch above):
-      // a concurrent append's rows simply aren't subject to this
-      // delete's predicate (it read snapshot v) — Delta's semantics
-      commitRebase(fq, v, files, dvs, (dir, head) => {
+      // rebase across commuting winners (blind appends): the DV
+      // addresses stay valid iff no winner rewrote/re-masked the files
+      // we scanned — the protocol validates exactly that. A concurrent
+      // append's rows simply aren't subject to this delete's predicate
+      // (it read snapshot v) — Delta's semantics
+      commit(fq, v, Some((files, dvs))) { (dir, head) =>
         fs.mkdirs(dir)
         newDv.write.mode(SaveMode.Overwrite).parquet(dvDir(dir).toString)
-        writeFlatRef(fq, dir, head) // O(1) reference (Nth: checkpoint)
-        val headDvs = dvFiles(fq, head)
-        if (headDvs.nonEmpty) writeDvManifest(dir, headDvs)
-      })
+        carryChain(fq, dir, head)
+      }
     } finally newDv.unpersist()
   }
 
@@ -1722,40 +1698,7 @@ class TableCatalog(spark: SparkSession, root: String,
       where: Column): Unit = {
     val v = currentVersion(fq).getOrElse(
       throw new IllegalArgumentException(s"table not found: $fq"))
-    val mDv = columnMappingAt(fq, v) // logical view in, physical out
-    val pcolsDv = partitionColsOf(fq, v)
-    if (pcolsDv.nonEmpty) {
-      val dvs = dvFiles(fq, v)
-      val carried = chainDirs(fq, v)
-      val hit = toLogical(maskDvPos(
-          readPartitionedDirs(carried, withRowPos = true), dvs, keepPos = true),
-          mDv)
-        .filter(where)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        if (hit.count() == 0) return
-        val newDv = hit.select(col("__fp").as("file"),
-          col("__ri").as("row_index"))
-        // reroute: see updateWhere — a reassigned bucket source column
-        // must re-route its replacement row to the new bucket dir
-        val updated = toPhysical(reroute(fq, v,
-          assignments.foldLeft(hit.drop("__fp", "__ri")) {
-            case (d, (c, value)) => d.withColumn(c, value)
-          }), mDv)
-        // rebase across commuting winners (blind appends) — the MoR
-        // delete+reinsert stays valid while our scanned files live
-        commitRebase(fq, v, dataFiles(fq, v), dvs, (dir, head) => {
-          updated.write.mode(SaveMode.Overwrite)
-            .partitionBy(pcolsDv: _*).parquet(dir.toString)
-          newDv.write.mode(SaveMode.Overwrite).parquet(dvDir(dir).toString)
-          writeLayout(fq, v, dir, pcolsDv)
-          writeManifest(dir, chainDirs(fq, head))
-          val headDvs = dvFiles(fq, head)
-          if (headDvs.nonEmpty) writeDvManifest(dir, headDvs)
-        })
-      } finally hit.unpersist()
-      return
-    }
+    val pcols = partitionColsOf(fq, v)
     val files = dataFiles(fq, v)
     if (files.isEmpty) return
     val dvs = dvFiles(fq, v)
@@ -1765,25 +1708,28 @@ class TableCatalog(spark: SparkSession, root: String,
     // sidecar write AND the replacement-data write below each read the
     // cache — previously three separate jobs re-read every candidate
     // file (at 100 TB: three scans of the touched files instead of one).
-    val hit = toLogical(maskDv(readPhysical(fq, v, files),
-        dvs, keepPos = true), mDv)
-      .filter(where)
+    val hit = addressedRows(fq, v).filter(where)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (hit.count() == 0) return
       val newDv = hit.select(col("__fp").as("file"), col("__ri").as("row_index"))
-      val updated = toPhysical(enforceConstraints(fq, v,
-        assignments.foldLeft(hit.drop("__fp", "__ri")) {
-          case (d, (c, value)) => d.withColumn(c, value) // `where` applied
-        }), mDv)
-      // rebase across commuting winners (see partitioned branch)
-      commitRebase(fq, v, files, dvs, (dir, head) => {
-        updated.write.mode(SaveMode.Overwrite).parquet(dir.toString)
+      val set = assignments.foldLeft(hit.drop("__fp", "__ri")) {
+        case (d, (c, value)) => d.withColumn(c, value) // `where` applied
+      }
+      // partitioned: reroute (see updateWhere) — a reassigned bucket
+      // source column must re-route its replacement row to the new
+      // bucket dir
+      val updated = toPhysical(
+        if (pcols.nonEmpty) reroute(fq, v, set) else enforceConstraints(fq, v, set),
+        columnMappingAt(fq, v))
+      // rebase across commuting winners (see deleteWhereDV) — the MoR
+      // delete+reinsert stays valid while our scanned files live
+      commit(fq, v, Some((files, dvs))) { (dir, head) =>
+        updated.write.mode(SaveMode.Overwrite)
+          .partitionBy(pcols: _*).parquet(dir.toString)
         newDv.write.mode(SaveMode.Overwrite).parquet(dvDir(dir).toString)
-        writeFlatRef(fq, dir, head) // O(1) reference (Nth: checkpoint)
-        val headDvs = dvFiles(fq, head)
-        if (headDvs.nonEmpty) writeDvManifest(dir, headDvs)
-      })
+        carryChain(fq, dir, head)
+      }
     } finally hit.unpersist()
   }
 
@@ -1826,8 +1772,8 @@ class TableCatalog(spark: SparkSession, root: String,
             val dvs = dvFiles(fq, v) // merge through outstanding masks
             val base =
               if (hitDirs.isEmpty) src.limit(0) // no overlap: partitioned append
-              else toLogical(maskDvPos(
-                readPartitionedDirs(hitDirs, withRowPos = true), dvs), m)
+              else withDeclared(toLogical(maskDvPos(
+                readPartitionedDirs(hitDirs, withRowPos = true), dvs), m), m)
             // bucketed: the source frame never carries the routing
             // column — upsert on the LOGICAL columns, then reroute the
             // whole merged frame (derived column, recompute is exact)
@@ -1842,14 +1788,14 @@ class TableCatalog(spark: SparkSession, root: String,
               else Some(base.drop(BucketCol).join(keySet, keys, "left_semi")
                 .withColumn("_change_type", lit("delete"))
                 .unionByName(src.withColumn("_change_type", lit("insert"))))
-            commitVersionFrom(fq, v, dir => {
+            commit(fq, v, None) { (dir, _) =>
               merged.write.mode(SaveMode.Overwrite)
                 .partitionBy(pcols: _*).parquet(dir.toString)
               cdcOpt.foreach(c => writeCdc(fq, dir, toPhysical(c, m)))
               writeLayout(fq, v, dir, pcols)
               if (carriedDirs.nonEmpty) writeManifest(dir, carriedDirs)
               if (carriedDirs.nonEmpty && dvs.nonEmpty) writeDvManifest(dir, dvs)
-            })
+            }
           } finally src.unpersist()
           return
         }
@@ -1870,9 +1816,9 @@ class TableCatalog(spark: SparkSession, root: String,
           val (hit, carried) = files.partition(
             p => keyPred.contains(fs.makeQualified(p).toUri.getPath))
           val dvs = dvFiles(fq, v) // see updateWhere: merge through masks
-          val base =
+          val base = // declared columns too: the upsert unions by name
             if (hit.isEmpty) src.limit(0) // no overlap: plain append of source
-            else toLogical(maskDv(readPhysical(fq, v, hit), dvs), m)
+            else withDeclared(toLogical(maskDv(readPhysical(fq, v, hit), dvs), m), m)
           val merged = toPhysical(enforceConstraints(fq, v,
             graft.operators.MergeOps.upsert(base, src, keys)), m)
           // CDC when files rewrote (see the partitioned branch)
@@ -1882,13 +1828,12 @@ class TableCatalog(spark: SparkSession, root: String,
               .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi")
               .withColumn("_change_type", lit("delete"))
               .unionByName(src.withColumn("_change_type", lit("insert"))))
-          commitVersionFrom(fq, v, dir => {
+          commit(fq, v, None) { (dir, _) =>
             merged.write.mode(SaveMode.Overwrite).parquet(dir.toString)
             cdcOpt.foreach(c => writeCdc(fq, dir, toPhysical(c, m)))
             if (carried.nonEmpty) // reference + tombstones, O(touched)
-              writeFlatRef(fq, dir, v, retired = hit)
-            if (carried.nonEmpty && dvs.nonEmpty) writeDvManifest(dir, dvs)
-          })
+              carryChain(fq, dir, v, retired = hit)
+          }
         } finally src.unpersist()
     }
 
@@ -1955,7 +1900,7 @@ class TableCatalog(spark: SparkSession, root: String,
   /** After a maintenance rebase onto `head`, carry the commuting
     * winners' delta into a rewrite commit that otherwise materializes
     * snapshot `snapV`: their new data files (or chain dirs), AND any
-    * NEW deletion-vector sidecars. [[commitRebase]]'s validation
+    * NEW deletion-vector sidecars. [[commit]]'s rebase validation
     * guarantees those new DVs address only non-read-set (delta)
     * files — without carrying them, a delete that raced a compaction
     * would silently RESURRECT its masked rows in the compacted
@@ -2014,33 +1959,25 @@ class TableCatalog(spark: SparkSession, root: String,
     // or newly MASKED any of v's files still aborts (not commuting).
     val readFiles = dataFiles(fq, v)
     val readDvs = dvFiles(fq, v)
-    def carryDelta(dir: Path, head: Int): Unit =
-      carryRebaseDelta(fq, v, head, dir, readFiles, readDvs, pcols.nonEmpty)
     // compaction reads the LOGICAL view (dropped columns' bytes retire
-    // here — the mapping's erasure clock) and writes PHYSICAL names
-    val cm = columnMappingAt(fq, v)
-    if (pcols.nonEmpty) {
-      // co-locate rows of each partition before the partitioned write
-      // so each partition directory compacts to ~one file. Bucketed
-      // layouts re-derive the routing column first (the logical read
-      // hides it) — compaction is also what re-buckets inline-landed
-      // row-level-operation replacements back into the hive layout.
-      val df = toPhysical(reroute(fq, v, readVersion(fq, v)), cm)
-        .repartition(parts, pcols.map(col): _*)
-      commitRebase(fq, v, readFiles, readDvs, (dir, head) => {
-        df.write.mode(SaveMode.Overwrite)
-          .partitionBy(pcols: _*).parquet(dir.toString)
-        writeLayout(fq, v, dir, pcols)
-        carryDelta(dir, head)
-        writeCdcEmpty(fq, dir) // change-wise a no-op: the feed emits nothing
-      })
-    } else {
-      val df = toPhysical(readVersion(fq, v), cm).repartition(parts)
-      commitRebase(fq, v, readFiles, readDvs, (dir, head) => {
-        df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-        carryDelta(dir, head)
-        writeCdcEmpty(fq, dir) // change-wise a no-op: the feed emits nothing
-      })
+    // here — the mapping's erasure clock) and writes PHYSICAL names.
+    // Partitioned layouts co-locate rows of each partition before the
+    // partitioned write so each partition directory compacts to ~one
+    // file; bucketed ones re-derive the routing column first (the
+    // logical read hides it) — compaction is also what re-buckets
+    // inline-landed row-level-operation replacements back into the
+    // hive layout.
+    val df = toPhysical(reroute(fq, v, readVersion(fq, v)),
+      columnMappingAt(fq, v))
+    val sized =
+      if (pcols.nonEmpty) df.repartition(parts, pcols.map(col): _*)
+      else df.repartition(parts)
+    commit(fq, v, Some((readFiles, readDvs))) { (dir, head) =>
+      sized.write.mode(SaveMode.Overwrite)
+        .partitionBy(pcols: _*).parquet(dir.toString)
+      if (pcols.nonEmpty) writeLayout(fq, v, dir, pcols)
+      carryRebaseDelta(fq, v, head, dir, readFiles, readDvs, pcols.nonEmpty)
+      writeCdcEmpty(fq, dir) // change-wise a no-op: the feed emits nothing
     }
   }
 
@@ -2113,24 +2050,16 @@ class TableCatalog(spark: SparkSession, root: String,
       .drop("__z"), columnMappingAt(fq, zv))
     // same conflict RESOLUTION as compact: a z-order rewrite commutes
     // with concurrent blind appends (their delta rides by manifest,
-    // un-clustered until the next cycle) — see commitRebase
+    // un-clustered until the next cycle) — see [[commit]]
     val readFiles = dataFiles(fq, zv)
     val readDvs = dvFiles(fq, zv)
-    def carryDelta(dir: Path, head: Int): Unit =
+    commit(fq, zv, Some((readFiles, readDvs))) { (dir, head) =>
+      clustered.write.mode(SaveMode.Overwrite)
+        .partitionBy(zpcols: _*).parquet(dir.toString)
+      if (zpcols.nonEmpty) writeLayout(fq, zv, dir, zpcols)
       carryRebaseDelta(fq, zv, head, dir, readFiles, readDvs, zpcols.nonEmpty)
-    if (zpcols.nonEmpty)
-      commitRebase(fq, zv, readFiles, readDvs, (dir, head) => {
-        clustered.write.mode(SaveMode.Overwrite)
-          .partitionBy(zpcols: _*).parquet(dir.toString)
-        writeLayout(fq, zv, dir, zpcols)
-        carryDelta(dir, head)
-        writeCdcEmpty(fq, dir) // no row changes: the feed emits nothing
-      })
-    else commitRebase(fq, zv, readFiles, readDvs, (dir, head) => {
-      clustered.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-      carryDelta(dir, head)
       writeCdcEmpty(fq, dir) // no row changes: the feed emits nothing
-    })
+    }
   }
 
   // ---- per-file bloom index (point-lookup file skipping) ------------------
@@ -2345,7 +2274,7 @@ class TableCatalog(spark: SparkSession, root: String,
     val carried: Seq[Path] =
       if (pcols.nonEmpty) chainDirs(src, v) else dataFiles(src, v)
     val dvs = dvFiles(src, v)
-    commitVersion(dst, dir => {
+    commit(dst, headOf(dst), None) { (dir, _) =>
       fs.mkdirs(dir)
       if (pcols.nonEmpty) writeLayout(src, v, dir, pcols)
       writeManifest(dir, carried)
@@ -2383,7 +2312,7 @@ class TableCatalog(spark: SparkSession, root: String,
           }
         }
       }
-    })
+    }
   }
 
   // ---- incremental change data feed ---------------------------------------
@@ -2697,48 +2626,46 @@ class TableCatalog(spark: SparkSession, root: String,
       (bits(pos >> 6) & (1L << (pos & 63))) != 0L)
 
   /** DSv2 write path: adopt executor-staged parquet files as a new
-    * committed version — append carries the prior chain by manifest
-    * reference (outstanding DV masks stay valid: their files ride
-    * unmodified), overwrite starts a fresh chain. Files are MOVED
-    * (rename, O(files) metadata ops), never copied; the commit runs
-    * under the same optimistic-concurrency claim and stats harvest as
-    * every other writer. */
-  private[graft] def commitStagedFiles(fq: String, staged: Seq[Path],
-      overwrite: Boolean, epochTag: Option[String] = None,
+    * committed version. `staged` pairs each file with its path relative
+    * to the version dir — its bare name for a flat layout, its hive
+    * location (`p=v/part-…`) under `pcols`. Files are MOVED (rename,
+    * O(files) metadata ops), never copied. Append requires the live
+    * layout to match and carries the prior chain (outstanding DV masks
+    * stay valid: their files ride unmodified); overwrite starts a fresh
+    * chain. */
+  private[graft] def commitStaged(fq: String, staged: Seq[(Path, String)],
+      pcols: Seq[String], overwrite: Boolean, epochTag: Option[String] = None,
+      bucketSpec: Option[(String, Int)] = None,
       replaceTable: Boolean = false): Unit = {
     require(staged.nonEmpty, s"no data files staged for $fq")
-    val prior = if (overwrite) None else currentVersion(fq)
-    prior.foreach(v => require(partitionColsOf(fq, v).isEmpty,
-      s"DSv2 write targets unpartitioned tables; $fq is hive-partitioned"))
-    def write(dir: Path, head: Int): Unit = {
-      fs.mkdirs(dir)
-      staged.foreach { f =>
-        if (!fs.rename(f, new Path(dir, f.getName)))
-          throw new IllegalStateException(s"failed to adopt staged file $f")
-      }
+    def requireLayout(v: Int): Unit = {
+      val live = partitionColsOf(fq, v)
+      require(live == pcols,
+        s"append layout [${pcols.mkString(",")}] does not match table " +
+          s"layout [${live.mkString(",")}] of $fq")
+    }
+    val prior = headOf(fq)
+    if (!overwrite && prior >= 0) requireLayout(prior)
+    // staged appends are BLIND appends: rebase across winners
+    commit(fq, prior, if (overwrite) None else Some((Nil, Nil))) { (dir, head) =>
+      adoptStaged(dir, staged)
       if (!overwrite && head >= 0) {
-        require(partitionColsOf(fq, head).isEmpty,
-          s"DSv2 write targets unpartitioned tables; $fq is hive-partitioned")
+        requireLayout(head)
         // O(delta): one reference line per epoch/commit — a streaming
         // sink must not rewrite O(live files) of manifest per epoch;
         // every Nth epoch checkpoints so cold reads stay O(interval)
-        writeFlatRef(fq, dir, head)
-        val dvs = dvFiles(fq, head)
-        if (dvs.nonEmpty) writeDvManifest(dir, dvs)
-      }
+        carryChain(fq, dir, head)
+      } else if (pcols.nonEmpty) writePartitions(dir, pcols)
+      if (overwrite) resetSchemaActions(fq, dir, carryConstraints = !replaceTable)
+      bucketSpec.foreach { case (c, n) => writeBucketSpec(dir, c, n) }
       // streaming-sink idempotency: the epoch tag commits ATOMICALLY
-      // with the version (inside the write lambda, before the pointer
-      // swap) — a replayed epoch finds its tag and skips
+      // with the version (inside the write, before the pointer swap) —
+      // a replayed epoch finds its tag and skips
       epochTag.foreach { tag =>
         val out = fs.create(new Path(dir, "_EPOCH"), true)
         try out.write(tag.getBytes("UTF-8")) finally out.close()
       }
     }
-    if (overwrite) commitVersion(fq, dir => {
-      write(dir, -1)
-      resetSchemaActions(fq, dir, carryConstraints = !replaceTable) })
-    else // staged appends are BLIND appends: rebase across winners
-      commitRebase(fq, prior.getOrElse(-1), Nil, Nil, write)
     // durable replay marker OUTSIDE the version dirs: vacuum/maintain
     // prunes version dirs (and their in-dir `_EPOCH` tags) but must
     // never void sink idempotency — the table-level `_EPOCHS/` marker
@@ -2762,64 +2689,6 @@ class TableCatalog(spark: SparkSession, root: String,
 
   private def decodeEpochTag(name: String): String =
     new String(java.util.Base64.getUrlDecoder.decode(name), "UTF-8")
-
-  /** DSv2 PARTITIONED write: adopt executor-staged files that already
-    * sit in hive layout relative to a staging base (`p=v/part-…`) —
-    * each file renames into the same relative location under the new
-    * version dir, so the commit is O(files) metadata ops like the
-    * unpartitioned path. Appends require the live layout to match and
-    * carry the prior chain as directories. */
-  private[graft] def commitStagedPartitioned(fq: String,
-      staged: Seq[(Path, String)], pcols: Seq[String],
-      overwrite: Boolean, epochTag: Option[String] = None,
-      bucketSpec: Option[(String, Int)] = None,
-      replaceTable: Boolean = false): Unit = {
-    require(staged.nonEmpty, s"no data files staged for $fq")
-    require(pcols.nonEmpty, "partition columns required")
-    val prior = if (overwrite) None else currentVersion(fq)
-    prior.foreach { v =>
-      val live = partitionColsOf(fq, v)
-      require(live == pcols,
-        s"partitioned append layout [${pcols.mkString(",")}] does not " +
-          s"match table layout [${live.mkString(",")}]")
-    }
-    def write(dir: Path, head: Int): Unit = {
-      fs.mkdirs(dir)
-      staged.foreach { case (f, rel) =>
-        val dest = new Path(dir, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new IllegalStateException(s"failed to adopt staged file $f")
-      }
-      writePartitions(dir, pcols)
-      bucketSpec.foreach { case (c, n) => writeBucketSpec(dir, c, n) }
-      if (!overwrite && head >= 0) {
-        require(partitionColsOf(fq, head) == pcols,
-          s"partitioned append layout [${pcols.mkString(",")}] does not " +
-            s"match table layout [${partitionColsOf(fq, head).mkString(",")}]")
-        writeManifest(dir, chainDirs(fq, head))
-        val dvs = dvFiles(fq, head)
-        if (dvs.nonEmpty) writeDvManifest(dir, dvs)
-      }
-      // streaming-sink idempotency, same two-layer contract as
-      // commitStagedFiles: in-dir tag commits atomically …
-      epochTag.foreach { tag =>
-        val out = fs.create(new Path(dir, "_EPOCH"), true)
-        try out.write(tag.getBytes("UTF-8")) finally out.close()
-      }
-    }
-    if (overwrite) commitVersion(fq, dir => {
-      write(dir, -1)
-      resetSchemaActions(fq, dir, carryConstraints = !replaceTable) })
-    else // staged partitioned appends are blind appends: rebase
-      commitRebase(fq, prior.getOrElse(-1), Nil, Nil, write)
-    // … and the vacuum-proof table-level marker lands after
-    epochTag.foreach { tag =>
-      val d = epochsDir(fq)
-      fs.mkdirs(d)
-      fs.create(new Path(d, encodeEpochTag(tag)), true).close()
-    }
-  }
 
   // ---- declared schema extensions + COLUMN MAPPING (_SCHEMAS/) -----------
   // ALTER TABLE ADD / RENAME / DROP COLUMN are METADATA commits,
@@ -2918,6 +2787,15 @@ class TableCatalog(spark: SparkSession, root: String,
   private[graft] def declaredColumns(fq: String, atV: Int)
       : Seq[org.apache.spark.sql.types.StructField] =
     columnMappingAt(fq, atV).adds.map(_._2)
+
+  /** A logical frame plus the declared (ALTER ADD COLUMNS) columns no
+    * file carries yet, as typed nulls. */
+  private def withDeclared(df: DataFrame,
+      m: TableCatalog.ColumnMapping): DataFrame = {
+    val have = df.columns.map(_.toLowerCase).toSet
+    m.adds.map(_._2).filterNot(f => have(f.name.toLowerCase))
+      .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+  }
 
   /** Physical→logical view of a frame: hidden (dropped) physicals
     * removed, renamed physicals exposed under their logical names.
@@ -3023,19 +2901,12 @@ class TableCatalog(spark: SparkSession, root: String,
 
   /** Metadata-only commit: carry the whole chain (data, DVs, layout)
     * unchanged; `extra(newVersion)` rides atomically with it. */
-  private def commitMetadata(fq: String, v: Int)(extra: Int => Unit): Unit = {
-    val pcols = partitionColsOf(fq, v)
-    val dvs = dvFiles(fq, v)
-    commitVersionFrom(fq, v, dir => {
+  private def commitMetadata(fq: String, v: Int)(extra: Int => Unit): Unit =
+    commit(fq, v, None) { (dir, _) =>
       fs.mkdirs(dir)
-      if (pcols.nonEmpty) {
-        writeLayout(fq, v, dir, pcols)
-        writeManifest(dir, chainDirs(fq, v))
-      } else writeFlatRef(fq, dir, v)
-      if (dvs.nonEmpty) writeDvManifest(dir, dvs)
+      carryChain(fq, dir, v)
       extra(v + 1)
-    })
-  }
+    }
 
   /** ALTER TABLE ADD COLUMNS: declare new nullable columns without
     * touching a data byte — existing rows read them as NULL, the next
@@ -3349,20 +3220,11 @@ class TableCatalog(spark: SparkSession, root: String,
     val prior = if (overwrite) None else currentVersion(fq)
     prior match {
       case Some(v) => // empty append: carry everything forward
-        val live = partitionColsOf(fq, v)
-        val dvs = dvFiles(fq, v)
-        commitVersionFrom(fq, v, dir => {
-          fs.mkdirs(dir)
-          if (live.nonEmpty) {
-            writeLayout(fq, v, dir, live)
-            writeManifest(dir, chainDirs(fq, v))
-          } else writeFlatRef(fq, dir, v)
-          if (dvs.nonEmpty) writeDvManifest(dir, dvs)
-        })
+        commitMetadata(fq, v)(_ => ())
       case None => // overwrite/create: schema-only zero-row version
         val empty = spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-        commitVersion(fq, dir => {
+        commit(fq, headOf(fq), None) { (dir, head) =>
           // bucketed layouts: the marker lands INSIDE a bucket dir so
           // every chain scan sees the same column set (the routing
           // column is path-typed on data files; a rootless marker
@@ -3375,109 +3237,57 @@ class TableCatalog(spark: SparkSession, root: String,
           bucketSpec.foreach { case (c, n) => writeBucketSpec(dir, c, n) }
           if (overwrite)
             resetSchemaActions(fq, dir, carryConstraints = !replaceTable)
-          checks.foreach { case (nm, ex) => writeSchemaAction(fq,
-            dir.getName.stripPrefix("v_").toInt, "addck", s"$nm\t$ex") }
-        })
-    }
-  }
-
-  /** Atomic replaceWhere (Delta's `INSERT INTO … REPLACE WHERE` /
-    * `writeTo.overwrite(cond)`): ONE commit masks every `where`-matching
-    * live row via a deletion-vector sidecar AND adopts the staged
-    * replacement files — a reader sees the delete and the insert
-    * together or neither. Cost O(matched + staged): no data file is
-    * rewritten, the prior chain rides by manifest reference. */
-  private[graft] def commitReplaceWhere(fq: String, staged: Seq[Path],
-      where: Column): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val pcols = partitionColsOf(fq, v)
-    val files = dataFiles(fq, v)
-    val dvs = dvFiles(fq, v)
-    // hive-partitioned targets mask via the layout-union read and land
-    // the replacement files INLINE (partition column as payload, like
-    // a pre-evolution chain entry) — compaction re-partitions later
-    val m = columnMappingAt(fq, v) // the predicate binds logically
-    val newDv =
-      if (files.isEmpty) None
-      else if (pcols.nonEmpty) Some(toLogical(maskDvPos(
-          readPartitionedDirs(chainDirs(fq, v), withRowPos = true),
-          dvs, keepPos = true), m)
-        .filter(where)
-        .select(col("__fp").as("file"), col("__ri").as("row_index")))
-      else Some(toLogical(maskDv(readPhysical(fq, v, files),
-          dvs, keepPos = true), m)
-        .filter(where)
-        .select(col("__fp").as("file"), col("__ri").as("row_index")))
-    val carried: Seq[Path] = // flat chains: ONE dir-reference line
-      if (pcols.nonEmpty) chainDirs(fq, v) else Seq(versionDir(fq, v))
-    commitVersionFrom(fq, v, dir => {
-      fs.mkdirs(dir)
-      staged.foreach { f =>
-        if (!fs.rename(f, new Path(dir, f.getName)))
-          throw new IllegalStateException(s"failed to adopt staged file $f")
-      }
-      newDv.foreach(_.write.mode(SaveMode.Overwrite)
-        .parquet(dvDir(dir).toString))
-      if (pcols.nonEmpty) writeLayout(fq, v, dir, pcols)
-      writeManifest(dir, carried)
-      if (dvs.nonEmpty) writeDvManifest(dir, dvs)
-    })
-  }
-
-  /** Row-level-operation commit (SQL UPDATE / MERGE / row-level
-    * DELETE through the connector): ONE version adopts the staged
-    * DELETE side (a parquet of (file, row_index) addresses → the
-    * `_DV/` sidecar) and the staged INSERT side (replacement/new-row
-    * data files), with the prior chain carried by manifest reference —
-    * delete+insert visible together or neither, O(touched rows), no
-    * data file rewritten. The row addresses come from the scan's
-    * `_gfile`/`_gpos` metadata columns, which render identically to
-    * `_metadata.file_path` (both are the FileSystem-qualified path
-    * string), so the catalog's exact-string DV join masks them. */
-  private[graft] def commitDelta(fq: String, dvStaged: Seq[Path],
-      dataStaged: Seq[Path], basedOn: Option[Int] = None): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    // snapshot-conflict check: the staged DV (file, row_index) pairs
-    // address the version the row-level SCAN read. If any other commit
-    // (compact/overwrite/another writer) landed since, those addresses
-    // may point at retired files — the DELETE side would silently
-    // match nothing while the INSERT side commits, duplicating rows.
-    // Abort instead (Delta/Iceberg's conflict semantics); the caller
-    // re-runs the whole operation against the current snapshot.
-    basedOn.filter(_ != v).foreach { b =>
-      throw new java.util.ConcurrentModificationException(
-        s"$fq advanced to v$v since the row-level scan read v$b — " +
-          "rerun the operation")
-    }
-    if (dvStaged.isEmpty && dataStaged.isEmpty) return // no-op op
-    // hive-partitioned targets: the prior chain rides as DIRECTORIES
-    // and the staged insert side lands INLINE in the new version dir
-    // (its partition column travels as data, like a pre-evolution
-    // entry — the layout-union read path resolves both); compaction
-    // re-partitions the replacements into the hive layout later
-    val pcols = partitionColsOf(fq, v)
-    val carried: Seq[Path] = // flat chains: ONE dir-reference line
-      if (pcols.nonEmpty) chainDirs(fq, v) else Seq(versionDir(fq, v))
-    val dvs = dvFiles(fq, v)
-    commitVersionFrom(fq, v, dir => {
-      fs.mkdirs(dir)
-      dataStaged.foreach { f =>
-        if (!fs.rename(f, new Path(dir, f.getName)))
-          throw new IllegalStateException(s"failed to adopt staged file $f")
-      }
-      if (dvStaged.nonEmpty) {
-        fs.mkdirs(dvDir(dir))
-        dvStaged.foreach { f =>
-          if (!fs.rename(f, new Path(dvDir(dir), f.getName)))
-            throw new IllegalStateException(s"failed to adopt staged DV $f")
+          checks.foreach { case (nm, ex) =>
+            writeSchemaAction(fq, head + 1, "addck", s"$nm\t$ex") }
         }
-      }
-      if (pcols.nonEmpty) writeLayout(fq, v, dir, pcols)
-      writeManifest(dir, carried)
-      if (dvs.nonEmpty) writeDvManifest(dir, dvs)
-    })
+    }
+  }
+
+  /** Row-level delta commit: ONE version adopts the staged INSERT side
+    * (replacement/new-row data files) and a DELETE side masked through
+    * a `_DV/` sidecar, with the prior chain carried by manifest
+    * reference — delete+insert visible together or neither,
+    * O(touched rows), no data file rewritten. `deletes` is either
+    *  - `Left(where)`: atomic replaceWhere (Delta's `INSERT INTO …
+    *    REPLACE WHERE` / `writeTo.overwrite(cond)`) — every
+    *    `where`-matching live row is masked; commits even with nothing
+    *    staged; or
+    *  - `Right(dvStaged)`: SQL UPDATE / MERGE / row-level DELETE
+    *    through the connector — staged parquet of (file, row_index)
+    *    addresses from the scan's `_gfile`/`_gpos` metadata columns,
+    *    which render identically to `_metadata.file_path` (both are the
+    *    FileSystem-qualified path string), so the catalog's
+    *    exact-string DV join masks them. Nothing staged is a no-op.
+    *
+    * `basedOn` is the version the row-level SCAN read: the staged DV
+    * pairs address it, so if any other commit (compact/overwrite/
+    * another writer) landed since, the DELETE side could silently match
+    * nothing while the INSERT side commits, duplicating rows — the
+    * commit aborts instead (Delta/Iceberg's conflict semantics) and the
+    * caller re-runs the whole operation. Hive-partitioned targets carry
+    * the prior chain as DIRECTORIES and land the insert side INLINE (its
+    * partition column travels as data, like a pre-evolution entry — the
+    * layout-union read resolves both); compaction re-partitions them
+    * later. */
+  private[graft] def commitDelta(fq: String, basedOn: Option[Int],
+      dataStaged: Seq[Path], deletes: Either[Column, Seq[Path]]): Unit = {
+    val v = currentVersion(fq).getOrElse(
+      throw new IllegalArgumentException(s"table not found: $fq"))
+    if (deletes == Right(Nil) && dataStaged.isEmpty) return // no-op op
+    val mask = deletes.swap.toOption.filter(_ => dataFiles(fq, v).nonEmpty)
+      .map(where => addressedRows(fq, v).filter(where)
+        .select(col("__fp").as("file"), col("__ri").as("row_index")))
+    try commit(fq, basedOn.getOrElse(v), None) { (dir, head) =>
+      adoptStaged(dir, dataStaged.map(f => (f, f.getName)))
+      mask.foreach(_.write.mode(SaveMode.Overwrite).parquet(dvDir(dir).toString))
+      deletes.foreach(dvs =>
+        if (dvs.nonEmpty) adoptStaged(dvDir(dir), dvs.map(f => (f, f.getName))))
+      carryChain(fq, dir, head)
+    } catch {
+      case e: java.util.ConcurrentModificationException if basedOn.isDefined =>
+        throw new java.util.ConcurrentModificationException(
+          s"${e.getMessage} (the row-level scan read v${basedOn.get})", e)
+    }
   }
 
   /** Epoch tags already committed into this table (streaming-sink
@@ -3621,6 +3431,9 @@ object TableCatalog {
     * COMMIT-path pruner may reclaim it; `graft.reclaimGraceMs`
     * overrides per session (<= 0 = eager). */
   private[graft] val DefaultReclaimGraceMs: Long = 24L * 3600 * 1000
+
+  /** Rebase attempts a commit with `rebaseIf` makes before giving up. */
+  private val MaxRebaseAttempts = 50
 
   /** The wider of two types when the pair is a SAFE widening — every
     * value of the narrower type representable EXACTLY in the wider:

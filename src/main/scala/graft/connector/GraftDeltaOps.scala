@@ -33,7 +33,8 @@ class GraftRowLevelOperation(root: String, fq: String,
   // (pinning survives commits that land mid-query) and the commit
   // verifies the table still sits at it — otherwise the staged DV
   // addresses could point into files a concurrent rewrite retired
-  // (see TableCatalog.commitDelta's conflict check)
+  // (TableCatalog.commitDelta hands it to the commit protocol as the
+  // snapshot the commit is based on)
   private val scanVersion: Option[Int] =
     new TableCatalog(SparkSession.active, root).version(fq)
 
@@ -82,9 +83,11 @@ class GraftDeltaBatchWrite(root: String, fq: String, rowSchema: StructType,
         physicalOf.get(f.name).map(p => f.copy(name = p)).getOrElse(f)))
     // table constraints apply to the REPLACEMENT rows (SQL UPDATE /
     // MERGE inserts) — same per-row predicate as every other write
-    // path; delete addresses carry no data to check
-    val enforcer = scanVersion.flatMap(v => GraftConstraintEnforcer
-      .compile(SparkSession.active, cat, fq, v, rowSchema))
+    // path; delete addresses carry no data to check, and a DELETE's
+    // row schema is empty
+    val enforcer = scanVersion.filter(_ => rowSchema.nonEmpty)
+      .flatMap(v => GraftConstraintEnforcer
+        .compile(SparkSession.active, cat, fq, v, rowSchema))
     new GraftDeltaWriterFactory(stagingDir, physSchema,
       GraftSource.shippedConf(), enforcer)
   }
@@ -95,7 +98,7 @@ class GraftDeltaBatchWrite(root: String, fq: String, rowSchema: StructType,
     val dataStaged = messages.toSeq.collect {
       case GraftDeltaMessage(_, ps) => ps.map(new Path(_)) }.flatten
     new TableCatalog(SparkSession.active, root)
-      .commitDelta(fq, dvStaged, dataStaged, basedOn = scanVersion)
+      .commitDelta(fq, scanVersion, dataStaged, Right(dvStaged))
     cleanup()
   }
 

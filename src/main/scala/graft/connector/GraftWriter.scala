@@ -238,7 +238,7 @@ class GraftWriteBuilder(root: String, fq: String, schema: StructType,
 
   /** `INSERT INTO … REPLACE WHERE cond` / `writeTo(t).overwrite(cond)`:
     * the condition becomes an ATOMIC delete+insert commit
-    * ([[TableCatalog.commitReplaceWhere]]) — matching rows masked via a
+    * ([[TableCatalog.commitDelta]]) — matching rows masked via a
     * DV sidecar, staged files adopted, one pointer swap. A full-table
     * condition (AlwaysTrue) degrades to plain overwrite. */
   override def overwrite(filters: Array[org.apache.spark.sql.sources.Filter])
@@ -385,26 +385,13 @@ class GraftStreamingWrite(root: String, fq: String, schema: StructType,
       enforcer)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val cat = new TableCatalog(spark, root)
+    val cat = new TableCatalog(SparkSession.active, root)
     val tag = s"$queryId:$epochId"
-    if (partitionCols.nonEmpty || bucketSpec.nonEmpty) {
-      val layout = partitionCols ++ bucketSpec.map(_ => TableCatalog.BucketCol)
-      val staged = messages.toSeq.collect {
-        case GraftPartitionedCommitMessage(files) =>
-          files.map { case (p, rel) => (new Path(p), rel) }
-      }.flatten
-      if (staged.nonEmpty && !cat.committedEpochs(fq).contains(tag))
-        cat.commitStagedPartitioned(fq, staged, layout,
-          overwrite = false, epochTag = Some(tag), bucketSpec = bucketSpec)
-    } else {
-      val staged = messages.toSeq.collect {
-        case GraftCommitMessage(paths) => paths.map(new Path(_))
-      }.flatten
-      if (staged.nonEmpty && !cat.committedEpochs(fq).contains(tag))
-        cat.commitStagedFiles(fq, staged, overwrite = false,
-          epochTag = Some(tag))
-    }
+    val staged = GraftCommitMessage.staged(messages)
+    if (staged.nonEmpty && !cat.committedEpochs(fq).contains(tag))
+      cat.commitStaged(fq, staged,
+        partitionCols ++ bucketSpec.map(_ => TableCatalog.BucketCol),
+        overwrite = false, epochTag = Some(tag), bucketSpec = bucketSpec)
     cleanupEpoch(epochId)
   }
 
@@ -461,34 +448,18 @@ class GraftBatchWrite(root: String, fq: String, schema: StructType,
       GraftSource.shippedConf(), targetFileBytes, bucketSpec, enforcer)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val cat = new TableCatalog(spark, root)
-    if ((partitionCols.nonEmpty || bucketSpec.nonEmpty) && replaceWhere.isEmpty) {
-      val staged = messages.collect {
-        case GraftPartitionedCommitMessage(files) =>
-          files.map { case (p, rel) => (new Path(p), rel) }
-      }.toSeq.flatten
-      if (staged.isEmpty) // empty input still COMMITS a version
-        cat.commitEmptyVersion(fq, schema, overwrite, layoutCols, bucketSpec,
-          replaceTable = replaceTable)
-      else cat.commitStagedPartitioned(fq, staged, layoutCols, overwrite,
-        bucketSpec = bucketSpec, replaceTable = replaceTable)
-      cleanup()
-      return
-    }
-    val staged = messages.toSeq.collect {
-      case GraftCommitMessage(paths) => paths.map(new Path(_))
-    }.flatten
+    val cat = new TableCatalog(SparkSession.active, root)
+    val staged = GraftCommitMessage.staged(messages)
     replaceWhere match {
       case Some(pred) => // atomic delete+insert, even with 0 new rows
-        cat.commitReplaceWhere(fq, staged, pred)
+        cat.commitDelta(fq, None, staged.map(_._1), Left(pred))
       case None if staged.isEmpty => // empty input still COMMITS a
         // version (Delta's contract): append carries the chain,
         // overwrite/create lands a schema-only zero-row file
-        cat.commitEmptyVersion(fq, schema, overwrite, Seq.empty,
+        cat.commitEmptyVersion(fq, schema, overwrite, layoutCols, bucketSpec,
           replaceTable = replaceTable)
-      case None => cat.commitStagedFiles(fq, staged, overwrite,
-        replaceTable = replaceTable)
+      case None => cat.commitStaged(fq, staged, layoutCols, overwrite,
+        bucketSpec = bucketSpec, replaceTable = replaceTable)
     }
     cleanup()
   }
@@ -511,6 +482,19 @@ class GraftBatchWrite(root: String, fq: String, schema: StructType,
   * fresh file at `targetFileBytes` (a hot task no longer emits one
   * giant file). */
 case class GraftCommitMessage(paths: Seq[String]) extends WriterCommitMessage
+
+object GraftCommitMessage {
+  /** Every file a write staged, with its path relative to the version
+    * dir that adopts it — a flat file's is its bare name. */
+  def staged(messages: Array[WriterCommitMessage]): Seq[(Path, String)] =
+    messages.toSeq.flatMap {
+      case GraftCommitMessage(paths) =>
+        paths.map { p => val f = new Path(p); (f, f.getName) }
+      case GraftPartitionedCommitMessage(files) =>
+        files.map { case (p, rel) => (new Path(p), rel) }
+      case _ => Nil
+    }
+}
 
 /** Partitioned staging: (absolute staged path, hive-relative path —
   * `p=v/part-…`) per file this task wrote. */

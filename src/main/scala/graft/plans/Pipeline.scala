@@ -67,11 +67,9 @@ final class RawStage(spark: SparkSession, catalog: TableCatalog,
       return StageResult("NO_FILES", 0, s"no files matching in $stageDir")
 
     val df = CsvStageReader.read(spark, files.map(_.path), spec.source)
-    val withMeta = RefinedOps.withRawMetadata(
-      CsvStageReader.withFileName(df).drop("file_name_raw"),
-      ctx.parentRunId,
+    val withMeta = RefinedOps.withRawMetadata(df, ctx.parentRunId,
       markNew = spec.target.refinedTable.isDefined,
-      fileName = element_at(split(input_file_name(), "/"), -1))
+      fileName = CsvStageReader.fileName)
 
     // write-side observed metric replaces the read-back verification
     // count: same number, zero extra jobs (the write action reports it)

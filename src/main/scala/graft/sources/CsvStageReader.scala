@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -93,8 +93,12 @@ object CsvStageReader {
     (good, bad)
   }
 
-  /** Per-file basename column derived from the scan's provenance. */
-  def withFileName(df: DataFrame): DataFrame =
-    df.withColumn("file_name",
-      element_at(split(input_file_name(), "/"), -1))
+  /** Each row's stage file name, as a listing names it:
+    * `input_file_name()` is a URL-encoded URI (`a b.csv` reads
+    * `a%20b.csv`, `%` reads `%25`), decoded here the way the precheck
+    * decodes it — not with `url_decode`, which turns `+` into a
+    * space. */
+  def fileName: Column =
+    udf((f: String) => new Path(new java.net.URI(f)).getName)
+      .apply(input_file_name())
 }

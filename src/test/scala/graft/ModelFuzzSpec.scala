@@ -20,6 +20,10 @@ import graft.catalog.TableCatalog
   *   - time travel at head-1 == the model snapshot taken then,
   *   - change-feed reconstruction: snapshot(from-1) + feed == snapshot(head)
   *     over spans free of schema-changing commits.
+  * Writes go through the catalog API and, for a share of appends,
+  * deletes, updates and replaces, through the connector write paths
+  * (DSv2 `writeTo` append — empty too — and `writeTo.overwrite(cond)`,
+  * SQL `UPDATE`/`DELETE`) of a per-run `GraftCatalog`.
   * Three fixed seeds run in CI; any falsification becomes a named
   * regression test. */
 class ModelFuzzSpec extends SparkTestBase {
@@ -173,6 +177,10 @@ class ModelFuzzSpec extends SparkTestBase {
 
     // ---- run ----
     spark.conf.set("graft.flatCheckpointInterval", "4")
+    val gc = s"fuzzcat$seed"
+    spark.conf.set(s"spark.sql.catalog.$gc", "graft.connector.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$gc.root", root)
+    val sqlT = s"$gc.$t"
     try {
       val init = freshRows(6)
       cat.overwrite(t, frame(init, qtyAsLong = false))
@@ -182,10 +190,21 @@ class ModelFuzzSpec extends SparkTestBase {
       (1 to nOps).foreach { opIdx =>
         val dice = rnd.nextDouble()
         var committed = true
-        if (dice < 0.18) { // append
-          val rows = freshRows(1 + rnd.nextInt(6))
-          trace += s"$opIdx append ${rows.size}"
-          cat.append(t, frame(rows, qtyLong))
+        if (dice < 0.18) { // append (catalog, or DSv2 — possibly empty)
+          val dsv2 = rnd.nextDouble() < 0.4
+          val rows = freshRows((if (dsv2) 0 else 1) + rnd.nextInt(6))
+          trace += s"$opIdx append ${rows.size} dsv2=$dsv2"
+          if (dsv2) frame(rows, qtyLong).writeTo(sqlT).append()
+          else cat.append(t, frame(rows, qtyLong))
+          rows.foreach(r => model(r.id) = r)
+        } else if (dice < 0.21) { // DSv2 replace where id in [lo, hi)
+          val lo = rnd.nextInt(nextId.toInt + 1).toLong
+          val hi = lo + 1 + rnd.nextInt(4)
+          val rows = freshRows(rnd.nextInt(4))
+          trace += s"$opIdx replaceWhere id in [$lo,$hi) +${rows.size}"
+          frame(rows, qtyLong).writeTo(sqlT)
+            .overwrite(col("id") >= lo && col("id") < hi)
+          model.filterInPlace((id, _) => id < lo || id >= hi)
           rows.foreach(r => model(r.id) = r)
         } else if (dice < 0.24) { // overwrite (fresh chain; constraints ride)
           val rows = freshRows(2 + rnd.nextInt(5))
@@ -198,18 +217,24 @@ class ModelFuzzSpec extends SparkTestBase {
         } else if (dice < 0.36 && model.nonEmpty) { // delete (DV or COW)
           val m = 2 + rnd.nextInt(5); val r0 = rnd.nextInt(m)
           val cow = rnd.nextDouble() < 0.3
-          trace += s"$opIdx delete id%$m==$r0 cow=$cow"
+          val sql = !cow && rnd.nextBoolean()
+          trace += s"$opIdx delete id%$m==$r0 cow=$cow sql=$sql"
           val pred = pmod(col("id"), lit(m.toLong)) === r0.toLong
-          if (cow) cat.deleteWhere(t, pred) else cat.deleteWhereDV(t, pred)
+          if (cow) cat.deleteWhere(t, pred)
+          else if (sql) spark.sql(s"DELETE FROM $sqlT WHERE pmod(id, $m) = $r0")
+          else cat.deleteWhereDV(t, pred)
           if (cow) lastRewriteV = cat.version(t).get
           model.filterInPlace((id, _) => math.floorMod(id, m.toLong) != r0)
         } else if (dice < 0.48 && model.nonEmpty) { // update (DV or COW)
           val m = 2 + rnd.nextInt(5); val r0 = rnd.nextInt(m)
           val cow = rnd.nextDouble() < 0.3
-          trace += s"$opIdx update qty+=7 id%$m==$r0 cow=$cow"
+          val sql = !cow && rnd.nextBoolean()
+          trace += s"$opIdx update qty+=7 id%$m==$r0 cow=$cow sql=$sql"
           val pred = pmod(col("id"), lit(m.toLong)) === r0.toLong
           val assign = Map("qty" -> (col("qty") + lit(7)))
           if (cow) cat.updateWhere(t, assign, pred)
+          else if (sql)
+            spark.sql(s"UPDATE $sqlT SET qty = qty + 7 WHERE pmod(id, $m) = $r0")
           else cat.updateWhereDV(t, assign, pred)
           if (cow) lastRewriteV = cat.version(t).get
           model.mapValuesInPlace { (id, r) =>
@@ -307,7 +332,11 @@ class ModelFuzzSpec extends SparkTestBase {
       }
       validate(nOps)
       validateFeed(nOps)
-    } finally spark.conf.unset("graft.flatCheckpointInterval")
+    } finally {
+      spark.conf.unset("graft.flatCheckpointInterval")
+      spark.conf.unset(s"spark.sql.catalog.$gc")
+      spark.conf.unset(s"spark.sql.catalog.$gc.root")
+    }
   }
   // scalastyle:on method.length cyclomatic.complexity
 

@@ -206,6 +206,20 @@ class OrchestrationSpec extends SparkTestBase {
     assert(new java.io.File(errDir).list().isEmpty)
   }
 
+  test("RAW file_name lineage holds the plain stage file names") {
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val stage = tempDir("stage")
+    writeFile(stage, "with space.csv", "id,name\n1,a\n2,b\n3,c\n")
+    writeFile(stage, "pct%41.csv", "id,name\n4,d\n5,e\n")
+    val spec = IngestConfig.parse(gatedConfig).practices.head.ingest.head
+    val results = new Pipeline(spark, cat).run(RunContext(), "p", spec, stage,
+      Some(tempDir("err")), None)
+    assert(results.forall(_._2.status == "SUCCESS"), results)
+    val names = cat.read("R.S.T").groupBy("file_name").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(names == Map("with space.csv" -> 3L, "pct%41.csv" -> 2L))
+  }
+
   test("precheck rejects an empty file, which has no line count") {
     val stage = tempDir("stage")
     val errDir = tempDir("err")

@@ -47,8 +47,8 @@ class Round7Spec extends SparkTestBase {
     val v0 = cat.version(t).get
     cat.append(t, (101L to 110L).toDF("k")) // a concurrent writer lands
     val ex = intercept[ConcurrentModificationException] {
-      cat.commitDelta(t, Nil, stageParquet((200L to 202L).toDF("k")),
-        basedOn = Some(v0))
+      cat.commitDelta(t, Some(v0), stageParquet((200L to 202L).toDF("k")),
+        Right(Nil))
     }
     assert(ex.getMessage.contains("rerun"))
     // the conflicting commit left no trace: version unchanged, rows intact
@@ -124,8 +124,8 @@ class Round7Spec extends SparkTestBase {
     val cat = new TableCatalog(spark, root)
     val t = "D.S.EPOCHS"
     cat.overwrite(t, (1L to 10L).toDF("k").repartition(2))
-    cat.commitStagedFiles(t, stageParquet((11L to 20L).toDF("k")),
-      overwrite = false, epochTag = Some("qid-7:42"))
+    cat.commitStaged(t, stageParquet((11L to 20L).toDF("k")).map(f => (f, f.getName)),
+      Nil, overwrite = false, epochTag = Some("qid-7:42"))
     assert(cat.committedEpochs(t).contains("qid-7:42"))
     // a rewrite then an append orphan the epoch's version dir, and the
     // retention sweep (commit-time pruner + vacuum) retires it…
@@ -277,9 +277,13 @@ class Round7Spec extends SparkTestBase {
           exception: Exception): Unit = ()
     }
     def captured(body: => Unit): Seq[String] = {
-      plans.clear()
       spark.listenerManager.register(listener)
       try {
+        // executions that finished BEFORE `body` (the previous step's
+        // verification read) may still be in flight on the async
+        // listener bus: let them land, then drop them
+        Thread.sleep(500)
+        plans.clear()
         body
         // QueryExecutionListener delivery is async on the listener bus
         var last = -1; var stable = 0

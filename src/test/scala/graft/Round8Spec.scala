@@ -1065,7 +1065,7 @@ class Round8Spec extends SparkTestBase {
     // files, so the rebase validates and commits on top
     var committedAt = -1
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    cat.commitRebase(t, v0, readFiles, Nil, (dir, head) => {
+    cat.commit(t, v0, Some((readFiles, Nil))) { (dir, head) =>
       committedAt = head
       // a marker commit carrying head's files (what compact would do):
       // new rows + a hand-rolled manifest referencing the head chain
@@ -1075,7 +1075,7 @@ class Round8Spec extends SparkTestBase {
       val out = fs.create(new Path(dir, "_MANIFEST"), true)
       try out.write(carried.mkString("\n").getBytes("UTF-8"))
       finally out.close()
-    })
+    }
     assert(committedAt == v0 + 1, "rebase must re-run against the winner")
     assert(cat.read(t).count() == 116) // 100 + 10 + 6: nothing lost
   }
@@ -1091,7 +1091,7 @@ class Round8Spec extends SparkTestBase {
     // the winner REWRITES every file (copy-on-write update touches all)
     cat.updateWhere(t, Map("flag" -> lit(1L)), col("k") > 0)
     val ex = intercept[java.util.ConcurrentModificationException] {
-      cat.commitRebase(t, v0, readFiles, Nil, (dir, head) => ())
+      cat.commit(t, v0, Some((readFiles, Nil)))((dir, head) => ())
     }
     assert(ex.getMessage.contains("rewrote"))
   }
@@ -1105,7 +1105,7 @@ class Round8Spec extends SparkTestBase {
     val readFiles = cat.dataFilePaths(t).map(new Path(_))
     cat.deleteWhereDV(t, col("k") % 10 === 0) // winner masks our files
     val ex = intercept[java.util.ConcurrentModificationException] {
-      cat.commitRebase(t, v0, readFiles, Nil, (dir, head) => ())
+      cat.commit(t, v0, Some((readFiles, Nil)))((dir, head) => ())
     }
     assert(ex.getMessage.contains("masked"))
   }
