@@ -353,7 +353,16 @@ class TableCatalog(spark: SparkSession, root: String,
     * range or prefix predicate over e.g. an ID-prefixed key skips
     * whole files from sidecar bytes, and the sidecar stays O(16 bytes)
     * per column however long the keys are. Serialized as
-    * `s:`-prefixed base64 lines next to the numeric entries. */
+    * `s:`-prefixed base64 lines next to the numeric entries.
+    *
+    * The footers in hand also settle two things: a flat write's
+    * ZERO-ROW part files (Spark's writer always writes partition 0,
+    * empty or not) are deleted when the same write left a file with
+    * rows — with no bounds and no rows, nothing would ever prune,
+    * probe away or rewrite them; an all-empty write keeps one, the
+    * schema carrier of a new or emptied table — and every kept file's
+    * Spark schema seeds the [[footerSchemaOf]] cache, so the next read
+    * does not open the footer again. */
   private def harvestStats(dir: Path): Unit = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -367,7 +376,7 @@ class TableCatalog(spark: SparkSession, root: String,
     // the driver (bounded pool, order-preserving) instead of reading
     // the commit's footers one by one; a 64-file commit harvests in
     // one round-trip's wall clock instead of 64
-    val lines = graft.util.Concurrent.forEach(
+    val harvested = graft.util.Concurrent.forEach(
         listFilesRecursive(dir).sortBy(_.toString), parallelism = 8) { f =>
       val key = fs.makeQualified(f).toUri.getPath
       val acc = scala.collection.mutable.LinkedHashMap
@@ -388,8 +397,9 @@ class TableCatalog(spark: SparkSession, root: String,
       // conjuncts these bounds eliminate on.
       val poisoned = scala.collection.mutable.Set.empty[String]
       var nBlocks = 0
+      var nRows = 0L
       val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try {
+      val schema = try {
         nBlocks = rd.getFooter.getBlocks.size()
         rd.getFooter.getBlocks.forEach { blk =>
           val rgAcc = scala.collection.mutable.LinkedHashMap
@@ -469,15 +479,15 @@ class TableCatalog(spark: SparkSession, root: String,
           }
         }
         // pseudo-column: the file's exact row count (powers fastCount)
-        val rows = BigDecimal(
-          rd.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
-        acc("__rows") = (rows, rows)
+        nRows = rd.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+        acc("__rows") = (BigDecimal(nRows), BigDecimal(nRows))
+        sparkSchemaOf(rd.getFooter.getFileMetaData.getSchema)
       } finally rd.close()
       // per-GROUP lines for a poisoned column stay: each group's own
       // chunk stats (where present) bound that group's values exactly;
       // the group whose stats were omitted simply has no line and
       // parses bound-free (kept) via its `__rows` marker.
-      acc.toSeq.filterNot(e => poisoned(e._1))
+      (f, nRows, schema, acc.toSeq.filterNot(e => poisoned(e._1))
         .map { case (c, (mn, mx)) => s"$key\t$c\t$mn\t$mx" } ++
         sacc.toSeq.filterNot(e => poisoned(e._1))
         .map { case (c, (mn, mx)) =>
@@ -486,8 +496,18 @@ class TableCatalog(spark: SparkSession, root: String,
             .map(b64.encodeToString).getOrElse("*") // * = unbounded
           s"$key\ts:$c\t$lo\t$hi"
         } ++
-        (if (nBlocks > 1) rgLines.toSeq else Nil)
-    }.flatten
+        (if (nBlocks > 1) rgLines.toSeq else Nil))
+    }
+    val emptyFlat = harvested.collect {
+      case (f, 0L, _, _) if fs.makeQualified(f.getParent) == fs.makeQualified(dir) => f
+    }
+    val dropped = (if (harvested.exists(_._2 > 0)) emptyFlat
+      else emptyFlat.drop(1)).toSet
+    dropped.foreach(fs.delete(_, false))
+    val kept = harvested.filterNot(h => dropped(h._1))
+    kept.foreach { case (f, _, schema, _) =>
+      TableCatalog.cachedPut(fs, f, "footer", schema) }
+    val lines = kept.flatMap(_._4)
     if (lines.nonEmpty) {
       val out = fs.create(statsPath(dir), true)
       try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
@@ -1461,16 +1481,87 @@ class TableCatalog(spark: SparkSession, root: String,
     else None
   }
 
-  /** Split a version's files into (files containing rows matching
-    * `pred`, untouched files). Parquet footer min/max stats prune the
-    * probe scan; comparison is by path, robust to URI qualification. */
-  private def touchedFiles(fq: String, v: Int, files: Seq[Path],
-      pred: Column, m: TableCatalog.ColumnMapping): (Seq[Path], Seq[Path]) = {
-    val hit = toLogical(readPhysical(fq, v, files), m)
-      .filter(pred)
-      .select(input_file_name().as("f")).distinct()
-      .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
-    files.partition(p => hit.contains(fs.makeQualified(p).toUri.getPath))
+  /** The files of flat version v that hold a row matching `pred`,
+    * planned from commit metadata first: the predicate's conjuncts,
+    * translated to source filters on PHYSICAL names, drop every file
+    * whose `_STATS` bounds rule one out (a conjunct that does not
+    * translate keeps every file), and a file whose `_STATS` records
+    * zero rows never matches. One survivor IS the answer (no job);
+    * several are probed together in ONE job with no exchange — a
+    * flag clear on a table that grows one file per run touches only
+    * the run's own file. Comparison is by path, robust to URI
+    * qualification. */
+  private def candidateFiles(fq: String, v: Int, files: Seq[Path],
+      pred: Column, m: TableCatalog.ColumnMapping): Seq[Path] = {
+    if (files.isEmpty) return Nil
+    def key(p: Path) = fs.makeQualified(p).toUri.getPath
+    val logical = toLogical(spark.createDataFrame(
+      java.util.List.of[org.apache.spark.sql.Row](),
+      graft.connector.GraftSource.physicalChainSchema(spark, this, fq, v)), m)
+    val filters = logical.filter(pred).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        graft.connector.FilterColumns.fromExpression(f.condition)
+          .map(graft.connector.FilterColumns.mapAttrs(_, m.physicalOf))
+    }.getOrElse(Nil)
+    val stats = statsByPath(fq, v)
+    val surviving = graft.connector.FileSkipping.surviving(this, fq, v,
+      files.map(p => fs.makeQualified(p).toString), filters).toSet
+    val cands = files.filter(p => surviving(fs.makeQualified(p).toString) &&
+      !stats.get(key(p)).flatMap(_.get("__rows")).exists(_._1 == 0))
+    if (cands.size <= 1) cands
+    else {
+      val hit = graft.util.SmallAgg.countBy(
+        toLogical(readPhysical(fq, v, cands), m).filter(pred), input_file_name())
+        .keySet.map(f => new Path(f).toUri.getPath)
+      cands.filter(p => hit(key(p)))
+    }
+  }
+
+  /** Commit a copy-on-write rewrite of flat version v's `hit` files.
+    * `data` (the replacement files) and `changes` (their CDC rows) are
+    * written to a staging dir under `<root>/_staging` BEFORE the
+    * claim, as two concurrent jobs; `matched` must be observed on
+    * `data` as `n`, the number of rows the predicate matched. Nothing
+    * matched: the staging dir goes and the current version stands.
+    * Otherwise the commit adopts the staged files by rename — data
+    * into the version dir, change rows as its `_CDCLOG` entry — and
+    * carries the rest of the chain with `hit` tombstoned. */
+  private def commitRewrite(fq: String, v: Int, hit: Seq[Path],
+      carried: Boolean, data: DataFrame, matched: org.apache.spark.sql.Observation,
+      changes: DataFrame): Unit = {
+    val staging = new Path(root, s"_staging/${java.util.UUID.randomUUID()}")
+    val dataDir = new Path(staging, "data")
+    val cdcDir = new Path(staging, "cdc")
+    try {
+      withMicrosTimestamps {
+        graft.util.Concurrent.forEach(Seq(data -> dataDir, changes -> cdcDir), 2) {
+          case (df, out) => df.write.mode(SaveMode.Overwrite).parquet(out.toString)
+        }
+      }
+      if (Option(matched.get("n")).forall(_.asInstanceOf[Long] == 0L)) return
+      val staged = fs.listStatus(dataDir).filter(_.isFile).map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .map(p => (p, p.getName)).toSeq
+      commit(fq, v, None) { (dir, _) =>
+        adoptStaged(dir, staged)
+        fs.mkdirs(cdcLogDir(fq))
+        if (!fs.rename(cdcDir, new Path(cdcLogDir(fq), dir.getName)))
+          throw new IllegalStateException(s"failed to adopt staged changes $cdcDir")
+        // O(touched) metadata: reference the prior version, tombstone
+        // only the rewritten files (Delta's remove-action shape); the
+        // carried masks' entries addressing rewritten files no longer
+        // match any chain path and are inert
+        if (carried) carryChain(fq, dir, v, retired = hit)
+      }
+    } finally {
+      fs.delete(staging, true)
+      // drop the `_staging` parent when empty; a concurrent writer
+      // staging there makes the delete fail, and the parent stays
+      try {
+        val parent = staging.getParent
+        if (fs.exists(parent) && fs.listStatus(parent).isEmpty) fs.delete(parent, false)
+      } catch { case _: java.io.IOException => () }
+    }
   }
 
   /** Split a partitioned version's leaf partition directories into
@@ -1540,18 +1631,15 @@ class TableCatalog(spark: SparkSession, root: String,
       return
     }
     val files = dataFiles(fq, v)
-    if (files.isEmpty) return
-    // single-file tables have nothing to prune — skip the probe job
-    val (hit, carried) =
-      if (files.size == 1) (files, Seq.empty[Path])
-      else touchedFiles(fq, v, files, where, m)
+    val hit = candidateFiles(fq, v, files, where, m)
     if (hit.isEmpty) return // no matching rows anywhere: current version stands
     // the rewrite must read THROUGH outstanding DV masks, or rows a
     // prior merge-on-read delete masked would resurrect in the rewrite
-    val dvs = dvFiles(fq, v)
-    val cur = toLogical(maskDv(readPhysical(fq, v, hit), dvs), m)
+    val cur = toLogical(maskDv(readPhysical(fq, v, hit), dvFiles(fq, v)), m)
+    val matched = org.apache.spark.sql.Observation()
     val updated = toPhysical(enforceConstraints(fq, v,
-      assignments.foldLeft(cur) { case (d, (c, value)) =>
+      assignments.foldLeft(cur.observe(matched,
+          sum(when(where, 1L).otherwise(0L)).as("n"))) { case (d, (c, value)) =>
         d.withColumn(c, when(where, value).otherwise(col(c)))
       }), m)
     // CDC: pre-image deletes + post-image inserts (O(touched rows))
@@ -1560,15 +1648,8 @@ class TableCatalog(spark: SparkSession, root: String,
       .unionByName(assignments.foldLeft(changed) { case (d, (c, value)) =>
         d.withColumn(c, value)
       }.withColumn("_change_type", lit("insert")))
-    commit(fq, v, None) { (dir, _) =>
-      updated.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-      writeCdc(fq, dir, toPhysical(cdc, m))
-      // O(touched) metadata: reference the prior version, tombstone
-      // only the rewritten files (Delta's remove-action shape); the
-      // carried masks' entries addressing rewritten files no longer
-      // match any chain path and are inert
-      if (carried.nonEmpty) carryChain(fq, dir, v, retired = hit)
-    }
+    commitRewrite(fq, v, hit, carried = hit.size < files.size, updated, matched,
+      toPhysical(cdc, m))
   }
 
   /** DELETE FROM fq WHERE — the GDPR/right-to-erasure shape. Same
@@ -1610,22 +1691,17 @@ class TableCatalog(spark: SparkSession, root: String,
       return
     }
     val files = dataFiles(fq, v)
-    if (files.isEmpty) return
-    val (hit, carried) =
-      if (files.size == 1) (files, Seq.empty[Path])
-      else touchedFiles(fq, v, files, where, m)
+    val hit = candidateFiles(fq, v, files, where, m)
     if (hit.isEmpty) return
-    val dvs = dvFiles(fq, v) // see updateWhere: read through the masks
-    val hitRows = toLogical(maskDv(readPhysical(fq, v, hit), dvs), m)
-    val kept = toPhysical(hitRows.filter(!where), m)
+    // see updateWhere: read through the masks
+    val hitRows = toLogical(maskDv(readPhysical(fq, v, hit), dvFiles(fq, v)), m)
+    val matched = org.apache.spark.sql.Observation()
+    val kept = toPhysical(hitRows.observe(matched,
+      sum(when(where, 1L).otherwise(0L)).as("n")).filter(!where), m)
     val cdc = hitRows.filter(where) // the erased rows
       .withColumn("_change_type", lit("delete"))
-    commit(fq, v, None) { (dir, _) =>
-      kept.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-      writeCdc(fq, dir, toPhysical(cdc, m))
-      if (carried.nonEmpty) // prior-version reference + tombstones
-        carryChain(fq, dir, v, retired = hit)
-    }
+    commitRewrite(fq, v, hit, carried = hit.size < files.size, kept, matched,
+      toPhysical(cdc, m))
   }
 
   /** Version v's live rows under their logical names, each carrying
@@ -2492,9 +2568,12 @@ class TableCatalog(spark: SparkSession, root: String,
     }.getOrElse(directFooterSchema(path))
 
   private def directFooterSchema(path: String)
+      : org.apache.spark.sql.types.StructType =
+    sparkSchemaOf(graft.connector.GraftParquetIO.fileSchema(path,
+      spark.sparkContext.hadoopConfiguration))
+
+  private def sparkSchemaOf(msg: org.apache.parquet.schema.MessageType)
       : org.apache.spark.sql.types.StructType = {
-    val msg = graft.connector.GraftParquetIO.fileSchema(path,
-      spark.sparkContext.hadoopConfiguration)
     val st = new org.apache.spark.sql.execution.datasources.parquet
       .ParquetToSparkSchemaConverter(spark.sessionState.conf)
       .convert(msg)

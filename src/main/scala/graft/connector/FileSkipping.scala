@@ -8,7 +8,7 @@ import graft.catalog.TableCatalog
 /** Spark source filters → Catalyst Columns, for the metadata-level DML
   * paths (SQL DELETE, replaceWhere). None = untranslatable — callers
   * must REJECT, never approximate. */
-private[connector] object FilterColumns {
+private[graft] object FilterColumns {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.{col => c, lit}
 
@@ -40,6 +40,58 @@ private[connector] object FilterColumns {
     val legs = filters.map(toColumn)
     if (legs.exists(_.isEmpty)) None
     else Some(legs.flatten.reduceOption(_ && _).getOrElse(lit(true)))
+  }
+
+  /** The inverse of [[toColumn]] for an ANALYZED predicate, limited
+    * to the shapes [[FileSkipping]] can decide: each conjunct comparing
+    * a top-level column with a constant (=, <, <=, >, >=, IN, prefix)
+    * becomes a source filter, its values in Spark's external form as a
+    * pushed filter carries them. Any other conjunct is left out — for
+    * skipping, a missing conjunct only keeps files. */
+  def fromExpression(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Seq[Filter] = {
+    import org.apache.spark.sql.catalyst.{expressions => E}
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+    object Attr {
+      def unapply(x: E.Expression): Option[String] = x match {
+        // `_STATS` string bounds are byte-ordered: only the default
+        // (binary) collation compares the same way
+        case a: E.AttributeReference if (a.dataType match {
+            case st: org.apache.spark.sql.types.StringType =>
+              st == org.apache.spark.sql.types.StringType
+            case _ => true
+          }) => Some(a.name)
+        case _ => None
+      }
+    }
+    object Const {
+      def unapply(x: E.Expression): Option[Any] =
+        if (!x.foldable) None
+        else try Some(convertToScala(x.eval(), x.dataType))
+        catch { case _: Exception => None } // e.g. an ANSI cast error
+    }
+    def leg(x: E.Expression): Option[Filter] = x match {
+      case E.EqualTo(Attr(a), Const(v))            => Some(EqualTo(a, v))
+      case E.EqualTo(Const(v), Attr(a))            => Some(EqualTo(a, v))
+      case E.GreaterThan(Attr(a), Const(v))        => Some(GreaterThan(a, v))
+      case E.GreaterThan(Const(v), Attr(a))        => Some(LessThan(a, v))
+      case E.GreaterThanOrEqual(Attr(a), Const(v)) => Some(GreaterThanOrEqual(a, v))
+      case E.GreaterThanOrEqual(Const(v), Attr(a)) => Some(LessThanOrEqual(a, v))
+      case E.LessThan(Attr(a), Const(v))           => Some(LessThan(a, v))
+      case E.LessThan(Const(v), Attr(a))           => Some(GreaterThan(a, v))
+      case E.LessThanOrEqual(Attr(a), Const(v))    => Some(LessThanOrEqual(a, v))
+      case E.LessThanOrEqual(Const(v), Attr(a))    => Some(GreaterThanOrEqual(a, v))
+      case E.In(Attr(a), vs) =>
+        val cs = vs.map(Const.unapply)
+        if (cs.forall(_.isDefined)) Some(In(a, cs.flatten.toArray)) else None
+      case E.StartsWith(Attr(a), Const(v: String)) => Some(StringStartsWith(a, v))
+      case _ => None
+    }
+    def conjuncts(x: E.Expression): Seq[E.Expression] = x match {
+      case E.And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other       => Seq(other)
+    }
+    conjuncts(e).flatMap(leg)
   }
 
   /** Rewrite attribute names through a logical→physical map (column
@@ -76,7 +128,7 @@ private[connector] object FilterColumns {
   * interval proves a pushed comparison impossible or the `_BLOOMS`
   * bitset excludes an equality value. Missing sidecars ⇒ keep (the
   * skipping is advisory — Spark re-applies every filter row-level). */
-private[connector] object FileSkipping {
+private[graft] object FileSkipping {
 
   private def flatten(f: Filter): Seq[Filter] = f match {
     case And(l, r) => flatten(l) ++ flatten(r)

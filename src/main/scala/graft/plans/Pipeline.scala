@@ -1,8 +1,10 @@
 package graft.plans
 
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.catalog.TableCatalog
 import graft.config._
 import graft.operators.{CuratedOps, RefinedOps}
@@ -35,14 +37,23 @@ final class IngestLog(spark: SparkSession, catalog: TableCatalog, logTable: Stri
     * own LOG_ID, all share one LOG_TIME. No entries, no commit. */
   def logAll(ctx: RunContext, practice: String, fileType: String,
       entries: Seq[LogEntry]): Unit = if (entries.nonEmpty) {
-    import spark.implicits._
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val rows = entries.map(e => (ctx.newLogId(), ctx.parentRunId, practice,
+    val rows = entries.map(e => Row(ctx.newLogId(), ctx.parentRunId, practice,
       fileType, e.step, e.status, e.rowCount, e.error, now))
-      .toDF("LOG_ID", "PARENT_RUN_ID", "PRACTICE_NAME", "FILE_TYPE",
-        "STEP_NAME", "STATUS", "ROW_COUNT", "ERROR_MESSAGE", "LOG_TIME")
-    catalog.append(logTable, rows.coalesce(1))
+    catalog.append(logTable,
+      spark.createDataFrame(rows.asJava, IngestLog.Schema).coalesce(1))
   }
+}
+
+object IngestLog {
+  /** The log table's columns, fixed once: no encoder derived per call.
+    * ROW_COUNT is the only non-nullable one (a primitive long). */
+  val Schema: StructType = StructType(
+    Seq("LOG_ID", "PARENT_RUN_ID", "PRACTICE_NAME", "FILE_TYPE", "STEP_NAME",
+      "STATUS").map(StructField(_, StringType)) ++ Seq(
+      StructField("ROW_COUNT", LongType, nullable = false),
+      StructField("ERROR_MESSAGE", StringType),
+      StructField("LOG_TIME", TimestampType)))
 }
 
 final case class StageResult(status: String, rowCount: Long, details: String = "")
@@ -123,12 +134,12 @@ final class RefinedStage(spark: SparkSession, catalog: TableCatalog,
       throw new IllegalArgumentException("no refined table configured"))
     val raw = catalog.read(rawTable)
     val batch = raw.filter(col("IS_NEW") === 1)
-    // one job yields both the consumed run ids and the batch row count
-    // (the refined transform chain is 1:1 — regex/split/strip/project
-    // never add or drop rows — so n(out) == n(batch))
-    val runStats = batch.groupBy("PARENT_RUN_ID").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-    val runIds = runStats.map(_._1).toSeq // bounded: one id per pipeline run
+    // one job, no exchange, yields both the consumed run ids and the
+    // batch row count (the refined transform chain is 1:1 —
+    // regex/split/strip/project never add or drop rows — so
+    // n(out) == n(batch))
+    val runStats = graft.util.SmallAgg.countBy(batch, col("PARENT_RUN_ID"))
+    val runIds = runStats.keys.toSeq // bounded: one id per pipeline run
     if (runIds.isEmpty) {
       log.foreach(_.log(ctx, practice, spec.fileType, "REFINED_LOAD", "SKIPPED", 0))
       return StageResult("SKIPPED", 0, "no IS_NEW rows")
@@ -136,7 +147,7 @@ final class RefinedStage(spark: SparkSession, catalog: TableCatalog,
     val transformed = RefinedOps.refinedTransform(batch, spec.target)
     val out = RefinedOps.withRefinedMetadata(transformed, ctx.parentRunId)
     catalog.append(refinedTable, out)
-    val n = runStats.map(_._2).sum
+    val n = runStats.values.sum
     // clear only the runs we consumed
     catalog.updateWhere(rawTable, Map("IS_NEW" -> lit(0)),
       col("IS_NEW") === 1 && col("PARENT_RUN_ID").isin(runIds: _*))
@@ -196,8 +207,8 @@ final class CuratedStage(spark: SparkSession, catalog: TableCatalog,
     // the REFINED stage fixes (reference:
     // RAW_SNOWFLAKE_TO_REFINED_SNOWFLAKE.py:379 vs :717).
     val flagged = refined.filter(col("IS_VALID") === 1)
-    val consumedRunIds = flagged.select("REFINED_PARENT_RUN_ID").distinct()
-      .collect().map(_.getString(0)).toSeq
+    val consumedRunIds = graft.util.SmallAgg
+      .countBy(flagged, col("REFINED_PARENT_RUN_ID")).keys.toSeq
 
     // source rows: IS_VALID=1 AND config filters
     val valid = flagged
@@ -229,14 +240,28 @@ final class CuratedStage(spark: SparkSession, catalog: TableCatalog,
         case None => withMeta
       }
 
-      catalog.append(curatedTable, future)
-
-      // RECORD_TYPE distribution (A3); total row count = Σ distribution
-      // (one action instead of a separate count job)
-      val distRows = future.groupBy("RECORD_TYPE").count().collect()
-      val n = distRows.map(_.getLong(1)).sum
-      val dist = distRows
-        .map(r => s"${r.get(0)}=${r.getLong(1)}").sorted.mkString(",")
+      // RECORD_TYPE distribution (A3) observed ON the append: the
+      // classification can only yield the configured values (or null,
+      // when the mapping does not carry the lookup's result column), so
+      // one conditional sum per value plus the row count cover it with
+      // no second evaluation of the lookup join
+      val values = spec.target.curatedLookup
+        .map(lk => Seq(lk.matchValue, lk.noMatchValue)).getOrElse(Seq("NEW"))
+        .distinct.map(Option(_)) :+ None
+      val obs = org.apache.spark.sql.Observation()
+      catalog.append(curatedTable, future.observe(obs, count(lit(1)).as("n"),
+        values.zipWithIndex.map { case (v, i) =>
+          sum(when(v.fold(col("RECORD_TYPE").isNull)(col("RECORD_TYPE") === _),
+            1L).otherwise(0L)).as(s"v$i")
+        }: _*))
+      val seen = obs.get
+      val n = seen("n").asInstanceOf[Long]
+      val counts = values.indices.map(i =>
+        Option(seen(s"v$i")).fold(0L)(_.asInstanceOf[Long]))
+      if (counts.sum != n) throw new IllegalStateException(
+        s"CURATED RECORD_TYPE distribution covers ${counts.sum} of $n rows")
+      val dist = values.zip(counts).filter(_._2 > 0)
+        .map { case (v, c) => s"${v.orNull}=$c" }.sorted.mkString(",")
 
       // CRM sync through the pluggable sink (never collects to driver)
       spec.target.sync.filter(_.enabled).foreach { sync =>
@@ -299,16 +324,16 @@ final class PrecheckStage(spark: SparkSession, log: Option[IngestLog] = None) {
     val delimiter = spec.source.delimiter.headOption.getOrElse(',')
     val files = CsvStageReader.listFiles(spark, stageDir, spec.source.filePattern)
     if (files.isEmpty) return (true, Map.empty)
-    // ONE Spark job for every file's line count (the old shape ran two
-    // sequential jobs PER FILE — 2 000 jobs for a thousand-file drop);
-    // the 7-line heads are direct store reads, no job at all; and ONE
-    // log commit for every file's checks (a log row is a catalog commit).
-    // input_file_name() is URL-encoded (`a b.csv` reads `a%20b.csv`), so
-    // the key is decoded to match the listing's path.
-    val totals = spark.read.textFile(files.map(_.path): _*)
-      .groupBy(input_file_name().as("f")).count()
-      .collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath -> r.getLong(1)).toMap
+    // ONE Spark job, with no exchange, for every file's line count (the
+    // old shape ran two sequential jobs PER FILE — 2 000 jobs for a
+    // thousand-file drop); the 7-line heads are direct store reads, no
+    // job at all; and ONE log commit for every file's checks (a log row
+    // is a catalog commit). input_file_name() is URL-encoded (`a b.csv`
+    // reads `a%20b.csv`), so the key is decoded to match the listing's
+    // path.
+    val totals = graft.util.SmallAgg.countBy(
+        spark.read.textFile(files.map(_.path): _*).toDF(), input_file_name())
+      .map { case (f, n) => new java.net.URI(f).getPath -> n }
     val heads = graft.util.Concurrent.forEach(files, 16)(
       f => f.path -> readHead(f.path, 7)).toMap
     val results = files.map { f =>

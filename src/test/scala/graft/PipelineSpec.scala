@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.catalog.TableCatalog
 import graft.config._
@@ -203,6 +204,119 @@ class PipelineSpec extends SparkTestBase {
     // and the next pass consumes it normally
     new CuratedStage(spark, racing).run(RunContext(), "p", spec)
     assert(cat.read(refinedT).filter(col("IS_VALID") === 1).count() == 0)
+  }
+
+  /** A customer drop of the oracle practice (`QueriesPipeline`): `n`
+    * rows from key `from`, staged as its own CSV file. */
+  private def oracleDrop(stage: String, from: Int, n: Int): Unit = {
+    val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "MACHINERY", "HOUSEHOLD")
+    writeFile(stage, s"drop_$from.csv", (from until from + n).map(k =>
+      s"#$k,Customer#$k,${segs(k % segs.size)}").mkString(
+      "cust id,Cust Name,Segment\n", "\n", "\n"))
+  }
+
+  private lazy val oracleSpec =
+    IngestConfig.parse(QueriesPipeline.configJson).practices.head.ingest.head
+
+  test("one accepted drop stays inside its Spark-job budget, shuffling only in the lookup join") {
+    import org.apache.spark.scheduler._
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val log = new IngestLog(spark, cat, "LOG.S.INGEST_LOG")
+    import spark.implicits._
+    cat.append("LK.S.KNOWN", (1 until 600 by 3).map(_.toString).toDF("KNOWN_ID"))
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    def group(p: java.util.Properties) =
+      Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id"))).getOrElse("none")
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.merge(group(e.properties), 1, (a, b) => a + b)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stageGroup.put(e.stageInfo.stageId, group(e.properties))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ShuffleMapTask") shuffleStages.add(e.stageId)
+    }
+    // one drop through the four stages, each under its own job group
+    def drop(i: Int): Unit = {
+      val stage = tempDir("stage")
+      oracleDrop(stage, i * 200, 200)
+      val ctx = RunContext()
+      def in[T](g: String)(body: => T): T = {
+        spark.sparkContext.setJobGroup(g, g)
+        try body finally spark.sparkContext.clearJobGroup()
+      }
+      assert(in("PRECHECK")(new PrecheckStage(spark, Some(log))
+        .run(ctx, "p", oracleSpec, stage, None))._1)
+      assert(in("RAW")(new RawStage(spark, cat, Some(log))
+        .run(ctx, "p", oracleSpec, stage)).status == "SUCCESS")
+      assert(in("REFINED")(new RefinedStage(spark, cat, Some(log))
+        .run(ctx, "p", oracleSpec)).rowCount == 200)
+      assert(in("CURATED")(new CuratedStage(spark, cat, Some(log))
+        .run(ctx, "p", oracleSpec)).status == "SUCCESS")
+    }
+    drop(0); drop(1) // tables exist: the third drop is a steady-state one
+    spark.sparkContext.addSparkListener(l)
+    try {
+      Thread.sleep(500)
+      jobs.clear(); stageGroup.clear(); shuffleStages.clear(); ended.set(0)
+      drop(2)
+      val deadline = System.currentTimeMillis() + 10000
+      while (ended.get < jobs.values.asScala.map(_.intValue).sum &&
+          System.currentTimeMillis() < deadline) Thread.sleep(50)
+      Thread.sleep(500)
+    } finally spark.sparkContext.removeSparkListener(l)
+    // PRECHECK: line counts + the log commit; RAW: header inference +
+    // append + log; REFINED: run stats + append + the flag clear's data
+    // and change writes + log; CURATED: consumed run ids + the append's
+    // lookup join (its distinct stage, broadcast, write) + the flag
+    // clear's two writes + log
+    assert(jobs.asScala.view.mapValues(_.intValue).toMap ==
+      Map("PRECHECK" -> 2, "RAW" -> 3, "REFINED" -> 5, "CURATED" -> 8))
+    val shuffles = shuffleStages.asScala.toSeq.map(stageGroup.get)
+    assert(shuffles == Seq("CURATED"), s"shuffle stages by group: $shuffles")
+  }
+
+  test("five drops leave no zero-row data file in RAW, REFINED or CURATED") {
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    import spark.implicits._
+    cat.append("LK.S.KNOWN", (1 until 600 by 3).map(_.toString).toDF("KNOWN_ID"))
+    (0 until 5).foreach { i =>
+      val stage = tempDir("stage")
+      oracleDrop(stage, i * 100, 100)
+      val r = new Pipeline(spark, cat).run(RunContext(), "p", oracleSpec, stage)
+      assert(r.forall(_._2.status == "SUCCESS"), r)
+    }
+    Seq("R.S.CUST", "RF.S.CUST", "CU.S.CUST").foreach { t =>
+      val files = cat.dataFilePaths(t)
+      val empty = files.filter(f => spark.read.parquet(f).count() == 0L)
+      assert(empty.isEmpty, s"$t holds zero-row files $empty")
+    }
+    assert(cat.count("CU.S.CUST") == 400L) // FURNITURE (k % 5 == 2) filtered
+  }
+
+  test("the ingest log keeps its column names, types and nullability") {
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val t = "LOG.S.INGEST_LOG"
+    new IngestLog(spark, cat, t).logAll(RunContext(), "p", "F",
+      Seq(LogEntry("A", "SUCCESS", 3), LogEntry("B", "FAILED", -1, "boom")))
+    import spark.implicits._
+    // the schema the log had when its rows were tuples
+    val tupled = Seq(("", "", "", "", "", "", 0L, "", new java.sql.Timestamp(0L)))
+      .toDF("LOG_ID", "PARENT_RUN_ID", "PRACTICE_NAME", "FILE_TYPE",
+        "STEP_NAME", "STATUS", "ROW_COUNT", "ERROR_MESSAGE", "LOG_TIME").schema
+    assert(IngestLog.Schema == tupled)
+    val footer = graft.connector.GraftParquetIO.fileSchema(
+      cat.dataFilePaths(t).head, spark.sparkContext.hadoopConfiguration)
+    assert(footer.getFields.asScala.filter(f =>
+      f.getRepetition == org.apache.parquet.schema.Type.Repetition.REQUIRED)
+      .map(_.getName).toSeq == Seq("ROW_COUNT"))
+    assert(cat.read(t).columns.toSeq == tupled.fieldNames.toSeq)
+    assert(cat.read(t).select("STEP_NAME", "ROW_COUNT", "ERROR_MESSAGE")
+      .as[(String, Long, String)].collect().sorted.toSeq ==
+      Seq(("A", 3L, ""), ("B", -1L, "boom")))
   }
 
   test("second run with no new files is a clean no-op for refined") {
