@@ -107,17 +107,10 @@ class TableCatalog(spark: SparkSession, root: String,
     finally out.close()
   }
 
-  private def dvManifestEntries(dir: Path): Seq[Path] = {
-    val mf = dvManifestPath(dir)
-    if (!fs.exists(mf)) Nil
-    else {
-      val in = fs.open(mf)
-      val text = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
+  private def dvManifestEntries(dir: Path): Seq[Path] =
+    TableCatalog.cachedParse(fs, dvManifestPath(dir), "dvmanifest") { text =>
       text.split("\n").toSeq.filter(_.nonEmpty).map(new Path(_))
-    }
-  }
+    }.getOrElse(Nil)
 
   /** DV parquet files visible to version v: carried references plus the
     * version's own `_DV/` sidecar files. */
@@ -148,19 +141,12 @@ class TableCatalog(spark: SparkSession, root: String,
     spark.read.schema(TableCatalog.DvSchema)
       .parquet(dvs.map(_.toString): _*)
 
-  /** Apply DV masks to a scan: anti-join away (file, row_index) pairs.
-    * The DV side is deletes-sized, so AQE plans a broadcast anti join —
-    * the data side is never shuffled. No-op when `dvs` is empty.
-    * `keepPos = true` retains the `__fp`/`__ri` address columns for
-    * callers that write NEW masks from the survivors. */
-  private def maskDv(scan: DataFrame, dvs: Seq[Path],
-      keepPos: Boolean = false): DataFrame =
-    maskDvPos(withRowPos(scan), dvs, keepPos)
-
-  /** [[maskDv]] over a frame that ALREADY carries `__fp`/`__ri` —
-    * partitioned chains project them per-scan BEFORE the layout union
-    * (`_metadata` is per-file-source and cannot be selected on a
-    * union). */
+  /** Apply DV masks to a scan carrying `__fp`/`__ri` (see
+    * [[withRowPos]]): anti-join away (file, row_index) pairs. The DV
+    * side is deletes-sized, so AQE plans a broadcast anti join — the
+    * data side is never shuffled. No-op when `dvs` is empty.
+    * `keepPos = true` retains the address columns for callers that
+    * write NEW masks from the survivors. */
   private def maskDvPos(dfWithPos: DataFrame, dvs: Seq[Path],
       keepPos: Boolean = false): DataFrame =
     if (dvs.isEmpty) { if (keepPos) dfWithPos else dfWithPos.drop("__fp", "__ri") }
@@ -172,25 +158,54 @@ class TableCatalog(spark: SparkSession, root: String,
       if (keepPos) masked else masked.drop("__fp", "__ri")
     }
 
-  /** Read a set of data files with version v's DV masks applied. */
-  /** Physical read of a version's (subset of) files with the CHAIN
-    * union schema requested explicitly: a type-widened chain (int and
-    * long files of one column) must not let schema inference pick a
-    * random footer — the parquet readers promote the narrow files'
-    * values into the widest type (and mergeSchema's StructType.merge
-    * cannot widen at all). Also skips the inference job. */
-  private def readPhysical(fq: String, v: Int, files: Seq[Path]): DataFrame =
-    if (isPartitionedAt(fq, v))
-      // hive layouts: partition values are path-encoded, not in the
-      // payload — an explicit union schema would read them as null
-      spark.read.parquet(files.map(_.toString): _*)
-    else spark.read
-      .schema(graft.connector.GraftSource.physicalChainSchema(
-        spark, this, fq, v))
-      .parquet(files.map(_.toString): _*)
+  /** THE physical read of a version's (subset of) data files — every
+    * catalog-side file scan goes through here. `perScan` applies to
+    * each file-source relation before any union (`_metadata` and
+    * `input_file_name()` bind per relation).
+    *
+    * Every read requests the CHAIN union schema explicitly: a
+    * type-widened chain (int and long files of one column) must not
+    * let schema inference pick a random footer — the parquet readers
+    * promote the narrow files' values into the widest type (and
+    * mergeSchema's StructType.merge cannot widen at all). Also skips
+    * the inference job. Flat versions read as ONE relation;
+    * partitioned ones per owning version dir ([[readByOwner]]). */
+  private def readPhysical(fq: String, v: Int, files: Seq[Path],
+      perScan: DataFrame => DataFrame = identity): DataFrame = {
+    val schema = graft.connector.GraftSource.physicalChainSchema(spark, this, fq, v)
+    if (isPartitionedAt(fq, v)) readByOwner(fq, v, files, Some(schema), perScan)
+    else perScan(spark.read.schema(schema).parquet(files.map(_.toString): _*))
+  }
 
-  private def readMaskedFiles(fq: String, v: Int, files: Seq[Path]): DataFrame =
-    maskDv(readPhysical(fq, v, files), dvFiles(fq, v))
+  /** Partitioned files carry their partition values in the paths below
+    * their owning version dir, so they group by that dir and each group
+    * reads with it as `basePath`. Without a `schema`, a group comes out
+    * of one writing job (uniform footers), so single-footer inference
+    * types it — once per (dir, file set), cached: a new version
+    * re-infers only the groups it changed. The groups union by name,
+    * absent columns as null and widened types at the widest — an
+    * evolved layout (partition column inline in older files) resolves
+    * the same way. */
+  private def readByOwner(fq: String, v: Int, files: Seq[Path],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      perScan: DataFrame => DataFrame): DataFrame =
+    files.groupBy(versionAncestor).toSeq.sortBy(_._1.toString)
+      .map { case (base, group) =>
+        val paths = group.map(_.toString).sorted
+        def reader = spark.read.option("basePath", base.toString)
+        def infer = reader.parquet(paths: _*).schema
+        perScan(reader.schema(schema.getOrElse(
+          TableCatalog.cachedValue(fs, base, "pgroup:" + paths.mkString("\n"))(infer)
+            .getOrElse(infer)))
+          .parquet(paths: _*))
+      }
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse(spark.read.parquet(versionDir(fq, v).toString))
+
+  /** [[readPhysical]] with version v's DV masks applied. */
+  private def readMasked(fq: String, v: Int, files: Seq[Path],
+      keepPos: Boolean = false): DataFrame =
+    maskDvPos(readPhysical(fq, v, files, withRowPos), dvFiles(fq, v), keepPos)
 
   /** Align an incoming frame's column types with the table's: an
     * incoming NARROWER numeric upcasts to the table type (the new
@@ -237,83 +252,34 @@ class TableCatalog(spark: SparkSession, root: String,
   }
 
   // ---- hive-partitioned layout support ------------------------------------
-  // A partitioned version records its partition columns in _PARTITIONS;
-  // its manifest entries are whole VERSION DIRECTORIES (partition
-  // discovery needs a directory + basePath, not bare files).
+  // A partitioned version records its partition columns in _PARTITIONS
+  // and writes its own files under `col=value/` dirs. Its chain is the
+  // flat one (back-reference, tombstones, checkpoints — see
+  // [[resolvedFlatFiles]]); partition values are read back from each
+  // file's path below its owning version dir.
 
   private def partitionsPath(dir: Path) = new Path(dir, "_PARTITIONS")
 
-  private def writePartitions(dir: Path, cols: Seq[String]): Unit = {
-    val out = fs.create(partitionsPath(dir), true)
-    try out.write(cols.mkString(",").getBytes("UTF-8")) finally out.close()
-  }
-
-  private def partitionColsOf(fq: String, v: Int): Seq[String] = {
-    val p = partitionsPath(versionDir(fq, v))
-    if (!fs.exists(p)) Nil
-    else {
-      val in = fs.open(p)
-      val text = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-      text.split(",").toSeq.filter(_.nonEmpty)
+  /** Record a layout; no-op for a flat one. */
+  private def writePartitions(dir: Path, cols: Seq[String]): Unit =
+    if (cols.nonEmpty) {
+      val out = fs.create(partitionsPath(dir), true)
+      try out.write(cols.mkString(",").getBytes("UTF-8")) finally out.close()
     }
-  }
 
-  /** Chain of data directories for a partitioned version: referenced
-    * prior dirs first, own dir last. Entries are either whole version
-    * directories (append carries everything) or individual partition
-    * leaf directories (update/merge carry only untouched partitions). */
-  private def chainDirs(fq: String, v: Int): Seq[Path] =
-    manifestEntries(versionDir(fq, v)) :+ versionDir(fq, v)
+  private def partitionColsOf(fq: String, v: Int): Seq[String] =
+    TableCatalog.cachedParse(fs, partitionsPath(versionDir(fq, v)), "partitions") {
+      text => text.split(",").toSeq.filter(_.nonEmpty)
+    }.getOrElse(Nil)
 
-  /** The version directory that owns a chain entry (the entry itself if
-    * it IS a version dir; else the nearest `v_NNNNNN` ancestor). Used as
-    * `basePath` so partition-column discovery sees the full
-    * `col=value/...` suffix of leaf-dir entries. */
+  /** The version directory that owns a data file (the nearest
+    * `v_NNNNNN` ancestor) — where its `_STATS`/`_BLOOMS` entries live,
+    * and the `basePath` partition discovery reads its
+    * `col=value/...` suffix against. */
   private def versionAncestor(p: Path): Path = {
     var cur = p
     while (cur != null && !cur.getName.matches("v_\\d{6}")) cur = cur.getParent
     Option(cur).getOrElse(p)
-  }
-
-  /** One scan per owning version over a set of chain entries (version
-    * dirs and/or partition leaf dirs), partition columns recovered via
-    * basePath. `withFileCol` projects `input_file_name()` on each scan
-    * BEFORE the union so downstream joins stay legal; `withRowPos`
-    * likewise projects the `__fp`/`__ri` DV address columns per scan
-    * (so [[maskDvPos]] can mask a partitioned chain). Entries holding
-    * no data files (e.g. a DV-only version dir) are skipped — unless
-    * nothing holds data, in which case the raw entries pass through
-    * for an empty-table schema read. */
-  private def readPartitionedDirs(entries: Seq[Path],
-      unionMissing: Boolean = false,
-      withFileCol: Option[String] = None,
-      withRowPos: Boolean = false): DataFrame = {
-    val existing = entries.filter(fs.exists(_))
-    val withData = existing.filter(e => listFilesRecursive(e).nonEmpty)
-    val use = if (withData.nonEmpty) withData else existing
-    use.groupBy(versionAncestor).toSeq.sortBy(_._1.toString)
-      .map { case (base, dirs) =>
-        // No per-group `mergeSchema`: files within one version group
-        // come out of a single writing job (uniform footers — the
-        // invariant [[computePartitionedSchema]] already rests on), so
-        // the group's schema is single-footer inference; the distributed
-        // footer-merge job over EVERY file the old mergeSchema=true
-        // evolving-read path launched was pure planning-time overhead.
-        // Cross-group evolution resolves in the union below.
-        var df = spark.read.option("basePath", base.toString)
-          .parquet(dirs.map(_.toString).sorted: _*)
-        if (withRowPos) df = df
-          .withColumn("__fp", col("_metadata.file_path"))
-          .withColumn("__ri", col("_metadata.row_index"))
-        withFileCol.map(c => df.withColumn(c, input_file_name())).getOrElse(df)
-      }
-      // unionMissing (evolving-chain reads): absent columns surface as
-      // null and widened types resolve to the widest, per Spark's own
-      // unionByName coercion — same resolution the mergeSchema read
-      // produced, without its footer job.
-      .reduce((a, b) => a.unionByName(b, allowMissingColumns = unionMissing))
   }
 
   private def listFilesRecursive(dir: Path): Seq[Path] =
@@ -594,40 +560,22 @@ class TableCatalog(spark: SparkSession, root: String,
       }
     }
 
-  /** Read a SUBSET of a partitioned version's files with partition
-    * columns recovered (basePath per owning version) and DV masks
-    * applied — the partitioned analog of a pruned multi-file scan. */
-  private def readPartitionedSubset(fq: String, v: Int,
-      files: Seq[Path]): DataFrame =
-    maskDvPos(readPartitionedDirs(files, withRowPos = true), dvFiles(fq, v))
-
   def readBetween(fq: String, column: String, lo: Any, hi: Any): DataFrame = {
     val v = currentVersion(fq).getOrElse(
       throw new IllegalArgumentException(s"table not found: $fq"))
     val pred = col(column) >= lit(lo) && col(column) <= lit(hi)
     val m = columnMappingAt(fq, v) // `_STATS` sidecars key by the
     val physCol = m.physical(column) // PHYSICAL column name
-    val pcols = partitionColsOf(fq, v)
-    if (pcols.nonEmpty) {
-      // partition pruning covers partition-column ranges; for DATA
-      // columns the same `_STATS` elimination applies per file, read
-      // back with basePath so partition columns survive
-      if (pcols.contains(column))
-        return readPartitionedChain(fq, v).filter(pred)
-      val files = dataFiles(fq, v)
-      val surviving = statSurvivors(files, physCol, lo, hi)
-      if (surviving.isEmpty) return read(fq).filter(pred).limit(0)
-      return dropRouting(toLogical(
-        readPartitionedSubset(fq, v, surviving), m).filter(pred))
-    }
+    // partition pruning covers partition-column ranges
+    if (partitionColsOf(fq, v).contains(column))
+      return readPartitionedChain(fq, v).filter(pred)
     val files = dataFiles(fq, v)
     if (files.isEmpty)
       return toLogical(spark.read.parquet(versionDir(fq, v).toString), m)
         .filter(pred)
     val surviving = statSurvivors(files, physCol, lo, hi)
     if (surviving.isEmpty) read(fq).filter(pred).limit(0)
-    else toLogical(maskDv(readPhysical(fq, v, surviving),
-      dvFiles(fq, v)), m).filter(pred)
+    else dropRouting(toLogical(readMasked(fq, v, surviving), m)).filter(pred)
   }
 
   /** METADATA-ONLY `COUNT(*)` of the live version: the sum of the
@@ -676,18 +624,11 @@ class TableCatalog(spark: SparkSession, root: String,
   }
 
   /** Data files of a version: its own part files plus everything its
-    * manifest references. Partitioned versions resolve recursively
-    * through partition subdirectories across the chain; unpartitioned
-    * versions resolve version-directory REFERENCES recursively — see
-    * [[resolvedFlatFiles]]. */
-  private def dataFiles(fq: String, v: Int): Seq[Path] = {
-    if (partitionColsOf(fq, v).nonEmpty)
-      return chainDirs(fq, v).filter(fs.exists(_)).flatMap(listFilesRecursive)
-    resolvedFlatFiles(fq, v)
-  }
+    * manifest references — see [[resolvedFlatFiles]]. */
+  private def dataFiles(fq: String, v: Int): Seq[Path] = resolvedFlatFiles(fq, v)
 
-  // ---- O(delta) flat-chain commit metadata --------------------------------
-  // A flat (unpartitioned) commit's `_MANIFEST` may reference the
+  // ---- O(delta) chain commit metadata -------------------------------------
+  // A commit's `_MANIFEST` may reference the
   // PRIOR VERSION DIRECTORY instead of relisting every live file: one
   // line per commit, however many files the table holds — without
   // this, every streaming epoch into a 100 TB table rewrites ~100 MB
@@ -758,17 +699,21 @@ class TableCatalog(spark: SparkSession, root: String,
       Some(e.getName.stripPrefix("v_").toInt)
     else None
 
-  /** Iteratively resolve a flat version's data-file set (a deep chain
+  /** Iteratively resolve a version's data-file set (a deep chain
     * must not recurse the stack), caching each level against its
-    * immutable manifest. */
+    * immutable manifest. A version's own files are its data files at
+    * any depth below `col=value/` dirs; `_`- and `.`-prefixed entries
+    * (sidecars, `_DV/`) are skipped, so a flat version dir costs one
+    * listing. */
   private def resolvedFlatFiles(fq: String, v: Int): Seq[Path] = {
     def cached(ver: Int): Option[Seq[Path]] =
       TableCatalog.cachedPeek[Seq[Path]](fs,
         manifestPath(versionDir(fq, ver)), "flatResolved")
     def ownOf(dir: Path): Seq[Path] =
-      fs.listStatus(dir).filter(_.isFile).map(_.getPath)
-        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-        .toSeq
+      fs.listStatus(dir).toSeq
+        .filterNot(st => st.getPath.getName.startsWith("_") ||
+          st.getPath.getName.startsWith("."))
+        .flatMap(st => if (st.isDirectory) ownOf(st.getPath) else Seq(st.getPath))
     // walk references down until a cached level (or the chain base)
     var levels = List.empty[(Int, Seq[Path], Set[String])]
     var base: Seq[Path] = Nil
@@ -806,12 +751,10 @@ class TableCatalog(spark: SparkSession, root: String,
     files
   }
 
-  /** Version-dir names on v's flat reference chain (v included) — the
+  /** Version-dir names on v's reference chain (v included) — the
     * dirs a pruner must RETAIN even when they hold no data files of
     * their own: breaking one reference link breaks every later
-    * version's resolution. Empty for partitioned versions (their
-    * manifests carry every chain dir explicitly, which the prune's
-    * ancestor check already protects).
+    * version's resolution.
     *
     * `stopAtCheckpoints`: a checkpoint manifest (ref line + explicit
     * file list) ends resolution, but its ref line still records the
@@ -822,7 +765,6 @@ class TableCatalog(spark: SparkSession, root: String,
     * contract. */
   private def flatChainDirNames(fq: String, v: Int,
       stopAtCheckpoints: Boolean = false): Set[String] = {
-    if (partitionColsOf(fq, v).nonEmpty) return Set.empty
     val names = scala.collection.mutable.Set.empty[String]
     var cur = Some(v): Option[Int]
     while (cur.isDefined) {
@@ -848,33 +790,15 @@ class TableCatalog(spark: SparkSession, root: String,
     * file — mixed evolved layouts included — DV masks applied inside
     * the reader, vectorized decode, filter pushdown → partition/stats
     * /bloom file pruning). The plan's scan-node count is CONSTANT in
-    * chain length, where the old per-owning-version relation union
-    * grew O(versions) — a 1000-commit partitioned table planned 1000
-    * scan nodes per query. `readPartitionedDirs` remains the
-    * driver-side schema/probe path (and the mutators' `__fp`/`__ri`
-    * address reads). */
+    * chain length, where a per-owning-version relation union grows
+    * O(versions). */
   private def readPartitionedChain(fq: String, v: Int): DataFrame =
     spark.read.format("graft")
       .option("root", root).option("table", fq)
       .option("version", v.toString).load()
 
-  def read(fq: String): DataFrame = currentVersion(fq) match {
-    case Some(v) if partitionColsOf(fq, v).nonEmpty =>
-      readPartitionedChain(fq, v) // connector scan: mapping + declared
-      // columns applied in chainSchema / the reader
-    case Some(v) =>
-      val m = columnMappingAt(fq, v)
-      val files = dataFiles(fq, v)
-      val df0 =
-        if (files.isEmpty) // truncated table: schema-only marker dir
-          spark.read.parquet(versionDir(fq, v).toString)
-        else readMaskedFiles(fq, v, files) // chain-union schema: covers
-          // evolved (declared-column) AND type-widened heterogeneity
-      // dropped columns hidden, renamed columns exposed logically,
-      // declared columns no file carries yet read as typed nulls
-      withDeclared(toLogical(df0, m), m)
-    case None => throw new IllegalArgumentException(s"table not found: $fq")
-  }
+  def read(fq: String): DataFrame = readVersion(fq, currentVersion(fq).getOrElse(
+    throw new IllegalArgumentException(s"table not found: $fq")))
 
   def readIfExists(fq: String): Option[DataFrame] =
     currentVersion(fq).map(_ => read(fq))
@@ -888,15 +812,20 @@ class TableCatalog(spark: SparkSession, root: String,
     val dir = versionDir(fq, version)
     if (!fs.exists(dir))
       throw new IllegalArgumentException(s"$fq version $version not retained")
-    if (partitionColsOf(fq, version).nonEmpty)
-      return readPartitionedChain(fq, version)
+    if (isPartitionedAt(fq, version)) // connector scan: mapping + declared
+      return readPartitionedChain(fq, version) // columns applied there
     // VERSION-SCOPED mapping: time travel sees the column names (and
     // declared columns) of its day, not today's
     val m = columnMappingAt(fq, version)
     val files = dataFiles(fq, version)
     val df0 =
-      if (files.isEmpty) spark.read.parquet(dir.toString)
-      else readMaskedFiles(fq, version, files) // each version sees ITS masks
+      if (files.isEmpty) // truncated table: schema-only marker dir
+        spark.read.parquet(dir.toString)
+      else readMasked(fq, version, files) // chain-union schema: covers
+        // evolved (declared-column) AND type-widened heterogeneity;
+        // each version sees ITS masks
+    // dropped columns hidden, renamed columns exposed logically,
+    // declared columns no file carries yet read as typed nulls
     withDeclared(toLogical(df0, m), m)
   }
 
@@ -913,17 +842,10 @@ class TableCatalog(spark: SparkSession, root: String,
   /** Read resolving the union of all file schemas in the chain
     * (for tables grown via [[appendEvolving]]). */
   def readMergedSchema(fq: String): DataFrame = currentVersion(fq) match {
-    case Some(v) if partitionColsOf(fq, v).nonEmpty =>
-      // per-version partition discovery (bare leaf files would silently
-      // drop the partition columns), schema union across the chain
-      toLogical(dropRouting(maskDvPos(readPartitionedDirs(chainDirs(fq, v),
-        unionMissing = true, withRowPos = true), dvFiles(fq, v))),
-        columnMappingAt(fq, v))
     case Some(v) =>
       val files = dataFiles(fq, v)
       if (files.isEmpty) spark.read.parquet(versionDir(fq, v).toString)
-      else toLogical(maskDv(readPhysical(fq, v, files), dvFiles(fq, v)),
-        columnMappingAt(fq, v))
+      else dropRouting(toLogical(readMasked(fq, v, files), columnMappingAt(fq, v)))
     case None => throw new IllegalArgumentException(s"table not found: $fq")
   }
 
@@ -1168,18 +1090,14 @@ class TableCatalog(spark: SparkSession, root: String,
   }
 
   /** Carry version `head`'s whole chain into the new version `dir`
-    * unchanged: a partitioned head's layout and chain directories, a
-    * flat head's O(1) back-reference (every Nth version a checkpoint;
-    * `retired` = the files a copy-on-write rewrite tombstones), and the
-    * head's DV manifest — outstanding masks stay valid, the files they
-    * address ride along unmodified. */
+    * unchanged: its layout, its O(1) back-reference (every Nth version
+    * a checkpoint; `retired` = the files a copy-on-write rewrite
+    * tombstones), and its DV manifest — outstanding masks stay valid,
+    * the files they address ride along unmodified. */
   private def carryChain(fq: String, dir: Path, head: Int,
       retired: Seq[Path] = Nil): Unit = {
-    val pcols = partitionColsOf(fq, head)
-    if (pcols.nonEmpty) {
-      writeLayout(fq, head, dir, pcols)
-      writeManifest(dir, chainDirs(fq, head))
-    } else writeFlatRef(fq, dir, head, retired)
+    writeLayout(fq, head, dir)
+    writeFlatRef(fq, dir, head, retired)
     val dvs = dvFiles(fq, head)
     if (dvs.nonEmpty) writeDvManifest(dir, dvs)
   }
@@ -1235,16 +1153,14 @@ class TableCatalog(spark: SparkSession, root: String,
   /** PARTITION EVOLUTION (Iceberg-style): append `df` under a NEW
     * hive layout without rewriting a byte of prior data — the new
     * version records the new partition columns in `_PARTITIONS` and
-    * carries every prior chain entry, whatever ITS layout, by manifest
-    * reference. Reads union per-entry layouts (partition columns
-    * recovered from paths where the layout has them, read inline from
-    * the data where it doesn't), so partition pruning applies to the
-    * evolved slice immediately while old files keep their old scan
-    * cost until a rewrite — exactly Iceberg's evolution trade. At
-    * 100 TB this is what makes "we should have partitioned by day"
-    * fixable without a table rewrite. Outstanding DVs must be
-    * compacted first: the hive read path is partition-granular and
-    * does not apply row masks. */
+    * carries the prior chain, whatever ITS layout, by reference. Reads
+    * take each file's partition columns from its path where its
+    * version's layout has them and inline from the data where it
+    * doesn't, so partition pruning applies to the evolved slice
+    * immediately while old files keep their old scan cost until a
+    * rewrite — exactly Iceberg's evolution trade. At 100 TB this is
+    * what makes "we should have partitioned by day" fixable without a
+    * table rewrite. Outstanding DV masks ride along. */
   def appendEvolvePartitioning(fq: String, df: DataFrame,
       partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty, "partition columns required")
@@ -1258,23 +1174,13 @@ class TableCatalog(spark: SparkSession, root: String,
       s"$fq is bucketed — appendEvolvePartitioning would orphan its " +
         "bucket layout; use appendBucketed to append, or rebucket(...) " +
         "to change the layout (a rewrite)")
-    // outstanding DV masks ride along: the partition-granular read
-    // path applies them per-scan before its layout union
-    val dvs = dvFiles(fq, v)
-    // a FLAT source chain carries resolved FILES (its dir-reference
-    // manifests mean nothing to the partition-granular reader); an
-    // already-partitioned chain carries its directories
-    val carried: Seq[Path] =
-      if (partitionColsOf(fq, v).nonEmpty) chainDirs(fq, v)
-      else dataFiles(fq, v)
     val pdf = toPhysical(enforceConstraints(fq, v, df),
       columnMappingAt(fq, v))
     commit(fq, v, None) { (dir, _) =>
       pdf.write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCols: _*).parquet(dir.toString)
-      writePartitions(dir, partitionCols)
-      writeManifest(dir, carried)
-      if (dvs.nonEmpty) writeDvManifest(dir, dvs)
+      carryChain(fq, dir, v)
+      writePartitions(dir, partitionCols) // the new layout replaces v's
     }
   }
 
@@ -1322,32 +1228,23 @@ class TableCatalog(spark: SparkSession, root: String,
     try out.write(s"$bucketCol,$n".getBytes("UTF-8")) finally out.close()
   }
 
-  /** Bucket spec in effect at version v: the NEWEST `_BUCKETSPEC`
-    * reachable from the chain. Chain entries may be leaf partition
-    * dirs (COW update/merge carry `v_NNNNNN/gbucket=k`), so each
-    * entry resolves to its owning VERSION dir first — the spec lives
-    * at the version root, next to `_PARTITIONS`. */
+  /** Bucket spec of version v: its `_BUCKETSPEC`, which every
+    * version of a bucketed layout carries (see [[writeLayout]]). */
   private[graft] def bucketSpecAt(fq: String, v: Int): Option[(String, Int)] =
-    chainDirs(fq, v).reverseIterator
-      .map(d => new Path(versionAncestor(d), "_BUCKETSPEC"))
-      .find(fs.exists).map { p =>
-        val in = fs.open(p)
-        val text = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-        val Array(c, n) = text.split(","): @unchecked
-        (c, n.toInt)
-      }
+    TableCatalog.cachedParse(fs, new Path(versionDir(fq, v), "_BUCKETSPEC"),
+        "bucketspec") { text =>
+      val Array(c, n) = text.split(","): @unchecked
+      (c, n.toInt)
+    }
 
   /** Record version `v`'s layout into a freshly committed dir:
-    * `_PARTITIONS` always, plus `_BUCKETSPEC` when the layout is
-    * bucketed — a compaction/COW commit may start a chain that no
-    * longer references the dir that established the spec, and a
-    * bucketed table that loses its spec silently stops routing,
-    * pruning and SPJ-ing. Every mutator that preserves an existing
-    * layout commits through this, not bare [[writePartitions]]. */
-  private def writeLayout(fq: String, v: Int, dir: Path,
-      pcols: Seq[String]): Unit = {
+    * `_PARTITIONS` (none for a flat layout), plus `_BUCKETSPEC` when
+    * the layout is bucketed — a bucketed table that loses its spec
+    * would stop routing, pruning and SPJ-ing. Every mutator that
+    * preserves an existing layout commits through this, not bare
+    * [[writePartitions]]. */
+  private def writeLayout(fq: String, v: Int, dir: Path): Unit = {
+    val pcols = partitionColsOf(fq, v)
     writePartitions(dir, pcols)
     if (pcols.lastOption.contains(BucketCol))
       bucketSpecAt(fq, v).foreach { case (c, n) => writeBucketSpec(dir, c, n) }
@@ -1358,12 +1255,15 @@ class TableCatalog(spark: SparkSession, root: String,
     * authoritative: an UPDATE may reassign the bucket source column,
     * a MERGE source doesn't carry the routing column at all, and a
     * compaction frame reads through the logical schema (which hides
-    * it). Identity layouts pass through untouched. */
+    * it). Identity and flat layouts pass through untouched; a
+    * bucketed layout without a spec fails loudly rather than write
+    * rows no bucket-pruned read would find. */
   private def reroute(fq: String, v: Int, df: DataFrame): DataFrame =
     if (!partitionColsOf(fq, v).lastOption.contains(BucketCol)) df
     else bucketSpecAt(fq, v) match {
       case Some((c, n)) => bucketed(df.drop(BucketCol), c, n)
-      case None => df
+      case None => throw new IllegalStateException(
+        s"$fq v$v has a bucketed layout but no _BUCKETSPEC — cannot route rows")
     }
 
   /** The synthetic routing column never reaches a caller. */
@@ -1426,11 +1326,10 @@ class TableCatalog(spark: SparkSession, root: String,
   def truncate(fq: String): Unit = {
     val v = currentVersion(fq).getOrElse(
       throw new IllegalArgumentException(s"table not found: $fq"))
-    val pcols = partitionColsOf(fq, v)
     val empty = toPhysical(read(fq).limit(0), columnMappingAt(fq, v))
     commit(fq, v, None) { (dir, _) =>
       empty.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-      if (pcols.nonEmpty) writeLayout(fq, v, dir, pcols)
+      writeLayout(fq, v, dir)
     }
   }
 
@@ -1481,7 +1380,7 @@ class TableCatalog(spark: SparkSession, root: String,
     else None
   }
 
-  /** The files of flat version v that hold a row matching `pred`,
+  /** The files of version v that hold a row matching `pred`,
     * planned from commit metadata first: the predicate's conjuncts,
     * translated to source filters on PHYSICAL names, drop every file
     * whose `_STATS` bounds rule one out (a conjunct that does not
@@ -1517,14 +1416,15 @@ class TableCatalog(spark: SparkSession, root: String,
     }
   }
 
-  /** Commit a copy-on-write rewrite of flat version v's `hit` files.
-    * `data` (the replacement files) and `changes` (their CDC rows) are
-    * written to a staging dir under `<root>/_staging` BEFORE the
-    * claim, as two concurrent jobs; `matched` must be observed on
-    * `data` as `n`, the number of rows the predicate matched. Nothing
-    * matched: the staging dir goes and the current version stands.
-    * Otherwise the commit adopts the staged files by rename — data
-    * into the version dir, change rows as its `_CDCLOG` entry — and
+  /** Commit a copy-on-write rewrite of version v's `hit` files.
+    * `data` (the replacement files, written in v's layout) and
+    * `changes` (their CDC rows) are written to a staging dir under
+    * `<root>/_staging` BEFORE the claim, as two concurrent jobs;
+    * `matched` must be observed on `data` as `n`, the number of rows
+    * the predicate matched. Nothing matched: the staging dir goes and
+    * the current version stands. Otherwise the commit adopts the
+    * staged files by rename — data into the version dir at their
+    * `col=value/` paths, change rows as its `_CDCLOG` entry — and
     * carries the rest of the chain with `hit` tombstoned. */
   private def commitRewrite(fq: String, v: Int, hit: Seq[Path],
       carried: Boolean, data: DataFrame, matched: org.apache.spark.sql.Observation,
@@ -1532,16 +1432,26 @@ class TableCatalog(spark: SparkSession, root: String,
     val staging = new Path(root, s"_staging/${java.util.UUID.randomUUID()}")
     val dataDir = new Path(staging, "data")
     val cdcDir = new Path(staging, "cdc")
+    val pcols = partitionColsOf(fq, v)
     try {
       withMicrosTimestamps {
-        graft.util.Concurrent.forEach(Seq(data -> dataDir, changes -> cdcDir), 2) {
-          case (df, out) => df.write.mode(SaveMode.Overwrite).parquet(out.toString)
+        graft.util.Concurrent.forEach(
+            Seq((data, dataDir, pcols), (changes, cdcDir, Nil)), 2) {
+          case (df, out, by) =>
+            df.write.mode(SaveMode.Overwrite).partitionBy(by: _*).parquet(out.toString)
         }
       }
-      if (Option(matched.get("n")).forall(_.asInstanceOf[Long] == 0L)) return
-      val staged = fs.listStatus(dataDir).filter(_.isFile).map(_.getPath)
-        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-        .map(p => (p, p.getName)).toSeq
+      // the optimizer drops the observation when the rewrite folds to
+      // no rows (a predicate that is constant true): unknown counts as a match
+      if (matched.get.get("n").exists(n => n == null || n == 0L)) return
+      val written = listFilesRecursive(dataDir)
+      if (written.isEmpty && !carried) // a partitioned write of no rows
+        // leaves no file: stage the schema carrier a flat write leaves
+        spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), data.schema)
+          .write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
+      val base = fs.makeQualified(dataDir).toUri.getPath + "/"
+      val staged = (if (written.nonEmpty) written else listFilesRecursive(dataDir))
+        .map(p => (p, fs.makeQualified(p).toUri.getPath.stripPrefix(base)))
       commit(fq, v, None) { (dir, _) =>
         adoptStaged(dir, staged)
         fs.mkdirs(cdcLogDir(fq))
@@ -1552,6 +1462,7 @@ class TableCatalog(spark: SparkSession, root: String,
         // carried masks' entries addressing rewritten files no longer
         // match any chain path and are inert
         if (carried) carryChain(fq, dir, v, retired = hit)
+        else writeLayout(fq, v, dir)
       }
     } finally {
       fs.delete(staging, true)
@@ -1564,86 +1475,36 @@ class TableCatalog(spark: SparkSession, root: String,
     }
   }
 
-  /** Split a partitioned version's leaf partition directories into
-    * (touched, carried) given the qualified paths of files containing
-    * matching rows. Partition-granular: a leaf dir is touched when any
-    * of its files holds a match. */
-  private def touchedPartitionDirs(fq: String, v: Int,
-      hitFilePaths: Set[String]): (Seq[Path], Seq[Path]) = {
-    val byDir = dataFiles(fq, v).groupBy(_.getParent)
-    val (hit, carried) = byDir.partition { case (_, files) =>
-      files.exists(f => hitFilePaths.contains(fs.makeQualified(f).toUri.getPath))
-    }
-    (hit.keys.toSeq.sortBy(_.toString), carried.keys.toSeq.sortBy(_.toString))
-  }
-
   /** UPDATE t SET col = value WHERE predicate — copy-on-write at FILE
     * granularity: only files that contain at least one matching row
     * are rewritten; every other file is carried into the new version
-    * by manifest reference. Partitioned tables prune at PARTITION-DIR
-    * granularity: the probe scan reads only the predicate columns
-    * (column pruning; partition-column predicates additionally prune
-    * whole directories), and only leaf partition dirs containing a
-    * matching row are rewritten — a per-run flag clear on a 100 TB
-    * partitioned table rewrites the run's partitions, not the table
-    * (the same pruning Delta/Iceberg do for UPDATE). */
+    * by manifest reference. On a partitioned table the replacement
+    * rows land in their (possibly new) partition dirs, so a per-run
+    * flag clear on a 100 TB partitioned table rewrites the run's files,
+    * not its partitions (the same pruning Delta/Iceberg do for
+    * UPDATE). */
   def updateWhere(fq: String, assignments: Map[String, Column], where: Column): Unit = {
     val v = currentVersion(fq).getOrElse(
       throw new IllegalArgumentException(s"table not found: $fq"))
     val m = columnMappingAt(fq, v) // probe + rewrite run on the
     // LOGICAL view; the rewritten files land under physical names
-    val pcols = partitionColsOf(fq, v)
-    if (pcols.nonEmpty) {
-      val probe = toLogical(readPartitionedDirs(chainDirs(fq, v),
-        withFileCol = Some("__file")), m)
-      val hitFiles = probe.filter(where).select(col("__file")).distinct()
-        .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
-      if (hitFiles.isEmpty) return // no matching rows: current version stands
-      val (hitDirs, carriedDirs) = touchedPartitionDirs(fq, v, hitFiles)
-      // rewrite THROUGH outstanding DV masks (rows a prior MoR delete
-      // masked must not resurrect); carried dirs keep their masks via
-      // the DV manifest, entries addressing rewritten files go inert
-      val dvs = dvFiles(fq, v)
-      val cur = toLogical(maskDvPos(
-        readPartitionedDirs(hitDirs, withRowPos = true), dvs), m)
-      // reroute: an assignment may change the bucket source column —
-      // the replacement row must land in its NEW bucket dir, or later
-      // bucket pruning would wrongly skip it (wrong results, not perf)
-      val updated = toPhysical(reroute(fq, v, assignments.foldLeft(cur) {
-        case (d, (c, value)) =>
-          d.withColumn(c, when(where, value).otherwise(col(c)))
-      }), m)
-      // CDC: the touched rows are in hand — record pre-image deletes +
-      // post-image inserts so the change feed survives this rewrite
-      val changed = dropRouting(cur).filter(where)
-      val cdc = changed.withColumn("_change_type", lit("delete"))
-        .unionByName(assignments.foldLeft(changed) { case (d, (c, value)) =>
-          d.withColumn(c, value) // rows already filtered: unconditional
-        }.withColumn("_change_type", lit("insert")))
-      commit(fq, v, None) { (dir, _) =>
-        updated.write.mode(SaveMode.Overwrite)
-          .partitionBy(pcols: _*).parquet(dir.toString)
-        writeCdc(fq, dir, toPhysical(cdc, m))
-        writeLayout(fq, v, dir, pcols)
-        if (carriedDirs.nonEmpty) writeManifest(dir, carriedDirs)
-        if (carriedDirs.nonEmpty && dvs.nonEmpty) writeDvManifest(dir, dvs)
-      }
-      return
-    }
     val files = dataFiles(fq, v)
     val hit = candidateFiles(fq, v, files, where, m)
     if (hit.isEmpty) return // no matching rows anywhere: current version stands
     // the rewrite must read THROUGH outstanding DV masks, or rows a
     // prior merge-on-read delete masked would resurrect in the rewrite
-    val cur = toLogical(maskDv(readPhysical(fq, v, hit), dvFiles(fq, v)), m)
+    val cur = toLogical(readMasked(fq, v, hit), m)
     val matched = org.apache.spark.sql.Observation()
-    val updated = toPhysical(enforceConstraints(fq, v,
+    // reroute: an assignment may change the bucket source column — the
+    // replacement row must land in its NEW bucket dir, or later bucket
+    // pruning would wrongly skip it (wrong results, not perf)
+    val updated = toPhysical(enforceConstraints(fq, v, reroute(fq, v,
       assignments.foldLeft(cur.observe(matched,
           sum(when(where, 1L).otherwise(0L)).as("n"))) { case (d, (c, value)) =>
         d.withColumn(c, when(where, value).otherwise(col(c)))
-      }), m)
+      })), m)
     // CDC: pre-image deletes + post-image inserts (O(touched rows))
-    val changed = cur.filter(where)
+    val changed = dropRouting(cur).filter(where)
     val cdc = changed.withColumn("_change_type", lit("delete"))
       .unionByName(assignments.foldLeft(changed) { case (d, (c, value)) =>
         d.withColumn(c, value)
@@ -1653,52 +1514,26 @@ class TableCatalog(spark: SparkSession, root: String,
   }
 
   /** DELETE FROM fq WHERE — the GDPR/right-to-erasure shape. Same
-    * file- and partition-granular copy-on-write as [[updateWhere]]:
-    * parquet footer stats find the files holding matching rows, only
-    * those rewrite (minus the deleted rows), untouched files and
-    * partition dirs ride along by manifest — erasing one subject from
-    * a 100 TB table rewrites the handful of files that mention them.
-    * The old version remains readable via time travel until
-    * compaction/vacuum retires it (retention is the operator's GDPR
-    * clock, as in Delta/Iceberg). */
+    * file-granular copy-on-write as [[updateWhere]]: parquet footer
+    * stats find the files holding matching rows, only those rewrite
+    * (minus the deleted rows), untouched files ride along by manifest
+    * — erasing one subject from a 100 TB table rewrites the handful of
+    * files that mention them. The old version remains readable via
+    * time travel until compaction/vacuum retires it (retention is the
+    * operator's GDPR clock, as in Delta/Iceberg). */
   def deleteWhere(fq: String, where: Column): Unit = {
     val v = currentVersion(fq).getOrElse(
       throw new IllegalArgumentException(s"table not found: $fq"))
     val m = columnMappingAt(fq, v) // logical probe, physical rewrite
-    val pcols = partitionColsOf(fq, v)
-    if (pcols.nonEmpty) {
-      val probe = toLogical(readPartitionedDirs(chainDirs(fq, v),
-        withFileCol = Some("__file")), m)
-      val hitFiles = probe.filter(where).select(col("__file")).distinct()
-        .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
-      if (hitFiles.isEmpty) return
-      val (hitDirs, carriedDirs) = touchedPartitionDirs(fq, v, hitFiles)
-      val dvs = dvFiles(fq, v) // see updateWhere: rewrite through masks
-      val hitRows = toLogical(maskDvPos(
-        readPartitionedDirs(hitDirs, withRowPos = true), dvs), m)
-      val kept = toPhysical(hitRows.filter(!where), m)
-      // CDC: the erased rows, recorded at commit time
-      val cdc = dropRouting(hitRows).filter(where)
-        .withColumn("_change_type", lit("delete"))
-      commit(fq, v, None) { (dir, _) =>
-        kept.write.mode(SaveMode.Overwrite)
-          .partitionBy(pcols: _*).parquet(dir.toString)
-        writeCdc(fq, dir, toPhysical(cdc, m))
-        writeLayout(fq, v, dir, pcols)
-        if (carriedDirs.nonEmpty) writeManifest(dir, carriedDirs)
-        if (carriedDirs.nonEmpty && dvs.nonEmpty) writeDvManifest(dir, dvs)
-      }
-      return
-    }
     val files = dataFiles(fq, v)
     val hit = candidateFiles(fq, v, files, where, m)
     if (hit.isEmpty) return
     // see updateWhere: read through the masks
-    val hitRows = toLogical(maskDv(readPhysical(fq, v, hit), dvFiles(fq, v)), m)
+    val hitRows = toLogical(readMasked(fq, v, hit), m)
     val matched = org.apache.spark.sql.Observation()
     val kept = toPhysical(hitRows.observe(matched,
       sum(when(where, 1L).otherwise(0L)).as("n")).filter(!where), m)
-    val cdc = hitRows.filter(where) // the erased rows
+    val cdc = dropRouting(hitRows).filter(where) // the erased rows
       .withColumn("_change_type", lit("delete"))
     commitRewrite(fq, v, hit, carried = hit.size < files.size, kept, matched,
       toPhysical(cdc, m))
@@ -1706,16 +1541,10 @@ class TableCatalog(spark: SparkSession, root: String,
 
   /** Version v's live rows under their logical names, each carrying
     * its `__fp`/`__ri` DV address — the scan every merge-on-read
-    * mutation masks from. Partitioned chains project the address per
-    * scan before the layout union. */
-  private def addressedRows(fq: String, v: Int): DataFrame = {
-    val withPos =
-      if (partitionColsOf(fq, v).nonEmpty)
-        readPartitionedDirs(chainDirs(fq, v), withRowPos = true)
-      else withRowPos(readPhysical(fq, v, dataFiles(fq, v)))
-    toLogical(maskDvPos(withPos, dvFiles(fq, v), keepPos = true),
+    * mutation masks from. */
+  private def addressedRows(fq: String, v: Int): DataFrame =
+    toLogical(readMasked(fq, v, dataFiles(fq, v), keepPos = true),
       columnMappingAt(fq, v))
-  }
 
   /** DELETE with merge-on-read deletion vectors: NO data file is
     * rewritten — the new version carries every prior file by manifest
@@ -1727,11 +1556,8 @@ class TableCatalog(spark: SparkSession, root: String,
     * masks (and [[vacuum]] then retires the masked bytes — the erasure
     * clock, as with [[deleteWhere]]). Hive-partitioned tables take the
     * same MoR path: the DV sidecar addresses (file, row_index) across
-    * the partition layout, the new version carries every prior chain
-    * entry as directories, and the partition-granular read path masks
-    * per-scan before its layout union — a point-delete in a 1 TB
-    * partition writes O(matched rows) bytes instead of rewriting the
-    * partition. */
+    * the partition layout — a point-delete in a 1 TB partition writes
+    * O(matched rows) bytes instead of rewriting the partition. */
   def deleteWhereDV(fq: String, where: Column): Unit = {
     val v = currentVersion(fq).getOrElse(
       throw new IllegalArgumentException(s"table not found: $fq"))
@@ -1769,7 +1595,7 @@ class TableCatalog(spark: SparkSession, root: String,
     * rewrite debt is settled by [[compact]]. Hive-partitioned tables
     * take the same path: masked originals via the DV sidecar, updated
     * copies written PARTITIONED into the new version dir (so they keep
-    * riding partition pruning), prior chain carried as directories. */
+    * riding partition pruning). */
   def updateWhereDV(fq: String, assignments: Map[String, Column],
       where: Column): Unit = {
     val v = currentVersion(fq).getOrElse(
@@ -1792,11 +1618,9 @@ class TableCatalog(spark: SparkSession, root: String,
       val set = assignments.foldLeft(hit.drop("__fp", "__ri")) {
         case (d, (c, value)) => d.withColumn(c, value) // `where` applied
       }
-      // partitioned: reroute (see updateWhere) — a reassigned bucket
-      // source column must re-route its replacement row to the new
-      // bucket dir
-      val updated = toPhysical(
-        if (pcols.nonEmpty) reroute(fq, v, set) else enforceConstraints(fq, v, set),
+      // reroute (see updateWhere) — a reassigned bucket source column
+      // must re-route its replacement row to the new bucket dir
+      val updated = toPhysical(enforceConstraints(fq, v, reroute(fq, v, set)),
         columnMappingAt(fq, v))
       // rebase across commuting winners (see deleteWhereDV) — the MoR
       // delete+reinsert stays valid while our scanned files live
@@ -1829,60 +1653,14 @@ class TableCatalog(spark: SparkSession, root: String,
       case None => overwrite(fq, source)
       case Some(v) =>
         val m = columnMappingAt(fq, v) // keys/source bind logically
-        val pcols = partitionColsOf(fq, v)
-        if (pcols.nonEmpty) {
-          // partitioned: rewrite only leaf partition dirs whose rows
-          // overlap the source keys; carry the rest by manifest. New
-          // key values land in fresh partition dirs via the
-          // partitioned write of the merged delta.
-          val src = source.cache()
-          try {
-            val keySet = src.select(keys.map(col): _*).distinct()
-            val probe = toLogical(readPartitionedDirs(chainDirs(fq, v),
-                withFileCol = Some("__file")), m)
-              .select(keys.map(col) :+ col("__file"): _*)
-            val hitFiles = probe.join(keySet, keys, "left_semi")
-              .select(col("__file")).distinct()
-              .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
-            val (hitDirs, carriedDirs) = touchedPartitionDirs(fq, v, hitFiles)
-            val dvs = dvFiles(fq, v) // merge through outstanding masks
-            val base =
-              if (hitDirs.isEmpty) src.limit(0) // no overlap: partitioned append
-              else withDeclared(toLogical(maskDvPos(
-                readPartitionedDirs(hitDirs, withRowPos = true), dvs), m), m)
-            // bucketed: the source frame never carries the routing
-            // column — upsert on the LOGICAL columns, then reroute the
-            // whole merged frame (derived column, recompute is exact)
-            val merged = toPhysical(reroute(fq, v, graft.operators.MergeOps
-              .upsert(base.drop(BucketCol), src, keys)), m)
-            // CDC when files rewrote: matched pre-images out, every
-            // source row in (upsert = delete+insert for matches, plain
-            // insert for new keys). A no-overlap merge is a pure
-            // append — the feed's file diff already reconstructs it.
-            val cdcOpt =
-              if (hitDirs.isEmpty) None
-              else Some(base.drop(BucketCol).join(keySet, keys, "left_semi")
-                .withColumn("_change_type", lit("delete"))
-                .unionByName(src.withColumn("_change_type", lit("insert"))))
-            commit(fq, v, None) { (dir, _) =>
-              merged.write.mode(SaveMode.Overwrite)
-                .partitionBy(pcols: _*).parquet(dir.toString)
-              cdcOpt.foreach(c => writeCdc(fq, dir, toPhysical(c, m)))
-              writeLayout(fq, v, dir, pcols)
-              if (carriedDirs.nonEmpty) writeManifest(dir, carriedDirs)
-              if (carriedDirs.nonEmpty && dvs.nonEmpty) writeDvManifest(dir, dvs)
-            }
-          } finally src.unpersist()
-          return
-        }
         val files = dataFiles(fq, v)
         val src = source.cache()
         try {
+          val keySet = src.select(keys.map(col): _*).distinct()
           val keyPred = {
             // files whose rows semi-join the source keys get rewritten;
             // input_file_name() must bind to the scan BEFORE the join
             // (it is per-source)
-            val keySet = src.select(keys.map(col): _*).distinct()
             val target = toLogical(readPhysical(fq, v, files), m)
               .select(keys.map(col) :+ input_file_name().as("__file"): _*)
             target.join(keySet, keys, "left_semi")
@@ -1891,24 +1669,32 @@ class TableCatalog(spark: SparkSession, root: String,
           }
           val (hit, carried) = files.partition(
             p => keyPred.contains(fs.makeQualified(p).toUri.getPath))
-          val dvs = dvFiles(fq, v) // see updateWhere: merge through masks
-          val base = // declared columns too: the upsert unions by name
+          // declared columns too: the upsert unions by name. Bucketed:
+          // the source frame never carries the routing column — upsert
+          // on the LOGICAL columns, then reroute the whole merged frame
+          // (derived column, recompute is exact). Read through the masks
+          // (see updateWhere).
+          val base =
             if (hit.isEmpty) src.limit(0) // no overlap: plain append of source
-            else withDeclared(toLogical(maskDv(readPhysical(fq, v, hit), dvs), m), m)
-          val merged = toPhysical(enforceConstraints(fq, v,
-            graft.operators.MergeOps.upsert(base, src, keys)), m)
-          // CDC when files rewrote (see the partitioned branch)
+            else dropRouting(withDeclared(toLogical(readMasked(fq, v, hit), m), m))
+          val merged = toPhysical(enforceConstraints(fq, v, reroute(fq, v,
+            graft.operators.MergeOps.upsert(base, src, keys))), m)
+          // CDC when files rewrote: matched pre-images out, every source
+          // row in (upsert = delete+insert for matches, plain insert for
+          // new keys). A no-overlap merge is a pure append — the feed's
+          // file diff already reconstructs it.
           val cdcOpt =
             if (hit.isEmpty) None
-            else Some(base
-              .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi")
+            else Some(base.join(keySet, keys, "left_semi")
               .withColumn("_change_type", lit("delete"))
               .unionByName(src.withColumn("_change_type", lit("insert"))))
           commit(fq, v, None) { (dir, _) =>
-            merged.write.mode(SaveMode.Overwrite).parquet(dir.toString)
+            merged.write.mode(SaveMode.Overwrite)
+              .partitionBy(partitionColsOf(fq, v): _*).parquet(dir.toString)
             cdcOpt.foreach(c => writeCdc(fq, dir, toPhysical(c, m)))
             if (carried.nonEmpty) // reference + tombstones, O(touched)
               carryChain(fq, dir, v, retired = hit)
+            else writeLayout(fq, v, dir)
           }
         } finally src.unpersist()
     }
@@ -1928,8 +1714,7 @@ class TableCatalog(spark: SparkSession, root: String,
   def fileStats(fq: String): (Int, Long) = {
     val v = currentVersion(fq).getOrElse(
       throw new IllegalArgumentException(s"table not found: $fq"))
-    val files = dataFiles(fq, v)
-    (files.size, files.map(p => fs.getFileStatus(p).getLen).sum)
+    (dataFiles(fq, v).size, fileSizesAt(fq, v).values.sum)
   }
 
   /** VACUUM: physically remove version directories older than the
@@ -1975,25 +1760,18 @@ class TableCatalog(spark: SparkSession, root: String,
 
   /** After a maintenance rebase onto `head`, carry the commuting
     * winners' delta into a rewrite commit that otherwise materializes
-    * snapshot `snapV`: their new data files (or chain dirs), AND any
-    * NEW deletion-vector sidecars. [[commit]]'s rebase validation
+    * snapshot `snapV`: their new data files, AND any NEW
+    * deletion-vector sidecars. [[commit]]'s rebase validation
     * guarantees those new DVs address only non-read-set (delta)
     * files — without carrying them, a delete that raced a compaction
     * would silently RESURRECT its masked rows in the compacted
     * version (the data rides along, the mask is dropped). */
   private def carryRebaseDelta(fq: String, snapV: Int, head: Int,
-      dir: Path, readFiles: Seq[Path], readDvs: Seq[Path],
-      partitioned: Boolean): Unit = if (head != snapV) {
-    if (partitioned || partitionColsOf(fq, head).nonEmpty) {
-      val known = chainDirs(fq, snapV).map(_.toString).toSet
-      val delta = chainDirs(fq, head).filterNot(p => known(p.toString))
-      if (delta.nonEmpty) writeManifest(dir, delta)
-    } else {
-      val known = readFiles.map(p => fs.makeQualified(p).toString).toSet
-      val delta = dataFiles(fq, head)
-        .filterNot(p => known(fs.makeQualified(p).toString))
-      if (delta.nonEmpty) writeManifest(dir, delta)
-    }
+      dir: Path, readFiles: Seq[Path], readDvs: Seq[Path]): Unit = if (head != snapV) {
+    val known = readFiles.map(p => fs.makeQualified(p).toString).toSet
+    val delta = dataFiles(fq, head)
+      .filterNot(p => known(fs.makeQualified(p).toString))
+    if (delta.nonEmpty) writeManifest(dir, delta)
     val knownDvs = readDvs.map(p => fs.makeQualified(p).toString).toSet
     val newDvs = dvFiles(fq, head)
       .filterNot(p => knownDvs(fs.makeQualified(p).toString))
@@ -2016,10 +1794,7 @@ class TableCatalog(spark: SparkSession, root: String,
     * compaction reads the head, then racers land while it rewrites). */
   private[graft] def compactFrom(fq: String, v: Int,
       targetFileBytes: Long = 128L << 20): Unit = {
-    val (nFiles, bytes) = {
-      val files = dataFiles(fq, v)
-      (files.size, files.map(p => fs.getFileStatus(p).getLen).sum)
-    }
+    val (nFiles, bytes) = (dataFiles(fq, v).size, fileSizesAt(fq, v).values.sum)
     // a single-file table still compacts when DV masks are outstanding:
     // compaction is what materializes merge-on-read deletes (read(fq)
     // below is DV-masked; the fresh chain carries no DV manifest)
@@ -2051,8 +1826,8 @@ class TableCatalog(spark: SparkSession, root: String,
     commit(fq, v, Some((readFiles, readDvs))) { (dir, head) =>
       sized.write.mode(SaveMode.Overwrite)
         .partitionBy(pcols: _*).parquet(dir.toString)
-      if (pcols.nonEmpty) writeLayout(fq, v, dir, pcols)
-      carryRebaseDelta(fq, v, head, dir, readFiles, readDvs, pcols.nonEmpty)
+      writeLayout(fq, v, dir)
+      carryRebaseDelta(fq, v, head, dir, readFiles, readDvs)
       writeCdcEmpty(fq, dir) // change-wise a no-op: the feed emits nothing
     }
   }
@@ -2132,8 +1907,8 @@ class TableCatalog(spark: SparkSession, root: String,
     commit(fq, zv, Some((readFiles, readDvs))) { (dir, head) =>
       clustered.write.mode(SaveMode.Overwrite)
         .partitionBy(zpcols: _*).parquet(dir.toString)
-      if (zpcols.nonEmpty) writeLayout(fq, zv, dir, zpcols)
-      carryRebaseDelta(fq, zv, head, dir, readFiles, readDvs, zpcols.nonEmpty)
+      writeLayout(fq, zv, dir)
+      carryRebaseDelta(fq, zv, head, dir, readFiles, readDvs)
       writeCdcEmpty(fq, dir) // no row changes: the feed emits nothing
     }
   }
@@ -2240,9 +2015,9 @@ class TableCatalog(spark: SparkSession, root: String,
     }.toMap
     import spark.implicits._
     val nh = BloomHashes
-    val built = readPhysical(fq, v, missing)
-      .select(col("_metadata.file_path").as("f"),
-        xxhash64(col(colPhys).cast("string")).as("h"))
+    val built = readPhysical(fq, v, missing,
+        _.select(col("_metadata.file_path").as("f"),
+          xxhash64(col(colPhys).cast("string")).as("h")))
       .as[(String, Long)]
       .map { case (f, h) => (new Path(f).toUri.getPath, h) } // drop scheme
       .groupByKey(_._1)
@@ -2297,8 +2072,7 @@ class TableCatalog(spark: SparkSession, root: String,
     val pred = col(column) === lit(value)
     val m = columnMappingAt(fq, v)
     val physCol = m.physical(column) // `_BLOOMS` key by physical name
-    val pcols = partitionColsOf(fq, v)
-    if (pcols.contains(column)) // partition pruning answers exactly
+    if (partitionColsOf(fq, v).contains(column)) // partition pruning answers exactly
       return readPartitionedChain(fq, v).filter(pred)
     val files = dataFiles(fq, v)
     if (files.isEmpty) return read(fq).filter(pred)
@@ -2315,11 +2089,7 @@ class TableCatalog(spark: SparkSession, root: String,
       }
     }
     if (surviving.isEmpty) read(fq).filter(pred).limit(0)
-    else if (pcols.nonEmpty) // bloom-pruned partitioned point lookup
-      dropRouting(toLogical(
-        readPartitionedSubset(fq, v, surviving), m).filter(pred))
-    else toLogical(maskDv(readPhysical(fq, v, surviving),
-      dvFiles(fq, v)), m).filter(pred)
+    else dropRouting(toLogical(readMasked(fq, v, surviving), m)).filter(pred)
   }
 
   // ---- zero-copy shallow clone --------------------------------------------
@@ -2344,15 +2114,13 @@ class TableCatalog(spark: SparkSession, root: String,
       throw new IllegalArgumentException(s"table not found: $src"))
     require(currentVersion(dst).isEmpty, s"clone target exists: $dst")
     require(fs.exists(versionDir(src, v)), s"$src version $v not retained")
-    val pcols = partitionColsOf(src, v)
-    // partitioned clones carry the source's chain DIRECTORIES (the
-    // partition-layout manifest convention) and keep its layout
-    val carried: Seq[Path] =
-      if (pcols.nonEmpty) chainDirs(src, v) else dataFiles(src, v)
+    // the clone's v0 lists the source's files explicitly (a reference
+    // chain cannot cross tables) and keeps its layout
+    val carried = dataFiles(src, v)
     val dvs = dvFiles(src, v)
     commit(dst, headOf(dst), None) { (dir, _) =>
       fs.mkdirs(dir)
-      if (pcols.nonEmpty) writeLayout(src, v, dir, pcols)
+      writeLayout(src, v, dir)
       writeManifest(dir, carried)
       if (dvs.nonEmpty) writeDvManifest(dir, dvs)
       // schema actions (declared columns, renames, drops) at or below
@@ -2408,8 +2176,7 @@ class TableCatalog(spark: SparkSession, root: String,
     * sets and the final exceptAll nets them out, so the feed is exactly
     * the full-snapshot EXCEPT ALL diff while only scanning changed
     * files. Output: the table's columns plus `_change_type`
-    * ('insert' | 'delete'). Falls back to the full-snapshot diff for
-    * partitioned tables (partition pruning limits those scans). */
+    * ('insert' | 'delete'). */
   def readChanges(fq: String, fromV: Int, toV: Int): DataFrame = {
     require(fromV <= toV, s"fromV $fromV > toV $toV")
     val toSchema = readVersion(fq, toV).schema
@@ -2426,12 +2193,6 @@ class TableCatalog(spark: SparkSession, root: String,
     }
     def tag(df: DataFrame, t: String) =
       align(df).select(cols: _*).withColumn("_change_type", lit(t))
-    if (partitionColsOf(fq, fromV).nonEmpty ||
-        partitionColsOf(fq, toV).nonEmpty) {
-      val o = readVersion(fq, fromV); val n = readVersion(fq, toV)
-      return tag(n.exceptAll(o), "insert")
-        .unionByName(tag(o.exceptAll(n), "delete"))
-    }
     def qp(p: Path) = fs.makeQualified(p).toUri.getPath
     val filesA = dataFiles(fq, fromV); val filesB = dataFiles(fq, toV)
     val setA = filesA.map(qp).toSet; val setB = filesB.map(qp).toSet
@@ -2449,17 +2210,17 @@ class TableCatalog(spark: SparkSession, root: String,
           .map(_.getString(0)).toSeq
           .filter(f => setB(new Path(f).toUri.getPath)) // removed files net elsewhere
         if (hitFiles.isEmpty) None
-        else Some(withRowPos(readPhysical(fq, toV, hitFiles.map(new Path(_))))
+        else Some(readPhysical(fq, toV, hitFiles.map(new Path(_)), withRowPos)
           .join(mask, col("__fp") === mask("file") &&
             col("__ri") === mask("row_index"), "left_semi")
           .drop("__fp", "__ri"))
       }
     val candIns =
       if (added.isEmpty) None
-      else Some(maskDv(readPhysical(fq, toV, added), dvB))
+      else Some(readMasked(fq, toV, added))
     val removedDeletes =
       if (removed.isEmpty) None
-      else Some(maskDv(readPhysical(fq, fromV, removed), dvA))
+      else Some(readMasked(fq, fromV, removed))
     val candDel = (removedDeletes.toSeq ++ survivorDeletes.toSeq)
       .map(d => align(d).select(cols: _*)).reduceOption(_.unionByName(_))
     (candIns, candDel) match {
@@ -2510,42 +2271,16 @@ class TableCatalog(spark: SparkSession, root: String,
   /** Full schema of a PARTITIONED version — Spark's partition
     * discovery recovers the path-encoded columns and their inferred
     * types (int/long/decimal/date/string cascade), unioned across the
-    * chain's layouts. Driver-side footer/listing work only; no job —
-    * and cached per version (a chain's schema is immutable once
-    * committed), so repeated connector loads of one snapshot resolve
-    * without re-running discovery. */
+    * chain's layouts ([[readByOwner]]: one footer per owning version
+    * dir, no mergeSchema job). Cached per version (a chain's schema is
+    * immutable once committed), so repeated connector loads and
+    * [[readPhysical]] calls on one snapshot resolve without re-running
+    * discovery. */
   private[graft] def partitionedSchemaAt(fq: String, v: Int)
-      : org.apache.spark.sql.types.StructType =
-    TableCatalog.cachedValue(fs, versionDir(fq, v), s"pschema:$v") {
-      computePartitionedSchema(fq, v)
-    }.getOrElse(computePartitionedSchema(fq, v))
-
-  /** Schema of a partitioned chain WITHOUT the mergeSchema footer job:
-    * the previous `mergeSchema=true` read launched a distributed
-    * parquet schema-merging job over EVERY footer of EVERY chain dir on
-    * first touch of each new version — but files within one version
-    * group come out of a single writing job (uniform footers, the
-    * invariant partitioned type-widening already rests on), so ONE
-    * footer per group suffices. Per-group schemas come from a plain
-    * (driver-side) read — single footer + partition-value discovery —
-    * and cross-group resolution reuses Spark's own unionByName
-    * coercion over EMPTY frames (pure analysis, no job): widened types
-    * resolve to the widest, evolved chains expose every column, column
-    * order matches the previous union exactly. */
-  private def computePartitionedSchema(fq: String, v: Int)
       : org.apache.spark.sql.types.StructType = {
-    val entries = chainDirs(fq, v).filter(fs.exists(_))
-    val withData = entries.filter(e => listFilesRecursive(e).nonEmpty)
-    val use = if (withData.nonEmpty) withData else entries
-    use.groupBy(versionAncestor).toSeq.sortBy(_._1.toString)
-      .map { case (base, dirs) =>
-        val sch = spark.read.option("basePath", base.toString)
-          .parquet(dirs.map(_.toString).sorted: _*).schema
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-      }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-      .schema
+    def compute = readByOwner(fq, v, dataFiles(fq, v), None, identity).schema
+    TableCatalog.cachedValue(fs, versionDir(fq, v), s"pschema:$v")(compute)
+      .getOrElse(compute)
   }
 
   /** Footer schema of one representative data file, cached by file
@@ -2734,7 +2469,7 @@ class TableCatalog(spark: SparkSession, root: String,
         // sink must not rewrite O(live files) of manifest per epoch;
         // every Nth epoch checkpoints so cold reads stay O(interval)
         carryChain(fq, dir, head)
-      } else if (pcols.nonEmpty) writePartitions(dir, pcols)
+      } else writePartitions(dir, pcols)
       if (overwrite) resetSchemaActions(fq, dir, carryConstraints = !replaceTable)
       bucketSpec.foreach { case (c, n) => writeBucketSpec(dir, c, n) }
       // streaming-sink idempotency: the epoch tag commits ATOMICALLY
@@ -3312,7 +3047,7 @@ class TableCatalog(spark: SparkSession, root: String,
             .map(_ => new Path(dir, s"$BucketCol=0")).getOrElse(dir)
           empty.repartition(1).write.mode(SaveMode.Overwrite)
             .parquet(target.toString)
-          if (pcols.nonEmpty) writePartitions(dir, pcols)
+          writePartitions(dir, pcols)
           bucketSpec.foreach { case (c, n) => writeBucketSpec(dir, c, n) }
           if (overwrite)
             resetSchemaActions(fq, dir, carryConstraints = !replaceTable)
@@ -3343,11 +3078,10 @@ class TableCatalog(spark: SparkSession, root: String,
     * another writer) landed since, the DELETE side could silently match
     * nothing while the INSERT side commits, duplicating rows — the
     * commit aborts instead (Delta/Iceberg's conflict semantics) and the
-    * caller re-runs the whole operation. Hive-partitioned targets carry
-    * the prior chain as DIRECTORIES and land the insert side INLINE (its
-    * partition column travels as data, like a pre-evolution entry — the
-    * layout-union read resolves both); compaction re-partitions them
-    * later. */
+    * caller re-runs the whole operation. Hive-partitioned targets land
+    * the insert side INLINE at the version root (its partition column
+    * travels as data, like a pre-evolution file — reads take it from
+    * the data); compaction re-partitions them later. */
   private[graft] def commitDelta(fq: String, basedOn: Option[Int],
       dataStaged: Seq[Path], deletes: Either[Column, Seq[Path]]): Unit = {
     val v = currentVersion(fq).getOrElse(

@@ -24,16 +24,18 @@ import graft.catalog.TableCatalog
   * deletes, updates and replaces, through the connector write paths
   * (DSv2 `writeTo` append — empty too — and `writeTo.overwrite(cond)`,
   * SQL `UPDATE`/`DELETE`) of a per-run `GraftCatalog`.
-  * Three fixed seeds run in CI; any falsification becomes a named
-  * regression test. */
+  * Three fixed seeds run in CI on a flat table and one on a table
+  * partitioned by `p = id % 4` (a column no op renames, drops or
+  * widens); any falsification becomes a named regression test. */
 class ModelFuzzSpec extends SparkTestBase {
 
   private case class MRow(id: Long, qty: Long, price: Option[Double],
       tag: Option[String])
 
-  /** One fuzz run: `nOps` random operations under `seed`. */
+  /** One fuzz run: `nOps` random operations under `seed`; a
+    * `partitioned` table carries `p = id % 4` as its partition column. */
   // scalastyle:off method.length cyclomatic.complexity
-  private def runFuzz(seed: Int, nOps: Int): Unit = {
+  private def runFuzz(seed: Int, nOps: Int, partitioned: Boolean = false): Unit = {
     val rnd = new scala.util.Random(seed)
     val root = tempDir(s"fuzz_$seed")
     val cat = new TableCatalog(spark, root)
@@ -60,9 +62,10 @@ class ModelFuzzSpec extends SparkTestBase {
     val snapshots = mutable.Map.empty[Int, (Seq[String], Boolean, String)]
     val trace = mutable.Buffer.empty[String]
 
+    def part(id: Long): String = if (partitioned) s"|${Math.floorMod(id, 4L)}" else ""
     def key(id: Long, qty: Long, price: Option[Double], tag: Option[String])
         : String =
-      s"$id|$qty|${if (hasPrice) price.map(_.toString).getOrElse("null") else ""}|${tag.getOrElse("null")}"
+      s"$id|$qty|${if (hasPrice) price.map(_.toString).getOrElse("null") else ""}|${tag.getOrElse("null")}${part(id)}"
     def modelKeys: Seq[String] =
       model.values.map(r => key(r.id, r.qty, r.price, r.tag)).toSeq.sorted
 
@@ -80,11 +83,13 @@ class ModelFuzzSpec extends SparkTestBase {
         StructField("qty", if (qtyAsLong) LongType else IntegerType))
       if (hasPrice) fields += StructField(priceName, DoubleType)
       fields += StructField(tagName, StringType)
+      if (partitioned) fields += StructField("p", IntegerType)
       val data = rows.map { r =>
         val vals = mutable.Buffer[Any](r.id,
           if (qtyAsLong) r.qty else r.qty.toInt)
         if (hasPrice) vals += r.price.map(Double.box).orNull
         vals += r.tag.orNull
+        if (partitioned) vals += Math.floorMod(r.id, 4L).toInt
         Row(vals.toSeq: _*)
       }
       spark.createDataFrame(spark.sparkContext.parallelize(data.toSeq, 1),
@@ -94,14 +99,16 @@ class ModelFuzzSpec extends SparkTestBase {
     def observed(dfr: DataFrame, withPrice: Boolean, tn: String)
         : Seq[String] = {
       val cols = Seq(col("id").cast("long"), col("qty").cast("long")) ++
-        (if (withPrice) Seq(col(priceName)) else Nil) :+ col(s"`$tn`")
+        (if (withPrice) Seq(col(priceName)) else Nil) ++ Seq(col(s"`$tn`")) ++
+        (if (partitioned) Seq(col("p").cast("long")) else Nil)
       dfr.select(cols: _*).collect().map { r =>
         val price = if (withPrice) {
           if (r.isNullAt(2)) "null" else r.getDouble(2).toString
         } else ""
         val tagIdx = if (withPrice) 3 else 2
         val tag = if (r.isNullAt(tagIdx)) "null" else r.getString(tagIdx)
-        s"${r.getLong(0)}|${r.getLong(1)}|$price|$tag"
+        val p = if (partitioned) s"|${r.getLong(tagIdx + 1)}" else ""
+        s"${r.getLong(0)}|${r.getLong(1)}|$price|$tag$p"
       }.toSeq.sorted
     }
 
@@ -161,7 +168,8 @@ class ModelFuzzSpec extends SparkTestBase {
           }
           val ti = r.fieldIndex(tagName)
           val tag = if (r.isNullAt(ti)) "null" else r.getString(ti)
-          s"${r.getLong(r.fieldIndex("id"))}|$qty|$price|$tag"
+          val p = if (partitioned) s"|${r.get(r.fieldIndex("p"))}" else ""
+          s"${r.getLong(r.fieldIndex("id"))}|$qty|$price|$tag$p"
         }
         rows.filter(_.getAs[String]("_change_type") == "delete")
           .foreach(r => state -= keyOfFeedRow(r))
@@ -181,9 +189,12 @@ class ModelFuzzSpec extends SparkTestBase {
     spark.conf.set(s"spark.sql.catalog.$gc", "graft.connector.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$gc.root", root)
     val sqlT = s"$gc.$t"
+    def overwrite(df: DataFrame): Unit =
+      if (partitioned) cat.overwritePartitioned(t, df, Seq("p"))
+      else cat.overwrite(t, df)
     try {
       val init = freshRows(6)
-      cat.overwrite(t, frame(init, qtyAsLong = false))
+      overwrite(frame(init, qtyAsLong = false))
       init.foreach(r => model(r.id) = r)
       snap()
 
@@ -210,7 +221,7 @@ class ModelFuzzSpec extends SparkTestBase {
           val rows = freshRows(2 + rnd.nextInt(5))
           val asLong = rnd.nextBoolean()
           trace += s"$opIdx overwrite ${rows.size} qtyLong=$asLong"
-          cat.overwrite(t, frame(rows, asLong))
+          overwrite(frame(rows, asLong))
           model.clear(); rows.foreach(r => model(r.id) = r)
           qtyLong = asLong
           lastSchemaChangeV = cat.version(t).get // fresh chain: no feed across
@@ -343,4 +354,7 @@ class ModelFuzzSpec extends SparkTestBase {
   test("fuzz: 100 random ops vs model, seed 12") { runFuzz(12, 100) }
   test("fuzz: 100 random ops vs model, seed 34") { runFuzz(34, 100) }
   test("fuzz: 100 random ops vs model, seed 56") { runFuzz(56, 100) }
+  test("fuzz: 48 random ops vs model on a partitioned table, seed 78") {
+    runFuzz(78, 48, partitioned = true)
+  }
 }
