@@ -1383,30 +1383,42 @@ class TableCatalog(spark: SparkSession, root: String,
   /** The files of version v that hold a row matching `pred`,
     * planned from commit metadata first: the predicate's conjuncts,
     * translated to source filters on PHYSICAL names, drop every file
-    * whose `_STATS` bounds rule one out (a conjunct that does not
-    * translate keeps every file), and a file whose `_STATS` records
-    * zero rows never matches. One survivor IS the answer (no job);
-    * several are probed together in ONE job with no exchange — a
+    * whose `_STATS` bounds or path-encoded partition values rule one
+    * out (a conjunct that does not translate keeps every file), and a
+    * file whose `_STATS` records zero rows never matches. One survivor
+    * IS the answer (no job); several are probed together in ONE job
+    * with no exchange — a
     * flag clear on a table that grows one file per run touches only
     * the run's own file. Comparison is by path, robust to URI
     * qualification. */
-  private def candidateFiles(fq: String, v: Int, files: Seq[Path],
+  private[graft] def candidateFiles(fq: String, v: Int, files: Seq[Path],
       pred: Column, m: TableCatalog.ColumnMapping): Seq[Path] = {
     if (files.isEmpty) return Nil
     def key(p: Path) = fs.makeQualified(p).toUri.getPath
+    val schema = graft.connector.GraftSource.physicalChainSchema(spark, this, fq, v)
     val logical = toLogical(spark.createDataFrame(
-      java.util.List.of[org.apache.spark.sql.Row](),
-      graft.connector.GraftSource.physicalChainSchema(spark, this, fq, v)), m)
+      java.util.List.of[org.apache.spark.sql.Row](), schema), m)
     val filters = logical.filter(pred).queryExecution.analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
         graft.connector.FilterColumns.fromExpression(f.condition)
           .map(graft.connector.FilterColumns.mapAttrs(_, m.physicalOf))
     }.getOrElse(Nil)
+    // partition values from the paths, only when a conjunct names a
+    // partition column (a flat table has none: no extra listing)
+    val pcols = partitionColsOf(fq, v).toSet
+    val partVals: Map[String, Map[String, Option[String]]] =
+      if (!filters.exists(_.references.exists(pcols))) Map.empty
+      else filePartitionValuesAt(fq, v).map { case (p, pv) => p -> pv.toMap }.toMap
     val stats = statsByPath(fq, v)
     val surviving = graft.connector.FileSkipping.surviving(this, fq, v,
       files.map(p => fs.makeQualified(p).toString), filters).toSet
-    val cands = files.filter(p => surviving(fs.makeQualified(p).toString) &&
-      !stats.get(key(p)).flatMap(_.get("__rows")).exists(_._1 == 0))
+    val cands = files.filter { p =>
+      val q = fs.makeQualified(p).toString
+      surviving(q) &&
+        partVals.get(q).forall(pv => filters.forall(
+          graft.connector.GraftPartitions.mayMatch(pv, schema, _))) &&
+        !stats.get(key(p)).flatMap(_.get("__rows")).exists(_._1 == 0)
+    }
     if (cands.size <= 1) cands
     else {
       val hit = graft.util.SmallAgg.countBy(

@@ -6,9 +6,9 @@ import graft.config._
 import RefinedOps.resolve
 
 /** CURATED-layer operators: config→Column compilers for the mapping
-  * projection, filter WHERE clauses, lookup classification join, and
-  * the per-field CRM value builder. Everything compiles to built-in
-  * expressions so Catalyst can push/prune/broadcast.
+  * projection, filter WHERE clauses, lookup classification (a broadcast
+  * existence join), and the per-field CRM value builder. Everything
+  * compiles to built-in expressions so Catalyst can push/prune/broadcast.
   *
   * reference: SF_Notebooks/REFINED_SNOWFLAKE_TO_CURATED_SNOWFLAKE.py
   */
@@ -64,21 +64,28 @@ object CuratedOps {
     conjuncts.reduceOption(_ && _).getOrElse(lit(true))
   }
 
-  /** LEFT JOIN to a lookup table; rows with a match get matchValue
-    * (UPDATE), others noMatchValue (NEW) in resultColumn. The lookup
-    * side is dimension-sized → broadcast.
+  /** Classify each source row by whether its key exists in a lookup
+    * table: matchValue (UPDATE) when it does, noMatchValue (NEW) when
+    * not (a null key never matches), in resultColumn. A correlated
+    * EXISTS with a broadcast hint, which plans as a broadcast
+    * existence join: one row per source row however often a key
+    * repeats in the lookup, with no `distinct` shuffle over the
+    * lookup. The outer key is an unbound `col(...).outer()`: a
+    * Dataset-bound `src(srcKey)` fails analysis inside the subquery.
     * reference: REFINED_SNOWFLAKE_TO_CURATED_SNOWFLAKE.py:1396-1421 */
   def lookupClassify(src: DataFrame, lookup: DataFrame, spec: LookupSpec): DataFrame = {
     val srcKey = resolve(src.columns.toSeq, spec.sourceKey)
       .getOrElse(throw new IllegalArgumentException(s"source key ${spec.sourceKey} not found"))
     val lkKey = resolve(lookup.columns.toSeq, spec.lookupKey)
       .getOrElse(throw new IllegalArgumentException(s"lookup key ${spec.lookupKey} not found"))
-    val lk = broadcast(lookup.select(col(lkKey).as("__lk_key")).distinct())
-    src.join(lk, src(srcKey) === lk("__lk_key"), "left")
+    // the outer key goes by a reserved name: a lookup column named like
+    // the source key would capture the reference, outer() or not
+    val known = lookup.hint("broadcast")
+      .where(col(lkKey) === col("__src_key").outer()).exists()
+    src.withColumn("__src_key", col(srcKey))
       .withColumn(spec.resultColumn,
-        when(col("__lk_key").isNotNull, lit(spec.matchValue))
-          .otherwise(lit(spec.noMatchValue)))
-      .drop("__lk_key")
+        when(known, lit(spec.matchValue)).otherwise(lit(spec.noMatchValue)))
+      .drop("__src_key")
   }
 
   /** Future-only filter: concat the configured datetime columns with the

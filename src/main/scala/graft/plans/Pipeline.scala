@@ -1,6 +1,7 @@
 package graft.plans
 
 import java.util.UUID
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,27 +26,69 @@ final case class LogEntry(step: String, status: String, rowCount: Long = -1,
 
 /** Append-only run/step logging to a catalog log table (W7).
   * reference: RAW_ADLS_TO_RAW_SNOWFLAKE.py:316-382 (+3 variants).
-  * Every write is one versioned catalog commit, so callers with many
-  * rows (the precheck battery) hand them all to [[logAll]] at once. */
-final class IngestLog(spark: SparkSession, catalog: TableCatalog, logTable: String) {
+  *
+  * Every write is one versioned catalog commit, so rows go out in as
+  * few commits as the caller can afford: [[logAll]] writes a batch in
+  * one, and a [[IngestLog.deferred]] copy (what [[Pipeline.run]] hands
+  * its stages) gathers a whole run's rows and writes them in one
+  * commit at [[flush]]. Each row keeps the LOG_TIME of the call that
+  * logged it, so per-step timing survives the deferral; a JVM killed
+  * mid-run loses that run's log rows, never its data rows. */
+final class IngestLog private (spark: SparkSession, catalog: TableCatalog,
+    logTable: String, pending: Option[ArrayBuffer[Row]]) {
+  def this(spark: SparkSession, catalog: TableCatalog, logTable: String) =
+    this(spark, catalog, logTable, None)
+
   def log(ctx: RunContext, practice: String, fileType: String, step: String,
       status: String, rowCount: Long = -1, error: String = ""): Unit =
     logAll(ctx, practice, fileType, Seq(LogEntry(step, status, rowCount, error)))
 
   /** All `entries` in ONE commit of one data file (coalesce(1): a local
-    * frame otherwise splits into one file per core); each row gets its
-    * own LOG_ID, all share one LOG_TIME. No entries, no commit. */
+    * frame otherwise splits into one file per core), or, on a deferred
+    * log, into its pending rows; each row gets its own LOG_ID, all
+    * share one LOG_TIME. No entries, no commit. */
   def logAll(ctx: RunContext, practice: String, fileType: String,
       entries: Seq[LogEntry]): Unit = if (entries.nonEmpty) {
     val now = new java.sql.Timestamp(System.currentTimeMillis())
     val rows = entries.map(e => Row(ctx.newLogId(), ctx.parentRunId, practice,
       fileType, e.step, e.status, e.rowCount, e.error, now))
+    pending match {
+      case Some(buf) => buf.synchronized(buf ++= rows)
+      case None => write(rows)
+    }
+  }
+
+  /** Commit a deferred log's pending rows (one commit; none pending, no
+    * commit). A no-op on a log that writes through. */
+  def flush(): Unit = pending.foreach { buf =>
+    write(buf.synchronized { val rows = buf.toList; buf.clear(); rows })
+  }
+
+  private def deferredCopy: IngestLog =
+    new IngestLog(spark, catalog, logTable, Some(ArrayBuffer.empty))
+
+  private def write(rows: Seq[Row]): Unit = if (rows.nonEmpty)
     catalog.append(logTable,
       spark.createDataFrame(rows.asJava, IngestLog.Schema).coalesce(1))
-  }
 }
 
 object IngestLog {
+  /** `body` with a deferred copy of `log`, private to this call, whose
+    * rows are committed in ONE commit when `body` ends — in a `finally`,
+    * so a stage that throws still records the steps before it (a
+    * failing flush is then suppressed into the stage's exception). */
+  def deferred[T](log: Option[IngestLog])(body: Option[IngestLog] => T): T = {
+    val run = log.map(_.deferredCopy)
+    var thrown: Throwable = null
+    try body(run)
+    catch { case t: Throwable => thrown = t; throw t }
+    finally run.foreach { l =>
+      try l.flush()
+      catch { case scala.util.control.NonFatal(e) if thrown != null =>
+        thrown.addSuppressed(e) }
+    }
+  }
+
   /** The log table's columns, fixed once: no encoder derived per call.
     * ROW_COUNT is the only non-nullable one (a primitive long). */
   val Schema: StructType = StructType(
@@ -58,13 +101,15 @@ object IngestLog {
 
 final case class StageResult(status: String, rowCount: Long, details: String = "")
 
-/** RAW stage: stage files → single multi-file CSV scan → metadata
-  * columns → append to the RAW table.
+/** RAW stage: stage files → multi-file CSV scan → metadata columns →
+  * append to the RAW table.
   *
   * Unlike the reference's per-file loop
-  * (RAW_ADLS_TO_RAW_SNOWFLAKE.py:1180-1244) all matched files load in
-  * ONE scan; per-file lineage comes from input_file_name(). IS_NEW is
-  * only attached when a refined stage is configured (:1224-1231).
+  * (RAW_ADLS_TO_RAW_SNOWFLAKE.py:1180-1244) all matched files that
+  * share a header load in ONE scan, its header read on the driver
+  * ([[CsvStageReader.read]]: the stage's only job is the append);
+  * per-file lineage comes from input_file_name(). IS_NEW is only
+  * attached when a refined stage is configured (:1224-1231).
   */
 final class RawStage(spark: SparkSession, catalog: TableCatalog,
     log: Option[IngestLog] = None) {
@@ -300,24 +345,6 @@ final class PrecheckStage(spark: SparkSession, log: Option[IngestLog] = None) {
   import graft.precheck.{CheckResult, Precheck}
   import graft.sources.ArchiveMover
 
-  /** First `n` lines straight from the store (decompressing by codec,
-    * so .gz drops behave like the text scan) — a 7-line read does not
-    * warrant a Spark job per file. */
-  private def readHead(file: String, n: Int): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    val raw = fs.open(p)
-    try {
-      val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-        .getCodec(p)
-      val in: java.io.InputStream =
-        if (codec != null) codec.createInputStream(raw) else raw
-      val br = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-      Iterator.continually(br.readLine()).takeWhile(_ != null).take(n).toList
-    } finally raw.close()
-  }
-
   def run(ctx: RunContext, practice: String, spec: IngestSpec, stageDir: String,
       errorDir: Option[String]): (Boolean, Map[String, Seq[CheckResult]]) = {
     val pc = spec.precheck.getOrElse(return (true, Map.empty))
@@ -335,7 +362,7 @@ final class PrecheckStage(spark: SparkSession, log: Option[IngestLog] = None) {
         spark.read.textFile(files.map(_.path): _*).toDF(), input_file_name())
       .map { case (f, n) => new java.net.URI(f).getPath -> n }
     val heads = graft.util.Concurrent.forEach(files, 16)(
-      f => f.path -> readHead(f.path, 7)).toMap
+      f => f.path -> CsvStageReader.readHead(spark, f.path, 7)).toMap
     val results = files.map { f =>
       val lines = heads(f.path)
       // a file with a first line has a count; only a lineless one has none
@@ -344,11 +371,13 @@ final class PrecheckStage(spark: SparkSession, log: Option[IngestLog] = None) {
         throw new IllegalStateException(s"precheck: no line count for ${f.path}"))
       f -> Precheck.checkFile(f.name, f.size, lines, total, delimiter, pc)
     }
-    // logged before any error move, so a moved file's rows are visible
     log.foreach(_.logAll(ctx, practice, spec.fileType,
       results.flatMap(_._2).map(c =>
         LogEntry(s"PRECHECK:${c.checkName}", c.status, -1, c.details))))
     val failed = results.filter(_._2.exists(_.failed))
+    // committed before any error move (a deferred log too), so a moved
+    // file's rows are visible
+    if (failed.nonEmpty) log.foreach(_.flush())
     failed.foreach { case (f, _) =>
       errorDir.foreach(ed => ArchiveMover.moveToError(spark, f.path, ed, ctx.parentRunId))
       ctx.notifier.notify("precheck_failed",
@@ -367,24 +396,43 @@ final case class StreamingRefinedDirs(refinedDir: String, checkpointDir: String)
   * CALL chain, SURVEY §3.1). On success, staged files move to the
   * archive dir (W9). With `streamingRefined` set, the REFINED stage
   * runs as a checkpointed stream ([[StreamingRefinedStage]]) instead of
-  * the flag machine — RAW stays append-only, no rewrite per run. */
+  * the flag machine — RAW stays append-only, no rewrite per run.
+  *
+  * Logging: every stage of one run logs into a deferred copy of `log`
+  * ([[IngestLog.deferred]]), so the whole run's rows — precheck
+  * checks, RAW_LOAD, REFINED_LOAD, CURATED_LOAD, CRM_SYNC — are ONE
+  * log commit, made when the run ends, also when a stage throws. A
+  * rejecting precheck commits its rows before its first error move.
+  * The reference writes one log row per step; here an accepted drop
+  * makes 6 catalog commits (RAW, REFINED, the RAW flag clear, CURATED,
+  * the REFINED flag clear, the log) and 13 Spark jobs. A JVM killed
+  * mid-run loses the run's log rows but no data rows. */
 final class Pipeline(spark: SparkSession, catalog: TableCatalog,
     log: Option[IngestLog] = None, crmSink: CrmSink = DryRunCrmSink,
     streamingRefined: Option[StreamingRefinedDirs] = None) {
 
   def run(ctx: RunContext, practice: String, spec: IngestSpec,
       stageDir: String, errorDir: Option[String] = None,
-      archiveDir: Option[String] = None): Seq[(String, StageResult)] = {
-    val results = scala.collection.mutable.ArrayBuffer.empty[(String, StageResult)]
-    if (spec.precheck.isDefined) {
-      val (ok, checks) = new PrecheckStage(spark, log).run(ctx, practice, spec,
-        stageDir, errorDir)
-      val failedChecks = checks.values.flatten.count(_.failed)
-      results += ("PRECHECK" -> StageResult(if (ok) "SUCCESS" else "FAILED",
-        checks.size, s"$failedChecks failed checks"))
-      if (!ok) return results.toSeq
+      archiveDir: Option[String] = None): Seq[(String, StageResult)] =
+    IngestLog.deferred(log) { runLog =>
+      val precheck = spec.precheck.map { _ =>
+        val (ok, checks) = new PrecheckStage(spark, runLog).run(ctx, practice, spec,
+          stageDir, errorDir)
+        val failedChecks = checks.values.flatten.count(_.failed)
+        "PRECHECK" -> StageResult(if (ok) "SUCCESS" else "FAILED",
+          checks.size, s"$failedChecks failed checks")
+      }
+      if (precheck.exists(_._2.status == "FAILED")) precheck.toSeq
+      else precheck.toSeq ++ ingest(ctx, practice, spec, stageDir, archiveDir, runLog)
     }
-    val raw = new RawStage(spark, catalog, log).run(ctx, practice, spec, stageDir)
+
+  /** RAW, the archive move, then REFINED (flag machine or stream) and
+    * CURATED, each gated on the one before. */
+  private def ingest(ctx: RunContext, practice: String, spec: IngestSpec,
+      stageDir: String, archiveDir: Option[String], runLog: Option[IngestLog])
+      : Seq[(String, StageResult)] = {
+    val results = scala.collection.mutable.ArrayBuffer.empty[(String, StageResult)]
+    val raw = new RawStage(spark, catalog, runLog).run(ctx, practice, spec, stageDir)
     results += ("RAW" -> raw)
     if (raw.status == "SUCCESS") archiveDir.foreach { ad =>
       graft.sources.ArchiveMover.moveAllToArchive(spark,
@@ -399,14 +447,14 @@ final class Pipeline(spark: SparkSession, catalog: TableCatalog,
           // is the stream's append-only output dir (no curated chaining
           // here — downstream consumes the stream output)
           results += ("REFINED_STREAM" -> new StreamingRefinedStage(spark,
-            catalog, log).run(ctx, practice, spec,
+            catalog, runLog).run(ctx, practice, spec,
             dirs.refinedDir, dirs.checkpointDir))
         case None =>
-          val refined = new RefinedStage(spark, catalog, log).run(ctx, practice, spec)
+          val refined = new RefinedStage(spark, catalog, runLog).run(ctx, practice, spec)
           results += ("REFINED" -> refined)
           if (refined.status == "SUCCESS" && spec.target.curatedTable.isDefined) {
             results += ("CURATED" ->
-              new CuratedStage(spark, catalog, log, crmSink).run(ctx, practice, spec))
+              new CuratedStage(spark, catalog, runLog, crmSink).run(ctx, practice, spec))
           }
       }
     }

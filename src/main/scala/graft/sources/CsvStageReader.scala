@@ -16,9 +16,9 @@ final case class StagedFile(path: String, name: String, size: Long, modifiedAt: 
   *
   * Scale note: the reference loops file-by-file issuing one COPY per
   * file (RAW_ADLS_TO_RAW_SNOWFLAKE.py:1180-1244). Here all matched files
-  * go into ONE multi-file scan and per-file metadata comes from
-  * input_file_name() — semantically the same per-file lineage, one job
-  * instead of N.
+  * that share a header go into ONE multi-file scan and per-file metadata
+  * comes from input_file_name() — semantically the same per-file
+  * lineage, one job instead of N.
   */
 object CsvStageReader {
 
@@ -38,23 +38,82 @@ object CsvStageReader {
     }.filter(f => rx.forall(_.matcher(f.name).find())).sortBy(_.name)
   }
 
-  /** Read the given files as one CSV scan with the reference's options.
-    * reference options: RAW_ADLS_TO_RAW_SNOWFLAKE.py:675-691. */
+  /** The reference's CSV format options.
+    * reference: RAW_ADLS_TO_RAW_SNOWFLAKE.py:675-691. */
+  private def options(delimiter: String): Map[String, String] = Map(
+    "delimiter" -> delimiter, "quote" -> "\"", "escape" -> "\"",
+    "ignoreLeadingWhiteSpace" -> "true", "ignoreTrailingWhiteSpace" -> "true",
+    "mode" -> "PERMISSIVE")
+
+  /** Read the given files as CSV with the reference's [[options]].
+    *
+    * With a header, each file's header is read on the driver
+    * ([[headerSchema]]: its first non-blank line, parsed and sanitised
+    * the way Spark's own header inference does it) and handed to the
+    * scan as its schema, so planning runs no inference job. Files with
+    * the same header are one scan; files whose headers differ (columns
+    * swapped, missing or added) are one scan each, combined BY NAME —
+    * one header applied to every file would put values under the wrong
+    * columns. */
   def read(spark: SparkSession, files: Seq[String], spec: SourceSpec): DataFrame = {
     require(files.nonEmpty, "no files to read")
-    val base = spark.read
-      .option("delimiter", spec.delimiter)
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .option("ignoreLeadingWhiteSpace", "true")
-      .option("ignoreTrailingWhiteSpace", "true")
-      .option("mode", "PERMISSIVE")
-    val reader =
-      if (spec.columns.nonEmpty) // fixed headerless schema (humana Pharmacy_Claims)
-        base.option("header", "false")
-          .schema(StructType(spec.columns.map(c => StructField(c, StringType))))
-      else base.option("header", "true").option("inferSchema", "false")
-    reader.csv(files: _*)
+    val base = spark.read.options(options(spec.delimiter))
+    if (spec.columns.nonEmpty) // fixed headerless schema (humana Pharmacy_Claims)
+      base.option("header", "false")
+        .schema(StructType(spec.columns.map(c => StructField(c, StringType))))
+        .csv(files: _*)
+    else {
+      val withHeader = base.option("header", "true").option("inferSchema", "false")
+      // a file with no header line holds no rows and is left out
+      val headers = files.zip(graft.util.Concurrent.forEach(files, 16)(
+          f => headerSchema(spark, f, spec.delimiter)))
+        .collect { case (f, Some(h)) => f -> h }
+      if (headers.isEmpty) withHeader.csv(files: _*) // no rows: Spark's answer
+      else headers.map(_._2).distinct.map { h => // in first-file order
+        withHeader.schema(h).csv(headers.collect { case (f, `h`) => f }: _*)
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
+    }
+  }
+
+  /** The all-string schema Spark's header inference gives `file` read
+    * alone with [[read]]'s options: its first non-blank line, tokenised
+    * by Spark's CSV parser settings, its names made safe by Spark's own
+    * rule (blank → `_c<i>`, duplicate → name + index). None when the
+    * file has no non-blank line. */
+  def headerSchema(spark: SparkSession, file: String, delimiter: String)
+      : Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val opts = new org.apache.spark.sql.catalyst.csv.CSVOptions(
+      options(delimiter) + ("header" -> "true"),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    // the inference's filter is SQL trim(): blank means spaces only
+    withLines(spark, file)(_.find(_.exists(_ != ' ')))
+      .flatMap(line => Option(new com.univocity.parsers.csv.CsvParser(
+        opts.asParserSettings).parseLine(line)))
+      .map(row => StructType(org.apache.spark.sql.execution.datasources.csv.CSVUtils
+        .makeSafeHeader(row, conf.caseSensitiveAnalysis, opts)
+        .map(StructField(_, StringType))))
+  }
+
+  /** First `n` lines straight from the store, decompressed by codec
+    * (so a .gz drop reads like the text scan) — a few-line read does
+    * not warrant a Spark job per file. */
+  def readHead(spark: SparkSession, file: String, n: Int): Seq[String] =
+    withLines(spark, file)(_.take(n).toList)
+
+  private def withLines[T](spark: SparkSession, file: String)
+      (f: Iterator[String] => T): T = {
+    val p = new Path(file)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val raw = p.getFileSystem(conf).open(p)
+    try {
+      val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+        .getCodec(p)
+      val in: java.io.InputStream =
+        if (codec != null) codec.createInputStream(raw) else raw
+      val br = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
+      f(Iterator.continually(br.readLine()).takeWhile(_ != null))
+    } finally raw.close()
   }
 
   /** Raw physical-line scan (FIELD_DELIMITER=NONE equivalent) for

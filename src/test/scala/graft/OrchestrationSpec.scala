@@ -236,6 +236,53 @@ class OrchestrationSpec extends SparkTestBase {
       .exists(_.startsWith("empty_PRI_")))
   }
 
+  test("RAW reads each file under its own header: swapped and missing columns") {
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val stage = tempDir("stage")
+    writeFile(stage, "a.csv", "id,name\n1,x\n")
+    writeFile(stage, "b.csv", "name,id\ny,2\n") // swapped
+    writeFile(stage, "c.csv", "name\nz\n") // id missing
+    writeFile(stage, "d.csv", "") // no header line, no rows
+    val spec = IngestConfig.parse(gatedConfig.replace(
+      "\"precheck\"", "\"unused_precheck\"")).practices.head.ingest.head
+    assert(spec.precheck.isEmpty)
+    val r = new RawStage(spark, cat).run(RunContext(), "p", spec, stage)
+    assert(r.status == "SUCCESS" && r.rowCount == 3, r)
+    val rows = cat.read("R.S.T").select("file_name", "id", "name")
+      .as[(String, String, String)].collect().toSet
+    assert(rows == Set(("a.csv", "1", "x"), ("b.csv", "2", "y"), ("c.csv", null, "z")))
+  }
+
+  test("the driver-side header equals Spark's header inference") {
+    val dir = tempDir("hdr")
+    def gz(name: String, text: String): String = {
+      val out = new java.util.zip.GZIPOutputStream(
+        new java.io.FileOutputStream(s"$dir/$name"))
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+      s"$dir/$name"
+    }
+    val cases = Seq(
+      "," -> gz("z.csv.gz", "a,b,c\n1,2,3\n"),
+      "," -> writeFile(dir, "quoted.csv", "\"x,y\",z,\"q \"\"w\"\"\"\n1,2,3\n"),
+      "," -> writeFile(dir, "spaces.csv", " Appt Provider , Appt Location ,id\n1,2,3\n"),
+      "," -> writeFile(dir, "dups.csv", "a,b,a,B,c\n1,2,3,4,5\n"),
+      "," -> writeFile(dir, "blank.csv", "a,,b, ,\"\"\n1,2,3,4,5\n"),
+      "," -> writeFile(dir, "lead.csv", "\n   \nid,name\n1,2\n"),
+      "|" -> writeFile(dir, "pipe.txt", "a|b c|\n1|2|3\n"))
+    cases.foreach { case (delim, f) =>
+      val inferred = spark.read.option("delimiter", delim)
+        .option("quote", "\"").option("escape", "\"")
+        .option("ignoreLeadingWhiteSpace", "true")
+        .option("ignoreTrailingWhiteSpace", "true")
+        .option("mode", "PERMISSIVE").option("header", "true").csv(f).schema
+      assert(CsvStageReader.headerSchema(spark, f, delim).contains(inferred), f)
+      val src = graft.config.SourceSpec(container = None, directory = None,
+        filePattern = None, delimiter = delim, header = true, columns = Nil,
+        query = None, api = Map.empty)
+      assert(CsvStageReader.read(spark, Seq(f), src).schema == inferred, f)
+    }
+  }
+
   test("parallel archive mover relocates a many-file drop") {
     val stage = tempDir("stage")
     val arcDir = tempDir("arc")

@@ -126,7 +126,7 @@ class PipelineSpec extends SparkTestBase {
     assert(fields.flatMap(_.get("crm_office_tag")).exists(_.startsWith("OFF_")))
   }
 
-  test("accepted pipeline run commits the ingest log once per stage") {
+  test("accepted pipeline run commits its whole ingest log in one commit") {
     val cat = new TableCatalog(spark, tempDir("wh"))
     val stage = tempDir("stage")
     Seq("a.csv", "b.csv").foreach(f => writeFile(stage, f,
@@ -145,13 +145,77 @@ class PipelineSpec extends SparkTestBase {
     val results = new Pipeline(spark, cat, Some(log)).run(ctx, "p", spec, stage)
     assert(results.map(_._1) == Seq("PRECHECK", "RAW", "REFINED", "CURATED"))
     assert(results.forall(_._2.status == "SUCCESS"))
-    // PRECHECK (both files' checks in one commit), RAW, REFINED, CURATED
-    assert(cat.version(logTable).contains(v0 + 4))
-    val steps = cat.read(logTable).filter(col("PARENT_RUN_ID") === ctx.parentRunId)
-      .select("STEP_NAME").as[String].collect().toSeq
+    // PRECHECK (both files' checks), RAW, REFINED and CURATED: one commit
+    assert(cat.version(logTable).contains(v0 + 1))
+    val rows = cat.read(logTable).filter(col("PARENT_RUN_ID") === ctx.parentRunId)
+      .select("LOG_ID", "STEP_NAME", "LOG_TIME")
+      .as[(String, String, java.sql.Timestamp)].collect().toSeq
+    val steps = rows.map(_._2)
     assert(steps.count(_.startsWith("PRECHECK:")) == 2 * 9)
     assert(steps.filterNot(_.startsWith("PRECHECK:")).sorted ==
       Seq("CURATED_LOAD", "RAW_LOAD", "REFINED_LOAD"))
+    assert(rows.map(_._1).distinct.size == rows.size)
+    // each row keeps the time its step logged, not the flush time: one
+    // LOG_TIME per stage, a distinct one for each of the four
+    val times = rows.groupBy(r => r._2.takeWhile(_ != ':'))
+      .map { case (stage, rs) => stage -> rs.map(_._3).distinct }
+    assert(times.values.forall(_.size == 1), times)
+    assert(times.values.flatten.toSet.size == 4, times)
+  }
+
+  test("a run whose CURATED stage throws still commits its earlier log rows once") {
+    import spark.implicits._
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val stage = tempDir("stage")
+    writeFile(stage, "a.csv",
+      "appt_id,Appt Provider,Appt Location,Appt Status\n{A},P,L,Scheduled\n")
+    val spec = IngestConfig.parse(configJson).practices.head.ingest.head
+    // no lookup table: CURATED's classification cannot read it
+    val logTable = "LOGDB.S.INGEST_LOG"
+    val log = new IngestLog(spark, cat, logTable)
+    val ctx = RunContext()
+    val e = intercept[IllegalArgumentException](
+      new Pipeline(spark, cat, Some(log)).run(ctx, "p", spec, stage))
+    assert(e.getMessage.contains("LK.S.PATIENTS"))
+    assert(cat.version(logTable).contains(0))
+    val steps = cat.read(logTable).filter(col("PARENT_RUN_ID") === ctx.parentRunId)
+      .select("STEP_NAME").as[String].collect().toSeq
+    assert(steps.count(_.startsWith("PRECHECK:")) == 9)
+    assert(steps.filterNot(_.startsWith("PRECHECK:")).sorted ==
+      Seq("RAW_LOAD", "REFINED_LOAD"))
+    assert(cat.count("REFDB.S.APPT") == 1)
+  }
+
+  test("a rejected pipeline run commits its log rows once, before the first error move") {
+    import spark.implicits._
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val stage = tempDir("stage")
+    val errDir = tempDir("err")
+    writeFile(stage, "a.csv",
+      "appt_id,Appt Provider,Appt Location,Appt Status\n{A},P,L,Scheduled\n")
+    writeFile(stage, "b.csv", "appt_id,Appt Provider\n{B},P\n") // columns missing
+    val spec = IngestConfig.parse(configJson).practices.head.ingest.head
+    val logTable = "LOGDB.S.INGEST_LOG"
+    val log = new IngestLog(spark, cat, logTable)
+    log.log(RunContext(), "p", "F", "SEED", "SUCCESS") // the table exists
+    val v0 = cat.version(logTable).get
+    var atMove = -1L
+    val notifier = new Notifier {
+      def notify(event: String, payload: Map[String, String]): Unit =
+        if (event == "precheck_failed" && atMove < 0) {
+          assert(new java.io.File(errDir).list().exists(_.startsWith("b_PRI_")))
+          atMove = cat.count(logTable)
+        }
+    }
+    val ctx = RunContext(notifier = notifier)
+    val results = new Pipeline(spark, cat, Some(log)).run(ctx, "p", spec, stage,
+      Some(errDir))
+    assert(results.map(r => r._1 -> r._2.status) == Seq("PRECHECK" -> "FAILED"))
+    assert(cat.version(logTable).contains(v0 + 1))
+    val steps = cat.read(logTable).filter(col("PARENT_RUN_ID") === ctx.parentRunId)
+      .select("STEP_NAME").as[String].collect().toSeq
+    assert(steps.size >= 2 * 8 && steps.forall(_.startsWith("PRECHECK:")), steps)
+    assert(atMove == 1 + steps.size)
   }
 
   test("curated flag clear is scoped to consumed runs (read-clear race)") {
@@ -218,12 +282,10 @@ class PipelineSpec extends SparkTestBase {
   private lazy val oracleSpec =
     IngestConfig.parse(QueriesPipeline.configJson).practices.head.ingest.head
 
-  test("one accepted drop stays inside its Spark-job budget, shuffling only in the lookup join") {
+  /** Spark jobs by job group, and the groups of the shuffle stages, of
+    * what `body` runs (listener attached after `warm`). */
+  private def jobsOf(body: => Unit): (Map[String, Int], Seq[String]) = {
     import org.apache.spark.scheduler._
-    val cat = new TableCatalog(spark, tempDir("wh"))
-    val log = new IngestLog(spark, cat, "LOG.S.INGEST_LOG")
-    import spark.implicits._
-    cat.append("LK.S.KNOWN", (1 until 600 by 3).map(_.toString).toDF("KNOWN_ID"))
     val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
@@ -239,7 +301,27 @@ class PipelineSpec extends SparkTestBase {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (e.taskType == "ShuffleMapTask") shuffleStages.add(e.stageId)
     }
-    // one drop through the four stages, each under its own job group
+    spark.sparkContext.addSparkListener(l)
+    try {
+      Thread.sleep(500)
+      jobs.clear(); stageGroup.clear(); shuffleStages.clear(); ended.set(0)
+      body
+      val deadline = System.currentTimeMillis() + 10000
+      while (ended.get < jobs.values.asScala.map(_.intValue).sum &&
+          System.currentTimeMillis() < deadline) Thread.sleep(50)
+      Thread.sleep(500)
+    } finally spark.sparkContext.removeSparkListener(l)
+    (jobs.asScala.view.mapValues(_.intValue).toMap,
+      shuffleStages.asScala.toSeq.map(stageGroup.get))
+  }
+
+  test("one accepted drop stays inside its Spark-job budget, with no shuffle stage") {
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val log = new IngestLog(spark, cat, "LOG.S.INGEST_LOG")
+    import spark.implicits._
+    cat.append("LK.S.KNOWN", (1 until 600 by 3).map(_.toString).toDF("KNOWN_ID"))
+    // one drop through the four stages, each under its own job group and
+    // each committing its own log rows
     def drop(i: Int): Unit = {
       val stage = tempDir("stage")
       oracleDrop(stage, i * 200, 200)
@@ -258,25 +340,41 @@ class PipelineSpec extends SparkTestBase {
         .run(ctx, "p", oracleSpec)).status == "SUCCESS")
     }
     drop(0); drop(1) // tables exist: the third drop is a steady-state one
-    spark.sparkContext.addSparkListener(l)
-    try {
-      Thread.sleep(500)
-      jobs.clear(); stageGroup.clear(); shuffleStages.clear(); ended.set(0)
-      drop(2)
-      val deadline = System.currentTimeMillis() + 10000
-      while (ended.get < jobs.values.asScala.map(_.intValue).sum &&
-          System.currentTimeMillis() < deadline) Thread.sleep(50)
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(l)
-    // PRECHECK: line counts + the log commit; RAW: header inference +
-    // append + log; REFINED: run stats + append + the flag clear's data
+    val (jobs, shuffles) = jobsOf(drop(2))
+    // PRECHECK: line counts + log; RAW: append + log (the header is read
+    // on the driver); REFINED: run stats + append + the flag clear's data
     // and change writes + log; CURATED: consumed run ids + the append's
-    // lookup join (its distinct stage, broadcast, write) + the flag
-    // clear's two writes + log
-    assert(jobs.asScala.view.mapValues(_.intValue).toMap ==
-      Map("PRECHECK" -> 2, "RAW" -> 3, "REFINED" -> 5, "CURATED" -> 8))
-    val shuffles = shuffleStages.asScala.toSeq.map(stageGroup.get)
-    assert(shuffles == Seq("CURATED"), s"shuffle stages by group: $shuffles")
+    // lookup (broadcast, write) + the flag clear's two writes + log
+    assert(jobs == Map("PRECHECK" -> 2, "RAW" -> 2, "REFINED" -> 5, "CURATED" -> 7))
+    assert(shuffles.isEmpty, s"shuffle stages by group: $shuffles")
+  }
+
+  test("one accepted Pipeline.run drop is 13 Spark jobs and 6 commits") {
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val logTable = "LOG.S.INGEST_LOG"
+    val log = new IngestLog(spark, cat, logTable)
+    import spark.implicits._
+    cat.append("LK.S.KNOWN", (1 until 600 by 3).map(_.toString).toDF("KNOWN_ID"))
+    val tables = Seq("R.S.CUST", "RF.S.CUST", "CU.S.CUST", logTable)
+    def drop(i: Int): Seq[(String, StageResult)] = {
+      val stage = tempDir("stage")
+      oracleDrop(stage, i * 200, 200)
+      new Pipeline(spark, cat, Some(log)).run(RunContext(), "p", oracleSpec, stage)
+    }
+    drop(0); drop(1)
+    val before = tables.map(t => cat.version(t).get)
+    var r: Seq[(String, StageResult)] = Nil
+    val (jobs, shuffles) = jobsOf { r = drop(2) }
+    assert(r.map(_._1) == Seq("PRECHECK", "RAW", "REFINED", "CURATED"))
+    assert(r.forall(_._2.status == "SUCCESS"), r)
+    // PRECHECK 1, RAW 1, REFINED 4, CURATED 6, the run's log commit 1
+    assert(jobs == Map("none" -> 13))
+    assert(shuffles.isEmpty, s"shuffle stages: $shuffles")
+    // RAW append and flag clear, REFINED append and flag clear, CURATED
+    // append, one log commit
+    val commits = tables.zip(before).map { case (t, v) => t -> (cat.version(t).get - v) }
+    assert(commits == Seq("R.S.CUST" -> 2, "RF.S.CUST" -> 2, "CU.S.CUST" -> 1,
+      logTable -> 1))
   }
 
   test("five drops leave no zero-row data file in RAW, REFINED or CURATED") {

@@ -153,6 +153,28 @@ class CatalogPartitionSpec extends SparkTestBase {
     assert(!new java.io.File(s"$root/d/s/pprune/v_000002").exists)
   }
 
+  test("candidateFiles drops files whose partition values fail a conjunct") {
+    val cat = new graft.catalog.TableCatalog(spark, tempDir("part"))
+    val t = "d.s.pcands"
+    cat.overwritePartitioned(t,
+      Seq(("p1", 1, 1), ("p2", 2, 1), ("p3", 3, 1)).toDF("practice", "id", "IS_NEW"),
+      Seq("practice"))
+    val v = cat.version(t).get
+    val files = cat.dataFilePathsAt(t, v).map(new org.apache.hadoop.fs.Path(_))
+    assert(files.size == 3)
+    def cands(p: org.apache.spark.sql.Column) =
+      cat.candidateFiles(t, v, files, p, cat.columnMappingAt(t, v)).map(_.toString)
+    // the updateWhere predicate of "partitioned updateWhere rewrites only
+    // touched partition dirs": one candidate, not every file
+    val p2 = cands(col("practice") === "p2")
+    assert(p2.size == 1 && p2.head.contains("/practice=p2/"), p2)
+    assert(cands(col("practice").isin("p1", "p3")).map(f =>
+      f.split("/practice=")(1).take(2)).sorted == Seq("p1", "p3"))
+    assert(cands(col("practice") === "p9").isEmpty)
+    // a data-column conjunct prunes by stats as before
+    assert(cands(col("practice") =!= "p9" && col("id") === 3).size == 1)
+  }
+
   test("partitioned merge rewrites only partitions overlapping source keys") {
     val root = tempDir("part")
     val cat = new graft.catalog.TableCatalog(spark, root)
