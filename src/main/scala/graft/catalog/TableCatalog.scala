@@ -2,6 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Parquet-backed table catalog keyed by `db.schema.table`, with
@@ -45,6 +46,12 @@ class TableCatalog(spark: SparkSession, root: String,
 
   private def fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private[catalog] def qualified(p: Path): Path = fs.makeQualified(p)
+
+  /** A path's key: its scheme-less qualified form, which `_STATS`,
+    * `_BLOOMS`, tombstones and DV lookups all key by. */
+  private[catalog] def keyOf(p: Path): String = qualified(p).toUri.getPath
 
   private def tableDir(fq: String): Path =
     new Path(root, fq.split('.').mkString("/"))
@@ -114,7 +121,7 @@ class TableCatalog(spark: SparkSession, root: String,
 
   /** DV parquet files visible to version v: carried references plus the
     * version's own `_DV/` sidecar files. */
-  private def dvFiles(fq: String, v: Int): Seq[Path] = {
+  private[catalog] def dvFiles(fq: String, v: Int): Seq[Path] = {
     val dir = versionDir(fq, v)
     val own = {
       val d = dvDir(dir)
@@ -124,6 +131,21 @@ class TableCatalog(spark: SparkSession, root: String,
         .toSeq
     }
     dvManifestEntries(dir) ++ own
+  }
+
+  /** Masked row indexes per addressed file key, over `dvs`; each
+    * immutable sidecar parses once process-wide (status-keyed). */
+  private[catalog] def dvPairs(dvs: Seq[Path]): Map[String, Array[Long]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dvs.flatMap { p =>
+      TableCatalog.cachedValue(fs, p, "dvpairs") {
+        graft.connector.GraftParquetIO.readDvPairs(Seq(p.toString), conf)
+          .groupBy { case (f, _) => new Path(f).toUri.getPath }
+          .map { case (f, ps) => f -> ps.map(_._2).toArray }
+      }
+    }.flatten.groupBy(_._1).map { case (f, seqs) =>
+      f -> seqs.flatMap(_._2).distinct.sorted.toArray
+    }
   }
 
   /** Project the parquet scan's per-row physical address — the columns a
@@ -158,7 +180,7 @@ class TableCatalog(spark: SparkSession, root: String,
       if (keepPos) masked else masked.drop("__fp", "__ri")
     }
 
-  /** THE physical read of a version's (subset of) data files — every
+  /** THE physical read of (a subset of) a version's data files — every
     * catalog-side file scan goes through here. `perScan` applies to
     * each file-source relation before any union (`_metadata` and
     * `input_file_name()` bind per relation).
@@ -170,12 +192,11 @@ class TableCatalog(spark: SparkSession, root: String,
     * mergeSchema's StructType.merge cannot widen at all). Also skips
     * the inference job. Flat versions read as ONE relation;
     * partitioned ones per owning version dir ([[readByOwner]]). */
-  private def readPhysical(fq: String, v: Int, files: Seq[Path],
-      perScan: DataFrame => DataFrame = identity): DataFrame = {
-    val schema = graft.connector.GraftSource.physicalChainSchema(spark, this, fq, v)
-    if (isPartitionedAt(fq, v)) readByOwner(fq, v, files, Some(schema), perScan)
-    else perScan(spark.read.schema(schema).parquet(files.map(_.toString): _*))
-  }
+  private def readPhysical(s: Snapshot, files: Seq[DataFile],
+      perScan: DataFrame => DataFrame = identity): DataFrame =
+    if (s.isPartitioned)
+      readByOwner(s.fq, s.version, files, Some(s.physicalSchema), perScan)
+    else perScan(spark.read.schema(s.physicalSchema).parquet(files.map(_.path): _*))
 
   /** Partitioned files carry their partition values in the paths below
     * their owning version dir, so they group by that dir and each group
@@ -186,12 +207,12 @@ class TableCatalog(spark: SparkSession, root: String,
     * absent columns as null and widened types at the widest — an
     * evolved layout (partition column inline in older files) resolves
     * the same way. */
-  private def readByOwner(fq: String, v: Int, files: Seq[Path],
+  private[catalog] def readByOwner(fq: String, v: Int, files: Seq[DataFile],
       schema: Option[org.apache.spark.sql.types.StructType],
       perScan: DataFrame => DataFrame): DataFrame =
-    files.groupBy(versionAncestor).toSeq.sortBy(_._1.toString)
+    files.groupBy(_.owner).toSeq.sortBy(_._1.toString)
       .map { case (base, group) =>
-        val paths = group.map(_.toString).sorted
+        val paths = group.map(_.path).sorted
         def reader = spark.read.option("basePath", base.toString)
         def infer = reader.parquet(paths: _*).schema
         perScan(reader.schema(schema.getOrElse(
@@ -202,10 +223,10 @@ class TableCatalog(spark: SparkSession, root: String,
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse(spark.read.parquet(versionDir(fq, v).toString))
 
-  /** [[readPhysical]] with version v's DV masks applied. */
-  private def readMasked(fq: String, v: Int, files: Seq[Path],
+  /** [[readPhysical]] with the snapshot's DV masks applied. */
+  private def readMasked(s: Snapshot, files: Seq[DataFile],
       keepPos: Boolean = false): DataFrame =
-    maskDvPos(readPhysical(fq, v, files, withRowPos), dvFiles(fq, v), keepPos)
+    maskDvPos(readPhysical(s, files, withRowPos), s.dvFiles, keepPos)
 
   /** Align an incoming frame's column types with the table's: an
     * incoming NARROWER numeric upcasts to the table type (the new
@@ -214,23 +235,23 @@ class TableCatalog(spark: SparkSession, root: String,
     * resolve the chain union to the widest type. Any other differing
     * type rejects at WRITE time (previously it committed fine and
     * exploded as a footer conflict at read time). */
-  private def alignWriteTypes(fq: String, v: Int, df: DataFrame): DataFrame = {
-    if (v < 0 || dataFilePathsAt(fq, v).isEmpty) return df
-    val table = graft.connector.GraftSource.chainSchema(spark, this, fq, v)
+  private def alignWriteTypes(s: Snapshot, df: DataFrame): DataFrame = {
+    if (s.files.isEmpty) return df
+    val table = s.schema
     df.schema.fields.foldLeft(df) { (acc, f) =>
       table.fields.find(_.name.equalsIgnoreCase(f.name)) match {
         case Some(e) if e.dataType != f.dataType =>
           TableCatalog.widerOf(e.dataType, f.dataType) match {
             case Some(w) if w == e.dataType => // narrower: upcast
               acc.withColumn(f.name, col(s"`${f.name}`").cast(e.dataType))
-            case Some(_) if bucketSpecAt(fq, v)
+            case Some(_) if s.bucketSpec
                 .exists(_._1.equalsIgnoreCase(f.name)) =>
               // the BUCKET SOURCE column may never widen in place:
               // murmur3 hashes int and long differently, so readers
               // hashing lookups in the widened type would stop finding
               // rows the old files routed under the narrow hash
               throw new IllegalArgumentException(
-                s"append to $fq: widening bucket column ${f.name} to " +
+                s"append to ${s.fq}: widening bucket column ${f.name} to " +
                   s"${f.dataType.simpleString} would re-key the routing " +
                   "hash — use rebucket(...) to change the key type (a " +
                   "rewrite)")
@@ -241,7 +262,7 @@ class TableCatalog(spark: SparkSession, root: String,
                   // written in one shot, so groups are uniform and the
                   // cross-group union resolves to the widest type)
             case None => throw new IllegalArgumentException(
-              s"append to $fq: column ${f.name} " +
+              s"append to ${s.fq}: column ${f.name} " +
                 s"(${f.dataType.simpleString}) neither matches nor widens " +
                 s"the table's ${e.dataType.simpleString} — narrowing and " +
                 "incompatible type changes are rejected")
@@ -267,7 +288,7 @@ class TableCatalog(spark: SparkSession, root: String,
       try out.write(cols.mkString(",").getBytes("UTF-8")) finally out.close()
     }
 
-  private def partitionColsOf(fq: String, v: Int): Seq[String] =
+  private[catalog] def partitionColsOf(fq: String, v: Int): Seq[String] =
     TableCatalog.cachedParse(fs, partitionsPath(versionDir(fq, v)), "partitions") {
       text => text.split(",").toSeq.filter(_.nonEmpty)
     }.getOrElse(Nil)
@@ -276,7 +297,7 @@ class TableCatalog(spark: SparkSession, root: String,
     * `v_NNNNNN` ancestor) — where its `_STATS`/`_BLOOMS` entries live,
     * and the `basePath` partition discovery reads its
     * `col=value/...` suffix against. */
-  private def versionAncestor(p: Path): Path = {
+  private[catalog] def versionAncestor(p: Path): Path = {
     var cur = p
     while (cur != null && !cur.getName.matches("v_\\d{6}")) cur = cur.getParent
     Option(cur).getOrElse(p)
@@ -344,7 +365,7 @@ class TableCatalog(spark: SparkSession, root: String,
     // one round-trip's wall clock instead of 64
     val harvested = graft.util.Concurrent.forEach(
         listFilesRecursive(dir).sortBy(_.toString), parallelism = 8) { f =>
-      val key = fs.makeQualified(f).toUri.getPath
+      val key = keyOf(f)
       val acc = scala.collection.mutable.LinkedHashMap
         .empty[String, (BigDecimal, BigDecimal)]
       val sacc = scala.collection.mutable.LinkedHashMap
@@ -480,152 +501,103 @@ class TableCatalog(spark: SparkSession, root: String,
     }
   }
 
-  /** Stats lookup for a set of chain data files: each file's entry
-    * lives in the `_STATS` of the version dir that wrote it. */
-  private def statsFor(files: Seq[Path])
-      : Map[String, Map[String, (BigDecimal, BigDecimal)]] =
-    files.map(versionAncestor).distinct.flatMap { dir =>
-      TableCatalog.cachedParse(fs, statsPath(dir), "stats") { text =>
-        text.split("\n").toSeq.filter(_.nonEmpty).flatMap { ln =>
-          val Array(f, c, mn, mx) = ln.split("\t", 4)
-          // s: string bounds → stringStatsFor; g:/gs: row-group
-          // bounds → rowGroupStatsFor
-          if (c.startsWith("s:") || c.startsWith("g:") ||
-              c.startsWith("gs:")) None
-          else Some((f, c, BigDecimal(mn), BigDecimal(mx)))
-        }
-      }.getOrElse(Nil)
-    }.groupBy(_._1).map { case (f, es) =>
-      f -> es.map { case (_, c, mn, mx) => c -> (mn, mx) }.toMap
-    }
-
-  /** Truncation-safe STRING bounds of chain files: per file and
-    * column, (lower prefix bytes, upper successor bytes — None =
-    * unbounded). Sound for skipping because lower ≤ true min and
-    * upper ≥ true max in unsigned byte order (= Spark string order). */
-  private def stringStatsFor(files: Seq[Path])
-      : Map[String, Map[String, (Array[Byte], Option[Array[Byte]])]] = {
-    val b64 = java.util.Base64.getDecoder
-    files.map(versionAncestor).distinct.flatMap { dir =>
-      TableCatalog.cachedParse(fs, statsPath(dir), "sstats") { text =>
-        text.split("\n").toSeq.filter(_.nonEmpty).flatMap { ln =>
-          val Array(f, c, mn, mx) = ln.split("\t", 4)
-          if (!c.startsWith("s:")) None
-          else Some((f, c.stripPrefix("s:"), b64.decode(mn),
-            if (mx == "*") None else Some(b64.decode(mx))))
-        }
-      }.getOrElse(Nil)
-    }.groupBy(_._1).map { case (f, es) =>
-      f -> es.map { case (_, c, mn, mx) => c -> (mn, mx) }.toMap
-    }
+  /** (mtime, length) of version dir `dir`'s `_STATS`, None if absent. */
+  private[catalog] def statsStatus(dir: Path): Option[(Long, Long)] = {
+    val p = statsPath(dir)
+    if (!fs.exists(p)) None
+    else Some(fs.getFileStatus(p)).map(st => (st.getModificationTime, st.getLen))
   }
 
-  /** Range read with manifest-stats file skipping: only files whose
-    * recorded [min,max] for `column` can overlap [lo, hi] are opened
-    * (files without stats are read — safe default), the residual
-    * predicate still applies row-level, and DV masks still apply. The
-    * returned plan's `inputFiles` is the skipping evidence. */
-  /** The subset of `files` whose `_STATS` [min,max] (numeric or
-    * truncation-safe string) can overlap [lo, hi]; files without an
-    * entry survive (advisory). */
-  private def statSurvivors(files: Seq[Path], column: String,
-      lo: Any, hi: Any): Seq[Path] =
-    (TableCatalog.statDecimal(lo), TableCatalog.statDecimal(hi)) match {
-      case (Some(loD), Some(hiD)) =>
-        val stats = statsFor(files)
-        files.filter { p =>
-          stats.get(fs.makeQualified(p).toUri.getPath)
-            .flatMap(_.get(column)) match {
-              case Some((mn, mx)) => !(mx < loD || mn > hiD)
-              case None => true
-            }
-        }
-      case _ => (lo, hi) match {
-        // STRING range: truncation-safe bounds from the `s:` sidecar
-        // entries (unsigned byte order = Spark string order)
-        case (ls: String, hs: String) =>
-          val sstats = stringStatsFor(files)
-          val loB = Some(ls.getBytes("UTF-8"))
-          val hiB = Some(hs.getBytes("UTF-8"))
-          files.filter { p =>
-            sstats.get(fs.makeQualified(p).toUri.getPath)
-              .flatMap(_.get(column)) match {
-                case Some((lower, upper)) =>
-                  TableCatalog.stringRangeOverlaps(lower, upper, loB, hiB)
-                case None => true
-              }
+  /** Version dir `dir`'s `_STATS` sidecar, parsed once per sidecar
+    * status: per file key, its numeric bounds (with the `__rows`
+    * pseudo-column), its truncation-safe string bounds (`s:` lines;
+    * upper None = unbounded) and the row-group bounds of a multi-group
+    * file (`g:`/`gs:` lines, keyed by the group's byte range). */
+  private[catalog] def statsOf(dir: Path): Map[String, TableCatalog.FileStats] =
+    TableCatalog.cachedParse(fs, statsPath(dir), "stats") { text =>
+      import TableCatalog.RowGroupStat
+      val b64 = java.util.Base64.getDecoder
+      def sb(mn: String, mx: String) =
+        (b64.decode(mn), if (mx == "*") None else Some(b64.decode(mx)))
+      text.split("\n").toSeq.filter(_.nonEmpty).map(_.split("\t", 4))
+        .groupBy(_(0)).map { case (f, lines) =>
+          val groups = scala.collection.mutable.LinkedHashMap
+            .empty[(Long, Long), RowGroupStat]
+          def group(spec: String)(add: (RowGroupStat, String) => RowGroupStat) = {
+            val Array(st, len, c) = spec.split(":", 3): @unchecked
+            val k = (st.toLong, len.toLong)
+            groups(k) = add(groups.getOrElse(k, RowGroupStat(k._1, k._2, Map.empty, Map.empty)), c)
           }
-        case _ => // no stats-comparable form: read all, predicate row-level
-          files
-      }
-    }
+          val numeric = Map.newBuilder[String, (BigDecimal, BigDecimal)]
+          val strings = Map.newBuilder[String, (Array[Byte], Option[Array[Byte]])]
+          lines.foreach { case Array(_, c, mn, mx) =>
+            if (c.startsWith("g:")) group(c.stripPrefix("g:"))((g, cn) =>
+              g.copy(numeric = g.numeric + (cn -> ((BigDecimal(mn), BigDecimal(mx))))))
+            else if (c.startsWith("gs:")) group(c.stripPrefix("gs:"))((g, cn) =>
+              g.copy(strings = g.strings + (cn -> sb(mn, mx))))
+            else if (c.startsWith("s:")) strings += c.stripPrefix("s:") -> sb(mn, mx)
+            else numeric += c -> ((BigDecimal(mn), BigDecimal(mx)))
+          }
+          f -> TableCatalog.FileStats(numeric.result(), strings.result(),
+            groups.values.toSeq.sortBy(_.start))
+        }
+    }.getOrElse(Map.empty)
 
-  def readBetween(fq: String, column: String, lo: Any, hi: Any): DataFrame = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val pred = col(column) >= lit(lo) && col(column) <= lit(hi)
-    val m = columnMappingAt(fq, v) // `_STATS` sidecars key by the
-    val physCol = m.physical(column) // PHYSICAL column name
-    // partition pruning covers partition-column ranges
-    if (partitionColsOf(fq, v).contains(column))
-      return readPartitionedChain(fq, v).filter(pred)
-    val files = dataFiles(fq, v)
-    if (files.isEmpty)
-      return toLogical(spark.read.parquet(versionDir(fq, v).toString), m)
+  /** Range read with manifest-stats file skipping: only files whose
+    * recorded [min,max] (numeric or truncation-safe string) for
+    * `column` can overlap [lo, hi] are opened (files without stats are
+    * read — safe default), the residual predicate still applies
+    * row-level, and DV masks still apply. The returned plan's
+    * `inputFiles` is the skipping evidence. */
+  def readBetween(fq: String, column: String, lo: Any, hi: Any): DataFrame =
+    readPruned(fq, column, col(column) >= lit(lo) && col(column) <= lit(hi),
+      phys => Seq(GreaterThanOrEqual(phys, lo), LessThanOrEqual(phys, hi)))
+
+  /** Point-lookup read with stats and bloom file skipping: open only
+    * the files whose bounds and bloom POSSIBLY contain `value` (no
+    * entry ⇒ read — safe default), then apply DV masks and the
+    * row-level predicate. The returned plan's `inputFiles` is the
+    * skipping evidence; expected files opened ≈ true hits + FPR ·
+    * (files without the key). */
+  def readPoint(fq: String, column: String, value: Any): DataFrame =
+    readPruned(fq, column, col(column) === lit(value),
+      phys => Seq(EqualTo(phys, value)))
+
+  /** Rows of the live version matching `pred` on `column`, reading
+    * only the files [[graft.connector.FileSkipping.prune]] keeps for
+    * `filters` (built on the column's PHYSICAL name — the sidecars'
+    * key). A partition column goes through the connector scan, whose
+    * partition pruning answers exactly. */
+  private def readPruned(fq: String, column: String, pred: Column,
+      filters: String => Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
+    val s = snapshot(fq)
+    val m = s.columnMapping
+    if (s.partitionColumns.contains(column))
+      return readPartitionedChain(fq, s.version).filter(pred)
+    if (s.files.isEmpty)
+      return toLogical(spark.read.parquet(versionDir(fq, s.version).toString), m)
         .filter(pred)
-    val surviving = statSurvivors(files, physCol, lo, hi)
+    val surviving = s.inChainOrder(
+      graft.connector.FileSkipping.prune(s, filters(m.physical(column))))
     if (surviving.isEmpty) read(fq).filter(pred).limit(0)
-    else dropRouting(toLogical(readMasked(fq, v, surviving), m)).filter(pred)
+    else dropRouting(toLogical(readMasked(s, surviving), m)).filter(pred)
   }
 
   /** METADATA-ONLY `COUNT(*)` of the live version: the sum of the
     * per-file row counts recorded in `_STATS` at commit time, minus
-    * outstanding deletion-vector rows (counted from the DV sidecars'
-    * own footers) — zero Spark jobs, zero data IO, O(chain versions)
-    * driver reads. On a 100 TB table this answers in milliseconds what
-    * a scan-based count schedules thousands of tasks for (the Delta
-    * "compute from the transaction log" fast path). Returns None when
-    * any chain file predates stats harvesting — callers fall back to
-    * [[count]], which stays the correctness baseline. */
+    * outstanding deletion-vector rows that address live files — zero
+    * Spark jobs, zero data IO, O(chain versions) driver reads. On a
+    * 100 TB table this answers in milliseconds what a scan-based count
+    * schedules thousands of tasks for (the Delta "compute from the
+    * transaction log" fast path). Returns None when any chain file
+    * predates stats harvesting — callers fall back to [[count]], which
+    * stays the correctness baseline. */
   def fastCount(fq: String): Option[Long] = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val files = dataFiles(fq, v)
-    if (files.isEmpty) return Some(0L)
-    val stats = statsFor(files)
-    val counts = files.map(p =>
-      stats.get(fs.makeQualified(p).toUri.getPath)
-        .flatMap(_.get("__rows")).map(_._1.toLong))
-    if (counts.exists(_.isEmpty)) None
-    else Some(counts.flatten.sum - liveMaskedRows(fq, v))
+    val s = snapshot(fq)
+    val rows = s.files.map(_.rows)
+    if (rows.exists(_.isEmpty)) None
+    else Some(rows.flatten.sum - s.files.map(_.dvRows.length.toLong).sum)
   }
-
-  /** Rows masked by the version's DVs that address LIVE data files.
-    * A copy-on-write rewrite (update/delete/merge) carries the DV
-    * manifest for its untouched files, so sidecars may hold INERT
-    * entries addressing retired files — subtracting raw footer row
-    * counts would over-subtract. Per-sidecar per-addressed-file counts
-    * cache by file status (DV parquet is immutable). */
-  private def liveMaskedRows(fq: String, v: Int): Long = {
-    val dvs = dvFiles(fq, v)
-    if (dvs.isEmpty) return 0L
-    val live = dataFiles(fq, v)
-      .map(p => fs.makeQualified(p).toUri.getPath).toSet
-    dvs.map { p =>
-      val byFile = TableCatalog.cachedValue(fs, p, "dvcounts") {
-        graft.connector.GraftParquetIO
-          .readDvPairs(Seq(p.toString),
-            spark.sparkContext.hadoopConfiguration)
-          .groupBy { case (f, _) => new Path(f).toUri.getPath }
-          .map { case (f, ps) => f -> java.lang.Long.valueOf(ps.size.toLong) }
-      }.getOrElse(Map.empty[String, java.lang.Long])
-      byFile.collect { case (f, n) if live(f) => n.longValue }.sum
-    }.sum
-  }
-
-  /** Data files of a version: its own part files plus everything its
-    * manifest references — see [[resolvedFlatFiles]]. */
-  private def dataFiles(fq: String, v: Int): Seq[Path] = resolvedFlatFiles(fq, v)
 
   // ---- O(delta) chain commit metadata -------------------------------------
   // A commit's `_MANIFEST` may reference the
@@ -642,10 +614,9 @@ class TableCatalog(spark: SparkSession, root: String,
 
   private def tombstonesPath(dir: Path) = new Path(dir, "_TOMBSTONES")
 
-  private def writeTombstones(dir: Path, retired: Seq[Path]): Unit = {
+  private def writeTombstones(dir: Path, retired: Seq[DataFile]): Unit = {
     val out = fs.create(tombstonesPath(dir), true)
-    try out.write(retired.map(p => fs.makeQualified(p).toUri.getPath)
-      .mkString("\n").getBytes("UTF-8"))
+    try out.write(retired.map(_.key).mkString("\n").getBytes("UTF-8"))
     finally out.close()
   }
 
@@ -671,21 +642,21 @@ class TableCatalog(spark: SparkSession, root: String,
     * full resolved file list with the retirees excluded inline
     * (explicit manifests apply no tombstones — see
     * [[resolvedFlatFiles]]'s fold, which filters only deeper levels). */
-  private def writeFlatRef(fq: String, dir: Path, prev: Int,
-      retired: Seq[Path]): Unit = {
+  private def writeFlatRef(prev: Snapshot, dir: Path,
+      retired: Seq[DataFile]): Unit = {
     val vNum = dir.getName.stripPrefix("v_").toInt
     val interval = flatCheckpointInterval
+    val ref = versionDir(prev.fq, prev.version)
     if (interval > 0 && vNum > 0 && vNum % interval == 0) {
-      val gone = retired.map(p => fs.makeQualified(p).toUri.getPath).toSet
-      val explicit = resolvedFlatFiles(fq, prev)
-        .filterNot(p => gone(fs.makeQualified(p).toUri.getPath))
+      val gone = retired.map(_.key).toSet
+      val explicit = prev.chain.filterNot(f => gone(f.key)).map(f => new Path(f.path))
       // ref line + explicit list: RESOLUTION and vacuum's chain walk
       // stop here (the list is authoritative), while the commit-time
       // pruner still walks the ref — history dirs stay time-travelable
       // until an explicit vacuum reclaims them
-      writeManifest(dir, versionDir(fq, prev) +: explicit)
+      writeManifest(dir, ref +: explicit)
     } else {
-      writeManifest(dir, Seq(versionDir(fq, prev)))
+      writeManifest(dir, Seq(ref))
       if (retired.nonEmpty) writeTombstones(dir, retired)
     }
   }
@@ -694,8 +665,7 @@ class TableCatalog(spark: SparkSession, root: String,
     * table (vs a plain data-file path)? */
   private def dirRefVersion(fq: String, e: Path): Option[Int] =
     if (e.getName.matches("v_\\d{6}") &&
-        fs.makeQualified(e.getParent).toUri.getPath ==
-          fs.makeQualified(tableDir(fq)).toUri.getPath)
+        keyOf(e.getParent) == keyOf(tableDir(fq)))
       Some(e.getName.stripPrefix("v_").toInt)
     else None
 
@@ -705,7 +675,7 @@ class TableCatalog(spark: SparkSession, root: String,
     * any depth below `col=value/` dirs; `_`- and `.`-prefixed entries
     * (sidecars, `_DV/`) are skipped, so a flat version dir costs one
     * listing. */
-  private def resolvedFlatFiles(fq: String, v: Int): Seq[Path] = {
+  private[catalog] def resolvedFlatFiles(fq: String, v: Int): Seq[Path] = {
     def cached(ver: Int): Option[Seq[Path]] =
       TableCatalog.cachedPeek[Seq[Path]](fs,
         manifestPath(versionDir(fq, ver)), "flatResolved")
@@ -743,7 +713,7 @@ class TableCatalog(spark: SparkSession, root: String,
     levels.foreach { case (ver, adds, tombs) =>
       files =
         (if (tombs.isEmpty) files
-         else files.filterNot(p => tombs(fs.makeQualified(p).toUri.getPath))) ++
+         else files.filterNot(p => tombs(keyOf(p)))) ++
           adds
       TableCatalog.cachedPut(fs, manifestPath(versionDir(fq, ver)),
         "flatResolved", files)
@@ -809,19 +779,16 @@ class TableCatalog(spark: SparkSession, root: String,
     * Version numbers are the monotonically increasing commit sequence —
     * the same contract as Delta's VERSION AS OF. */
   def readVersion(fq: String, version: Int): DataFrame = {
-    val dir = versionDir(fq, version)
-    if (!fs.exists(dir))
-      throw new IllegalArgumentException(s"$fq version $version not retained")
-    if (isPartitionedAt(fq, version)) // connector scan: mapping + declared
+    val s = snapshot(fq, version)
+    if (s.isPartitioned) // connector scan: mapping + declared
       return readPartitionedChain(fq, version) // columns applied there
     // VERSION-SCOPED mapping: time travel sees the column names (and
     // declared columns) of its day, not today's
-    val m = columnMappingAt(fq, version)
-    val files = dataFiles(fq, version)
+    val m = s.columnMapping
     val df0 =
-      if (files.isEmpty) // truncated table: schema-only marker dir
-        spark.read.parquet(dir.toString)
-      else readMasked(fq, version, files) // chain-union schema: covers
+      if (s.chain.isEmpty) // truncated table: schema-only marker dir
+        spark.read.parquet(versionDir(fq, version).toString)
+      else readMasked(s, s.chain) // chain-union schema: covers
         // evolved (declared-column) AND type-widened heterogeneity;
         // each version sees ITS masks
     // dropped columns hidden, renamed columns exposed logically,
@@ -832,6 +799,30 @@ class TableCatalog(spark: SparkSession, root: String,
   /** The live committed version number (None = table absent). */
   def version(fq: String): Option[Int] = currentVersion(fq)
 
+  /** THE per-version metadata of `fq` at committed version `v`, one
+    * value per version process-wide: memoized against the version
+    * dir's status (path, mtime, length), so a table dropped and
+    * re-created under the same name and version numbers never reads
+    * its predecessor's snapshot; a hit whose owning dirs' `_STATS`
+    * changed since it read them is rebuilt. See [[Snapshot]]. */
+  def snapshot(fq: String, v: Int): Snapshot = {
+    val dir = versionDir(fq, v)
+    TableCatalog.cachedValue(fs, dir, "snapshot")(new Snapshot(this, fq, v)) match {
+      case Some(s) if s.current => s
+      case Some(_) =>
+        val s = new Snapshot(this, fq, v)
+        TableCatalog.cachedPut(fs, dir, "snapshot", s)
+        s
+      case None =>
+        throw new IllegalArgumentException(s"$fq version $v not retained")
+    }
+  }
+
+  /** The snapshot of the live version. */
+  def snapshot(fq: String): Snapshot = snapshot(fq,
+    currentVersion(fq).getOrElse(
+      throw new IllegalArgumentException(s"table not found: $fq")))
+
   /** Append rows whose schema may add columns relative to the table:
     * the read side resolves the union schema (absent columns read as
     * null). Opt-in — evolving reads resolve one footer per chain
@@ -841,12 +832,10 @@ class TableCatalog(spark: SparkSession, root: String,
 
   /** Read resolving the union of all file schemas in the chain
     * (for tables grown via [[appendEvolving]]). */
-  def readMergedSchema(fq: String): DataFrame = currentVersion(fq) match {
-    case Some(v) =>
-      val files = dataFiles(fq, v)
-      if (files.isEmpty) spark.read.parquet(versionDir(fq, v).toString)
-      else dropRouting(toLogical(readMasked(fq, v, files), columnMappingAt(fq, v)))
-    case None => throw new IllegalArgumentException(s"table not found: $fq")
+  def readMergedSchema(fq: String): DataFrame = {
+    val s = snapshot(fq)
+    if (s.chain.isEmpty) spark.read.parquet(versionDir(fq, s.version).toString)
+    else dropRouting(toLogical(readMasked(s, s.chain), s.columnMapping))
   }
 
   def count(fq: String): Long =
@@ -911,11 +900,11 @@ class TableCatalog(spark: SparkSession, root: String,
   private[graft] def commit(fq: String, basedOn: Int,
       rebaseIf: Option[(Seq[Path], Seq[Path])])(
       write: (Path, Int) => Unit): Unit = {
-    def qp(p: Path) = fs.makeQualified(p).toUri.getPath
-    val readSet = rebaseIf.toSeq.flatMap(_._1).map(qp).toSet
-    val knownDvs = rebaseIf.toSeq.flatMap(_._2).map(qp).toSet
+    val readSet = rebaseIf.toSeq.flatMap(_._1).map(keyOf).toSet
+    val knownDvs = rebaseIf.toSeq.flatMap(_._2).map(keyOf).toSet
     val basePcols =
-      if (readSet.isEmpty || basedOn < 0) Nil else partitionColsOf(fq, basedOn)
+      if (readSet.isEmpty || basedOn < 0) Nil
+      else snapshot(fq, basedOn).partitionColumns
     var head = basedOn
     var attempts = 0
     while (true) {
@@ -1018,8 +1007,8 @@ class TableCatalog(spark: SparkSession, root: String,
           // data under partition subdirectories of old version dirs.
           val kept = next +: (if (next > 0 && fs.exists(versionDir(fq, next - 1)))
             Seq(next - 1) else Nil)
-          val live = kept.flatMap(k => dataFiles(fq, k) ++ dvFiles(fq, k))
-            .map(p => fs.makeQualified(p).toString).toSet
+          val liveFiles = kept.map(snapshot(fq, _))
+            .flatMap(k => k.files.map(_.path) ++ k.dvFiles.map(_.toString)).toSet
           // flat dir-reference chains: every LINK dir must survive, even
           // one holding no data files of its own (a metadata commit) —
           // deleting it would break every later version's resolution
@@ -1044,7 +1033,7 @@ class TableCatalog(spark: SparkSession, root: String,
               st.getModificationTime <= cutoff)
             .foreach { st =>
               val old = fs.makeQualified(st.getPath).toString
-              if (!live.exists(lp => lp == old || lp.startsWith(old + "/")))
+              if (!liveFiles.exists(lp => lp == old || lp.startsWith(old + "/")))
                 fs.delete(st.getPath, true)
             }
           return
@@ -1071,15 +1060,13 @@ class TableCatalog(spark: SparkSession, root: String,
                 new java.util.ConcurrentModificationException(
                   s"$fq: a concurrent commit $what — rerun the operation " +
                     "against the current version")
-              if (basedOn >= 0 && partitionColsOf(fq, cur) != basePcols)
+              val winner = snapshot(fq, cur)
+              if (basedOn >= 0 && winner.partitionColumns != basePcols)
                 throw abort("changed the partition layout")
-              if (!readSet.subsetOf(dataFiles(fq, cur).map(qp).toSet))
+              if (!readSet.subsetOf(winner.byKey.keySet))
                 throw abort("rewrote file(s) this operation read")
-              val newDvs = dvFiles(fq, cur).filterNot(p => knownDvs(qp(p)))
-              if (newDvs.nonEmpty && graft.connector.GraftParquetIO
-                  .readDvPairs(newDvs.map(_.toString),
-                    spark.sparkContext.hadoopConfiguration)
-                  .exists { case (f, _) => readSet(new Path(f).toUri.getPath) })
+              val newDvs = winner.dvFiles.filterNot(p => knownDvs(keyOf(p)))
+              if (dvPairs(newDvs).keys.exists(readSet))
                 throw abort("masked row(s) in file(s) this operation read")
             }
             head = cur
@@ -1094,12 +1081,11 @@ class TableCatalog(spark: SparkSession, root: String,
     * a checkpoint; `retired` = the files a copy-on-write rewrite
     * tombstones), and its DV manifest — outstanding masks stay valid,
     * the files they address ride along unmodified. */
-  private def carryChain(fq: String, dir: Path, head: Int,
-      retired: Seq[Path] = Nil): Unit = {
-    writeLayout(fq, head, dir)
-    writeFlatRef(fq, dir, head, retired)
-    val dvs = dvFiles(fq, head)
-    if (dvs.nonEmpty) writeDvManifest(dir, dvs)
+  private def carryChain(head: Snapshot, dir: Path,
+      retired: Seq[DataFile] = Nil): Unit = {
+    writeLayout(head, dir)
+    writeFlatRef(head, dir, retired)
+    if (head.dvFiles.nonEmpty) writeDvManifest(dir, head.dvFiles)
   }
 
   /** Move executor-staged files into `dir` at their relative paths
@@ -1131,11 +1117,11 @@ class TableCatalog(spark: SparkSession, root: String,
         // narrower numeric types upcast / wider ones widen the chain.
         // A partitioned chain's delta lands partitioned in the new
         // version dir.
-        toPhysical(enforceConstraints(fq, head,
-          alignWriteTypes(fq, head, df)), columnMappingAt(fq, head))
+        val s = snapshot(fq, head)
+        toPhysical(enforceConstraints(s, alignWriteTypes(s, df)), s.columnMapping)
           .write.mode(SaveMode.Overwrite)
-          .partitionBy(partitionColsOf(fq, head): _*).parquet(dir.toString)
-        carryChain(fq, dir, head)
+          .partitionBy(s.partitionColumns: _*).parquet(dir.toString)
+        carryChain(s, dir)
       }
     }
 
@@ -1164,22 +1150,20 @@ class TableCatalog(spark: SparkSession, root: String,
   def appendEvolvePartitioning(fq: String, df: DataFrame,
       partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty, "partition columns required")
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
+    val s = snapshot(fq)
     // a bucketed chain must not silently evolve into a plain layout:
     // the newest-reachable `_BUCKETSPEC` would still claim the table
     // bucketed while the new files route nowhere. Re-specs are
     // rewrites — loud recipe instead of a mixed chain.
-    require(!partitionColsOf(fq, v).lastOption.contains(BucketCol),
+    require(!s.isBucketed,
       s"$fq is bucketed — appendEvolvePartitioning would orphan its " +
         "bucket layout; use appendBucketed to append, or rebucket(...) " +
         "to change the layout (a rewrite)")
-    val pdf = toPhysical(enforceConstraints(fq, v, df),
-      columnMappingAt(fq, v))
-    commit(fq, v, None) { (dir, _) =>
+    val pdf = toPhysical(enforceConstraints(s, df), s.columnMapping)
+    commit(fq, s.version, None) { (dir, _) =>
       pdf.write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCols: _*).parquet(dir.toString)
-      carryChain(fq, dir, v)
+      carryChain(s, dir)
       writePartitions(dir, partitionCols) // the new layout replaces v's
     }
   }
@@ -1230,7 +1214,7 @@ class TableCatalog(spark: SparkSession, root: String,
 
   /** Bucket spec of version v: its `_BUCKETSPEC`, which every
     * version of a bucketed layout carries (see [[writeLayout]]). */
-  private[graft] def bucketSpecAt(fq: String, v: Int): Option[(String, Int)] =
+  private[catalog] def bucketSpecOf(fq: String, v: Int): Option[(String, Int)] =
     TableCatalog.cachedParse(fs, new Path(versionDir(fq, v), "_BUCKETSPEC"),
         "bucketspec") { text =>
       val Array(c, n) = text.split(","): @unchecked
@@ -1243,11 +1227,10 @@ class TableCatalog(spark: SparkSession, root: String,
     * would stop routing, pruning and SPJ-ing. Every mutator that
     * preserves an existing layout commits through this, not bare
     * [[writePartitions]]. */
-  private def writeLayout(fq: String, v: Int, dir: Path): Unit = {
-    val pcols = partitionColsOf(fq, v)
-    writePartitions(dir, pcols)
-    if (pcols.lastOption.contains(BucketCol))
-      bucketSpecAt(fq, v).foreach { case (c, n) => writeBucketSpec(dir, c, n) }
+  private def writeLayout(s: Snapshot, dir: Path): Unit = {
+    writePartitions(dir, s.partitionColumns)
+    if (s.isBucketed)
+      s.bucketSpec.foreach { case (c, n) => writeBucketSpec(dir, c, n) }
   }
 
   /** Re-derive the synthetic routing column before a partitioned
@@ -1258,12 +1241,12 @@ class TableCatalog(spark: SparkSession, root: String,
     * it). Identity and flat layouts pass through untouched; a
     * bucketed layout without a spec fails loudly rather than write
     * rows no bucket-pruned read would find. */
-  private def reroute(fq: String, v: Int, df: DataFrame): DataFrame =
-    if (!partitionColsOf(fq, v).lastOption.contains(BucketCol)) df
-    else bucketSpecAt(fq, v) match {
+  private def reroute(s: Snapshot, df: DataFrame): DataFrame =
+    if (!s.isBucketed) df
+    else s.bucketSpec match {
       case Some((c, n)) => bucketed(df.drop(BucketCol), c, n)
       case None => throw new IllegalStateException(
-        s"$fq v$v has a bucketed layout but no _BUCKETSPEC — cannot route rows")
+        s"${s.fq} v${s.version} has a bucketed layout but no _BUCKETSPEC — cannot route rows")
     }
 
   /** The synthetic routing column never reaches a caller. */
@@ -1314,22 +1297,20 @@ class TableCatalog(spark: SparkSession, root: String,
     * in the table type) never probe, silently dropping them from
     * bucket-pruned lookups and storage-partitioned joins. */
   def appendBucketed(fq: String, df: DataFrame): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val (c, n) = bucketSpecAt(fq, v).getOrElse(throw
+    val s = snapshot(fq)
+    val (c, n) = s.bucketSpec.getOrElse(throw
       new IllegalArgumentException(s"$fq is not bucketed — use append"))
-    append(fq, bucketed(alignWriteTypes(fq, v, df), c, n))
+    append(fq, bucketed(alignWriteTypes(s, df), c, n))
   }
 
   /** TRUNCATE: keep schema, zero rows (layout preserved). The marker
     * file carries PHYSICAL names like every data file. */
   def truncate(fq: String): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val empty = toPhysical(read(fq).limit(0), columnMappingAt(fq, v))
-    commit(fq, v, None) { (dir, _) =>
+    val s = snapshot(fq)
+    val empty = toPhysical(read(fq).limit(0), s.columnMapping)
+    commit(fq, s.version, None) { (dir, _) =>
       empty.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-      writeLayout(fq, v, dir)
+      writeLayout(s, dir)
     }
   }
 
@@ -1380,57 +1361,38 @@ class TableCatalog(spark: SparkSession, root: String,
     else None
   }
 
-  /** The files of version v that hold a row matching `pred`,
-    * planned from commit metadata first: the predicate's conjuncts,
-    * translated to source filters on PHYSICAL names, drop every file
-    * whose `_STATS` bounds or path-encoded partition values rule one
-    * out (a conjunct that does not translate keeps every file), and a
-    * file whose `_STATS` records zero rows never matches. One survivor
-    * IS the answer (no job); several are probed together in ONE job
-    * with no exchange — a
-    * flag clear on a table that grows one file per run touches only
-    * the run's own file. Comparison is by path, robust to URI
-    * qualification. */
-  private[graft] def candidateFiles(fq: String, v: Int, files: Seq[Path],
-      pred: Column, m: TableCatalog.ColumnMapping): Seq[Path] = {
-    if (files.isEmpty) return Nil
-    def key(p: Path) = fs.makeQualified(p).toUri.getPath
-    val schema = graft.connector.GraftSource.physicalChainSchema(spark, this, fq, v)
+  /** The files of snapshot `s` that hold a row matching `pred`, in
+    * chain order, planned from commit metadata first: the predicate's
+    * conjuncts, translated to source filters on PHYSICAL names, go
+    * through the scan's own pruning ([[graft.connector.FileSkipping
+    * .prune]]: zero-row files, partition values, bucket ids, stats,
+    * blooms; a conjunct that does not translate keeps every file).
+    * One survivor IS the answer (no job); several are probed together
+    * in ONE job with no exchange — a flag clear on a table that grows
+    * one file per run touches only the run's own file. */
+  private[graft] def candidateFiles(s: Snapshot, pred: Column): Seq[DataFile] = {
+    if (s.chain.isEmpty) return Nil
+    val m = s.columnMapping
     val logical = toLogical(spark.createDataFrame(
-      java.util.List.of[org.apache.spark.sql.Row](), schema), m)
+      java.util.List.of[org.apache.spark.sql.Row](), s.physicalSchema), m)
     val filters = logical.filter(pred).queryExecution.analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
         graft.connector.FilterColumns.fromExpression(f.condition)
           .map(graft.connector.FilterColumns.mapAttrs(_, m.physicalOf))
     }.getOrElse(Nil)
-    // partition values from the paths, only when a conjunct names a
-    // partition column (a flat table has none: no extra listing)
-    val pcols = partitionColsOf(fq, v).toSet
-    val partVals: Map[String, Map[String, Option[String]]] =
-      if (!filters.exists(_.references.exists(pcols))) Map.empty
-      else filePartitionValuesAt(fq, v).map { case (p, pv) => p -> pv.toMap }.toMap
-    val stats = statsByPath(fq, v)
-    val surviving = graft.connector.FileSkipping.surviving(this, fq, v,
-      files.map(p => fs.makeQualified(p).toString), filters).toSet
-    val cands = files.filter { p =>
-      val q = fs.makeQualified(p).toString
-      surviving(q) &&
-        partVals.get(q).forall(pv => filters.forall(
-          graft.connector.GraftPartitions.mayMatch(pv, schema, _))) &&
-        !stats.get(key(p)).flatMap(_.get("__rows")).exists(_._1 == 0)
-    }
+    val cands = s.inChainOrder(graft.connector.FileSkipping.prune(s, filters))
     if (cands.size <= 1) cands
     else {
       val hit = graft.util.SmallAgg.countBy(
-        toLogical(readPhysical(fq, v, cands), m).filter(pred), input_file_name())
+        toLogical(readPhysical(s, cands), m).filter(pred), input_file_name())
         .keySet.map(f => new Path(f).toUri.getPath)
-      cands.filter(p => hit(key(p)))
+      cands.filter(f => hit(f.key))
     }
   }
 
-  /** Commit a copy-on-write rewrite of version v's `hit` files.
-    * `data` (the replacement files, written in v's layout) and
-    * `changes` (their CDC rows) are written to a staging dir under
+  /** Commit a copy-on-write rewrite of snapshot `s`'s `hit` files.
+    * `data` (the replacement files, written in the snapshot's layout)
+    * and `changes` (their CDC rows) are written to a staging dir under
     * `<root>/_staging` BEFORE the claim, as two concurrent jobs;
     * `matched` must be observed on `data` as `n`, the number of rows
     * the predicate matched. Nothing matched: the staging dir goes and
@@ -1438,17 +1400,18 @@ class TableCatalog(spark: SparkSession, root: String,
     * staged files by rename — data into the version dir at their
     * `col=value/` paths, change rows as its `_CDCLOG` entry — and
     * carries the rest of the chain with `hit` tombstoned. */
-  private def commitRewrite(fq: String, v: Int, hit: Seq[Path],
-      carried: Boolean, data: DataFrame, matched: org.apache.spark.sql.Observation,
+  private def commitRewrite(s: Snapshot, hit: Seq[DataFile],
+      data: DataFrame, matched: org.apache.spark.sql.Observation,
       changes: DataFrame): Unit = {
+    val fq = s.fq
+    val carried = hit.size < s.chain.size
     val staging = new Path(root, s"_staging/${java.util.UUID.randomUUID()}")
     val dataDir = new Path(staging, "data")
     val cdcDir = new Path(staging, "cdc")
-    val pcols = partitionColsOf(fq, v)
     try {
       withMicrosTimestamps {
         graft.util.Concurrent.forEach(
-            Seq((data, dataDir, pcols), (changes, cdcDir, Nil)), 2) {
+            Seq((data, dataDir, s.partitionColumns), (changes, cdcDir, Nil)), 2) {
           case (df, out, by) =>
             df.write.mode(SaveMode.Overwrite).partitionBy(by: _*).parquet(out.toString)
         }
@@ -1461,10 +1424,10 @@ class TableCatalog(spark: SparkSession, root: String,
         // leaves no file: stage the schema carrier a flat write leaves
         spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), data.schema)
           .write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
-      val base = fs.makeQualified(dataDir).toUri.getPath + "/"
+      val base = keyOf(dataDir) + "/"
       val staged = (if (written.nonEmpty) written else listFilesRecursive(dataDir))
-        .map(p => (p, fs.makeQualified(p).toUri.getPath.stripPrefix(base)))
-      commit(fq, v, None) { (dir, _) =>
+        .map(p => (p, keyOf(p).stripPrefix(base)))
+      commit(fq, s.version, None) { (dir, _) =>
         adoptStaged(dir, staged)
         fs.mkdirs(cdcLogDir(fq))
         if (!fs.rename(cdcDir, new Path(cdcLogDir(fq), dir.getName)))
@@ -1473,8 +1436,8 @@ class TableCatalog(spark: SparkSession, root: String,
         // only the rewritten files (Delta's remove-action shape); the
         // carried masks' entries addressing rewritten files no longer
         // match any chain path and are inert
-        if (carried) carryChain(fq, dir, v, retired = hit)
-        else writeLayout(fq, v, dir)
+        if (carried) carryChain(s, dir, retired = hit)
+        else writeLayout(s, dir)
       }
     } finally {
       fs.delete(staging, true)
@@ -1496,21 +1459,19 @@ class TableCatalog(spark: SparkSession, root: String,
     * not its partitions (the same pruning Delta/Iceberg do for
     * UPDATE). */
   def updateWhere(fq: String, assignments: Map[String, Column], where: Column): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val m = columnMappingAt(fq, v) // probe + rewrite run on the
-    // LOGICAL view; the rewritten files land under physical names
-    val files = dataFiles(fq, v)
-    val hit = candidateFiles(fq, v, files, where, m)
+    val s = snapshot(fq)
+    val m = s.columnMapping // probe + rewrite run on the LOGICAL view;
+    // the rewritten files land under physical names
+    val hit = candidateFiles(s, where)
     if (hit.isEmpty) return // no matching rows anywhere: current version stands
     // the rewrite must read THROUGH outstanding DV masks, or rows a
     // prior merge-on-read delete masked would resurrect in the rewrite
-    val cur = toLogical(readMasked(fq, v, hit), m)
+    val cur = toLogical(readMasked(s, hit), m)
     val matched = org.apache.spark.sql.Observation()
     // reroute: an assignment may change the bucket source column — the
     // replacement row must land in its NEW bucket dir, or later bucket
     // pruning would wrongly skip it (wrong results, not perf)
-    val updated = toPhysical(enforceConstraints(fq, v, reroute(fq, v,
+    val updated = toPhysical(enforceConstraints(s, reroute(s,
       assignments.foldLeft(cur.observe(matched,
           sum(when(where, 1L).otherwise(0L)).as("n"))) { case (d, (c, value)) =>
         d.withColumn(c, when(where, value).otherwise(col(c)))
@@ -1521,8 +1482,7 @@ class TableCatalog(spark: SparkSession, root: String,
       .unionByName(assignments.foldLeft(changed) { case (d, (c, value)) =>
         d.withColumn(c, value)
       }.withColumn("_change_type", lit("insert")))
-    commitRewrite(fq, v, hit, carried = hit.size < files.size, updated, matched,
-      toPhysical(cdc, m))
+    commitRewrite(s, hit, updated, matched, toPhysical(cdc, m))
   }
 
   /** DELETE FROM fq WHERE — the GDPR/right-to-erasure shape. Same
@@ -1534,29 +1494,25 @@ class TableCatalog(spark: SparkSession, root: String,
     * time travel until compaction/vacuum retires it (retention is the
     * operator's GDPR clock, as in Delta/Iceberg). */
   def deleteWhere(fq: String, where: Column): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val m = columnMappingAt(fq, v) // logical probe, physical rewrite
-    val files = dataFiles(fq, v)
-    val hit = candidateFiles(fq, v, files, where, m)
+    val s = snapshot(fq)
+    val m = s.columnMapping // logical probe, physical rewrite
+    val hit = candidateFiles(s, where)
     if (hit.isEmpty) return
     // see updateWhere: read through the masks
-    val hitRows = toLogical(readMasked(fq, v, hit), m)
+    val hitRows = toLogical(readMasked(s, hit), m)
     val matched = org.apache.spark.sql.Observation()
     val kept = toPhysical(hitRows.observe(matched,
       sum(when(where, 1L).otherwise(0L)).as("n")).filter(!where), m)
     val cdc = dropRouting(hitRows).filter(where) // the erased rows
       .withColumn("_change_type", lit("delete"))
-    commitRewrite(fq, v, hit, carried = hit.size < files.size, kept, matched,
-      toPhysical(cdc, m))
+    commitRewrite(s, hit, kept, matched, toPhysical(cdc, m))
   }
 
-  /** Version v's live rows under their logical names, each carrying
+  /** Snapshot `s`'s live rows under their logical names, each carrying
     * its `__fp`/`__ri` DV address — the scan every merge-on-read
     * mutation masks from. */
-  private def addressedRows(fq: String, v: Int): DataFrame =
-    toLogical(readMasked(fq, v, dataFiles(fq, v), keepPos = true),
-      columnMappingAt(fq, v))
+  private def addressedRows(s: Snapshot): DataFrame =
+    toLogical(readMasked(s, s.chain, keepPos = true), s.columnMapping)
 
   /** DELETE with merge-on-read deletion vectors: NO data file is
     * rewritten — the new version carries every prior file by manifest
@@ -1571,18 +1527,15 @@ class TableCatalog(spark: SparkSession, root: String,
     * the partition layout — a point-delete in a 1 TB partition writes
     * O(matched rows) bytes instead of rewriting the partition. */
   def deleteWhereDV(fq: String, where: Column): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val files = dataFiles(fq, v)
-    if (files.isEmpty) return
-    val dvs = dvFiles(fq, v)
+    val s = snapshot(fq)
+    if (s.chain.isEmpty) return
     // ONE scan of the candidate files: the matched (file, row_index)
     // frame is deletes-sized, so it persists whole; the count() both
     // answers the emptiness probe AND materializes the cache, and the
     // sidecar write below reads the cache — the data files are read
     // exactly once per mutation, not once per downstream action.
     // (already-masked rows are excluded, so re-deleting is a no-op)
-    val newDv = addressedRows(fq, v).filter(where)
+    val newDv = addressedRows(s).filter(where)
       .select(col("__fp").as("file"), col("__ri").as("row_index"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1592,10 +1545,10 @@ class TableCatalog(spark: SparkSession, root: String,
       // we scanned — the protocol validates exactly that. A concurrent
       // append's rows simply aren't subject to this delete's predicate
       // (it read snapshot v) — Delta's semantics
-      commit(fq, v, Some((files, dvs))) { (dir, head) =>
+      commit(fq, s.version, Some(s.readSet)) { (dir, head) =>
         fs.mkdirs(dir)
         newDv.write.mode(SaveMode.Overwrite).parquet(dvDir(dir).toString)
-        carryChain(fq, dir, head)
+        carryChain(snapshot(fq, head), dir)
       }
     } finally newDv.unpersist()
   }
@@ -1610,19 +1563,15 @@ class TableCatalog(spark: SparkSession, root: String,
     * riding partition pruning). */
   def updateWhereDV(fq: String, assignments: Map[String, Column],
       where: Column): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val pcols = partitionColsOf(fq, v)
-    val files = dataFiles(fq, v)
-    if (files.isEmpty) return
-    val dvs = dvFiles(fq, v)
+    val s = snapshot(fq)
+    if (s.chain.isEmpty) return
     // ONE scan: `hit` (the matched rows with their DV addresses) is
     // matched-rows-sized, so it persists whole. The count() is both
     // the emptiness probe and the cache materialization; the DV
     // sidecar write AND the replacement-data write below each read the
     // cache — previously three separate jobs re-read every candidate
     // file (at 100 TB: three scans of the touched files instead of one).
-    val hit = addressedRows(fq, v).filter(where)
+    val hit = addressedRows(s).filter(where)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (hit.count() == 0) return
@@ -1632,15 +1581,15 @@ class TableCatalog(spark: SparkSession, root: String,
       }
       // reroute (see updateWhere) — a reassigned bucket source column
       // must re-route its replacement row to the new bucket dir
-      val updated = toPhysical(enforceConstraints(fq, v, reroute(fq, v, set)),
-        columnMappingAt(fq, v))
+      val updated = toPhysical(enforceConstraints(s, reroute(s, set)),
+        s.columnMapping)
       // rebase across commuting winners (see deleteWhereDV) — the MoR
       // delete+reinsert stays valid while our scanned files live
-      commit(fq, v, Some((files, dvs))) { (dir, head) =>
+      commit(fq, s.version, Some(s.readSet)) { (dir, head) =>
         updated.write.mode(SaveMode.Overwrite)
-          .partitionBy(pcols: _*).parquet(dir.toString)
+          .partitionBy(s.partitionColumns: _*).parquet(dir.toString)
         newDv.write.mode(SaveMode.Overwrite).parquet(dvDir(dir).toString)
-        carryChain(fq, dir, head)
+        carryChain(snapshot(fq, head), dir)
       }
     } finally hit.unpersist()
   }
@@ -1649,11 +1598,8 @@ class TableCatalog(spark: SparkSession, root: String,
     * the compaction-policy signal for settling merge-on-read debt.
     * Counts only entries addressing LIVE files (inert entries carried
     * past a copy-on-write rewrite don't mask anything). */
-  def deletionVectorRows(fq: String): Long = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    liveMaskedRows(fq, v)
-  }
+  def deletionVectorRows(fq: String): Long =
+    snapshot(fq).files.map(_.dvRows.length.toLong).sum
 
   /** MERGE INTO fq USING source ON keys — source wins on match. Same
     * file-granular copy-on-write as [[updateWhere]]: only files that
@@ -1664,8 +1610,8 @@ class TableCatalog(spark: SparkSession, root: String,
     currentVersion(fq) match {
       case None => overwrite(fq, source)
       case Some(v) =>
-        val m = columnMappingAt(fq, v) // keys/source bind logically
-        val files = dataFiles(fq, v)
+        val s = snapshot(fq, v)
+        val m = s.columnMapping // keys/source bind logically
         val src = source.cache()
         try {
           val keySet = src.select(keys.map(col): _*).distinct()
@@ -1673,14 +1619,13 @@ class TableCatalog(spark: SparkSession, root: String,
             // files whose rows semi-join the source keys get rewritten;
             // input_file_name() must bind to the scan BEFORE the join
             // (it is per-source)
-            val target = toLogical(readPhysical(fq, v, files), m)
+            val target = toLogical(readPhysical(s, s.chain), m)
               .select(keys.map(col) :+ input_file_name().as("__file"): _*)
             target.join(keySet, keys, "left_semi")
               .select(col("__file")).distinct()
               .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
           }
-          val (hit, carried) = files.partition(
-            p => keyPred.contains(fs.makeQualified(p).toUri.getPath))
+          val (hit, carried) = s.chain.partition(f => keyPred.contains(f.key))
           // declared columns too: the upsert unions by name. Bucketed:
           // the source frame never carries the routing column — upsert
           // on the LOGICAL columns, then reroute the whole merged frame
@@ -1688,8 +1633,8 @@ class TableCatalog(spark: SparkSession, root: String,
           // (see updateWhere).
           val base =
             if (hit.isEmpty) src.limit(0) // no overlap: plain append of source
-            else dropRouting(withDeclared(toLogical(readMasked(fq, v, hit), m), m))
-          val merged = toPhysical(enforceConstraints(fq, v, reroute(fq, v,
+            else dropRouting(withDeclared(toLogical(readMasked(s, hit), m), m))
+          val merged = toPhysical(enforceConstraints(s, reroute(s,
             graft.operators.MergeOps.upsert(base, src, keys))), m)
           // CDC when files rewrote: matched pre-images out, every source
           // row in (upsert = delete+insert for matches, plain insert for
@@ -1702,11 +1647,11 @@ class TableCatalog(spark: SparkSession, root: String,
               .unionByName(src.withColumn("_change_type", lit("insert"))))
           commit(fq, v, None) { (dir, _) =>
             merged.write.mode(SaveMode.Overwrite)
-              .partitionBy(partitionColsOf(fq, v): _*).parquet(dir.toString)
+              .partitionBy(s.partitionColumns: _*).parquet(dir.toString)
             cdcOpt.foreach(c => writeCdc(fq, dir, toPhysical(c, m)))
             if (carried.nonEmpty) // reference + tombstones, O(touched)
-              carryChain(fq, dir, v, retired = hit)
-            else writeLayout(fq, v, dir)
+              carryChain(s, dir, retired = hit)
+            else writeLayout(s, dir)
           }
         } finally src.unpersist()
     }
@@ -1715,18 +1660,13 @@ class TableCatalog(spark: SparkSession, root: String,
     * metadata excluded) — the no-rewrite evidence for merge-on-read
     * specs: a DV delete leaves this set identical, a MoR update only
     * adds to it. */
-  def dataFilePaths(fq: String): Seq[String] = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    dataFiles(fq, v).map(p => fs.makeQualified(p).toUri.getPath).sorted
-  }
+  def dataFilePaths(fq: String): Seq[String] = snapshot(fq).files.map(_.key).sorted
 
   /** (file count, total bytes) of the live version — the compaction
     * policy input. */
   def fileStats(fq: String): (Int, Long) = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    (dataFiles(fq, v).size, fileSizesAt(fq, v).values.sum)
+    val s = snapshot(fq)
+    (s.files.size, s.files.map(_.bytes).sum)
   }
 
   /** VACUUM: physically remove version directories older than the
@@ -1745,9 +1685,9 @@ class TableCatalog(spark: SparkSession, root: String,
     val cutoff = cur - keepVersions + 1 // retain [cutoff, cur]
     if (cutoff <= 0) return Seq.empty
     val retained = (cutoff to cur).filter(v => fs.exists(versionDir(fq, v)))
-    val reachable = retained.flatMap(v =>
-        (dataFiles(fq, v) ++ dvFiles(fq, v))
-          .map(p => versionAncestor(p).getName)).toSet ++
+    val reachable = retained.map(snapshot(fq, _)).flatMap(s =>
+        s.files.map(_.owner.getName) ++
+          s.dvFiles.map(p => versionAncestor(p).getName)).toSet ++
       retained.map(v => f"v_$v%06d") ++
       // flat dir-reference LINK dirs (metadata commits hold no data
       // files but carry the chain) stay reachable
@@ -1778,17 +1718,14 @@ class TableCatalog(spark: SparkSession, root: String,
     * files — without carrying them, a delete that raced a compaction
     * would silently RESURRECT its masked rows in the compacted
     * version (the data rides along, the mask is dropped). */
-  private def carryRebaseDelta(fq: String, snapV: Int, head: Int,
-      dir: Path, readFiles: Seq[Path], readDvs: Seq[Path]): Unit = if (head != snapV) {
-    val known = readFiles.map(p => fs.makeQualified(p).toString).toSet
-    val delta = dataFiles(fq, head)
-      .filterNot(p => known(fs.makeQualified(p).toString))
-    if (delta.nonEmpty) writeManifest(dir, delta)
-    val knownDvs = readDvs.map(p => fs.makeQualified(p).toString).toSet
-    val newDvs = dvFiles(fq, head)
-      .filterNot(p => knownDvs(fs.makeQualified(p).toString))
-    if (newDvs.nonEmpty) writeDvManifest(dir, newDvs)
-  }
+  private def carryRebaseDelta(s: Snapshot, head: Int, dir: Path): Unit =
+    if (head != s.version) {
+      val winner = snapshot(s.fq, head)
+      val delta = winner.chain.filterNot(f => s.byKey.contains(f.key))
+      if (delta.nonEmpty) writeManifest(dir, delta.map(f => new Path(f.path)))
+      val newDvs = winner.dvFiles.filterNot(p => s.dvKeys(p.toUri.getPath))
+      if (newDvs.nonEmpty) writeDvManifest(dir, newDvs)
+    }
 
   /** OPTIMIZE-style compaction: rewrite the manifest chain's many
     * small files into `ceil(bytes / targetFileBytes)` right-sized
@@ -1806,13 +1743,14 @@ class TableCatalog(spark: SparkSession, root: String,
     * compaction reads the head, then racers land while it rewrites). */
   private[graft] def compactFrom(fq: String, v: Int,
       targetFileBytes: Long = 128L << 20): Unit = {
-    val (nFiles, bytes) = (dataFiles(fq, v).size, fileSizesAt(fq, v).values.sum)
+    val s = snapshot(fq, v)
+    val bytes = s.files.map(_.bytes).sum
     // a single-file table still compacts when DV masks are outstanding:
     // compaction is what materializes merge-on-read deletes (read(fq)
     // below is DV-masked; the fresh chain carries no DV manifest)
-    if (nFiles <= 1 && dvFiles(fq, v).isEmpty) return
+    if (s.files.size <= 1 && s.dvFiles.isEmpty) return
     val parts = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val pcols = partitionColsOf(fq, v)
+    val pcols = s.partitionColumns
     // conflict RESOLUTION: `df` below is pinned to snapshot v's file
     // paths, so if appends land while the rewrite runs, the compaction
     // REBASES — commits the compacted v-snapshot with the winners'
@@ -1820,8 +1758,6 @@ class TableCatalog(spark: SparkSession, root: String,
     // uncompacted until the next cycle). Without this a continuous
     // append stream starves compaction forever. A winner that REWROTE
     // or newly MASKED any of v's files still aborts (not commuting).
-    val readFiles = dataFiles(fq, v)
-    val readDvs = dvFiles(fq, v)
     // compaction reads the LOGICAL view (dropped columns' bytes retire
     // here — the mapping's erasure clock) and writes PHYSICAL names.
     // Partitioned layouts co-locate rows of each partition before the
@@ -1830,16 +1766,15 @@ class TableCatalog(spark: SparkSession, root: String,
     // logical read hides it) — compaction is also what re-buckets
     // inline-landed row-level-operation replacements back into the
     // hive layout.
-    val df = toPhysical(reroute(fq, v, readVersion(fq, v)),
-      columnMappingAt(fq, v))
+    val df = toPhysical(reroute(s, readVersion(fq, v)), s.columnMapping)
     val sized =
       if (pcols.nonEmpty) df.repartition(parts, pcols.map(col): _*)
       else df.repartition(parts)
-    commit(fq, v, Some((readFiles, readDvs))) { (dir, head) =>
+    commit(fq, v, Some(s.readSet)) { (dir, head) =>
       sized.write.mode(SaveMode.Overwrite)
         .partitionBy(pcols: _*).parquet(dir.toString)
-      writeLayout(fq, v, dir)
-      carryRebaseDelta(fq, v, head, dir, readFiles, readDvs)
+      writeLayout(s, dir)
+      carryRebaseDelta(s, head, dir)
       writeCdcEmpty(fq, dir) // change-wise a no-op: the feed emits nothing
     }
   }
@@ -1859,20 +1794,19 @@ class TableCatalog(spark: SparkSession, root: String,
   def compactZOrder(fq: String, zorderCols: Seq[String],
       targetFileBytes: Long = 128L << 20, rankBased: Boolean = false): Unit = {
     require(zorderCols.nonEmpty, "zorder columns required")
-    val zv = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
+    val s = snapshot(fq)
     // hive-partitioned tables z-cluster WITHIN partitions: the range
     // partitioning leads with the partition columns so each output
     // task holds a contiguous (partition, z) slice and the partitioned
     // write emits z-local files per partition directory
-    val zpcols = partitionColsOf(fq, zv)
+    val zpcols = s.partitionColumns
     require(!zorderCols.exists(zpcols.contains),
       "z-order columns must be data columns (partition pruning already " +
         "clusters the partition columns)")
     // bucketed layouts z-cluster WITHIN buckets — re-derive the
     // routing column (hidden from the logical read) so the range
     // partitioning below can lead with it
-    val df = reroute(fq, zv, read(fq))
+    val df = reroute(s, read(fq))
     val (bits, scaled): (Int, Seq[Column]) =
       if (rankBased) {
         val probs = (1 until 256).map(_ / 256.0).toArray
@@ -1904,23 +1838,21 @@ class TableCatalog(spark: SparkSession, root: String,
     val morton = (0 until bits).flatMap(b => scaled.zipWithIndex.map {
       case (s, i) => shiftleft(shiftright(s, b).bitwiseAND(lit(1L)), b * n + i)
     }).reduce(_.bitwiseOR(_))
-    val (_, bytes) = fileStats(fq)
+    val bytes = s.files.map(_.bytes).sum
     val parts = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     val rangeCols = zpcols.map(col) :+ col("__z")
     val clustered = toPhysical(df.withColumn("__z", morton)
       .repartitionByRange(parts, rangeCols: _*)
       .sortWithinPartitions(rangeCols: _*)
-      .drop("__z"), columnMappingAt(fq, zv))
+      .drop("__z"), s.columnMapping)
     // same conflict RESOLUTION as compact: a z-order rewrite commutes
     // with concurrent blind appends (their delta rides by manifest,
     // un-clustered until the next cycle) — see [[commit]]
-    val readFiles = dataFiles(fq, zv)
-    val readDvs = dvFiles(fq, zv)
-    commit(fq, zv, Some((readFiles, readDvs))) { (dir, head) =>
+    commit(fq, s.version, Some(s.readSet)) { (dir, head) =>
       clustered.write.mode(SaveMode.Overwrite)
         .partitionBy(zpcols: _*).parquet(dir.toString)
-      writeLayout(fq, zv, dir)
-      carryRebaseDelta(fq, zv, head, dir, readFiles, readDvs)
+      writeLayout(s, dir)
+      carryRebaseDelta(s, head, dir)
       writeCdcEmpty(fq, dir) // no row changes: the feed emits nothing
     }
   }
@@ -1947,14 +1879,17 @@ class TableCatalog(spark: SparkSession, root: String,
   private def bloomSeqOf(p: Path): Int =
     if (p.getName == "_BLOOMS") 0
     else p.getName.stripPrefix("_BLOOMS.").toInt
-  private def bloomFileOf(dir: Path): Option[Path] = {
-    if (!fs.exists(dir)) return None
-    val cands = fs.listStatus(dir).filter(_.isFile).map(_.getPath)
-      .filter(p => p.getName == "_BLOOMS" || (p.getName.startsWith("_BLOOMS.")
-        && p.getName.stripPrefix("_BLOOMS.").forall(_.isDigit)))
-    if (cands.isEmpty) None else Some(cands.maxBy(bloomSeqOf))
-  }
-  private val BloomHashes = 5 // double-hashed probes per key (~1% FPR at 10 bits/row)
+  private def isBloomFile(p: Path): Boolean = p.getName == "_BLOOMS" ||
+    (p.getName.startsWith("_BLOOMS.") && p.getName.stripPrefix("_BLOOMS.").forall(_.isDigit))
+  /** The newest bloom generation in `dir`, looked up once per dir
+    * status: writing a generation changes the dir's mtime. A stale
+    * answer only ever names an older (identical or retired) sidecar,
+    * which prunes less, never wrongly. */
+  private def bloomFileOf(dir: Path): Option[Path] =
+    TableCatalog.cachedValue(fs, dir, "bloomfile") {
+      fs.listStatus(dir).filter(_.isFile).map(_.getPath)
+        .filter(isBloomFile).maxByOption(bloomSeqOf)
+    }.flatten
 
   /** Entries of a `_BLOOMS` sidecar: (file, column, bitset words). */
   private def bloomEntries(dir: Path): Seq[(String, String, Array[Long])] =
@@ -1971,25 +1906,12 @@ class TableCatalog(spark: SparkSession, root: String,
       }
     }).getOrElse(Nil)
 
-  /** The key hash both sides use: Spark's `xxhash64` (seed 42) of the
-    * STRING form of the value. Hashing the canonical string form keeps
-    * the build side (a Column over the native type) and the probe side
-    * (a driver-side literal) bit-identical regardless of numeric width;
-    * callers pass probe values whose `toString` matches Spark's
-    * string cast (exact for string and integral keys). */
-  private def bloomHash(s: String): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    import org.apache.spark.unsafe.types.UTF8String
-    XxHash64(Seq(Literal.create(UTF8String.fromString(s),
-        org.apache.spark.sql.types.StringType)), 42L)
-      .eval(null).asInstanceOf[Long]
-  }
-
-  private def bloomBitPositions(h: Long, words: Int): Seq[Int] = {
-    val m = words * 64L
-    val h2 = (h >>> 32) | 1L // odd second hash → full-period double hashing
-    (0 until BloomHashes).map(i => java.lang.Math.floorMod(h + i * h2, m).toInt)
-  }
+  /** Bloom bitsets on PHYSICAL `column` per file key, from the newest
+    * `_BLOOMS` generation of each of `owners`. */
+  private[catalog] def bloomsOf(owners: Seq[Path], column: String)
+      : Map[String, Array[Long]] =
+    owners.flatMap(bloomEntries)
+      .collect { case (f, c, bits) if c == column => f -> bits }.toMap
 
   /** Build (incrementally) the per-file bloom index on `column` for the
     * live version's chain. Files already carrying an entry in their
@@ -2002,32 +1924,25 @@ class TableCatalog(spark: SparkSession, root: String,
     * why the per-file blooms may come back through the driver. Returns
     * the number of files indexed by this call. */
   def buildBloomIndex(fq: String, column: String): Int = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    require(!partitionColsOf(fq, v).contains(column),
+    val s = snapshot(fq)
+    require(!s.partitionColumns.contains(column),
       s"$column is a partition column — partition pruning already " +
         "answers its point lookups exactly")
     // the index keys by PHYSICAL name (what the data files carry) —
     // probes translate the same way, so renames never stale the index
-    val colPhys = columnMappingAt(fq, v).physical(column)
-    val files = dataFiles(fq, v)
-    val have: Set[String] = files.map(versionAncestor).distinct
-      .flatMap(bloomEntries).collect { case (f, c, _) if c == colPhys => f }
-      .toSet
-    val missing = files.filterNot(p => have(fs.makeQualified(p).toUri.getPath))
+    val colPhys = s.columnMapping.physical(column)
+    val have = s.blooms(colPhys).keySet
+    val missing = s.chain.filterNot(f => have(f.key))
     if (missing.isEmpty) return 0
-    val rowsOf = statsFor(missing)
-    val wordsOf: Map[String, Int] = missing.map { p =>
-      val key = fs.makeQualified(p).toUri.getPath
-      val n = rowsOf.get(key).flatMap(_.get("__rows"))
-        .map(_._1.toLong).getOrElse(1L << 16)
+    val wordsOf: Map[String, Int] = missing.map { f =>
+      val n = f.rows.getOrElse(1L << 16)
       var m = 1024L
       while (m < n * 10) m <<= 1
-      key -> (m / 64).toInt
+      f.key -> (m / 64).toInt
     }.toMap
     import spark.implicits._
-    val nh = BloomHashes
-    val built = readPhysical(fq, v, missing,
+    val nh = TableCatalog.BloomHashes
+    val built = readPhysical(s, missing,
         _.select(col("_metadata.file_path").as("f"),
           xxhash64(col(colPhys).cast("string")).as("h")))
       .as[(String, Long)]
@@ -2064,44 +1979,10 @@ class TableCatalog(spark: SparkSession, root: String,
         val out = fs.create(new Path(dir, s"_BLOOMS.$gen"), true)
         try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
         fs.listStatus(dir).filter(_.isFile).map(_.getPath)
-          .filter(p => (p.getName == "_BLOOMS" ||
-              (p.getName.startsWith("_BLOOMS.") &&
-                p.getName.stripPrefix("_BLOOMS.").forall(_.isDigit))) &&
-            bloomSeqOf(p) < gen)
+          .filter(p => isBloomFile(p) && bloomSeqOf(p) < gen)
           .foreach(fs.delete(_, false))
       }
     missing.length
-  }
-
-  /** Point-lookup read with bloom file skipping: open only the files
-    * whose bloom POSSIBLY contains `value` (no entry ⇒ read — safe
-    * default), then apply DV masks and the row-level predicate. The
-    * returned plan's `inputFiles` is the skipping evidence; expected
-    * files opened ≈ true hits + FPR · (files without the key). */
-  def readPoint(fq: String, column: String, value: Any): DataFrame = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val pred = col(column) === lit(value)
-    val m = columnMappingAt(fq, v)
-    val physCol = m.physical(column) // `_BLOOMS` key by physical name
-    if (partitionColsOf(fq, v).contains(column)) // partition pruning answers exactly
-      return readPartitionedChain(fq, v).filter(pred)
-    val files = dataFiles(fq, v)
-    if (files.isEmpty) return read(fq).filter(pred)
-    val blooms: Map[String, Array[Long]] =
-      files.map(versionAncestor).distinct.flatMap(bloomEntries)
-        .collect { case (f, c, bits) if c == physCol => f -> bits }.toMap
-    val h = bloomHash(String.valueOf(value))
-    val surviving = files.filter { p =>
-      blooms.get(fs.makeQualified(p).toUri.getPath) match {
-        case Some(bits) =>
-          bloomBitPositions(h, bits.length).forall(pos =>
-            (bits(pos >> 6) & (1L << (pos & 63))) != 0L)
-        case None => true
-      }
-    }
-    if (surviving.isEmpty) read(fq).filter(pred).limit(0)
-    else dropRouting(toLogical(readMasked(fq, v, surviving), m)).filter(pred)
   }
 
   // ---- zero-copy shallow clone --------------------------------------------
@@ -2125,16 +2006,14 @@ class TableCatalog(spark: SparkSession, root: String,
     val v = version.orElse(currentVersion(src)).getOrElse(
       throw new IllegalArgumentException(s"table not found: $src"))
     require(currentVersion(dst).isEmpty, s"clone target exists: $dst")
-    require(fs.exists(versionDir(src, v)), s"$src version $v not retained")
     // the clone's v0 lists the source's files explicitly (a reference
     // chain cannot cross tables) and keeps its layout
-    val carried = dataFiles(src, v)
-    val dvs = dvFiles(src, v)
+    val s = snapshot(src, v)
     commit(dst, headOf(dst), None) { (dir, _) =>
       fs.mkdirs(dir)
-      writeLayout(src, v, dir)
-      writeManifest(dir, carried)
-      if (dvs.nonEmpty) writeDvManifest(dir, dvs)
+      writeLayout(s, dir)
+      writeManifest(dir, s.chain.map(f => new Path(f.path)))
+      if (s.dvFiles.nonEmpty) writeDvManifest(dir, s.dvFiles)
       // schema actions (declared columns, renames, drops) at or below
       // the cloned version travel with the clone — its files carry the
       // source's PHYSICAL names, so the mapping must ride along. The
@@ -2194,7 +2073,8 @@ class TableCatalog(spark: SparkSession, root: String,
     val toSchema = readVersion(fq, toV).schema
       .filterNot(_.name == "_change_type")
     val cols = toSchema.map(f => col(f.name))
-    val mTo = columnMappingAt(fq, toV)
+    val (a, b) = (snapshot(fq, fromV), snapshot(fq, toV))
+    val mTo = b.columnMapping
     // candidate frames are RAW file scans: surface them under the
     // logical view and fill declared columns older files don't carry
     def align(df: DataFrame): DataFrame = {
@@ -2205,14 +2085,9 @@ class TableCatalog(spark: SparkSession, root: String,
     }
     def tag(df: DataFrame, t: String) =
       align(df).select(cols: _*).withColumn("_change_type", lit(t))
-    def qp(p: Path) = fs.makeQualified(p).toUri.getPath
-    val filesA = dataFiles(fq, fromV); val filesB = dataFiles(fq, toV)
-    val setA = filesA.map(qp).toSet; val setB = filesB.map(qp).toSet
-    val added = filesB.filterNot(p => setA(qp(p)))
-    val removed = filesA.filterNot(p => setB(qp(p)))
-    val dvA = dvFiles(fq, fromV); val dvB = dvFiles(fq, toV)
-    val dvASet = dvA.map(qp).toSet
-    val dvNew = dvB.filterNot(p => dvASet(qp(p)))
+    val added = b.chain.filterNot(f => a.byKey.contains(f.key))
+    val removed = a.chain.filterNot(f => b.byKey.contains(f.key))
+    val dvNew = b.dvFiles.filterNot(p => a.dvKeys(p.toUri.getPath))
     val survivorDeletes: Option[DataFrame] =
       if (dvNew.isEmpty) None
       else {
@@ -2220,19 +2095,19 @@ class TableCatalog(spark: SparkSession, root: String,
         // the address list is metadata-sized (distinct file names)
         val hitFiles = mask.select("file").distinct().collect()
           .map(_.getString(0)).toSeq
-          .filter(f => setB(new Path(f).toUri.getPath)) // removed files net elsewhere
+          .flatMap(f => b.byKey.get(new Path(f).toUri.getPath)) // removed files net elsewhere
         if (hitFiles.isEmpty) None
-        else Some(readPhysical(fq, toV, hitFiles.map(new Path(_)), withRowPos)
+        else Some(readPhysical(b, hitFiles, withRowPos)
           .join(mask, col("__fp") === mask("file") &&
             col("__ri") === mask("row_index"), "left_semi")
           .drop("__fp", "__ri"))
       }
     val candIns =
       if (added.isEmpty) None
-      else Some(readMasked(fq, toV, added))
+      else Some(readMasked(b, added))
     val removedDeletes =
       if (removed.isEmpty) None
-      else Some(readMasked(fq, fromV, removed))
+      else Some(readMasked(a, removed))
     val candDel = (removedDeletes.toSeq ++ survivorDeletes.toSeq)
       .map(d => align(d).select(cols: _*)).reduceOption(_.unionByName(_))
     (candIns, candDel) match {
@@ -2255,45 +2130,15 @@ class TableCatalog(spark: SparkSession, root: String,
   def versionGlob(fq: String): String = new Path(tableDir(fq), "v_*").toString
 
   // ---- DataSource V2 connector surface (graft.connector) ------------------
-  // Planning-time metadata reads for [[graft.connector.GraftSource]]:
-  // the connector resolves versions, file lists, `_STATS` intervals,
-  // `_BLOOMS` bitsets and DV sidecar paths on the DRIVER (metadata-sized
-  // IO, same cost profile as Delta reading its commit log) and ships
-  // only per-file work to executors. All keyed by scheme-less URI path
-  // (the `_STATS`/`_BLOOMS` sidecar key convention).
-
-  private[graft] def dataFilePathsAt(fq: String, v: Int): Seq[String] =
-    dataFiles(fq, v).map(p => fs.makeQualified(p).toString).sorted
-
-  private[graft] def dvFilePathsAt(fq: String, v: Int): Seq[String] =
-    dvFiles(fq, v).map(p => fs.makeQualified(p).toString).sorted
-
-  private[graft] def isPartitionedAt(fq: String, v: Int): Boolean =
-    partitionColsOf(fq, v).nonEmpty
-
-  private[graft] def partitionColumnsAt(fq: String, v: Int): Seq[String] =
-    partitionColsOf(fq, v)
+  // The connector plans against [[snapshot]] on the DRIVER
+  // (metadata-sized IO, the cost profile of Delta reading its commit
+  // log) and ships only per-file work to executors.
 
   /** Is the version dir still on disk (not pruned/vacuumed)? The
     * streaming source's per-commit walk needs this to distinguish "no
     * diff to compute" from "commit retired". */
   private[graft] def versionRetained(fq: String, v: Int): Boolean =
     fs.exists(versionDir(fq, v))
-
-  /** Full schema of a PARTITIONED version — Spark's partition
-    * discovery recovers the path-encoded columns and their inferred
-    * types (int/long/decimal/date/string cascade), unioned across the
-    * chain's layouts ([[readByOwner]]: one footer per owning version
-    * dir, no mergeSchema job). Cached per version (a chain's schema is
-    * immutable once committed), so repeated connector loads and
-    * [[readPhysical]] calls on one snapshot resolve without re-running
-    * discovery. */
-  private[graft] def partitionedSchemaAt(fq: String, v: Int)
-      : org.apache.spark.sql.types.StructType = {
-    def compute = readByOwner(fq, v, dataFiles(fq, v), None, identity).schema
-    TableCatalog.cachedValue(fs, versionDir(fq, v), s"pschema:$v")(compute)
-      .getOrElse(compute)
-  }
 
   /** Footer schema of one representative data file, cached by file
     * status (files are immutable) — the unpartitioned chain-schema
@@ -2327,129 +2172,19 @@ class TableCatalog(spark: SparkSession, root: String,
     TableCatalog.allNullable(st).asInstanceOf[org.apache.spark.sql.types.StructType]
   }
 
-  /** Per data file of a (possibly partitioned) version: the qualified
-    * path and the `col=value` pairs parsed from its path segments
-    * below the owning version dir — raw strings, URL-unescaped,
-    * `__HIVE_DEFAULT_PARTITION__` → null. Files outside a hive layout
-    * (pre-evolution chain entries) carry no pairs: their partition
-    * columns, if any, live INLINE in the data. */
-  private[graft] def filePartitionValuesAt(fq: String, v: Int)
-      : Seq[(String, Seq[(String, Option[String])])] =
-    dataFiles(fq, v).map { p =>
-      val anc = fs.makeQualified(versionAncestor(p)).toUri.getPath
-      val full = fs.makeQualified(p).toUri.getPath
-      val rel = if (full.startsWith(anc)) full.stripPrefix(anc) else full
-      val pairs = rel.split('/').toSeq.filter(_.contains('='))
-        .map { seg =>
-          val i = seg.indexOf('=')
-          val name = TableCatalog.unescapePath(seg.substring(0, i))
-          val raw = TableCatalog.unescapePath(seg.substring(i + 1))
-          name -> (if (raw == "__HIVE_DEFAULT_PARTITION__") None else Some(raw))
-        }
-      fs.makeQualified(p).toString -> pairs
-    }
-
-  private[graft] def statsByPath(fq: String, v: Int)
-      : Map[String, Map[String, (BigDecimal, BigDecimal)]] =
-    statsFor(dataFiles(fq, v))
-
-  /** Per-file ROW-GROUP bounds of multi-group files (byte range →
-    * per-column numeric and truncation-safe string bounds) — what
-    * lets slice planning drop non-matching ranges INSIDE a big file.
-    * Files without `g:` entries (single-group, or pre-recording)
-    * simply don't appear — callers fall back to blind byte splits. */
-  private[graft] def rowGroupStatsByPath(fq: String, v: Int)
-      : Map[String, Seq[TableCatalog.RowGroupStat]] = {
-    val b64dec = java.util.Base64.getDecoder
-    val raw = dataFiles(fq, v).map(versionAncestor).distinct.flatMap { dir =>
-      TableCatalog.cachedParse(fs, statsPath(dir), "rgstats") { text =>
-        text.split("\n").toSeq.filter(_.nonEmpty).flatMap { ln =>
-          val Array(f, c, mn, mx) = ln.split("\t", 4)
-          if (c.startsWith("g:")) {
-            val Array(st, len, col) = c.stripPrefix("g:").split(":", 3)
-            Some((f, st.toLong, len.toLong, col,
-              Left((BigDecimal(mn), BigDecimal(mx)))
-                : Either[(BigDecimal, BigDecimal),
-                         (Array[Byte], Option[Array[Byte]])]))
-          } else if (c.startsWith("gs:")) {
-            val Array(st, len, col) = c.stripPrefix("gs:").split(":", 3)
-            Some((f, st.toLong, len.toLong, col,
-              Right((b64dec.decode(mn),
-                if (mx == "*") None else Some(b64dec.decode(mx))))
-                : Either[(BigDecimal, BigDecimal),
-                         (Array[Byte], Option[Array[Byte]])]))
-          } else None
-        }
-      }.getOrElse(Nil)
-    }
-    raw.groupBy(_._1).map { case (f, entries) =>
-      f -> entries.groupBy(e => (e._2, e._3)).toSeq.sortBy(_._1._1)
-        .map { case ((start, len), cols) =>
-          TableCatalog.RowGroupStat(start, len,
-            cols.collect { case (_, _, _, c, Left(b))  => c -> b }.toMap,
-            cols.collect { case (_, _, _, c, Right(b)) => c -> b }.toMap)
-        }
-    }
-  }
-
-  private[graft] def stringStatsByPath(fq: String, v: Int)
-      : Map[String, Map[String, (Array[Byte], Option[Array[Byte]])]] =
-    stringStatsFor(dataFiles(fq, v))
-
-  private[graft] def bloomsByPath(fq: String, v: Int, column: String)
-      : Map[String, Array[Long]] =
-    dataFiles(fq, v).map(versionAncestor).distinct.flatMap(bloomEntries)
-      .collect { case (f, c, bits) if c == column => f -> bits }.toMap
-
-  /** Byte sizes of a version's data files, keyed like `_STATS`
-    * (scheme-less path) — drives the connector's size estimate, task
-    * sizing and the planner's broadcast decisions. One `listStatus`
-    * per PARENT DIRECTORY (not a HEAD per file — on an object store a
-    * 10k-file chain is 10k fewer RPCs per planned query), cached by
-    * the version dir's status (data files are immutable; a new commit
-    * plans against a new version number). */
-  private[graft] def fileSizesAt(fq: String, v: Int): Map[String, Long] = {
-    def compute: Map[String, Long] = {
-      val files = dataFiles(fq, v)
-      val wanted = files.map(p => fs.makeQualified(p).toUri.getPath).toSet
-      files.groupBy(_.getParent).flatMap { case (dir, _) =>
-        fs.listStatus(dir).filter(_.isFile).toSeq.flatMap { st =>
-          val key = fs.makeQualified(st.getPath).toUri.getPath
-          if (wanted(key)) Some(key -> st.getLen) else None
-        }
+  /** Byte sizes of `files` by key — the connector's size estimate,
+    * task sizing and the planner's broadcast decisions. One
+    * `listStatus` per PARENT DIRECTORY (not a HEAD per file — on an
+    * object store a 10k-file chain is 10k fewer RPCs). */
+  private[catalog] def fileSizes(files: Seq[DataFile]): Map[String, Long] = {
+    val wanted = files.map(_.key).toSet
+    files.map(f => new Path(f.path).getParent).distinct.flatMap { dir =>
+      fs.listStatus(dir).filter(_.isFile).toSeq.flatMap { st =>
+        val key = keyOf(st.getPath)
+        if (wanted(key)) Some(key -> st.getLen) else None
       }
-    }
-    // a cache MISS (version dir status probe failed) must still answer
-    // with real sizes: planners treat a missing entry as whole-file,
-    // and an empty map here would degrade every scheduled slice
-    TableCatalog.cachedValue(fs, versionDir(fq, v), s"sizes:$v")(compute)
-      .getOrElse(compute)
+    }.toMap
   }
-
-  /** Outstanding DV row indexes per addressed file at version v —
-    * the connector's mask-planning input. Each immutable DV sidecar
-    * parses ONCE process-wide (status-keyed cache); repeated query
-    * planning over a masked table re-reads nothing. */
-  private[graft] def dvPairsByFile(fq: String, v: Int)
-      : Map[String, Array[Long]] = {
-    val dvs = dvFiles(fq, v)
-    if (dvs.isEmpty) return Map.empty
-    val conf = spark.sparkContext.hadoopConfiguration
-    val perSidecar: Seq[Map[String, Array[Long]]] = dvs.flatMap { p =>
-      TableCatalog.cachedValue(fs, p, "dvpairs") {
-        graft.connector.GraftParquetIO.readDvPairs(Seq(p.toString), conf)
-          .groupBy { case (f, _) => new Path(f).toUri.getPath }
-          .map { case (f, ps) => f -> ps.map(_._2).toArray }
-      }
-    }
-    perSidecar.flatten.groupBy(_._1).map { case (f, seqs) =>
-      f -> seqs.flatMap(_._2).distinct.sorted.toArray
-    }
-  }
-
-  private[graft] def bloomMayContain(bits: Array[Long], value: String): Boolean =
-    bloomBitPositions(bloomHash(value), bits.length).forall(pos =>
-      (bits(pos >> 6) & (1L << (pos & 63))) != 0L)
 
   /** DSv2 write path: adopt executor-staged parquet files as a new
     * committed version. `staged` pairs each file with its path relative
@@ -2464,23 +2199,22 @@ class TableCatalog(spark: SparkSession, root: String,
       bucketSpec: Option[(String, Int)] = None,
       replaceTable: Boolean = false): Unit = {
     require(staged.nonEmpty, s"no data files staged for $fq")
-    def requireLayout(v: Int): Unit = {
-      val live = partitionColsOf(fq, v)
-      require(live == pcols,
+    def requireLayout(s: Snapshot): Snapshot = {
+      require(s.partitionColumns == pcols,
         s"append layout [${pcols.mkString(",")}] does not match table " +
-          s"layout [${live.mkString(",")}] of $fq")
+          s"layout [${s.partitionColumns.mkString(",")}] of $fq")
+      s
     }
     val prior = headOf(fq)
-    if (!overwrite && prior >= 0) requireLayout(prior)
+    if (!overwrite && prior >= 0) requireLayout(snapshot(fq, prior))
     // staged appends are BLIND appends: rebase across winners
     commit(fq, prior, if (overwrite) None else Some((Nil, Nil))) { (dir, head) =>
       adoptStaged(dir, staged)
       if (!overwrite && head >= 0) {
-        requireLayout(head)
         // O(delta): one reference line per epoch/commit — a streaming
         // sink must not rewrite O(live files) of manifest per epoch;
         // every Nth epoch checkpoints so cold reads stay O(interval)
-        carryChain(fq, dir, head)
+        carryChain(requireLayout(snapshot(fq, head)), dir)
       } else writePartitions(dir, pcols)
       if (overwrite) resetSchemaActions(fq, dir, carryConstraints = !replaceTable)
       bucketSpec.foreach { case (c, n) => writeBucketSpec(dir, c, n) }
@@ -2547,7 +2281,7 @@ class TableCatalog(spark: SparkSession, root: String,
   /** All schema actions in declaration order (filename order — legacy
     * adds sort first: digits < 'v'). Immutable files parse once
     * process-wide. */
-  private def schemaActions(fq: String): Seq[SchemaAction] = {
+  private[catalog] def schemaActions(fq: String): Seq[SchemaAction] = {
     val d = schemasDir(fq)
     if (!fs.exists(d)) return Nil
     fs.listStatus(d).filter(_.isFile).map(_.getPath).sortBy(_.getName)
@@ -2580,39 +2314,6 @@ class TableCatalog(spark: SparkSession, root: String,
         }
       }
   }
-
-  /** Column-mapping state of version `atV`: the fold of all actions
-    * declared at or below it. */
-  private[graft] def columnMappingAt(fq: String, atV: Int)
-      : TableCatalog.ColumnMapping = {
-    val adds = scala.collection.mutable.LinkedHashMap
-      .empty[String, org.apache.spark.sql.types.StructField]
-    val logical = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val dropped = scala.collection.mutable.LinkedHashSet.empty[String]
-    schemaActions(fq).filter(_.version <= atV).foreach {
-      case AddAction(_, fields) => fields.foreach { f =>
-        val phys = TableCatalog.physicalNameOf(f)
-        adds(phys) = f
-        if (phys != f.name) logical(phys) = f.name else logical.remove(phys)
-        dropped -= phys
-      }
-      case RenameAction(_, ph, to) =>
-        if (ph == to) logical.remove(ph) else logical(ph) = to
-        adds.get(ph).foreach(f => adds(ph) = f.copy(name = to))
-      case DropAction(_, ph) =>
-        dropped += ph; adds.remove(ph); logical.remove(ph)
-      case ResetAction(_) =>
-        adds.clear(); logical.clear(); dropped.clear()
-      case _: ConstraintAddAction | _: ConstraintDropAction => ()
-    }
-    TableCatalog.ColumnMapping(logical.toMap, dropped.toSet, adds.toSeq)
-  }
-
-  /** Declared extension columns visible at version `atV`, under their
-    * CURRENT logical names. */
-  private[graft] def declaredColumns(fq: String, atV: Int)
-      : Seq[org.apache.spark.sql.types.StructField] =
-    columnMappingAt(fq, atV).adds.map(_._2)
 
   /** A logical frame plus the declared (ALTER ADD COLUMNS) columns no
     * file carries yet, as typed nulls. */
@@ -2688,10 +2389,10 @@ class TableCatalog(spark: SparkSession, root: String,
     val carried: Seq[TableCatalog.Constraint] =
       if (!carryConstraints) Nil
       else currentVersion(fq).map { pv =>
-        val m = columnMappingAt(fq, pv)
-        constraintsAt(fq, pv).map(c =>
+        val s = snapshot(fq, pv)
+        s.constraints.map(c =>
           if (c.kind == "notnull")
-            c.copy(arg = m.logicalOf.getOrElse(c.arg, c.arg))
+            c.copy(arg = s.columnMapping.logicalOf.getOrElse(c.arg, c.arg))
           else c)
       }.getOrElse(Nil)
     resetSchemaActions(fq, dir)
@@ -2708,7 +2409,8 @@ class TableCatalog(spark: SparkSession, root: String,
     currentVersion(fq) match {
       case None => df
       case Some(v) =>
-        val cs = constraintsAt(fq, v)
+        val s = snapshot(fq, v)
+        val cs = s.constraints
         if (cs.isEmpty) df
         else {
           cs.filter(_.kind == "check").foreach { c =>
@@ -2721,17 +2423,17 @@ class TableCatalog(spark: SparkSession, root: String,
                   "does not resolve against the replacement schema — " +
                   "drop the constraint first (alterDropConstraint)", e) }
           }
-          enforceConstraints(fq, v, df)
+          enforceConstraints(s, df)
         }
     }
 
   /** Metadata-only commit: carry the whole chain (data, DVs, layout)
     * unchanged; `extra(newVersion)` rides atomically with it. */
-  private def commitMetadata(fq: String, v: Int)(extra: Int => Unit): Unit =
-    commit(fq, v, None) { (dir, _) =>
+  private def commitMetadata(s: Snapshot)(extra: Int => Unit): Unit =
+    commit(s.fq, s.version, None) { (dir, _) =>
       fs.mkdirs(dir)
-      carryChain(fq, dir, v)
-      extra(v + 1)
+      carryChain(s, dir)
+      extra(s.version + 1)
     }
 
   /** ALTER TABLE ADD COLUMNS: declare new nullable columns without
@@ -2744,18 +2446,15 @@ class TableCatalog(spark: SparkSession, root: String,
   def alterAddColumns(fq: String,
       cols: org.apache.spark.sql.types.StructType): Unit = {
     require(cols.nonEmpty, "no columns to add")
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val existing = graft.connector.GraftSource
-      .chainSchema(spark, this, fq, v).fieldNames.map(_.toLowerCase).toSet
+    val s = snapshot(fq)
+    val existing = s.schema.fieldNames.map(_.toLowerCase).toSet
     cols.fields.foreach(f => require(!existing(f.name.toLowerCase),
       s"column ${f.name} already exists in $fq"))
-    val m = columnMappingAt(fq, v)
+    val m = s.columnMapping
     val usedPhysicals: Set[String] =
-      (graft.connector.GraftSource.physicalChainSchema(spark, this, fq, v)
-        .fieldNames.toSeq ++ m.dropped ++ m.adds.map(_._1) ++
+      (s.physicalSchema.fieldNames.toSeq ++ m.dropped ++ m.adds.map(_._1) ++
         m.logicalOf.keys).map(_.toLowerCase).toSet
-    val next = v + 1
+    val next = s.version + 1
     val tagged = cols.fields.map { f =>
       if (!usedPhysicals(f.name.toLowerCase)) f
       else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
@@ -2763,7 +2462,7 @@ class TableCatalog(spark: SparkSession, root: String,
         .putString(TableCatalog.PhysicalKey, f"${f.name}_g$next%06d")
         .build())
     }
-    commitMetadata(fq, v)(nv => writeSchemaAction(fq, nv, "add.json",
+    commitMetadata(s)(nv => writeSchemaAction(fq, nv, "add.json",
       org.apache.spark.sql.types.StructType(tagged).json))
   }
 
@@ -2772,25 +2471,24 @@ class TableCatalog(spark: SparkSession, root: String,
     * (Delta column-mapping name mode). Partition and bucket-source
     * columns are rejected (path- and spec-encoded). */
   def alterRenameColumn(fq: String, from: String, to: String): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val schema = graft.connector.GraftSource.chainSchema(spark, this, fq, v)
+    val s = snapshot(fq)
+    val schema = s.schema
     val actual = schema.fieldNames.find(_.equalsIgnoreCase(from)).getOrElse(
       throw new IllegalArgumentException(s"column $from does not exist in $fq"))
     require(!schema.fieldNames.exists(_.equalsIgnoreCase(to)),
       s"column $to already exists in $fq")
-    require(!partitionColsOf(fq, v).exists(_.equalsIgnoreCase(from)),
+    require(!s.partitionColumns.exists(_.equalsIgnoreCase(from)),
       s"cannot rename partition column $from (path-encoded)")
-    bucketSpecAt(fq, v).foreach { case (c, _) =>
+    s.bucketSpec.foreach { case (c, _) =>
       require(!c.equalsIgnoreCase(from),
         s"cannot rename bucket source column $from (layout-encoded)") }
-    val m0 = columnMappingAt(fq, v)
-    constraintsAt(fq, v).filter(_.kind == "check").foreach { c =>
+    val m0 = s.columnMapping
+    s.constraints.filter(_.kind == "check").foreach { c =>
       require(!constraintMentions(c, actual, m0),
         s"cannot rename $from: CHECK constraint ${c.name} references it — " +
           "drop the constraint first (alterDropConstraint)") }
     val phys = m0.physical(actual)
-    commitMetadata(fq, v)(nv =>
+    commitMetadata(s)(nv =>
       writeSchemaAction(fq, nv, "rename", s"$phys\t$to"))
   }
 
@@ -2800,30 +2498,28 @@ class TableCatalog(spark: SparkSession, root: String,
     * physically retires them). */
   def alterDropColumns(fq: String, names: Seq[String]): Unit = {
     require(names.nonEmpty, "no columns to drop")
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val schema = graft.connector.GraftSource.chainSchema(spark, this, fq, v)
+    val s = snapshot(fq)
+    val schema = s.schema
     val actuals = names.map(n =>
       schema.fieldNames.find(_.equalsIgnoreCase(n)).getOrElse(
         throw new IllegalArgumentException(s"column $n does not exist in $fq")))
     require(schema.fieldNames.length > actuals.length,
       s"cannot drop every column of $fq")
-    val pcols = partitionColsOf(fq, v)
     actuals.foreach { n =>
-      require(!pcols.exists(_.equalsIgnoreCase(n)),
+      require(!s.partitionColumns.exists(_.equalsIgnoreCase(n)),
         s"cannot drop partition column $n (path-encoded)")
-      bucketSpecAt(fq, v).foreach { case (c, _) =>
+      s.bucketSpec.foreach { case (c, _) =>
         require(!c.equalsIgnoreCase(n),
           s"cannot drop bucket source column $n (layout-encoded)") }
     }
-    val m = columnMappingAt(fq, v)
-    constraintsAt(fq, v).foreach { c =>
+    val m = s.columnMapping
+    s.constraints.foreach { c =>
       actuals.foreach { n =>
         require(!constraintMentions(c, n, m),
           s"cannot drop column $n: constraint ${c.name} references it — " +
             s"drop the constraint first (alterDropConstraint)") }
     }
-    commitMetadata(fq, v)(nv =>
+    commitMetadata(s)(nv =>
       actuals.foreach(n => writeSchemaAction(fq, nv, "drop", m.physical(n))))
   }
 
@@ -2835,21 +2531,6 @@ class TableCatalog(spark: SparkSession, root: String,
   // shape). NOT NULL binds to the PHYSICAL name so it survives
   // renames; CHECK text references LOGICAL names, so renames/drops of
   // referenced columns are rejected until the constraint is dropped.
-
-  /** Constraints in effect at version `atV` (declaration order). */
-  private[graft] def constraintsAt(fq: String, atV: Int)
-      : Seq[TableCatalog.Constraint] = {
-    val acc = scala.collection.mutable.LinkedHashMap
-      .empty[String, TableCatalog.Constraint]
-    schemaActions(fq).filter(_.version <= atV).foreach {
-      case ConstraintAddAction(_, nm, kind, arg) =>
-        acc(nm) = TableCatalog.Constraint(nm, kind, arg)
-      case ConstraintDropAction(_, nm) => acc.remove(nm)
-      case ResetAction(_) => acc.clear()
-      case _ => ()
-    }
-    acc.values.toSeq
-  }
 
   /** Does constraint `c` reference LOGICAL column `logical`? NOT NULL
     * compares through the mapping; CHECK matches the identifier in the
@@ -2872,25 +2553,23 @@ class TableCatalog(spark: SparkSession, root: String,
     * satisfy it (one validation scan at DDL time); subsequent writes
     * enforce per row. */
   def alterAddNotNull(fq: String, column: String): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    val schema = graft.connector.GraftSource.chainSchema(spark, this, fq, v)
-    val actual = schema.fieldNames.find(_.equalsIgnoreCase(column)).getOrElse(
+    val s = snapshot(fq)
+    val actual = s.schema.fieldNames.find(_.equalsIgnoreCase(column)).getOrElse(
       throw new IllegalArgumentException(s"column $column does not exist in $fq"))
     val name = s"nn_${actual.toLowerCase}"
-    val phys = columnMappingAt(fq, v).physical(actual)
+    val phys = s.columnMapping.physical(actual)
     // dedupe by PHYSICAL column, not by name: a constraint created
     // before a rename keeps its creation-time slug (nn_<oldname>) but
     // still binds this column — re-adding would stack a duplicate
-    constraintsAt(fq, v)
+    s.constraints
       .find(c => c.kind == "notnull" && c.arg.equalsIgnoreCase(phys))
       .foreach(c => throw new IllegalArgumentException(
         s"NOT NULL already enforced on $fq.$actual (constraint ${c.name})"))
-    require(!constraintsAt(fq, v).exists(_.name == name),
+    require(!s.constraints.exists(_.name == name),
       s"constraint $name already exists on $fq")
     require(read(fq).filter(col(s"`$actual`").isNull).limit(1).count() == 0,
       s"cannot add NOT NULL on $fq.$actual: existing rows hold nulls")
-    commitMetadata(fq, v)(nv =>
+    commitMetadata(s)(nv =>
       writeSchemaAction(fq, nv, "addnn", s"$name\t$phys"))
   }
 
@@ -2899,16 +2578,15 @@ class TableCatalog(spark: SparkSession, root: String,
     * FALSE are rejected (NULL = unknown passes — SQL semantics).
     * Existing rows are validated once at DDL time. */
   def alterAddCheck(fq: String, name: String, expr: String): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    require(!constraintsAt(fq, v).exists(_.name == name),
+    val s = snapshot(fq)
+    require(!s.constraints.exists(_.name == name),
       s"constraint $name already exists on $fq")
     val violated = read(fq)
       .filter(org.apache.spark.sql.functions.expr(expr) === lit(false))
       .limit(1).count()
     require(violated == 0,
       s"cannot add CHECK $name on $fq: existing rows violate ($expr)")
-    commitMetadata(fq, v)(nv =>
+    commitMetadata(s)(nv =>
       writeSchemaAction(fq, nv, "addck", s"$name\t$expr"))
   }
 
@@ -2962,20 +2640,19 @@ class TableCatalog(spark: SparkSession, root: String,
   private[graft] def notNullConstraintOf(fq: String, column: String)
       : Option[TableCatalog.Constraint] =
     currentVersion(fq).flatMap { v =>
-      val schema = graft.connector.GraftSource.chainSchema(spark, this, fq, v)
-      val actual = schema.fieldNames
+      val s = snapshot(fq, v)
+      val actual = s.schema.fieldNames
         .find(_.equalsIgnoreCase(column)).getOrElse(column)
-      val phys = columnMappingAt(fq, v).physical(actual)
-      constraintsAt(fq, v).find(c =>
+      val phys = s.columnMapping.physical(actual)
+      s.constraints.find(c =>
         c.kind == "notnull" && c.arg.equalsIgnoreCase(phys))
     }
 
   def alterDropConstraint(fq: String, name: String): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
-    require(constraintsAt(fq, v).exists(_.name == name),
+    val s = snapshot(fq)
+    require(s.constraints.exists(_.name == name),
       s"no constraint $name on $fq")
-    commitMetadata(fq, v)(nv => writeSchemaAction(fq, nv, "dropct", name))
+    commitMetadata(s)(nv => writeSchemaAction(fq, nv, "dropct", name))
   }
 
   /** Wraps a LOGICAL-named frame so that WRITING it evaluates every
@@ -2983,11 +2660,9 @@ class TableCatalog(spark: SparkSession, root: String,
     * column's value routes through a `when(violation, raise_error)`
     * branch — the value is written, so column pruning cannot elide the
     * check, and no second validation scan runs. */
-  private def enforceConstraints(fq: String, v: Int,
-      df: DataFrame): DataFrame = {
-    val cs = constraintsAt(fq, v)
+  private def enforceConstraints(s: Snapshot, df: DataFrame): DataFrame = {
+    val (fq, cs, m) = (s.fq, s.constraints, s.columnMapping)
     if (cs.isEmpty) return df
-    val m = columnMappingAt(fq, v)
     cs.foldLeft(df) { (acc, c) =>
       c.kind match {
         case "notnull" =>
@@ -3046,7 +2721,7 @@ class TableCatalog(spark: SparkSession, root: String,
     val prior = if (overwrite) None else currentVersion(fq)
     prior match {
       case Some(v) => // empty append: carry everything forward
-        commitMetadata(fq, v)(_ => ())
+        commitMetadata(snapshot(fq, v))(_ => ())
       case None => // overwrite/create: schema-only zero-row version
         val empty = spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
@@ -3096,18 +2771,17 @@ class TableCatalog(spark: SparkSession, root: String,
     * the data); compaction re-partitions them later. */
   private[graft] def commitDelta(fq: String, basedOn: Option[Int],
       dataStaged: Seq[Path], deletes: Either[Column, Seq[Path]]): Unit = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
+    val s = snapshot(fq)
     if (deletes == Right(Nil) && dataStaged.isEmpty) return // no-op op
-    val mask = deletes.swap.toOption.filter(_ => dataFiles(fq, v).nonEmpty)
-      .map(where => addressedRows(fq, v).filter(where)
+    val mask = deletes.swap.toOption.filter(_ => s.chain.nonEmpty)
+      .map(where => addressedRows(s).filter(where)
         .select(col("__fp").as("file"), col("__ri").as("row_index")))
-    try commit(fq, basedOn.getOrElse(v), None) { (dir, head) =>
+    try commit(fq, basedOn.getOrElse(s.version), None) { (dir, head) =>
       adoptStaged(dir, dataStaged.map(f => (f, f.getName)))
       mask.foreach(_.write.mode(SaveMode.Overwrite).parquet(dvDir(dir).toString))
       deletes.foreach(dvs =>
         if (dvs.nonEmpty) adoptStaged(dvDir(dir), dvs.map(f => (f, f.getName))))
-      carryChain(fq, dir, head)
+      carryChain(snapshot(fq, head), dir)
     } catch {
       case e: java.util.ConcurrentModificationException if basedOn.isDefined =>
         throw new java.util.ConcurrentModificationException(
@@ -3167,8 +2841,6 @@ class TableCatalog(spark: SparkSession, root: String,
   }
 
   def describeHealth(fq: String): TableHealth = {
-    val v = currentVersion(fq).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $fq"))
     val (nFiles, bytes) = fileStats(fq)
     val dvRows = deletionVectorRows(fq)
     val retained = fs.listStatus(tableDir(fq)).count(st =>
@@ -3218,6 +2890,33 @@ object TableCatalog {
       case other => other
     }
   }
+
+  private[catalog] val BloomHashes = 5 // double-hashed probes per key (~1% FPR at 10 bits/row)
+
+  /** The key hash both sides use: Spark's `xxhash64` (seed 42) of the
+    * STRING form of the value. Hashing the canonical string form keeps
+    * the build side (a Column over the native type) and the probe side
+    * (a driver-side literal) bit-identical regardless of numeric width;
+    * callers pass probe values whose `toString` matches Spark's
+    * string cast (exact for string and integral keys). */
+  private def bloomHash(s: String): Long = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    import org.apache.spark.unsafe.types.UTF8String
+    XxHash64(Seq(Literal.create(UTF8String.fromString(s),
+        org.apache.spark.sql.types.StringType)), 42L)
+      .eval(null).asInstanceOf[Long]
+  }
+
+  private def bloomBitPositions(h: Long, words: Int): Seq[Int] = {
+    val m = words * 64L
+    val h2 = (h >>> 32) | 1L // odd second hash → full-period double hashing
+    (0 until BloomHashes).map(i => java.lang.Math.floorMod(h + i * h2, m).toInt)
+  }
+
+  /** May a bloom bitset hold `value` (in its canonical string form)? */
+  private[graft] def bloomMayContain(bits: Array[Long], value: String): Boolean =
+    bloomBitPositions(bloomHash(value), bits.length).forall(pos =>
+      (bits(pos >> 6) & (1L << (pos & 63))) != 0L)
 
   /** Deletion-vector sidecar schema, exactly as the catalog writes it
     * ((`_metadata.file_path`, `_metadata.row_index`) projections). */
@@ -3319,6 +3018,13 @@ object TableCatalog {
       numeric: Map[String, (BigDecimal, BigDecimal)],
       strings: Map[String, (Array[Byte], Option[Array[Byte]])])
 
+  /** One data file's `_STATS` entry: numeric bounds (with `__rows`),
+    * string bounds and the row groups of a multi-group file. */
+  private[catalog] final case class FileStats(
+      numeric: Map[String, (BigDecimal, BigDecimal)],
+      strings: Map[String, (Array[Byte], Option[Array[Byte]])],
+      rowGroups: Seq[RowGroupStat])
+
   private[catalog] sealed trait SchemaAction { def version: Int }
   private[catalog] final case class AddAction(version: Int,
       fields: Seq[org.apache.spark.sql.types.StructField]) extends SchemaAction
@@ -3372,10 +3078,10 @@ object TableCatalog {
   }
 
   // ---- sidecar parse cache ------------------------------------------------
-  // statsFor/stringStatsFor/bloomEntries re-read and re-parse their
-  // `_STATS`/`_BLOOMS` text sidecars on EVERY scan-planning call, and
-  // fastCount re-reads DV parquet footers per call — O(chain) driver
-  // IO per query on a long-chained table. Sidecars are immutable once
+  // Snapshots, `_STATS`/`_BLOOMS` text sidecars, manifests and DV
+  // parquet footers would otherwise be re-read on EVERY scan-planning
+  // call — O(chain) driver IO per query on a long-chained table.
+  // Version dirs and their sidecars are immutable once
   // written except at a commit of their own version dir (or a bloom
   // rebuild / table rename), so a process-wide cache keyed by
   // (qualified path, kind, mtime, length) makes repeated planning

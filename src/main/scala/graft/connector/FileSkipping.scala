@@ -1,9 +1,8 @@
 package graft.connector
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.sources._
 
-import graft.catalog.TableCatalog
+import graft.catalog.{DataFile, Snapshot, TableCatalog}
 
 /** Spark source filters → Catalyst Columns, for the metadata-level DML
   * paths (SQL DELETE, replaceWhere). None = untranslatable — callers
@@ -222,42 +221,73 @@ private[graft] object FileSkipping {
     }
   }
 
-  def surviving(c: TableCatalog, fq: String, v: Int, files: Seq[String],
-      filters: Seq[Filter]): Seq[String] = {
+  /** THE file pruning of a snapshot — the scan's planning and the
+    * catalog's copy-on-write candidates both go through here: the
+    * files that may hold a row satisfying every conjunct of `filters`
+    * (PHYSICAL names). A file whose `_STATS` records zero rows never
+    * survives (truncate / CREATE schema markers, empty commits); the
+    * rest must pass exact partition-value pruning, bucket pruning (a
+    * point predicate on a bucket(n, key) layout's source column maps
+    * to the one bucket dir that can hold it) and [[surviving]]. */
+  def prune(s: Snapshot, filters: Seq[Filter]): Seq[DataFile] = {
+    val active = filters.flatMap(flatten)
+    val live = s.files.filterNot(_.rows.contains(0L))
+    if (active.isEmpty || live.isEmpty) return live
+    val pcols = s.partitionColumns.toSet
+    val afterPart =
+      if (!active.exists(_.references.exists(pcols))) live
+      else live.filter { f =>
+        val pv = f.partitionValues.toMap
+        pv.isEmpty || active.forall(GraftPartitions.mayMatch(pv, s.physicalSchema, _))
+      }
+    val bucketIds = (if (s.isBucketed) s.bucketSpec else None).flatMap { case (bc, n) =>
+      val values = active.collect {
+        case EqualTo(`bc`, v) => Seq(v)
+        case EqualNullSafe(`bc`, v) => Seq(v)
+        case In(`bc`, vs) => vs.toSeq
+      }
+      if (values.isEmpty) None
+      else s.physicalSchema.find(_.name == bc).map(f => values
+        .map(_.map(GraftBucketFunction.bucketIdOf(_, f.dataType, n)).toSet)
+        .reduce(_ intersect _))
+    }
+    val afterBucket = bucketIds match {
+      case Some(ids) => afterPart.filter(_.partitionValues.toMap
+        .get(TableCatalog.BucketCol).flatten.forall(b => ids(b.toInt)))
+      case None => afterPart
+    }
+    surviving(s, afterBucket, active)
+  }
+
+  /** `files` whose `_STATS` bounds and `_BLOOMS` bitsets do not rule
+    * out `filters` (missing sidecar ⇒ keep). */
+  def surviving(s: Snapshot, files: Seq[DataFile],
+      filters: Seq[Filter]): Seq[DataFile] = {
     val active = filters.flatMap(flatten)
     if (active.isEmpty || files.isEmpty) return files
-    val stats = c.statsByPath(fq, v)
-    lazy val sstats = c.stringStatsByPath(fq, v)
     val bloomCols = active.flatMap {
       case EqualTo(col, _) => Some(col)
       case In(col, _)      => Some(col)
       case _ => None
     }.distinct
     val blooms: Map[String, Map[String, Array[Long]]] =
-      bloomCols.map(col => col -> c.bloomsByPath(fq, v, col)).toMap
-
-    def key(p: String) = new Path(p).toUri.getPath
+      bloomCols.map(col => col -> s.blooms(col)).toMap
     def str(x: Any): String = x match {
       case u: org.apache.spark.unsafe.types.UTF8String => u.toString
       case other => String.valueOf(other)
     }
-
-    files.filter { p =>
-      val st = stats.get(key(p))
+    files.filter { f =>
       def bloomEqual(col: String, x: Any): Boolean =
-        blooms.get(col).flatMap(_.get(key(p))) match {
+        blooms.get(col).flatMap(_.get(f.key)) match {
           case Some(bits) => x match {
             case _: Byte | _: Short | _: Int | _: Long | _: String |
                  _: org.apache.spark.unsafe.types.UTF8String =>
-              c.bloomMayContain(bits, str(x))
+              TableCatalog.bloomMayContain(bits, str(x))
             case _ => true
           }
           case None => true
         }
-      mayMatchBounds(active,
-        col => st.flatMap(_.get(col)),
-        col => sstats.get(key(p)).flatMap(_.get(col)),
-        bloomEqual)
+      mayMatchBounds(active, f.stats.get, f.stringStats.get, bloomEqual)
     }
   }
 
@@ -269,16 +299,12 @@ private[graft] object FileSkipping {
     * single-group, stats-free, or nothing to prune. `Nil` = every
     * group eliminated: the file schedules no work (sound even after
     * file-level skipping, which only sees the union bounds). */
-  def rowGroupRanges(c: TableCatalog, fq: String, v: Int,
-      files: Seq[String], filters: Seq[Filter])
+  def rowGroupRanges(files: Seq[DataFile], filters: Seq[Filter])
       : Map[String, Seq[(Long, Long)]] = {
     val active = filters.flatMap(flatten)
-    if (active.isEmpty || files.isEmpty) return Map.empty
-    val rg = c.rowGroupStatsByPath(fq, v)
-    if (rg.isEmpty) return Map.empty
-    def key(p: String) = new Path(p).toUri.getPath
-    files.flatMap { p =>
-      rg.get(key(p)).flatMap { groups =>
+    if (active.isEmpty) return Map.empty
+    files.flatMap { f =>
+      Some(f.rowGroups).filter(_.nonEmpty).flatMap { groups =>
         // Only prune when EVERY recorded group carries the `__rows`
         // marker harvestStats writes unconditionally per block of a
         // multi-group file. Marker-era stats are complete (a block
@@ -303,7 +329,7 @@ private[graft] object FileSkipping {
                 (s0, math.max(s0 + l0, g.start + g.length) - s0) :: tail
               case (acc, g) => (g.start, g.length) :: acc
             }.reverse
-          Some(key(p) -> merged)
+          Some(f.key -> merged)
         }
       }
     }.toMap

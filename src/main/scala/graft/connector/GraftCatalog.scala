@@ -88,22 +88,17 @@ class GraftCatalog extends V2TableCatalog
 
   private def tableFor(fq: String, version: Option[Int]): GraftTable = {
     val base = Map("root" -> root, "table" -> fq)
-    val v = version.orElse(cat.version(fq)).getOrElse(
-      throw new NoSuchTableException(fq.split('.').toSeq))
-    val pcols = cat.partitionColumnsAt(fq, v)
-    val bucketSpec =
-      if (pcols.lastOption.contains(cat.BucketCol)) cat.bucketSpecAt(fq, v)
-      else None
+    val c = cat
+    val s = c.snapshot(fq, version.orElse(c.version(fq)).getOrElse(
+      throw new NoSuchTableException(fq.split('.').toSeq)))
+    val pcols = s.partitionColumns
     val opts = base ++
       version.map(x => "version" -> x.toString) ++
       (if (pcols.nonEmpty) Some("partitions" -> pcols.mkString(","))
        else None) ++
-      bucketSpec.map { case (c, n) => "bucketSpec" -> s"$c,$n" }
-    val files = cat.dataFilePathsAt(fq, v)
-    val schema =
-      if (files.isEmpty) new StructType()
-      else GraftSource.chainSchema(spark, cat, fq, v)
-    new GraftTable(schema, opts)
+      s.bucketSpec.filter(_ => s.isBucketed)
+        .map { case (c, n) => "bucketSpec" -> s"$c,$n" }
+    new GraftTable(if (s.files.isEmpty) new StructType() else s.schema, opts)
   }
 
   // SQL change-data-feed identifier (Delta's @-syntax family):
@@ -117,9 +112,7 @@ class GraftCatalog extends V2TableCatalog
       val fq = (ident.namespace() :+ tname).mkString(".")
       if (!cat.exists(fq))
         throw new NoSuchTableException((ident.namespace() :+ tname).toSeq)
-      val v = cat.version(fq).get
-      val base = GraftSource.chainSchema(spark, cat, fq, v)
-      new GraftCdfTable(base, Map("root" -> root, "table" -> fq,
+      new GraftCdfTable(cat.snapshot(fq).schema, Map("root" -> root, "table" -> fq,
         "startingVersion" -> from, "endingVersion" -> to))
     case _ =>
       val fq = fqOf(ident)
@@ -335,8 +328,7 @@ class GraftCatalog extends V2TableCatalog
           .asInstanceOf[org.apache.spark.sql.connector.catalog.constraints.Check]
         cat.alterAddCheck(fq, ck.name(), ck.predicateSql())
       case d: TableChange.DropConstraint =>
-        val v = cat.version(fq).get
-        if (cat.constraintsAt(fq, v).exists(_.name == d.name()))
+        if (cat.snapshot(fq).constraints.exists(_.name == d.name()))
           cat.alterDropConstraint(fq, d.name())
         else if (!d.ifExists()) throw new IllegalArgumentException(
           s"no constraint ${d.name()} on $fq")
@@ -474,8 +466,7 @@ class GraftCatalog extends V2TableCatalog
     // DV sidecars address rows by absolute (file, row_index); a rename
     // would orphan the masks and RESURRECT deleted rows — compact
     // first (materializes masks), then rename
-    val curV = cat.version(oldFq).get
-    require(cat.dvFilePathsAt(oldFq, curV).isEmpty,
+    require(cat.snapshot(oldFq).dvFiles.isEmpty,
       s"cannot rename $oldFq with outstanding deletion vectors — run compact first")
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val oldDir = new Path(root, oldFq.split('.').mkString("/"))

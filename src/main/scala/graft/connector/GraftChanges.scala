@@ -2,8 +2,6 @@ package graft.connector
 
 import java.util
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
@@ -11,7 +9,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.catalog.TableCatalog
+import graft.catalog.{DataFile, TableCatalog}
 
 /** CHANGE DATA FEED surfaces (Delta's `readChangeFeed` shape): the
   * per-commit row changes of a graft table as a first-class scan —
@@ -50,8 +48,7 @@ object GraftChanges {
   /** Change slices of commits [vFrom, vTo] (both retained, walked via
     * manifest diffs — metadata-only driver work). */
   def commitSlices(cat: TableCatalog, fq: String, vFrom: Int, vTo: Int,
-      skipChangeCommits: Boolean, conf: Configuration): Seq[GraftSlice] = {
-    def key(p: String) = new Path(p).toUri.getPath
+      skipChangeCommits: Boolean): Seq[GraftSlice] = {
     val out = Seq.newBuilder[GraftSlice]
     var v = math.max(vFrom, 0)
     while (v <= vTo) {
@@ -75,17 +72,11 @@ object GraftChanges {
         throw new IllegalStateException(
           s"graft change feed: $fq commit v$v (or its predecessor) was " +
             "vacuumed — change history is not reconstructable")
-      val cur = cat.dataFilePathsAt(fq, v)
-      val curSet = cur.map(key).toSet
-      val prev = if (v == 0) Seq.empty else cat.dataFilePathsAt(fq, v - 1)
-      val prevSet = prev.map(key).toSet
-      val adds = cur.filterNot(p => prevSet(key(p)))
-      val removed = prev.filterNot(p => curSet(key(p)))
-      val dvPrev =
-        (if (v == 0) Seq.empty else cat.dvFilePathsAt(fq, v - 1))
-          .map(key).toSet
-      val dvNew = cat.dvFilePathsAt(fq, v).filterNot(p => dvPrev(key(p)))
-      if (removed.nonEmpty) {
+      val cur = cat.snapshot(fq, v)
+      val prev = if (v == 0) None else Some(cat.snapshot(fq, v - 1))
+      val prevFiles = prev.map(_.byKey).getOrElse(Map.empty[String, DataFile])
+      val adds = cur.files.filterNot(f => prevFiles.contains(f.key))
+      if (!prevFiles.keySet.subsetOf(cur.byKey.keySet)) {
         // un-recorded REWRITE: overwrite/truncate (world-replacing)
         // or a rewrite predating CDC recording
         if (!skipChangeCommits) throw new IllegalStateException(
@@ -95,34 +86,24 @@ object GraftChanges {
             "use TableCatalog.readChanges for the net diff, or " +
             "skipChangeCommits=true to skip rewrite commits")
       } else {
-        val partVals: Map[String, Seq[(String, Option[String])]] =
-          if (!cat.isPartitionedAt(fq, v)) Map.empty
-          else cat.filePartitionValuesAt(fq, v)
-            .map { case (p, pvs) => key(p) -> pvs }.toMap
-        val sizes = cat.fileSizesAt(fq, v)
         def consts(t: String) = Seq(
           (ChangeType, Some(t)), (CommitVersion, Some(v.toString)))
-        adds.foreach { p =>
-          // missing size ⇒ whole file (a (0,1) range holds no
-          // row-group midpoint and would silently decode nothing)
-          out += GraftSlice(p, 0L,
-            sizes.getOrElse(key(p), Long.MaxValue), Array.empty[Long],
-            partVals.getOrElse(key(p), Seq.empty) ++ consts("insert"))
+        // missing size ⇒ whole file (a (0,1) range holds no row-group
+        // midpoint and would silently decode nothing)
+        def length(f: DataFile) = if (f.bytes > 0) f.bytes else Long.MaxValue
+        adds.foreach { f =>
+          out += GraftSlice(f.path, 0L, length(f), Array.empty[Long],
+            f.partitionValues ++ consts("insert"))
         }
-        if (dvNew.nonEmpty) {
-          // new DV entries = the rows this commit masked (sidecars are
-          // immutable and mutators never re-mask an already-masked row)
-          GraftParquetIO.readDvPairs(dvNew, conf)
-            .groupBy { case (f, _) => key(f) }
-            .foreach { case (f, pairs) =>
-              cur.find(p => key(p) == f).foreach { orig => // live files only
-                out += GraftSlice(orig, 0L,
-                  sizes.getOrElse(f, Long.MaxValue),
-                  pairs.map(_._2).distinct.sorted.toArray,
-                  partVals.getOrElse(f, Seq.empty) ++ consts("delete"),
-                  keepOnly = true)
-              }
-            }
+        // the rows this commit masked: live files' DV rows not masked
+        // at v-1 (sidecars are immutable and accumulate)
+        val prevDv = prev.map(_.dvRows).getOrElse(Map.empty[String, Array[Long]])
+        cur.files.foreach { f =>
+          val masked = prevDv.get(f.key).map(_.toSet).getOrElse(Set.empty[Long])
+          val fresh = f.dvRows.filterNot(masked)
+          if (fresh.nonEmpty)
+            out += GraftSlice(f.path, 0L, length(f), fresh,
+              f.partitionValues ++ consts("delete"), keepOnly = true)
         }
       }
       }
@@ -169,15 +150,14 @@ class GraftCdfScan(root: String, fq: String, out: StructType,
       val vTo = endingVersion.orElse(c.version(fq)).getOrElse(
         throw new IllegalArgumentException(s"graft table not found: $fq"))
       GraftChanges.commitSlices(c, fq, startingVersion.getOrElse(0), vTo,
-          skipChangeCommits,
-          SparkSession.active.sparkContext.hadoopConfiguration)
+          skipChangeCommits)
         .map(s => GraftFilesPartition(Seq(s)): InputPartition).toArray
     }
     override def planInputPartitions(): Array[InputPartition] = parts
     override def createReaderFactory(): PartitionReaderFactory = {
       val c = cat
       val physOf = c.version(fq)
-        .map(v => c.columnMappingAt(fq, v).physicalOf).getOrElse(Map.empty)
+        .map(c.snapshot(fq, _).columnMapping.physicalOf).getOrElse(Map.empty)
       new GraftReaderFactory(out, -1, Array.empty,
         columnar = true, GraftSource.shippedConf(), physOf)
     }
@@ -230,8 +210,7 @@ class GraftCdfMicroBatchStream(root: String, fq: String, out: StructType,
     val vs = start.asInstanceOf[GraftOffset].v
     val ve = end.asInstanceOf[GraftOffset].v
     if (ve <= vs) return Array.empty
-    GraftChanges.commitSlices(cat, fq, vs + 1, ve, skipChangeCommits,
-        SparkSession.active.sparkContext.hadoopConfiguration)
+    GraftChanges.commitSlices(cat, fq, vs + 1, ve, skipChangeCommits)
       .map(s => GraftFilesPartition(Seq(s)): InputPartition).toArray
   }
 
@@ -240,7 +219,7 @@ class GraftCdfMicroBatchStream(root: String, fq: String, out: StructType,
     // main graft stream (keepOnly masks work in both readers)
     val c = cat
     val physOf = c.version(fq)
-      .map(v => c.columnMappingAt(fq, v).physicalOf).getOrElse(Map.empty)
+      .map(c.snapshot(fq, _).columnMapping.physicalOf).getOrElse(Map.empty)
     new GraftReaderFactory(out, -1, Array.empty,
       columnar = false, GraftSource.shippedConf(), physOf)
   }

@@ -74,9 +74,9 @@ class GraftDeltaBatchWrite(root: String, fq: String, rowSchema: StructType,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     // column mapping: the replacement-row files carry PHYSICAL names
     // (rows are positional; renaming the schema is the translation)
-    val cat = new TableCatalog(SparkSession.active, root)
-    val physicalOf = scanVersion
-      .map(v => cat.columnMappingAt(fq, v).physicalOf).getOrElse(Map.empty)
+    val snap = scanVersion.map(
+      new TableCatalog(SparkSession.active, root).snapshot(fq, _))
+    val physicalOf = snap.map(_.columnMapping.physicalOf).getOrElse(Map.empty)
     val physSchema =
       if (physicalOf.isEmpty) rowSchema
       else StructType(rowSchema.fields.map(f =>
@@ -85,9 +85,8 @@ class GraftDeltaBatchWrite(root: String, fq: String, rowSchema: StructType,
     // MERGE inserts) — same per-row predicate as every other write
     // path; delete addresses carry no data to check, and a DELETE's
     // row schema is empty
-    val enforcer = scanVersion.filter(_ => rowSchema.nonEmpty)
-      .flatMap(v => GraftConstraintEnforcer
-        .compile(SparkSession.active, cat, fq, v, rowSchema))
+    val enforcer = snap.filter(_ => rowSchema.nonEmpty)
+      .flatMap(GraftConstraintEnforcer.compile(SparkSession.active, _, rowSchema))
     new GraftDeltaWriterFactory(stagingDir, physSchema,
       GraftSource.shippedConf(), enforcer)
   }

@@ -10,8 +10,8 @@ import graft.catalog.TableCatalog
 
 /** Hive-partition support for the DSv2 connector: raw `col=value`
   * path strings become typed Catalyst constants (matching Spark's
-  * partition-discovery inference, which [[TableCatalog
-  * .partitionedSchemaAt]] supplies), and pushed filters on partition
+  * partition-discovery inference, which [[graft.catalog.Snapshot
+  * .physicalSchema]] supplies), and pushed filters on partition
   * columns prune whole FILES at planning time — exact values, not
   * stats, so `WHERE day = X` over a day-partitioned 100 TB table
   * schedules only that day's files through plain `format("graft")`

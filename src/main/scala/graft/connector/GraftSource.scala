@@ -5,7 +5,6 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -19,7 +18,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.sources.DataSourceRegister
 
-import graft.catalog.TableCatalog
+import graft.catalog.{DataFile, Snapshot, TableCatalog}
 
 /** DataSource V2 connector for the graft [[TableCatalog]]:
   * `spark.read.format("graft").option("root", r).option("table", fq)`.
@@ -85,16 +84,15 @@ class GraftSource extends TableProvider with DataSourceRegister {
     // empty schema; the write path uses LogicalWriteInfo.schema and
     // the read path rejects absent tables anyway
     val root = options.get("root"); val fq = options.get("table")
-    if (root != null && fq != null &&
-        new TableCatalog(spark, root).version(fq).isEmpty &&
-        options.get("version") == null)
+    if (root != null && fq != null && options.get("version") == null &&
+        new TableCatalog(spark, root).version(fq).isEmpty)
       return new StructType()
     val (r, f, v) = resolve(options)
-    // per-version footer union — evolved chains expose every column,
+    // the snapshot's chain schema: evolved chains expose every column,
     // conflicting chains fail loudly (not schema-of-arbitrary-file);
     // hive-partitioned versions recover path-encoded columns via
     // partition discovery
-    val base = GraftSource.chainSchema(spark, new TableCatalog(spark, r), f, v)
+    val base = new TableCatalog(spark, r).snapshot(f, v).schema
     // change-data-feed reads append the change metadata columns
     if (Option(options.get("readChangeFeed")).exists(_.toBoolean))
       GraftChanges.cdfSchema(base)
@@ -140,8 +138,8 @@ class GraftTable(schema: StructType, options: Map[String, String])
       val cat = new graft.catalog.TableCatalog(
         org.apache.spark.sql.SparkSession.active, opt("root").get)
       val fq = opt("table").get
-      cat.version(fq).toArray.flatMap { v =>
-        cat.constraintsAt(fq, v).filter(_.kind == "check").map { c =>
+      opt("version").map(_.toInt).orElse(cat.version(fq)).toArray.flatMap { v =>
+        cat.snapshot(fq, v).constraints.filter(_.kind == "check").map { c =>
           org.apache.spark.sql.connector.catalog.constraints.Constraint
             .check(c.name).predicateSql(c.arg)
             .enforced(true)
@@ -273,9 +271,15 @@ class GraftScanBuilder(tableSchema: StructType, root: String, fq: String,
   private var limit: Int = -1
   private var aggResult: Option[(StructType, Array[Any])] = None
 
-  private def cat = new TableCatalog(SparkSession.active, root)
-  private def liveVersion: Int = versionOpt.orElse(cat.version(fq)).getOrElse(
-    throw new IllegalArgumentException(s"graft table not found: $fq"))
+  /** The ONE version this scan plans and reads, resolved at the first
+    * planning call and shared with the built [[GraftScan]]: an
+    * unpinned scan must not take its file list from one version and
+    * its DVs or sizes from a later one. */
+  private lazy val snap: Snapshot = {
+    val cat = new TableCatalog(SparkSession.active, root)
+    cat.snapshot(fq, versionOpt.orElse(cat.version(fq)).getOrElse(
+      throw new IllegalArgumentException(s"graft table not found: $fq")))
+  }
 
   // ---- filters: everything stays residual; the skippable subset is
   //      recorded for planning-time file elimination ----
@@ -360,23 +364,17 @@ class GraftScanBuilder(tableSchema: StructType, root: String, fq: String,
     * hazard is enough to fall back to a real scan). */
   private def computeAgg(agg: Aggregation): Option[(StructType, Array[Any])] = {
     if (agg.groupByExpressions().nonEmpty) return None
-    val c = cat; val v = liveVersion
-    if (c.dvFilePathsAt(fq, v).nonEmpty) return None
-    val files = c.dataFilePathsAt(fq, v)
-    if (files.isEmpty) return None
-    val stats = c.statsByPath(fq, v)
-    def fileStats(p: String) = stats.get(new Path(p).toUri.getPath)
-    if (files.exists(p => fileStats(p).isEmpty)) return None
-    val partCols =
-      if (c.isPartitionedAt(fq, v)) c.partitionColumnsAt(fq, v) else Nil
-    lazy val filePartVals = c.filePartitionValuesAt(fq, v)
+    if (snap.dvFiles.nonEmpty) return None
+    val files = snap.files
+    if (files.isEmpty || files.exists(_.rows.isEmpty)) return None
+    val partCols = snap.partitionColumns
     /** MIN/MAX of a partition column from path strings — answerable
       * only when EVERY file path-encodes it (mixed evolved chains
       * fall back to a real scan). Null partitions drop out (SQL MIN/
       * MAX ignore nulls); all-null → null. */
     def partExtreme(name: String, dt: DataType, wantMin: Boolean)
         : Option[Any] = {
-      val per = filePartVals.map(_._2.toMap.get(name))
+      val per = files.map(_.partitionValues.toMap.get(name))
       if (per.exists(_.isEmpty)) return None // some file lacks the col
       val raws = per.flatten.flatten
       if (raws.isEmpty) return Some(null) // only null partitions
@@ -384,10 +382,10 @@ class GraftScanBuilder(tableSchema: StructType, root: String, fq: String,
     }
 
     // `_STATS` key by PHYSICAL column name (column mapping)
-    val physOf = c.columnMappingAt(fq, v).physicalOf
+    val physOf = snap.columnMapping.physicalOf
     def colBounds(name: String): Option[(BigDecimal, BigDecimal)] = {
       val phys = physOf.getOrElse(name, name)
-      val per = files.map(p => fileStats(p).get.get(phys))
+      val per = files.map(_.stats.get(phys))
       if (per.exists(_.isEmpty)) None
       else Some((per.flatten.map(_._1).min, per.flatten.map(_._2).max))
     }
@@ -412,10 +410,8 @@ class GraftScanBuilder(tableSchema: StructType, root: String, fq: String,
     val values = scala.collection.mutable.ArrayBuffer.empty[Any]
     agg.aggregateExpressions().foreach {
       case _: CountStar =>
-        val rows = files.map(p => fileStats(p).get.get("__rows"))
-        if (rows.exists(_.isEmpty)) return None
         fields += StructField("COUNT(*)", LongType, nullable = false)
-        values += rows.flatten.map(_._1.toLong).sum
+        values += files.flatMap(_.rows).sum
       case m: Min =>
         val name = refName(m.column).getOrElse(return None)
         val dt = colType(name).getOrElse(return None)
@@ -448,7 +444,7 @@ class GraftScanBuilder(tableSchema: StructType, root: String, fq: String,
   }
 
   override def build(): Scan =
-    new GraftScan(root, fq, versionOpt, tableSchema, required, skipFilters,
+    new GraftScan(root, fq, snap, tableSchema, required, skipFilters,
       limit, aggResult, columnarEnabled, skipChangeCommits,
       maxFilesPerTrigger, maxBytesPerTrigger)
 }
@@ -463,7 +459,7 @@ class GraftScanBuilder(tableSchema: StructType, root: String, fq: String,
   * same stats/bloom elimination then drops whole files before any
   * task launches — a dimension predicate prunes the 100 TB fact scan
   * even though the fact table isn't hive-partitioned. */
-class GraftScan(root: String, fq: String, versionOpt: Option[Int],
+class GraftScan(root: String, fq: String, snapshot: => Snapshot,
     tableSchema: StructType, required: StructType,
     skipFilters: Array[Filter], limit: Int,
     aggResult: Option[(StructType, Array[Any])],
@@ -480,14 +476,9 @@ class GraftScan(root: String, fq: String, versionOpt: Option[Int],
     * sort-merge-joins tables it should broadcast. The estimate is what
     * turns a small graft dim table into an automatic broadcast side. */
   override def estimateStatistics(): Statistics = {
-    val c = cat; val v = liveVersion
-    val files = surviving(c, v).map(_._1)
-    val sizes = c.fileSizesAt(fq, v)
-    val stats = c.statsByPath(fq, v)
-    def key(p: String) = new Path(p).toUri.getPath
-    val bytes = files.map(p => sizes.getOrElse(key(p), 0L)).sum
-    val rowsPerFile = files.map(p =>
-      stats.get(key(p)).flatMap(_.get("__rows")).map(_._1.toLong))
+    val files = surviving
+    val bytes = files.map(_.bytes).sum
+    val rowsPerFile = files.map(_.rows)
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(math.max(bytes, 1L))
@@ -531,93 +522,80 @@ class GraftScan(root: String, fq: String, versionOpt: Option[Int],
       .forall(_.toBoolean) &&
       spark.conf.getOption("spark.graft.preserveDataGrouping")
         .exists(_.toBoolean)
-    if (!enabled || aggResult.isDefined) None
+    if (!enabled || aggResult.isDefined || !snap.isPartitioned) None
     else {
-      val c = cat; val v = liveVersion
-      if (!c.isPartitionedAt(fq, v)) None
+      val pcols = snap.partitionColumns
+      // bucket(n, col) layout: the key is the synthetic bucket id
+      // (int), reported as a bucket TRANSFORM the SQL catalog's V2
+      // `bucket` function resolves — SPJ at any key cardinality.
+      // Composite layouts (identity partitions + bucket) key on
+      // (identity values…, bucket id) in layout order.
+      val bucketSpec = snap.bucketSpec.filter { case (bc, _) =>
+        snap.isBucketed && tableSchema.fieldNames.contains(bc) }
+      val types: Seq[Option[org.apache.spark.sql.types.DataType]] =
+        pcols.map { pc =>
+          if (pc == TableCatalog.BucketCol)
+            if (bucketSpec.isDefined)
+              Some(org.apache.spark.sql.types.IntegerType)
+            else None // bucket layout with an unresolvable spec: no SPJ
+          else tableSchema.fields.find(_.name == pc).map(_.dataType)
+        }
+      val surv = surviving
+      val fullyEncoded = surv.nonEmpty && surv.forall { f =>
+        val m = f.partitionValues.toMap; pcols.forall(m.contains)
+      }
+      if (!fullyEncoded || types.exists(_.isEmpty)) None
       else {
-        val pcols = c.partitionColumnsAt(fq, v)
-        // bucket(n, col) layout: the key is the synthetic bucket id
-        // (int), reported as a bucket TRANSFORM the SQL catalog's V2
-        // `bucket` function resolves — SPJ at any key cardinality.
-        // Composite layouts (identity partitions + bucket) key on
-        // (identity values…, bucket id) in layout order.
-        val bucketSpec =
-          if (pcols.lastOption.contains(c.BucketCol))
-            c.bucketSpecAt(fq, v)
-              .filter { case (bc, _) => tableSchema.fieldNames.contains(bc) }
-          else None
-        val types: Seq[Option[org.apache.spark.sql.types.DataType]] =
-          pcols.map { pc =>
-            if (pc == c.BucketCol)
-              if (bucketSpec.isDefined)
-                Some(org.apache.spark.sql.types.IntegerType)
-              else None // bucket layout with an unresolvable spec: no SPJ
-            else tableSchema.fields.find(_.name == pc).map(_.dataType)
-          }
-        val surv = surviving(c, v)
-        val fullyEncoded = surv.nonEmpty && surv.forall { case (_, pvs) =>
-          val m = pvs.toMap; pcols.forall(m.contains)
+        val groups = surv.groupBy { f =>
+          val m = f.partitionValues.toMap; pcols.map(m(_))
         }
-        if (!fullyEncoded || types.exists(_.isEmpty)) None
-        else {
-          val dvs = dvByFile(c, v)
-          val sizes = c.fileSizesAt(fq, v)
-          def key(p: String) = new Path(p).toUri.getPath
-          val groups = surv.groupBy { case (_, pvs) =>
-            val m = pvs.toMap; pcols.map(m(_))
-          }
-          val partiallyClustered = spark.conf.getOption(
-            "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled")
-            .exists(_.toBoolean)
-          // hot-key chunk target from the GLOBAL byte model (per-key
-          // totals would over-split small keys)
-          val (maxPB, openCost, par) = GraftSource.sliceKnobs()
-          val totalBytes = surv.map { case (p, _) =>
-            sizes.getOrElse(key(p), 0L) + openCost }.sum
-          val maxSplit = math.min(maxPB,
-            math.max(openCost, totalBytes / math.max(1, par)))
-          val parts = groups.toSeq.sortBy(_._1.toString)
-            .flatMap { case (rawKey, files) =>
-              val keyRow = new GenericInternalRow(
-                rawKey.zip(types.map(_.get)).map {
-                  case (raw, dt) => GraftPartitions.castValue(raw, dt)
-                }.toArray[Any])
-              val inputs = files.map { case (p, pvs) =>
-                GraftSlicePlanner.FileInput(p, sizes.getOrElse(key(p), 0L),
-                  dvs.getOrElse(key(p), Array.empty[Long]), pvs)
+        val partiallyClustered = spark.conf.getOption(
+          "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled")
+          .exists(_.toBoolean)
+        // hot-key chunk target from the GLOBAL byte model (per-key
+        // totals would over-split small keys)
+        val (maxPB, openCost, par) = GraftSource.sliceKnobs()
+        val totalBytes = surv.map(_.bytes + openCost).sum
+        val maxSplit = math.min(maxPB,
+          math.max(openCost, totalBytes / math.max(1, par)))
+        val parts = groups.toSeq.sortBy(_._1.toString)
+          .flatMap { case (rawKey, files) =>
+            val keyRow = new GenericInternalRow(
+              rawKey.zip(types.map(_.get)).map {
+                case (raw, dt) => GraftPartitions.castValue(raw, dt)
+              }.toArray[Any])
+            val inputs = files.map(f => GraftSlicePlanner.FileInput(
+              f.path, f.bytes, f.dvRows, f.partitionValues))
+            if (!partiallyClustered)
+              Seq(GraftKeyedPartition(inputs.map(f =>
+                GraftSlice(f.path, 0L,
+                  if (f.bytes <= 0L) Long.MaxValue else f.bytes,
+                  f.dvRows, f.partValues)),
+                keyRow): InputPartition)
+            else GraftSlicePlanner.plan(inputs,
+                maxPartitionBytes = maxSplit, openCostInBytes = openCost,
+                // row-id (_gfile/_gpos) scans must never byte-split:
+                // the reader synthesizes SLICE-relative row indexes,
+                // and a sub-range would corrupt the DV address space
+                // a row-level operation commits against
+                minPartitions = 1, splitAllowed =
+                  !required.fieldNames.exists(n =>
+                    n == GraftSource.RowIdFile || n == GraftSource.RowIdPos))
+              .map { case p: GraftFilesPartition =>
+                GraftKeyedPartition(p.slices, keyRow): InputPartition
               }
-              if (!partiallyClustered)
-                Seq(GraftKeyedPartition(inputs.map(f =>
-                  GraftSlice(f.path, 0L,
-                    if (f.bytes <= 0L) Long.MaxValue else f.bytes,
-                    f.dvRows, f.partValues)),
-                  keyRow): InputPartition)
-              else GraftSlicePlanner.plan(inputs,
-                  maxPartitionBytes = maxSplit, openCostInBytes = openCost,
-                  // row-id (_gfile/_gpos) scans must never byte-split:
-                  // the reader synthesizes SLICE-relative row indexes,
-                  // and a sub-range would corrupt the DV address space
-                  // a row-level operation commits against
-                  minPartitions = 1, splitAllowed =
-                    !required.fieldNames.exists(n =>
-                      n == GraftSource.RowIdFile || n == GraftSource.RowIdPos))
-                .map { case p: GraftFilesPartition =>
-                  GraftKeyedPartition(p.slices, keyRow): InputPartition
-                }
-            }
-          val transforms: Array[Expression] = pcols.map { pc =>
-            bucketSpec match {
-              case Some((bc, n)) if pc == c.BucketCol =>
-                org.apache.spark.sql.connector.expressions
-                  .Expressions.bucket(n, bc): Expression
-              case _ =>
-                org.apache.spark.sql.connector.expressions
-                  .Expressions.identity(pc): Expression
-            }
-          }.toArray
-          Some((transforms, parts.toArray))
-        }
+          }
+        val transforms: Array[Expression] = pcols.map { pc =>
+          bucketSpec match {
+            case Some((bc, n)) if pc == TableCatalog.BucketCol =>
+              org.apache.spark.sql.connector.expressions
+                .Expressions.bucket(n, bc): Expression
+            case _ =>
+              org.apache.spark.sql.connector.expressions
+                .Expressions.identity(pc): Expression
+          }
+        }.toArray
+        Some((transforms, parts.toArray))
       }
     }
   }
@@ -655,105 +633,23 @@ class GraftScan(root: String, fq: String, versionOpt: Option[Int],
     s"graft $fq, SkipFilters: [${skipFilters.mkString(", ")}]$agg"
   }
 
-  private def cat = new TableCatalog(SparkSession.active, root)
-  private def liveVersion: Int = versionOpt.orElse(cat.version(fq)).getOrElse(
-    throw new IllegalArgumentException(s"graft table not found: $fq"))
+  /** The version this scan plans and reads — resolved once (see
+    * [[GraftScanBuilder]]). */
+  private lazy val snap: Snapshot = snapshot
 
   /** Column mapping of the scanned version: pushed filters and the
     * readers' requested schemas translate logical→physical through
     * this (sidecars and parquet footers know only physical names). */
-  private lazy val physOf: Map[String, String] =
-    cat.columnMappingAt(fq, liveVersion).physicalOf
+  private lazy val physOf: Map[String, String] = snap.columnMapping.physicalOf
 
-  /** Files (with their path-encoded partition values) surviving BOTH
-    * exact partition-value pruning and stats/bloom elimination, under
-    * the conjunction of compile-time skip filters AND runtime
-    * (join-pushed) filters (missing sidecar ⇒ keep — advisory).
-    *
-    * Memoized per runtime-filter state: one planned scan asks for its
-    * surviving set up to three times (estimateStatistics, the SPJ
-    * plan, toBatch), each a full chain listing + sidecar pass — the
-    * inputs only change when Spark delivers runtime filters, which
-    * replaces the `runtimeFilters` array wholesale, so the array
-    * reference is the cache key. */
-  @volatile private var survCache
-      : (Array[Filter], Seq[(String, Seq[(String, Option[String])])]) = null
-  private def surviving(c: TableCatalog, v: Int)
-      : Seq[(String, Seq[(String, Option[String])])] = {
-    val rf = runtimeFilters
-    val cached = survCache
-    if (cached != null && (cached._1 eq rf)) return cached._2
-    val r = survivingCompute(c, v)
-    survCache = (rf, r)
-    r
-  }
+  /** Compile-time skip filters AND runtime (join-pushed) filters, on
+    * PHYSICAL names. */
+  private def activeFilters: Seq[Filter] =
+    (skipFilters ++ runtimeFilters).toSeq.map(FilterColumns.mapAttrs(_, physOf))
 
-  private def survivingCompute(c: TableCatalog, v: Int)
-      : Seq[(String, Seq[(String, Option[String])])] = {
-    val all0: Seq[(String, Seq[(String, Option[String])])] =
-      if (c.isPartitionedAt(fq, v)) c.filePartitionValuesAt(fq, v)
-      else c.dataFilePathsAt(fq, v)
-        .map(_ -> Seq.empty[(String, Option[String])])
-    // KNOWN-zero-row files (truncate / CREATE schema markers, empty
-    // commits) plan no task — and, sitting at the version ROOT with no
-    // partition path, would otherwise poison the fully-encoded check
-    // that gates storage-partitioned joins on the whole scan
-    val zstats = c.statsByPath(fq, v)
-    val all = all0.filter { case (p, _) =>
-      !zstats.get(new Path(p).toUri.getPath)
-        .flatMap(_.get("__rows")).map(_._1.toLong).contains(0L)
-    }
-    val active = (skipFilters ++ runtimeFilters).toSeq
-      .map(FilterColumns.mapAttrs(_, physOf))
-    val afterPart =
-      if (active.isEmpty) all
-      else all.filter { case (_, pvs) =>
-        pvs.isEmpty || {
-          val pv = pvs.toMap
-          active.forall(f => GraftPartitions.mayMatch(pv, tableSchema, f))
-        }
-      }
-    // BUCKET pruning: a point predicate on the bucket SOURCE column
-    // maps to the one hive dir that can hold it — a key lookup on a
-    // bucket(n, k) table opens 1/n of the files before stats even run
-    val afterBucket = {
-      val spec =
-        if (afterPart.nonEmpty && c.isPartitionedAt(fq, v) &&
-            c.partitionColumnsAt(fq, v).lastOption.contains(c.BucketCol))
-          c.bucketSpecAt(fq, v)
-        else None
-      spec.flatMap { case (bc, n) =>
-        val dt = tableSchema.fields.find(_.name == bc).map(_.dataType)
-        dt.flatMap { t =>
-          val idSets = active.collect {
-            case EqualTo(a, value) if a == bc =>
-              Set(GraftBucketFunction.bucketIdOf(value, t, n))
-            case EqualNullSafe(a, value) if a == bc =>
-              Set(GraftBucketFunction.bucketIdOf(value, t, n))
-            case In(a, values) if a == bc =>
-              values.map(GraftBucketFunction.bucketIdOf(_, t, n)).toSet
-          }
-          if (idSets.isEmpty) None
-          else Some(idSets.reduce(_ intersect _))
-        }
-      } match {
-        case Some(ids) => afterPart.filter { case (_, pvs) =>
-          pvs.toMap.get(c.BucketCol).flatten.forall(s => ids(s.toInt))
-        }
-        case None => afterPart
-      }
-    }
-    val kept = FileSkipping
-      .surviving(c, fq, v, afterBucket.map(_._1), active).toSet
-    afterBucket.filter(fp => kept(fp._1))
-  }
-
-  /** DV row indexes per surviving file, loaded driver-side (sidecars
-    * are deletes-sized — the Delta "DVs ride the commit log" cost);
-    * parsed once per immutable sidecar via the catalog's status-keyed
-    * cache. */
-  private def dvByFile(c: TableCatalog, v: Int): Map[String, Array[Long]] =
-    c.dvPairsByFile(fq, v)
+  /** Files surviving [[FileSkipping.prune]] under the current filters
+    * (missing sidecar ⇒ keep — advisory). */
+  private def surviving: Seq[DataFile] = FileSkipping.prune(snap, activeFilters)
 
   override def toBatch: Batch = new Batch {
     // planned at invocation time, not scan-build time: runtime filters
@@ -767,30 +663,19 @@ class GraftScan(root: String, fq: String, versionOpt: Option[Int],
       aggResult match {
         case Some((_, values)) => Array(GraftAggPartition(values))
         case None => spjPlan.map(_._2).getOrElse {
-          val c = cat; val v = liveVersion
-          val dvs = dvByFile(c, v)
-          val sizes = c.fileSizesAt(fq, v)
-          def key(p: String) = new Path(p).toUri.getPath
-          val surv = surviving(c, v)
+          val surv = surviving
           // ROW-GROUP pruning: pushed range/point predicates against
           // the per-group `g:`/`gs:` bounds drop non-matching byte
           // windows INSIDE multi-group files — a point range over a
           // sorted 10 GB file schedules one row group, not 80 splits.
           // Row-id scans skip this (sub-ranges renumber `_gpos`), as
           // do DV'd files (the planner falls back to whole-file).
-          val active = (skipFilters ++ runtimeFilters).toSeq
-            .map(FilterColumns.mapAttrs(_, physOf))
           val rgRanges: Map[String, Seq[(Long, Long)]] =
-            if (metaRequested || active.isEmpty) Map.empty
-            else FileSkipping.rowGroupRanges(c, fq, v,
-              surv.collect { case (p, _)
-                if dvs.getOrElse(key(p), Array.empty[Long]).isEmpty => p },
-              active)
-          val inputs = surv.map { case (p, pvs) =>
-            GraftSlicePlanner.FileInput(p, sizes.getOrElse(key(p), 0L),
-              dvs.getOrElse(key(p), Array.empty[Long]), pvs,
-              ranges = rgRanges.get(key(p)))
-          }
+            if (metaRequested) Map.empty
+            else FileSkipping.rowGroupRanges(surv.filter(_.dvRows.isEmpty),
+              activeFilters)
+          val inputs = surv.map(f => GraftSlicePlanner.FileInput(f.path,
+            f.bytes, f.dvRows, f.partitionValues, ranges = rgRanges.get(f.key)))
           // Spark's own split-size model: task count tracks bytes, not
           // file count (bigs split at row-group seams, smalls coalesce).
           // `_gpos` scans never byte-split: the synthesized row index
@@ -807,8 +692,7 @@ class GraftScan(root: String, fq: String, versionOpt: Option[Int],
       // survivor map (MaskedColumnVector) instead of dropping the
       // whole scan to the boxed row reader.
       val columnar = columnarEnabled && aggResult.isEmpty && !metaRequested
-      new GraftReaderFactory(out, limit,
-        (skipFilters ++ runtimeFilters).map(FilterColumns.mapAttrs(_, physOf)),
+      new GraftReaderFactory(out, limit, activeFilters.toArray,
         columnar, GraftSource.shippedConf(), physOf)
     }
   }
@@ -1017,96 +901,6 @@ object GraftSource {
       bytesConf("spark.sql.files.openCostInBytes", 4L << 20),
       spark.sparkContext.defaultParallelism)
   }
-
-  /** Table schema for a connector read: ONE representative footer per
-    * owning version directory (files of one commit share a schema —
-    * they come out of a single writing job), UNIONED across the chain.
-    * A table grown via `appendEvolving` thus exposes every column
-    * (files lacking one read it as null, matching
-    * `TableCatalog.readMergedSchema`), and a same-name TYPE conflict
-    * fails loudly at planning time instead of erroring mid-scan or
-    * silently omitting columns newer than an arbitrary first file.
-    * Cost: O(chain versions) footer reads, driver-side. */
-  /** PHYSICAL schema of a version's chain: the footer union (one
-    * representative footer per owning version dir) plus declared
-    * (ALTER ADD) columns under their PHYSICAL names — before any
-    * column-mapping rename/drop is applied. */
-  private[graft] def physicalChainSchema(spark: SparkSession,
-      cat: graft.catalog.TableCatalog, fq: String, v: Int): StructType =
-    if (cat.isPartitionedAt(fq, v)) cat.partitionedSchemaAt(fq, v)
-    else {
-      val files = cat.dataFilePathsAt(fq, v)
-      require(files.nonEmpty, s"graft table $fq v$v has no data files")
-      val vdir = "(.*/v_\\d{6})/".r
-      def owner(p: String): String =
-        vdir.findFirstMatchIn(p).map(_.group(1))
-          .getOrElse(new Path(p).getParent.toString)
-      val reps = files.groupBy(owner).toSeq.sortBy(_._1).map(_._2.min)
-      reps.map(p => cat.footerSchemaOf(p)).reduce { (a, b) =>
-        val merged = scala.collection.mutable.ArrayBuffer(a.fields: _*)
-        b.fields.foreach { f =>
-          merged.indexWhere(_.name == f.name) match {
-            case i if i >= 0 =>
-              val e = merged(i)
-              if (e.dataType != f.dataType)
-                // SAFE WIDENING across the chain (int→long,
-                // float→double — a type-widened append): resolve to
-                // the widest; the parquet readers promote the narrow
-                // files' values at decode time. Anything else is a
-                // real conflict.
-                graft.catalog.TableCatalog
-                  .widerOf(e.dataType, f.dataType) match {
-                  case Some(w) => merged(i) = e.copy(dataType = w)
-                  case None => throw new IllegalStateException(
-                    s"graft table $fq: column ${f.name} has conflicting " +
-                      s"types across the chain (${e.dataType.simpleString} " +
-                      s"vs ${f.dataType.simpleString}) — compact the table " +
-                      "first")
-                }
-            case _ => merged += f
-          }
-        }
-        StructType(merged.toSeq)
-      }
-    }
-
-  private[graft] def chainSchema(spark: SparkSession,
-      cat: graft.catalog.TableCatalog, fq: String, v: Int): StructType = {
-    val base = physicalChainSchema(spark, cat, fq, v)
-    val mapping = cat.columnMappingAt(fq, v)
-    // DECLARED extension columns (ALTER TABLE ADD COLUMNS): merged by
-    // PHYSICAL name after the footer union; files predating the
-    // declaration read them as null. A data file later carrying the
-    // physical name with a DIFFERENT type fails loudly here, like any
-    // footer conflict.
-    val declared = mapping.adds.foldLeft(base) { case (acc, (phys, f)) =>
-      acc.fields.indexWhere(_.name.equalsIgnoreCase(phys)) match {
-        case i if i >= 0 =>
-          val e = acc.fields(i)
-          if (e.dataType == f.dataType) acc
-          else graft.catalog.TableCatalog
-            .widerOf(e.dataType, f.dataType) match {
-            case Some(w) => // type-widened appends of a declared column
-              StructType(acc.fields.updated(i, e.copy(dataType = w)))
-            case None => throw new IllegalStateException(
-              s"graft table $fq: declared column ${f.name} " +
-                s"(${f.dataType.simpleString}) conflicts with data files' " +
-                s"${e.dataType.simpleString} — drop or compact first")
-          }
-        case _ => StructType(acc.fields :+
-          StructField(phys, f.dataType, nullable = true))
-      }
-    }
-    // COLUMN MAPPING: dropped physicals leave the logical schema,
-    // renamed physicals surface under their logical names
-    val logical = StructType(declared.fields
-      .filterNot(f => mapping.dropped.contains(f.name))
-      .map(f => mapping.logicalOf.get(f.name)
-        .map(l => f.copy(name = l)).getOrElse(f)))
-    // the synthetic bucket-routing column is a LAYOUT detail, never a
-    // logical column
-    StructType(logical.fields.filterNot(_.name == cat.BucketCol))
-  }
 }
 
 /** Offset = committed manifest version. */
@@ -1181,38 +975,31 @@ class GraftMicroBatchStream(root: String, fq: String, required: StructType,
         legs.exists(_.isInstanceOf[ReadAllAvailable]))
       return GraftOffset(goal)
     val c = cat
-    def key(p: String) = new Path(p).toUri.getPath
     // per-commit file ADDS, walked (startV, goal]; a commit whose
     // predecessor was pruned (or the initial -1 snapshot) counts its
-    // whole visible file set. Metadata-only: paths + one getFileStatus
-    // per NEW file when a byte cap is set.
+    // whole visible file set. Metadata-only: the snapshots' file lists
+    // and sizes.
     var admitted = startV
     var files = 0L
     var bytes = 0L
     var prevSet: Set[String] =
       if (startV < 0 || !c.versionRetained(fq, startV)) Set.empty
-      else c.dataFilePathsAt(fq, startV).map(key).toSet
+      else c.snapshot(fq, startV).byKey.keySet
     var v = startV + 1
     var stop = false
     while (v <= goal && !stop) {
       if (c.versionRetained(fq, v)) {
-        val cur = c.dataFilePathsAt(fq, v)
-        val adds = cur.filterNot(p => prevSet(key(p)))
+        val cur = c.snapshot(fq, v)
+        val adds = cur.files.filterNot(f => prevSet(f.key))
         files += adds.size
-        if (byteCap.isDefined) bytes += adds.map { p =>
-          val hp = new Path(p)
-          try hp.getFileSystem(
-            SparkSession.active.sparkContext.hadoopConfiguration)
-            .getFileStatus(hp).getLen
-          catch { case _: java.io.IOException => 0L }
-        }.sum
+        if (byteCap.isDefined) bytes += adds.map(_.bytes).sum
         val over = fileCap.exists(files > _) || byteCap.exists(bytes > _)
         if (over) {
           // always admit at least ONE commit (progress guarantee);
           // version granularity: an oversized single commit ships whole
           if (admitted == startV) admitted = v
           stop = true
-        } else { admitted = v; prevSet = cur.map(key).toSet }
+        } else { admitted = v; prevSet = cur.byKey.keySet }
       } else { admitted = v } // pruned dir: nothing to size or deliver
       v += 1
     }
@@ -1235,10 +1022,9 @@ class GraftMicroBatchStream(root: String, fq: String, required: StructType,
     val ve = end.asInstanceOf[GraftOffset].v
     if (ve < 0 || ve == vs) return Array.empty
     val c = cat
-    val endFiles = c.dataFilePathsAt(fq, ve)
-    def key(p: String) = new Path(p).toUri.getPath
-    val newFiles =
-      if (vs < 0) endFiles
+    val last = c.snapshot(fq, ve)
+    val newFiles: Seq[DataFile] =
+      if (vs < 0) last.files
       else if (skipChangeCommits) {
         // Delta's skipChangeCommits: walk the commits (vs, ve] one by
         // one, deliver the file adds of PURE APPENDS, silently skip
@@ -1249,66 +1035,50 @@ class GraftMicroBatchStream(root: String, fq: String, required: StructType,
         // nor retracted. A commit whose predecessor dir was already
         // pruned cannot be diffed and counts as a change commit (its
         // surviving appends would still be referenced and retained).
-        val adds = Seq.newBuilder[String]
+        val adds = Set.newBuilder[String]
         var v = vs + 1
         while (v <= ve) {
           if (c.versionRetained(fq, v) && c.versionRetained(fq, v - 1)) {
-            val prev = c.dataFilePathsAt(fq, v - 1)
-            val cur = c.dataFilePathsAt(fq, v)
-            val prevSet = prev.map(key).toSet
-            val curSet = cur.map(key).toSet
-            val pureAppend = prevSet.subsetOf(curSet) &&
-              c.dvFilePathsAt(fq, v - 1).map(key).toSet ==
-                c.dvFilePathsAt(fq, v).map(key).toSet
-            if (pureAppend) adds ++= cur.filterNot(p => prevSet(key(p)))
+            val (prev, cur) = (c.snapshot(fq, v - 1), c.snapshot(fq, v))
+            val pureAppend = prev.byKey.keySet.subsetOf(cur.byKey.keySet) &&
+              prev.dvKeys == cur.dvKeys
+            if (pureAppend) adds ++= cur.byKey.keySet -- prev.byKey.keySet
           }
           v += 1
         }
         // deliver only adds still present at ve (a later rewrite may
         // have retired an earlier append's files — those rows changed,
         // so their commit is skipped like any other change)
-        val endSet = endFiles.map(key).toSet
-        adds.result().distinct.filter(p => endSet(key(p)))
+        val added = adds.result()
+        last.files.filter(f => added(f.key))
       } else {
-        val startSet = c.dataFilePathsAt(fq, vs).map(key).toSet
-        val endSet = endFiles.map(key).toSet
-        val removed = startSet -- endSet
+        val start = c.snapshot(fq, vs)
+        val removed = start.byKey.keySet -- last.byKey.keySet
         if (removed.nonEmpty) throw new IllegalStateException(
           s"graft stream over $fq: non-append change removed ${removed.size} " +
             "file(s) (overwrite/compact/vacuum) — restart the stream from a " +
             "fresh checkpoint, or read with skipChangeCommits=true to " +
             "stream appends only")
-        if (c.dvFilePathsAt(fq, vs).map(key).toSet !=
-            c.dvFilePathsAt(fq, ve).map(key).toSet)
+        if (start.dvKeys != last.dvKeys)
           throw new IllegalStateException(
             s"graft stream over $fq: deletion vectors changed mid-stream — " +
               "already-delivered rows cannot be retracted (skipChangeCommits" +
               "=true streams appends only)")
-        endFiles.filterNot(p => startSet(key(p)))
+        last.files.filterNot(f => start.byKey.contains(f.key))
       }
-    // initial snapshot applies current DV masks; later batches carry
-    // none (enforced unchanged above)
-    val dvs: Map[String, Array[Long]] =
-      if (vs >= 0) Map.empty else c.dvPairsByFile(fq, ve)
-    // hive-partitioned tables stream too: each delivered file carries
-    // its path-encoded partition values (the batch readers' contract)
-    val partVals: Map[String, Seq[(String, Option[String])]] =
-      if (!c.isPartitionedAt(fq, ve)) Map.empty
-      else c.filePartitionValuesAt(fq, ve)
-        .map { case (p, pvs) => key(p) -> pvs }.toMap
     // the same stats/bloom elimination the batch scan runs: a filtered
     // stream (readStream.filter ...) never schedules new files whose
     // stats prove them irrelevant. Filters translate logical→physical
-    // (column mapping) before consulting the sidecars.
-    val sizes = c.fileSizesAt(fq, ve)
+    // (column mapping) before consulting the sidecars. The initial
+    // snapshot applies current DV masks; later batches carry none
+    // (enforced unchanged above). Hive-partitioned tables stream too:
+    // each delivered file carries its path-encoded partition values.
     val mapped = skipFilters.toSeq.map(
-      FilterColumns.mapAttrs(_, c.columnMappingAt(fq, ve).physicalOf))
-    val inputs = FileSkipping.surviving(c, fq, ve, newFiles, mapped)
-      .map { p =>
-        GraftSlicePlanner.FileInput(p, sizes.getOrElse(key(p), 0L),
-          dvs.getOrElse(key(p), Array.empty[Long]),
-          partVals.getOrElse(key(p), Seq.empty))
-      }
+      FilterColumns.mapAttrs(_, last.columnMapping.physicalOf))
+    val inputs = FileSkipping.surviving(last, newFiles, mapped).map { f =>
+      GraftSlicePlanner.FileInput(f.path, f.bytes,
+        if (vs >= 0) Array.empty[Long] else f.dvRows, f.partitionValues)
+    }
     // micro-batches size their tasks like the batch scan (bigs split,
     // smalls coalesce) — a catch-up batch over many tiny commit files
     // is not a task per file
@@ -1318,7 +1088,7 @@ class GraftMicroBatchStream(root: String, fq: String, required: StructType,
   override def createReaderFactory(): PartitionReaderFactory = {
     val c = cat
     val physOf = c.version(fq)
-      .map(v => c.columnMappingAt(fq, v).physicalOf).getOrElse(Map.empty)
+      .map(c.snapshot(fq, _).columnMapping.physicalOf).getOrElse(Map.empty)
     new GraftReaderFactory(required, limit,
       skipFilters.map(FilterColumns.mapAttrs(_, physOf)),
       conf = GraftSource.shippedConf(), physOf = physOf)

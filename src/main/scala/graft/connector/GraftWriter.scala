@@ -60,11 +60,10 @@ object GraftConstraintEnforcer {
   /** None when the table carries no constraints. Throws at BUILD time
     * (driver) when a NOT NULL column is absent from the write schema
     * or a CHECK expression does not resolve against it. */
-  def compile(spark: SparkSession, cat: TableCatalog, fq: String, v: Int,
+  def compile(spark: SparkSession, s: graft.catalog.Snapshot,
       schema: StructType): Option[GraftConstraintEnforcer] = {
-    val cs = cat.constraintsAt(fq, v)
+    val (fq, cs, m) = (s.fq, s.constraints, s.columnMapping)
     if (cs.isEmpty) return None
-    val m = cat.columnMappingAt(fq, v)
     val attrs = schema.fields.toSeq.map(f =>
       AttributeReference(f.name, f.dataType, f.nullable)())
     val nn = cs.filter(_.kind == "notnull").map { c =>
@@ -274,24 +273,23 @@ class GraftWriteBuilder(root: String, fq: String, schema: StructType,
       val spark = SparkSession.active
       val cat = new TableCatalog(spark, root)
       cat.version(fq).foreach { v =>
-        enforcer = GraftConstraintEnforcer.compile(spark, cat, fq, v, schema)
+        enforcer = GraftConstraintEnforcer.compile(spark, cat.snapshot(fq, v), schema)
       }
     }
     if (!overwrite) {
       val spark = SparkSession.active
       val cat = new TableCatalog(spark, root)
-      cat.version(fq).foreach { v =>
+      cat.version(fq).map(cat.snapshot(fq, _)).foreach { s =>
         // table constraints enforce per row inside the writers; the
         // compile binds against the incoming LOGICAL schema
-        enforcer = GraftConstraintEnforcer.compile(spark, cat, fq, v, schema)
-        val physicalOf = cat.columnMappingAt(fq, v).physicalOf
+        enforcer = GraftConstraintEnforcer.compile(spark, s, schema)
+        val physicalOf = s.columnMapping.physicalOf
         if (physicalOf.nonEmpty)
           writeSchema = org.apache.spark.sql.types.StructType(
             schema.fields.map(f => physicalOf.get(f.name)
               .map(p => f.copy(name = p)).getOrElse(f)))
-        val files = cat.dataFilePathsAt(fq, v)
-        if (files.nonEmpty) {
-          val existing = GraftSource.chainSchema(spark, cat, fq, v)
+        if (s.files.nonEmpty) {
+          val existing = s.schema
           // name AND type: a same-named column of an INCOMPATIBLE type
           // would commit fine and only explode per-file at read time —
           // reject at the write instead. Types equal-or-widenable pass:

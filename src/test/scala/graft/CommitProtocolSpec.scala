@@ -59,7 +59,7 @@ class CommitProtocolSpec extends SparkTestBase {
         assert(refs.map(bare) == Seq(bare(f"$root/D/S/SQLCKPT/v_${v - 1}%06d")),
           s"v$v: one history reference to v${v - 1}")
         assert(listed.map(bare).sorted ==
-          cat.dataFilePathsAt(t, v - 1).map(bare).sorted,
+          cat.snapshot(t, v - 1).files.map(_.path).map(bare).sorted,
           s"v$v: checkpoint lists v${v - 1}'s resolved files explicitly")
       }
       assert(manifest(5).size == 1 && isRef(manifest(5).head),

@@ -154,8 +154,8 @@ class OrchestrationSpec extends SparkTestBase {
       stage, Some(errDir))
     assert(!ok)
     assert(cat.version(logTable).contains(v0 + 1))
-    val before = cat.dataFilePathsAt(logTable, v0).toSet
-    val after = cat.dataFilePathsAt(logTable, v0 + 1).toSet
+    val before = cat.snapshot(logTable, v0).files.map(_.path).toSet
+    val after = cat.snapshot(logTable, v0 + 1).files.map(_.path).toSet
     assert(before.subsetOf(after) && (after -- before).size == 1)
     val rows = cat.read(logTable).filter(col("PARENT_RUN_ID") === ctx.parentRunId)
       .select("LOG_ID", "STEP_NAME", "STATUS", "ROW_COUNT", "ERROR_MESSAGE", "LOG_TIME")

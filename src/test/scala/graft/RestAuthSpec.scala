@@ -107,7 +107,7 @@ class CatalogPartitionSpec extends SparkTestBase {
 
   private def livePaths(cat: graft.catalog.TableCatalog, t: String,
       v: Int): Set[String] =
-    cat.dataFilePathsAt(t, v).map(p => new java.net.URI(p).getPath).toSet
+    cat.snapshot(t, v).files.map(f => new java.net.URI(f.path).getPath).toSet
 
   test("partitioned updateWhere rewrites only touched partition dirs") {
     val root = tempDir("part")
@@ -160,10 +160,10 @@ class CatalogPartitionSpec extends SparkTestBase {
       Seq(("p1", 1, 1), ("p2", 2, 1), ("p3", 3, 1)).toDF("practice", "id", "IS_NEW"),
       Seq("practice"))
     val v = cat.version(t).get
-    val files = cat.dataFilePathsAt(t, v).map(new org.apache.hadoop.fs.Path(_))
+    val files = cat.snapshot(t, v).files
     assert(files.size == 3)
     def cands(p: org.apache.spark.sql.Column) =
-      cat.candidateFiles(t, v, files, p, cat.columnMappingAt(t, v)).map(_.toString)
+      cat.candidateFiles(cat.snapshot(t, v), p).map(_.path)
     // the updateWhere predicate of "partitioned updateWhere rewrites only
     // touched partition dirs": one candidate, not every file
     val p2 = cands(col("practice") === "p2")

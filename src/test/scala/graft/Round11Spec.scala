@@ -195,20 +195,20 @@ class Round11Spec extends SparkTestBase {
     val vOld = cat.version(t).get
     // count change
     cat.rebucket(t, "k", 4)
-    assert(cat.bucketSpecAt(t, cat.version(t).get).contains(("k", 4)))
+    assert(cat.snapshot(t, cat.version(t).get).bucketSpec.contains(("k", 4)))
     assert(cat.read(t).count() == 401L)
     assert(cat.read(t).agg(sum("k")).collect()(0).getLong(0) ==
       (1L to 401L).sum)
     // the immediately-prior version reads under its OWN (old) spec —
     // a rewrite keeps one back for in-flight readers
     assert(cat.readVersion(t, vOld).count() == 401L)
-    assert(cat.bucketSpecAt(t, vOld).contains(("k", 8)))
+    assert(cat.snapshot(t, vOld).bucketSpec.contains(("k", 8)))
     // appends route under the NEW spec
     cat.appendBucketed(t, Seq((402L, 402L % 17, "v402")).toDF("k", "g", "v"))
     assert(cat.read(t).count() == 402L)
     // key change is a rewrite too
     cat.rebucket(t, "g", 8)
-    assert(cat.bucketSpecAt(t, cat.version(t).get).contains(("g", 8)))
+    assert(cat.snapshot(t, cat.version(t).get).bucketSpec.contains(("g", 8)))
     assert(cat.read(t).count() == 402L)
     // silently evolving a bucketed chain to a plain layout is rejected
     val e = intercept[IllegalArgumentException] {

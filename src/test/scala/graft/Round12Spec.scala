@@ -70,7 +70,7 @@ class Round12Spec extends SparkTestBase {
       cat.alterAddNotNull(t, "em")
       spark.sql("ALTER TABLE gc_r12nn.d.s.nnren RENAME COLUMN em TO email")
       val v0 = cat.version(t).get
-      assert(cat.constraintsAt(t, v0).count(_.kind == "notnull") == 1)
+      assert(cat.snapshot(t, v0).constraints.count(_.kind == "notnull") == 1)
       // re-adding under the NEW name must not stack a second constraint
       val dup = intercept[IllegalArgumentException] {
         cat.alterAddNotNull(t, "email")
@@ -80,7 +80,7 @@ class Round12Spec extends SparkTestBase {
       // DROP under the NEW name must actually remove it…
       spark.sql("ALTER TABLE gc_r12nn.d.s.nnren ALTER COLUMN email DROP NOT NULL")
       val v1 = cat.version(t).get
-      assert(cat.constraintsAt(t, v1).isEmpty,
+      assert(cat.snapshot(t, v1).constraints.isEmpty,
         "post-rename DROP NOT NULL must resolve the nn_em constraint")
       // …so a null insert now passes
       spark.sql("INSERT INTO gc_r12nn.d.s.nnren VALUES (3, NULL)")
@@ -111,7 +111,7 @@ class Round12Spec extends SparkTestBase {
     // a clean overwrite lands AND the constraints survive it
     cat.overwrite(t, Seq((7L, 70.0)).toDF("id", "price"))
     val v = cat.version(t).get
-    assert(cat.constraintsAt(t, v).map(_.kind).sorted == Seq("check", "notnull"),
+    assert(cat.snapshot(t, v).constraints.map(_.kind).sorted == Seq("check", "notnull"),
       "constraints must ride a data-only overwrite")
     // …still enforced on the NEXT append
     intercept[Exception] {
@@ -136,7 +136,7 @@ class Round12Spec extends SparkTestBase {
       }
       // clean INSERT OVERWRITE lands, constraint survives
       spark.sql("INSERT OVERWRITE gc_r12ov.d.s.ov VALUES (3, 30.0)")
-      assert(cat.constraintsAt("d.s.ov", cat.version("d.s.ov").get)
+      assert(cat.snapshot("d.s.ov", cat.version("d.s.ov").get).constraints
         .exists(_.name == "pp"), "INSERT OVERWRITE must keep constraints")
       intercept[Exception] {
         spark.sql("INSERT INTO gc_r12ov.d.s.ov VALUES (4, -1.0)")
@@ -144,7 +144,7 @@ class Round12Spec extends SparkTestBase {
       // REPLACE TABLE is schema-replacing: constraints drop with it
       spark.sql("REPLACE TABLE gc_r12ov.d.s.ov USING graft AS " +
         "SELECT 5L AS id, CAST(-9.0 AS DOUBLE) AS price")
-      assert(cat.constraintsAt("d.s.ov", cat.version("d.s.ov").get).isEmpty,
+      assert(cat.snapshot("d.s.ov", cat.version("d.s.ov").get).constraints.isEmpty,
         "REPLACE TABLE must drop prior constraints")
       spark.sql("INSERT INTO gc_r12ov.d.s.ov VALUES (6, -1.0)") // now fine
       assert(spark.sql("SELECT count(*) FROM gc_r12ov.d.s.ov")
@@ -165,7 +165,7 @@ class Round12Spec extends SparkTestBase {
     assert(e.getMessage.contains("price_pos"))
     // table unchanged, constraint still active
     assert(cat.read(t).count() == 1)
-    assert(cat.constraintsAt(t, cat.version(t).get).nonEmpty)
+    assert(cat.snapshot(t, cat.version(t).get).constraints.nonEmpty)
   }
 
   // ---- CHECK text hygiene -------------------------------------------------
@@ -424,7 +424,7 @@ class Round12Spec extends SparkTestBase {
       // ONE commit: the constraint rides v0, no unconstrained window
       assert(cat.version(t).contains(0),
         "create+constraint must be a single v0 commit")
-      assert(cat.constraintsAt(t, 0).exists(_.name == "pp"))
+      assert(cat.snapshot(t, 0).constraints.exists(_.name == "pp"))
       intercept[Exception] {
         spark.sql("INSERT INTO gc_r12at.d.s.at VALUES (1, -2.0)")
       }

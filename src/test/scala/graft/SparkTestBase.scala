@@ -18,9 +18,10 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // local FS without the per-file chmod fork (see GraftLocalFileSystem)
+      // local FS without the per-file chmod fork (see GraftLocalFileSystem),
+      // counting metadata reads for the specs that watch a table
       .config("spark.hadoop.fs.file.impl",
-        "graft.util.GraftLocalFileSystem")
+        "graft.CountingLocalFileSystem")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
