@@ -24,6 +24,10 @@ final class DataFile private[catalog] (val path: String, val key: String,
     fileStats.map(_.strings).getOrElse(Map.empty)
   def rowGroups: Seq[TableCatalog.RowGroupStat] =
     fileStats.map(_.rowGroups).getOrElse(Nil)
+  /** Byte offsets of the file's row groups: `Some(Nil)` for a
+    * single-group file (its `_STATS` entry has no `g:` lines), None
+    * when the file has no `_STATS` entry. */
+  def groupStarts: Option[Seq[Long]] = fileStats.map(_.rowGroups.map(_.start))
   def dvRows: Array[Long] = snap.dvRows.getOrElse(key, Array.emptyLongArray)
 }
 

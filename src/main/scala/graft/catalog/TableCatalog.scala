@@ -844,9 +844,13 @@ class TableCatalog(spark: SparkSession, root: String,
   private def claimPath(fq: String, v: Int) =
     new Path(tableDir(fq), f"_COMMIT_$v%06d")
 
-  /** The live version, -1 when the table is absent — the `basedOn` of
-    * a commit that reads nothing. */
+  /** The live version, -1 when the table is absent. */
   private def headOf(fq: String): Int = currentVersion(fq).getOrElse(-1)
+
+  /** The live version's snapshot, None when the table is absent — the
+    * `base` of a commit that reads nothing. */
+  private def liveSnapshot(fq: String): Option[Snapshot] =
+    currentVersion(fq).map(snapshot(fq, _))
 
   /** Every catalog write goes out as TIMESTAMP_MICROS int64, not
     * Spark's default INT96: INT96 is deprecated AND stat-less (parquet
@@ -865,13 +869,17 @@ class TableCatalog(spark: SparkSession, root: String,
   }
 
   /** THE commit protocol — every catalog write goes through here.
+    * `base` is the snapshot the operation read (None = table absent).
     * `write(dir, head)` materializes version head+1 into `dir`
-    * against snapshot `head` (-1 = table absent); this function alone
-    * claims the version, checks it, clears a crashed attempt's debris,
-    * harvests stats, swaps the pointer and prunes.
+    * against snapshot `head` (None = table absent): `base` itself, or
+    * the winner's snapshot after a rebase — resolved here once, so
+    * neither the write nor the pruner looks the version up again.
+    * This function alone claims the version, checks it, clears a
+    * crashed attempt's debris, harvests stats, swaps the pointer and
+    * prunes.
     *
     * Snapshot conflicts: if any other writer committed since the caller
-    * read `basedOn`, this commit would carry a stale manifest (lost
+    * read `base`, this commit would carry a stale manifest (lost
     * update) or stage DV addresses into files a concurrent rewrite
     * already retired. Two layers catch it: the version check catches a
     * committed racer, the atomic create-exclusive claim marker
@@ -897,17 +905,17 @@ class TableCatalog(spark: SparkSession, root: String,
     *    STARVE under a continuous append stream. `Some((Nil, Nil))`
     *    (blind append) rebases unconditionally; a claim held in flight
     *    is waited out. */
-  private[graft] def commit(fq: String, basedOn: Int,
+  private[graft] def commit(fq: String, base: Option[Snapshot],
       rebaseIf: Option[(Seq[Path], Seq[Path])])(
-      write: (Path, Int) => Unit): Unit = {
+      write: (Path, Option[Snapshot]) => Unit): Unit = {
     val readSet = rebaseIf.toSeq.flatMap(_._1).map(keyOf).toSet
     val knownDvs = rebaseIf.toSeq.flatMap(_._2).map(keyOf).toSet
     val basePcols =
-      if (readSet.isEmpty || basedOn < 0) Nil
-      else snapshot(fq, basedOn).partitionColumns
-    var head = basedOn
+      if (readSet.isEmpty) Nil else base.map(_.partitionColumns).getOrElse(Nil)
+    var headSnap = base
     var attempts = 0
     while (true) {
+      val head = headSnap.map(_.version).getOrElse(-1)
       def conflict(cur: Int) = new java.util.ConcurrentModificationException(
         s"$fq advanced to v$cur since this operation read v$head — " +
           "rerun the operation against the current version")
@@ -991,7 +999,7 @@ class TableCatalog(spark: SparkSession, root: String,
             fs.listStatus(staleSchemas).map(_.getPath)
               .filter(_.getName.startsWith(f"v$next%06d_"))
               .foreach(fs.delete(_, false))
-          withMicrosTimestamps { write(dir, head) }
+          withMicrosTimestamps { write(dir, headSnap) }
           try harvestStats(dir) catch { case _: Exception => () } // advisory
           verifyOwner("before pointer swap")
           val tmp = new Path(tableDir(fq), s"_CURRENT.tmp$next")
@@ -1005,14 +1013,13 @@ class TableCatalog(spark: SparkSession, root: String,
           // version's manifest chain, nor by the kept-back previous
           // version's. Ancestor-prefix check: partitioned chains nest
           // data under partition subdirectories of old version dirs.
-          val kept = next +: (if (next > 0 && fs.exists(versionDir(fq, next - 1)))
-            Seq(next - 1) else Nil)
-          val liveFiles = kept.map(snapshot(fq, _))
+          val kept = snapshot(fq, next) +: headSnap.toSeq
+          val liveFiles = kept
             .flatMap(k => k.files.map(_.path) ++ k.dvFiles.map(_.toString)).toSet
           // flat dir-reference chains: every LINK dir must survive, even
           // one holding no data files of its own (a metadata commit) —
           // deleting it would break every later version's resolution
-          val linkDirs = kept.flatMap(flatChainDirNames(fq, _)).toSet
+          val linkDirs = kept.flatMap(k => flatChainDirNames(fq, k.version)).toSet
           // one listing of the table dir (not an existence probe per
           // historic version number — O(live dirs) however long the
           // commit history). A retired dir must also be OLDER than the
@@ -1055,13 +1062,14 @@ class TableCatalog(spark: SparkSession, root: String,
             // a winner COMMITTED: validate commutativity before rebasing
             // (a blind append — empty read set — recomputes the layout
             // in its write, so only snapshot-bound ops need the guard)
+            val winnerSnap = if (cur < 0) None else Some(snapshot(fq, cur))
             if (readSet.nonEmpty) {
               def abort(what: String) =
                 new java.util.ConcurrentModificationException(
                   s"$fq: a concurrent commit $what — rerun the operation " +
                     "against the current version")
-              val winner = snapshot(fq, cur)
-              if (basedOn >= 0 && winner.partitionColumns != basePcols)
+              val winner = winnerSnap.getOrElse(throw abort("dropped the table"))
+              if (base.nonEmpty && winner.partitionColumns != basePcols)
                 throw abort("changed the partition layout")
               if (!readSet.subsetOf(winner.byKey.keySet))
                 throw abort("rewrote file(s) this operation read")
@@ -1069,7 +1077,7 @@ class TableCatalog(spark: SparkSession, root: String,
               if (dvPairs(newDvs).keys.exists(readSet))
                 throw abort("masked row(s) in file(s) this operation read")
             }
-            head = cur
+            headSnap = winnerSnap
           } else Thread.sleep(25L * math.min(attempts, 8)) // in-flight
           // claim contention: wait for the holder to commit or release
       }
@@ -1108,20 +1116,19 @@ class TableCatalog(spark: SparkSession, root: String,
     * at the advanced head) instead of aborting — two racing appends
     * both land, in commit order. */
   def append(fq: String, df: DataFrame): Unit =
-    commit(fq, headOf(fq), Some((Nil, Nil))) { (dir, head) =>
-      if (head < 0)
-        df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-      else {
-        // data files always carry PHYSICAL names (column mapping);
-        // constraints enforce on the logical view, inside the write;
-        // narrower numeric types upcast / wider ones widen the chain.
-        // A partitioned chain's delta lands partitioned in the new
-        // version dir.
-        val s = snapshot(fq, head)
-        toPhysical(enforceConstraints(s, alignWriteTypes(s, df)), s.columnMapping)
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy(s.partitionColumns: _*).parquet(dir.toString)
-        carryChain(s, dir)
+    commit(fq, liveSnapshot(fq), Some((Nil, Nil))) { (dir, head) =>
+      head match {
+        case None => df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
+        case Some(s) =>
+          // data files always carry PHYSICAL names (column mapping);
+          // constraints enforce on the logical view, inside the write;
+          // narrower numeric types upcast / wider ones widen the chain.
+          // A partitioned chain's delta lands partitioned in the new
+          // version dir.
+          toPhysical(enforceConstraints(s, alignWriteTypes(s, df)), s.columnMapping)
+            .write.mode(SaveMode.Overwrite)
+            .partitionBy(s.partitionColumns: _*).parquet(dir.toString)
+          carryChain(s, dir)
       }
     }
 
@@ -1130,7 +1137,7 @@ class TableCatalog(spark: SparkSession, root: String,
     * prior rename/drop mapping is reset from this version on. */
   def overwrite(fq: String, df: DataFrame): Unit = {
     val edf = enforceOnOverwrite(fq, df)
-    commit(fq, headOf(fq), None) { (dir, _) =>
+    commit(fq, liveSnapshot(fq), None) { (dir, _) =>
       edf.write.mode(SaveMode.Overwrite).parquet(dir.toString)
       resetSchemaActions(fq, dir, carryConstraints = true)
     }
@@ -1160,7 +1167,7 @@ class TableCatalog(spark: SparkSession, root: String,
         "bucket layout; use appendBucketed to append, or rebucket(...) " +
         "to change the layout (a rewrite)")
     val pdf = toPhysical(enforceConstraints(s, df), s.columnMapping)
-    commit(fq, s.version, None) { (dir, _) =>
+    commit(fq, Some(s), None) { (dir, _) =>
       pdf.write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCols: _*).parquet(dir.toString)
       carryChain(s, dir)
@@ -1176,7 +1183,7 @@ class TableCatalog(spark: SparkSession, root: String,
     * version in `_PARTITIONS`). */
   def overwritePartitioned(fq: String, df: DataFrame, partitionCols: Seq[String]): Unit = {
     val edf = enforceOnOverwrite(fq, df)
-    commit(fq, headOf(fq), None) { (dir, _) =>
+    commit(fq, liveSnapshot(fq), None) { (dir, _) =>
       edf.write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCols: _*).parquet(dir.toString)
       writePartitions(dir, partitionCols)
@@ -1264,7 +1271,7 @@ class TableCatalog(spark: SparkSession, root: String,
       s"bucket column $bucketCol cannot also be an identity partition")
     val withB = bucketed(enforceOnOverwrite(fq, df), bucketCol, numBuckets)
     val layout = partitionCols :+ BucketCol
-    commit(fq, headOf(fq), None) { (dir, _) =>
+    commit(fq, liveSnapshot(fq), None) { (dir, _) =>
       withB.repartition(layout.map(col): _*).write.mode(SaveMode.Overwrite)
         .partitionBy(layout: _*).parquet(dir.toString)
       writePartitions(dir, layout)
@@ -1308,7 +1315,7 @@ class TableCatalog(spark: SparkSession, root: String,
   def truncate(fq: String): Unit = {
     val s = snapshot(fq)
     val empty = toPhysical(read(fq).limit(0), s.columnMapping)
-    commit(fq, s.version, None) { (dir, _) =>
+    commit(fq, Some(s), None) { (dir, _) =>
       empty.write.mode(SaveMode.Overwrite).parquet(dir.toString)
       writeLayout(s, dir)
     }
@@ -1427,7 +1434,7 @@ class TableCatalog(spark: SparkSession, root: String,
       val base = keyOf(dataDir) + "/"
       val staged = (if (written.nonEmpty) written else listFilesRecursive(dataDir))
         .map(p => (p, keyOf(p).stripPrefix(base)))
-      commit(fq, s.version, None) { (dir, _) =>
+      commit(fq, Some(s), None) { (dir, _) =>
         adoptStaged(dir, staged)
         fs.mkdirs(cdcLogDir(fq))
         if (!fs.rename(cdcDir, new Path(cdcLogDir(fq), dir.getName)))
@@ -1545,10 +1552,10 @@ class TableCatalog(spark: SparkSession, root: String,
       // we scanned — the protocol validates exactly that. A concurrent
       // append's rows simply aren't subject to this delete's predicate
       // (it read snapshot v) — Delta's semantics
-      commit(fq, s.version, Some(s.readSet)) { (dir, head) =>
+      commit(fq, Some(s), Some(s.readSet)) { (dir, head) =>
         fs.mkdirs(dir)
         newDv.write.mode(SaveMode.Overwrite).parquet(dvDir(dir).toString)
-        carryChain(snapshot(fq, head), dir)
+        carryChain(head.get, dir)
       }
     } finally newDv.unpersist()
   }
@@ -1585,11 +1592,11 @@ class TableCatalog(spark: SparkSession, root: String,
         s.columnMapping)
       // rebase across commuting winners (see deleteWhereDV) — the MoR
       // delete+reinsert stays valid while our scanned files live
-      commit(fq, s.version, Some(s.readSet)) { (dir, head) =>
+      commit(fq, Some(s), Some(s.readSet)) { (dir, head) =>
         updated.write.mode(SaveMode.Overwrite)
           .partitionBy(s.partitionColumns: _*).parquet(dir.toString)
         newDv.write.mode(SaveMode.Overwrite).parquet(dvDir(dir).toString)
-        carryChain(snapshot(fq, head), dir)
+        carryChain(head.get, dir)
       }
     } finally hit.unpersist()
   }
@@ -1645,7 +1652,7 @@ class TableCatalog(spark: SparkSession, root: String,
             else Some(base.join(keySet, keys, "left_semi")
               .withColumn("_change_type", lit("delete"))
               .unionByName(src.withColumn("_change_type", lit("insert"))))
-          commit(fq, v, None) { (dir, _) =>
+          commit(fq, Some(s), None) { (dir, _) =>
             merged.write.mode(SaveMode.Overwrite)
               .partitionBy(s.partitionColumns: _*).parquet(dir.toString)
             cdcOpt.foreach(c => writeCdc(fq, dir, toPhysical(c, m)))
@@ -1718,9 +1725,8 @@ class TableCatalog(spark: SparkSession, root: String,
     * files — without carrying them, a delete that raced a compaction
     * would silently RESURRECT its masked rows in the compacted
     * version (the data rides along, the mask is dropped). */
-  private def carryRebaseDelta(s: Snapshot, head: Int, dir: Path): Unit =
-    if (head != s.version) {
-      val winner = snapshot(s.fq, head)
+  private def carryRebaseDelta(s: Snapshot, winner: Snapshot, dir: Path): Unit =
+    if (winner.version != s.version) {
       val delta = winner.chain.filterNot(f => s.byKey.contains(f.key))
       if (delta.nonEmpty) writeManifest(dir, delta.map(f => new Path(f.path)))
       val newDvs = winner.dvFiles.filterNot(p => s.dvKeys(p.toUri.getPath))
@@ -1770,11 +1776,11 @@ class TableCatalog(spark: SparkSession, root: String,
     val sized =
       if (pcols.nonEmpty) df.repartition(parts, pcols.map(col): _*)
       else df.repartition(parts)
-    commit(fq, v, Some(s.readSet)) { (dir, head) =>
+    commit(fq, Some(s), Some(s.readSet)) { (dir, head) =>
       sized.write.mode(SaveMode.Overwrite)
         .partitionBy(pcols: _*).parquet(dir.toString)
       writeLayout(s, dir)
-      carryRebaseDelta(s, head, dir)
+      carryRebaseDelta(s, head.get, dir)
       writeCdcEmpty(fq, dir) // change-wise a no-op: the feed emits nothing
     }
   }
@@ -1848,11 +1854,11 @@ class TableCatalog(spark: SparkSession, root: String,
     // same conflict RESOLUTION as compact: a z-order rewrite commutes
     // with concurrent blind appends (their delta rides by manifest,
     // un-clustered until the next cycle) — see [[commit]]
-    commit(fq, s.version, Some(s.readSet)) { (dir, head) =>
+    commit(fq, Some(s), Some(s.readSet)) { (dir, head) =>
       clustered.write.mode(SaveMode.Overwrite)
         .partitionBy(zpcols: _*).parquet(dir.toString)
       writeLayout(s, dir)
-      carryRebaseDelta(s, head, dir)
+      carryRebaseDelta(s, head.get, dir)
       writeCdcEmpty(fq, dir) // no row changes: the feed emits nothing
     }
   }
@@ -2009,7 +2015,7 @@ class TableCatalog(spark: SparkSession, root: String,
     // the clone's v0 lists the source's files explicitly (a reference
     // chain cannot cross tables) and keeps its layout
     val s = snapshot(src, v)
-    commit(dst, headOf(dst), None) { (dir, _) =>
+    commit(dst, liveSnapshot(dst), None) { (dir, _) =>
       fs.mkdirs(dir)
       writeLayout(s, dir)
       writeManifest(dir, s.chain.map(f => new Path(f.path)))
@@ -2205,17 +2211,18 @@ class TableCatalog(spark: SparkSession, root: String,
           s"layout [${s.partitionColumns.mkString(",")}] of $fq")
       s
     }
-    val prior = headOf(fq)
-    if (!overwrite && prior >= 0) requireLayout(snapshot(fq, prior))
+    val prior = liveSnapshot(fq)
+    if (!overwrite) prior.foreach(requireLayout)
     // staged appends are BLIND appends: rebase across winners
     commit(fq, prior, if (overwrite) None else Some((Nil, Nil))) { (dir, head) =>
       adoptStaged(dir, staged)
-      if (!overwrite && head >= 0) {
+      head.filter(_ => !overwrite) match {
         // O(delta): one reference line per epoch/commit — a streaming
         // sink must not rewrite O(live files) of manifest per epoch;
         // every Nth epoch checkpoints so cold reads stay O(interval)
-        carryChain(requireLayout(snapshot(fq, head)), dir)
-      } else writePartitions(dir, pcols)
+        case Some(h) => carryChain(requireLayout(h), dir)
+        case None => writePartitions(dir, pcols)
+      }
       if (overwrite) resetSchemaActions(fq, dir, carryConstraints = !replaceTable)
       bucketSpec.foreach { case (c, n) => writeBucketSpec(dir, c, n) }
       // streaming-sink idempotency: the epoch tag commits ATOMICALLY
@@ -2430,7 +2437,7 @@ class TableCatalog(spark: SparkSession, root: String,
   /** Metadata-only commit: carry the whole chain (data, DVs, layout)
     * unchanged; `extra(newVersion)` rides atomically with it. */
   private def commitMetadata(s: Snapshot)(extra: Int => Unit): Unit =
-    commit(s.fq, s.version, None) { (dir, _) =>
+    commit(s.fq, Some(s), None) { (dir, _) =>
       fs.mkdirs(dir)
       carryChain(s, dir)
       extra(s.version + 1)
@@ -2725,7 +2732,7 @@ class TableCatalog(spark: SparkSession, root: String,
       case None => // overwrite/create: schema-only zero-row version
         val empty = spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-        commit(fq, headOf(fq), None) { (dir, head) =>
+        commit(fq, liveSnapshot(fq), None) { (dir, head) =>
           // bucketed layouts: the marker lands INSIDE a bucket dir so
           // every chain scan sees the same column set (the routing
           // column is path-typed on data files; a rootless marker
@@ -2739,7 +2746,8 @@ class TableCatalog(spark: SparkSession, root: String,
           if (overwrite)
             resetSchemaActions(fq, dir, carryConstraints = !replaceTable)
           checks.foreach { case (nm, ex) =>
-            writeSchemaAction(fq, head + 1, "addck", s"$nm\t$ex") }
+            writeSchemaAction(fq, head.map(_.version + 1).getOrElse(0),
+              "addck", s"$nm\t$ex") }
         }
     }
   }
@@ -2776,12 +2784,18 @@ class TableCatalog(spark: SparkSession, root: String,
     val mask = deletes.swap.toOption.filter(_ => s.chain.nonEmpty)
       .map(where => addressedRows(s).filter(where)
         .select(col("__fp").as("file"), col("__ri").as("row_index")))
-    try commit(fq, basedOn.getOrElse(s.version), None) { (dir, head) =>
+    // a row-level scan of an older version conflicts with the live one
+    basedOn.filter(_ != s.version).foreach { b =>
+      throw new java.util.ConcurrentModificationException(
+        s"$fq advanced to v${s.version} since this operation read v$b — " +
+          s"rerun the operation against the current version (the row-level scan read v$b)")
+    }
+    try commit(fq, Some(s), None) { (dir, head) =>
       adoptStaged(dir, dataStaged.map(f => (f, f.getName)))
       mask.foreach(_.write.mode(SaveMode.Overwrite).parquet(dvDir(dir).toString))
       deletes.foreach(dvs =>
         if (dvs.nonEmpty) adoptStaged(dvDir(dir), dvs.map(f => (f, f.getName))))
-      carryChain(snapshot(fq, head), dir)
+      carryChain(head.get, dir)
     } catch {
       case e: java.util.ConcurrentModificationException if basedOn.isDefined =>
         throw new java.util.ConcurrentModificationException(

@@ -72,11 +72,44 @@ object GraftSlicePlanner {
     * exact row groups). `Some(Nil)` means every group was eliminated:
     * the file plans NO work at all (possible even after file-level
     * skipping — a range predicate can fall in the gap between two
-    * groups' bounds while overlapping the file's union bounds). */
+    * groups' bounds while overlapping the file's union bounds).
+    * `groupStarts` = the byte offsets of the file's row groups as its
+    * `_STATS` entry records them, ascending: `Some(Nil)` for a
+    * single-group file (no `g:` lines), `None` when the file has no
+    * entry. */
   case class FileInput(path: String, bytes: Long, dvRows: Array[Long],
       partValues: Seq[(String, Option[String])] = Seq.empty,
       keepOnly: Boolean = false,
-      ranges: Option[Seq[(Long, Long)]] = None)
+      ranges: Option[Seq[(Long, Long)]] = None,
+      groupStarts: Option[Seq[Long]] = None)
+
+  /** Tile `[start, start + length)` into windows of at most `maxSplit`
+    * bytes. Without row-group knowledge the cuts fall every `maxSplit`
+    * bytes. With it they fall only at group starts, and a window holds
+    * at least one group: a cut inside a group makes a window that holds
+    * no group's midpoint, a task that reads nothing. */
+  private def tile(start: Long, length: Long, groupStarts: Option[Seq[Long]],
+      maxSplit: Long): Seq[(Long, Long)] = groupStarts match {
+    case None =>
+      if (length <= maxSplit) Seq(start -> length)
+      else (0L until length by maxSplit).map(off =>
+        (start + off, math.min(maxSplit, length - off)))
+    case Some(starts) =>
+      val end = start + length
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      var from = start
+      var last = start
+      // the first group start is no seam: only the magic precedes it
+      (starts.drop(1).filter(g => g > start && g < end) :+ end).foreach { seam =>
+        if (seam - from > maxSplit && last > from) {
+          out += (from -> (last - from))
+          from = last
+        }
+        last = seam
+      }
+      out += (from -> (end - from))
+      out.toSeq
+  }
 
   def plan(files: Seq[FileInput], maxPartitionBytes: Long,
       openCostInBytes: Long, minPartitions: Int,
@@ -98,25 +131,21 @@ object GraftSlicePlanner {
       // numbering)
       val subRangeable = splitAllowed && f.dvRows.isEmpty && !f.keepOnly &&
         !unknown
+      def windows(start: Long, length: Long) =
+        tile(start, length, f.groupStarts, maxSplit).map { case (st, ln) =>
+          GraftSlice(f.path, st, ln, Array.empty[Long], f.partValues)
+        }
       f.ranges match {
         case Some(rs) if subRangeable =>
           // pre-pruned row-group windows; windows longer than the
-          // split target still split (midpoint rule re-tiles them)
-          rs.flatMap { case (st, ln) =>
-            if (ln <= maxSplit) Seq(GraftSlice(f.path, st, ln,
-              Array.empty[Long], f.partValues))
-            else (0L until ln by maxSplit).map(off =>
-              GraftSlice(f.path, st + off, math.min(maxSplit, ln - off),
-                Array.empty[Long], f.partValues))
-          }
+          // split target still split, at group starts where recorded
+          rs.flatMap { case (st, ln) => windows(st, ln) }
         case _ =>
           if (!(subRangeable && f.bytes > maxSplit))
             Seq(GraftSlice(f.path, 0L,
               if (unknown) Long.MaxValue else f.bytes, f.dvRows,
               f.partValues, f.keepOnly))
-          else (0L until f.bytes by maxSplit).map(off =>
-            GraftSlice(f.path, off, math.min(maxSplit, f.bytes - off),
-              Array.empty[Long], f.partValues))
+          else windows(0L, f.bytes)
       }
     }
     // descending first-fit: big slices claim bins first, smalls fill

@@ -675,7 +675,8 @@ class GraftScan(root: String, fq: String, snapshot: => Snapshot,
             else FileSkipping.rowGroupRanges(surv.filter(_.dvRows.isEmpty),
               activeFilters)
           val inputs = surv.map(f => GraftSlicePlanner.FileInput(f.path,
-            f.bytes, f.dvRows, f.partitionValues, ranges = rgRanges.get(f.key)))
+            f.bytes, f.dvRows, f.partitionValues, ranges = rgRanges.get(f.key),
+            groupStarts = f.groupStarts))
           // Spark's own split-size model: task count tracks bytes, not
           // file count (bigs split at row-group seams, smalls coalesce).
           // `_gpos` scans never byte-split: the synthesized row index
@@ -1077,7 +1078,8 @@ class GraftMicroBatchStream(root: String, fq: String, required: StructType,
       FilterColumns.mapAttrs(_, last.columnMapping.physicalOf))
     val inputs = FileSkipping.surviving(last, newFiles, mapped).map { f =>
       GraftSlicePlanner.FileInput(f.path, f.bytes,
-        if (vs >= 0) Array.empty[Long] else f.dvRows, f.partitionValues)
+        if (vs >= 0) Array.empty[Long] else f.dvRows, f.partitionValues,
+        groupStarts = f.groupStarts)
     }
     // micro-batches size their tasks like the batch scan (bigs split,
     // smalls coalesce) — a catch-up batch over many tiny commit files

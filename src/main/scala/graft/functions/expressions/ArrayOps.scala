@@ -1,9 +1,10 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native array/text kernels for the hot paths of the dedup and
@@ -139,6 +140,117 @@ object ArrayDot {
       i += 1
     }
     java.lang.Double.valueOf(acc)
+  }
+}
+
+/** Size of the intersection of two sorted, duplicate-free string
+  * arrays, by one merge walk. Value-identical to
+  * `size(array_intersect(a, b))` when both inputs come from
+  * `array_sort(array_distinct(...))` and hold no null element (null
+  * elements are skipped, never counted). Elements compare as
+  * [[UTF8String]] does, unsigned byte by byte over the UTF-8 encoding
+  * — the order `array_sort` leaves them in, which is NOT the UTF-16
+  * order of `java.lang.String` outside the BMP. Reads the bytes in
+  * place: an unsafe array (any row out of a join, shuffle or
+  * aggregate) or a generic one costs no allocation per element. */
+case class SortedIntersectCount(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = LongType
+
+  override def nullSafeEval(l: Any, r: Any): Any =
+    SortedIntersectCount.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val cls = SortedIntersectCount.getClass.getName.stripSuffix("$") + "$"
+      s"${ev.value} = $cls.MODULE$$.compute($a, $b);"
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+  private val littleEndian =
+    java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.LITTLE_ENDIAN
+
+  /** Where element `i` of a string array lives: (`base`, `off`, `len`)
+    * as [[UTF8String]] addresses its bytes. An [[UnsafeArrayData]]
+    * slot is read directly (its `getUTF8String` would allocate a
+    * wrapper per call); other layouts go through `getUTF8String`,
+    * which a generic array answers with the string it holds. */
+  private final class Cursor(d: ArrayData) {
+    val n: Int = d.numElements()
+    private val u = d match { case x: UnsafeArrayData => x; case _ => null }
+    private val slots =
+      if (u == null) 0L
+      else u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(n)
+    var base: AnyRef = _
+    var off = 0L
+    var len = 0
+
+    def isNull(i: Int): Boolean = d.isNullAt(i)
+
+    def load(i: Int): Unit =
+      if (u != null) {
+        val offsetAndSize = Platform.getLong(u.getBaseObject, slots + 8L * i)
+        base = u.getBaseObject
+        off = u.getBaseOffset + (offsetAndSize >> 32)
+        len = offsetAndSize.toInt
+      } else {
+        val s = d.getUTF8String(i)
+        base = s.getBaseObject
+        off = s.getBaseOffset
+        len = s.numBytes()
+      }
+  }
+
+  /** `UTF8String.binaryCompare` over two byte ranges: eight bytes at a
+    * time as unsigned big-endian words, then the tail, then length. */
+  private def compareBytes(a: Cursor, b: Cursor): Int = {
+    val len = math.min(a.len, b.len)
+    var k = 0
+    while (k + 8 <= len) {
+      val x = Platform.getLong(a.base, a.off + k)
+      val y = Platform.getLong(b.base, b.off + k)
+      if (x != y) return (
+        if (littleEndian) java.lang.Long.compareUnsigned(
+          java.lang.Long.reverseBytes(x), java.lang.Long.reverseBytes(y))
+        else java.lang.Long.compareUnsigned(x, y))
+      k += 8
+    }
+    while (k < len) {
+      val c = (Platform.getByte(a.base, a.off + k) & 0xff) -
+        (Platform.getByte(b.base, b.off + k) & 0xff)
+      if (c != 0) return c
+      k += 1
+    }
+    a.len - b.len
+  }
+
+  def compute(a: ArrayData, b: ArrayData): Long = {
+    val ca = new Cursor(a)
+    val cb = new Cursor(b)
+    var i = 0
+    var j = 0
+    var loadedI = -1
+    var loadedJ = -1
+    var n = 0L
+    while (i < ca.n && j < cb.n) {
+      if (ca.isNull(i)) i += 1
+      else if (cb.isNull(j)) j += 1
+      else {
+        if (loadedI != i) { ca.load(i); loadedI = i }
+        if (loadedJ != j) { cb.load(j); loadedJ = j }
+        val c = compareBytes(ca, cb)
+        if (c == 0) { n += 1; i += 1; j += 1 }
+        else if (c < 0) i += 1
+        else j += 1
+      }
+    }
+    n
   }
 }
 

@@ -30,6 +30,7 @@ object GraftFunctions {
       exprs(1).eval().asInstanceOf[Int])),
     "graft_bloom_contains" -> (exprs => BloomContains(exprs(0), exprs(1))),
     "graft_long_dot" -> (exprs => LongArrayDot(exprs(0), exprs(1))),
+    "graft_sorted_intersect" -> (exprs => SortedIntersectCount(exprs(0), exprs(1))),
     "graft_damerau" -> (exprs => DamerauLevenshtein(exprs(0), exprs(1))),
     "graft_jaro_winkler" -> (exprs => JaroWinkler(exprs(0), exprs(1))),
     "graft_nfc" -> (exprs => NfcNormalize(exprs.head)),
@@ -97,6 +98,13 @@ object GraftFunctions {
   def longArrayDot(a: Column, b: Column): Column = {
     ensureActive()
     call_function("graft_long_dot", a, b)
+  }
+
+  /** Intersection size of two sorted, duplicate-free string arrays
+    * (`array_sort(array_distinct(...))`), by one merge walk. */
+  def sortedIntersectCount(a: Column, b: Column): Column = {
+    ensureActive()
+    call_function("graft_sorted_intersect", a, b)
   }
 
   /** Hyperplane sign-signature LSH bucket key. */

@@ -1065,8 +1065,8 @@ class Round8Spec extends SparkTestBase {
     // files, so the rebase validates and commits on top
     var committedAt = -1
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    cat.commit(t, v0, Some((readFiles, Nil))) { (dir, head) =>
-      committedAt = head
+    cat.commit(t, Some(cat.snapshot(t, v0)), Some((readFiles, Nil))) { (dir, head) =>
+      committedAt = head.get.version
       // a marker commit carrying head's files (what compact would do):
       // new rows + a hand-rolled manifest referencing the head chain
       (200L to 205L).toDF("k").coalesce(1).write
@@ -1091,7 +1091,7 @@ class Round8Spec extends SparkTestBase {
     // the winner REWRITES every file (copy-on-write update touches all)
     cat.updateWhere(t, Map("flag" -> lit(1L)), col("k") > 0)
     val ex = intercept[java.util.ConcurrentModificationException] {
-      cat.commit(t, v0, Some((readFiles, Nil)))((dir, head) => ())
+      cat.commit(t, Some(cat.snapshot(t, v0)), Some((readFiles, Nil)))((dir, head) => ())
     }
     assert(ex.getMessage.contains("rewrote"))
   }
@@ -1105,7 +1105,7 @@ class Round8Spec extends SparkTestBase {
     val readFiles = cat.dataFilePaths(t).map(new Path(_))
     cat.deleteWhereDV(t, col("k") % 10 === 0) // winner masks our files
     val ex = intercept[java.util.ConcurrentModificationException] {
-      cat.commit(t, v0, Some((readFiles, Nil)))((dir, head) => ())
+      cat.commit(t, Some(cat.snapshot(t, v0)), Some((readFiles, Nil)))((dir, head) => ())
     }
     assert(ex.getMessage.contains("masked"))
   }

@@ -154,4 +154,38 @@ class RowGroupSkipSpec extends SparkTestBase {
     assert(GraftPlanInspect.scanSliceBytesOf(pruned) == fullBytes,
       "marker-less stats must refuse to prune (plan blind)")
   }
+
+  test("byte splits cut only at row-group starts: a maxPartitionBytes=1 " +
+      "scan plans no more tasks than the table has row groups") {
+    val root = tempDir("rg_split")
+    val cat = new TableCatalog(spark, root)
+    val t = "D.S.RGSPLIT"
+    // one multi-group file, then three single-group appends
+    writeSmallGroups(cat, t, paddedKeys(1000, identity), "k")
+    (0 until 3).foreach(i => cat.append(t,
+      paddedKeys(20, _ + 1000L + 20L * i).coalesce(1)))
+    val hc = spark.sparkContext.hadoopConfiguration
+    val groups = cat.dataFilePaths(t).map { p =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new org.apache.hadoop.fs.Path(p), hc)
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try rd.getRowGroups.size finally rd.close()
+    }
+    assert(groups.size == 4 && groups.max > 1, s"row groups per file: $groups")
+    val old = Seq("spark.sql.files.maxPartitionBytes",
+      "spark.sql.files.openCostInBytes").map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    try {
+      val q = graftRead(root, t).agg(count(col("k")).as("n"), sum("k").as("s"))
+      val r = q.collect()(0)
+      assert(r.getLong(0) == 1060L && r.getLong(1) == (1L to 1060L).sum)
+      val tasks = GraftPlanInspect.scanTasksOf(q)
+      assert(tasks > 1 && tasks <= groups.sum,
+        s"$tasks scan tasks for ${groups.sum} row groups")
+    } finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
