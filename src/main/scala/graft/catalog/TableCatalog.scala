@@ -856,16 +856,14 @@ class TableCatalog(spark: SparkSession, root: String,
     * Spark's default INT96: INT96 is deprecated AND stat-less (parquet
     * writers emit no usable min/max for it), which would exclude
     * timestamp columns — the most common 100 TB range predicate — from
-    * `_STATS` file skipping. Session conf is restored after the
-    * write. */
+    * `_STATS` file skipping. The setting is held per session, counted
+    * over the writes in flight on it ([[TableCatalog.holdMicros]]): the
+    * first sets it, the last restores the session's own value, so
+    * concurrent writes through one session never see it restored under
+    * them. */
   private def withMicrosTimestamps[T](body: => T): T = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try body finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    TableCatalog.holdMicros(spark)
+    try body finally TableCatalog.releaseMicros(spark)
   }
 
   /** THE commit protocol — every catalog write goes through here.
@@ -1397,56 +1395,42 @@ class TableCatalog(spark: SparkSession, root: String,
     }
   }
 
-  /** Commit a copy-on-write rewrite of snapshot `s`'s `hit` files.
-    * `data` (the replacement files, written in the snapshot's layout)
-    * and `changes` (their CDC rows) are written to a staging dir under
-    * `<root>/_staging` BEFORE the claim, as two concurrent jobs;
-    * `matched` must be observed on `data` as `n`, the number of rows
-    * the predicate matched. Nothing matched: the staging dir goes and
-    * the current version stands. Otherwise the commit adopts the
-    * staged files by rename — data into the version dir at their
-    * `col=value/` paths, change rows as its `_CDCLOG` entry — and
-    * carries the rest of the chain with `hit` tombstoned. */
-  private def commitRewrite(s: Snapshot, hit: Seq[DataFile],
-      data: DataFrame, matched: org.apache.spark.sql.Observation,
-      changes: DataFrame): Unit = {
-    val fq = s.fq
-    val carried = hit.size < s.chain.size
-    val staging = new Path(root, s"_staging/${java.util.UUID.randomUUID()}")
-    val dataDir = new Path(staging, "data")
-    val cdcDir = new Path(staging, "cdc")
-    try {
-      withMicrosTimestamps {
-        graft.util.Concurrent.forEach(
-            Seq((data, dataDir, s.partitionColumns), (changes, cdcDir, Nil)), 2) {
-          case (df, out, by) =>
-            df.write.mode(SaveMode.Overwrite).partitionBy(by: _*).parquet(out.toString)
-        }
-      }
-      // the optimizer drops the observation when the rewrite folds to
-      // no rows (a predicate that is constant true): unknown counts as a match
-      if (matched.get.get("n").exists(n => n == null || n == 0L)) return
-      val written = listFilesRecursive(dataDir)
-      if (written.isEmpty && !carried) // a partitioned write of no rows
-        // leaves no file: stage the schema carrier a flat write leaves
-        spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), data.schema)
-          .write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
-      val base = keyOf(dataDir) + "/"
-      val staged = (if (written.nonEmpty) written else listFilesRecursive(dataDir))
-        .map(p => (p, keyOf(p).stripPrefix(base)))
-      commit(fq, Some(s), None) { (dir, _) =>
-        adoptStaged(dir, staged)
-        fs.mkdirs(cdcLogDir(fq))
-        if (!fs.rename(cdcDir, new Path(cdcLogDir(fq), dir.getName)))
+  /** A copy-on-write rewrite of snapshot `s`'s `hit` files, written but
+    * not committed: the replacement files and their change rows wait
+    * under `<root>/_staging`, so the write jobs can run beside other
+    * work and the version is claimed only at [[commit]]. `staged` (the
+    * data files by their path below the version dir) is None when the
+    * rewrite matched no row. */
+  private[graft] final class StagedRewrite private[TableCatalog] (
+      s: Snapshot, hit: Seq[DataFile], staging: Path,
+      staged: Option[Seq[(Path, String)]]) {
+
+    /** Commit the staged files as the version after the head, then drop
+      * the staging dir; nothing matched, no commit. The rewrite depends
+      * only on `hit`, so it REBASES across a winner that left every hit
+      * file live and unmasked (a concurrent append) — carrying the
+      * winner's chain with `hit` tombstoned — and aborts on one that
+      * rewrote or masked a hit file. */
+    def commit(): Unit = try {
+      staged.foreach(files => TableCatalog.this.commit(s.fq, Some(s),
+          Some((hit.map(f => new Path(f.path)), s.dvFiles))) { (dir, headSnap) =>
+        val head = headSnap.get
+        adoptStaged(dir, files)
+        fs.mkdirs(cdcLogDir(s.fq))
+        val cdcDir = new Path(staging, "cdc")
+        if (!fs.rename(cdcDir, new Path(cdcLogDir(s.fq), dir.getName)))
           throw new IllegalStateException(s"failed to adopt staged changes $cdcDir")
-        // O(touched) metadata: reference the prior version, tombstone
-        // only the rewritten files (Delta's remove-action shape); the
-        // carried masks' entries addressing rewritten files no longer
-        // match any chain path and are inert
-        if (carried) carryChain(s, dir, retired = hit)
-        else writeLayout(s, dir)
-      }
-    } finally {
+        // O(touched) metadata: reference the head, tombstone only the
+        // rewritten files (Delta's remove-action shape); the carried
+        // masks' entries addressing rewritten files no longer match any
+        // chain path and are inert
+        if (hit.size < head.chain.size) carryChain(head, dir, retired = hit)
+        else writeLayout(head, dir)
+      })
+    } finally discard()
+
+    /** Drop the staged files; the table is untouched. Idempotent. */
+    def discard(): Unit = {
       fs.delete(staging, true)
       // drop the `_staging` parent when empty; a concurrent writer
       // staging there makes the delete fail, and the parent stays
@@ -1457,6 +1441,46 @@ class TableCatalog(spark: SparkSession, root: String,
     }
   }
 
+  /** Stage a copy-on-write rewrite of snapshot `s`'s `hit` files.
+    * `data` (the replacement files, written in the snapshot's layout)
+    * and `changes` (their CDC rows) are written to a staging dir under
+    * `<root>/_staging` as two concurrent jobs; `matched` must be
+    * observed on `data` as `n`, the number of rows the predicate
+    * matched. Nothing matched: the staging dir goes at once. A failed
+    * write leaves no staging behind. */
+  private def stageRewrite(s: Snapshot, hit: Seq[DataFile],
+      data: DataFrame, matched: org.apache.spark.sql.Observation,
+      changes: DataFrame): StagedRewrite = {
+    val staging = new Path(root, s"_staging/${java.util.UUID.randomUUID()}")
+    val dataDir = new Path(staging, "data")
+    val empty = new StagedRewrite(s, hit, staging, None)
+    try {
+      withMicrosTimestamps {
+        graft.util.Concurrent.forEach(Seq((data, dataDir, s.partitionColumns),
+            (changes, new Path(staging, "cdc"), Nil)), 2) {
+          case (df, out, by) =>
+            df.write.mode(SaveMode.Overwrite).partitionBy(by: _*).parquet(out.toString)
+        }
+      }
+      // the optimizer drops the observation when the rewrite folds to
+      // no rows (a predicate that is constant true): unknown counts as a match
+      if (matched.get.get("n").exists(n => n == null || n == 0L)) {
+        empty.discard()
+        return empty
+      }
+      val written = listFilesRecursive(dataDir)
+      if (written.isEmpty && hit.size == s.chain.size) // a partitioned write
+        // of no rows leaves no file: stage the schema carrier a flat
+        // write leaves
+        spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), data.schema)
+          .write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
+      val base = keyOf(dataDir) + "/"
+      new StagedRewrite(s, hit, staging, Some(
+        (if (written.nonEmpty) written else listFilesRecursive(dataDir))
+          .map(p => (p, keyOf(p).stripPrefix(base)))))
+    } catch { case t: Throwable => empty.discard(); throw t }
+  }
+
   /** UPDATE t SET col = value WHERE predicate — copy-on-write at FILE
     * granularity: only files that contain at least one matching row
     * are rewritten; every other file is carried into the new version
@@ -1464,13 +1488,24 @@ class TableCatalog(spark: SparkSession, root: String,
     * rows land in their (possibly new) partition dirs, so a per-run
     * flag clear on a 100 TB partitioned table rewrites the run's files,
     * not its partitions (the same pruning Delta/Iceberg do for
-    * UPDATE). */
+    * UPDATE). Staged on the live snapshot, then committed
+    * ([[stageUpdate]]). */
   def updateWhere(fq: String, assignments: Map[String, Column], where: Column): Unit = {
     val s = snapshot(fq)
-    val m = s.columnMapping // probe + rewrite run on the LOGICAL view;
-    // the rewritten files land under physical names
     val hit = candidateFiles(s, where)
-    if (hit.isEmpty) return // no matching rows anywhere: current version stands
+    // no candidate: no matching row anywhere, the current version stands
+    if (hit.nonEmpty) stageUpdate(s, hit, assignments, where).commit()
+  }
+
+  /** Stage [[updateWhere]] on snapshot `s`, whose files that can hold a
+    * matching row are `hit` ([[candidateFiles]]); rows committed after
+    * `s` live in other files and are never touched. Makes no public
+    * catalog call, so it may run on a helper thread beside the caller's
+    * own writes. */
+  private[graft] def stageUpdate(s: Snapshot, hit: Seq[DataFile],
+      assignments: Map[String, Column], where: Column): StagedRewrite = {
+    val m = s.columnMapping // the rewrite runs on the LOGICAL view; the
+    // rewritten files land under physical names
     // the rewrite must read THROUGH outstanding DV masks, or rows a
     // prior merge-on-read delete masked would resurrect in the rewrite
     val cur = toLogical(readMasked(s, hit), m)
@@ -1489,7 +1524,7 @@ class TableCatalog(spark: SparkSession, root: String,
       .unionByName(assignments.foldLeft(changed) { case (d, (c, value)) =>
         d.withColumn(c, value)
       }.withColumn("_change_type", lit("insert")))
-    commitRewrite(s, hit, updated, matched, toPhysical(cdc, m))
+    stageRewrite(s, hit, updated, matched, toPhysical(cdc, m))
   }
 
   /** DELETE FROM fq WHERE — the GDPR/right-to-erasure shape. Same
@@ -1512,7 +1547,7 @@ class TableCatalog(spark: SparkSession, root: String,
       sum(when(where, 1L).otherwise(0L)).as("n")).filter(!where), m)
     val cdc = dropRouting(hitRows).filter(where) // the erased rows
       .withColumn("_change_type", lit("delete"))
-    commitRewrite(s, hit, kept, matched, toPhysical(cdc, m))
+    stageRewrite(s, hit, kept, matched, toPhysical(cdc, m)).commit()
   }
 
   /** Snapshot `s`'s live rows under their logical names, each carrying
@@ -2972,6 +3007,37 @@ object TableCatalog {
 
   /** Rebase attempts a commit with `rebaseIf` makes before giving up. */
   private val MaxRebaseAttempts = 50
+
+  private val TimestampTypeKey = "spark.sql.parquet.outputTimestampType"
+
+  /** Per session: the catalog writes in flight on it, and the session's
+    * own timestamp setting from before the first of them. Keyed by
+    * identity; an entry lives only while a write is in flight. */
+  private val microsHolds =
+    new java.util.IdentityHashMap[SparkSession, (Int, Option[String])]()
+
+  /** Enter a catalog write on `spark`: the first writer in flight saves
+    * the session's setting and switches it to TIMESTAMP_MICROS. */
+  private def holdMicros(spark: SparkSession): Unit = microsHolds.synchronized {
+    val (n, own) = Option(microsHolds.get(spark))
+      .getOrElse((0, spark.conf.getOption(TimestampTypeKey)))
+    if (n == 0) spark.conf.set(TimestampTypeKey, "TIMESTAMP_MICROS")
+    microsHolds.put(spark, (n + 1, own))
+  }
+
+  /** Leave a catalog write on `spark`: the last writer in flight puts the
+    * session's own setting back. */
+  private def releaseMicros(spark: SparkSession): Unit = microsHolds.synchronized {
+    val (n, own) = microsHolds.get(spark)
+    if (n > 1) microsHolds.put(spark, (n - 1, own))
+    else {
+      microsHolds.remove(spark)
+      own match {
+        case Some(v) => spark.conf.set(TimestampTypeKey, v)
+        case None => spark.conf.unset(TimestampTypeKey)
+      }
+    }
+  }
 
   /** The wider of two types when the pair is a SAFE widening — every
     * value of the narrower type representable EXACTLY in the wider:

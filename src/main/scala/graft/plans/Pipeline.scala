@@ -163,12 +163,59 @@ final class RawStage(spark: SparkSession, catalog: TableCatalog,
   }
 }
 
+/** The flag machine's handoff from a source layer to the next (SURVEY
+  * §3.1): the next layer consumes the source's rows flagged `flag = 1`,
+  * then the source's flags are cleared. A handoff pins the source's
+  * snapshot and the files of it that can hold a flagged row
+  * ([[TableCatalog.candidateFiles]]: commit metadata, no job when the
+  * stats isolate them); [[run]] stages the clear of exactly those files
+  * on a helper thread while the caller writes downstream, then commits
+  * it — downstream first, source clear second.
+  *
+  * Rows committed to the source after the pin live in other files, so
+  * they are neither consumed nor cleared and wait for the next pass:
+  * the reference's read-then-clear race
+  * (RAW_SNOWFLAKE_TO_REFINED_SNOWFLAKE.py:379 vs :717) stays fixed with
+  * no run-id scoping, and the clear rebases over such an append. */
+private[plans] final class FlagHandoff(catalog: TableCatalog,
+    source: String, flag: String) {
+  private val pinned = catalog.snapshot(source)
+  private val hit = catalog.candidateFiles(pinned, col(flag) === 1)
+
+  /** No file of the pinned snapshot holds a flagged row. */
+  def isEmpty: Boolean = hit.isEmpty
+
+  /** `downstream` over the pinned snapshot's flagged rows, with their
+    * clear staged beside it and committed after it. If `downstream`
+    * throws, the staging is discarded and the flags stay set. The
+    * helper thread makes no public catalog call, and it inherits the
+    * caller's Spark job group. */
+  def run[T](downstream: DataFrame => T): T = {
+    val flagged = catalog.readVersion(source, pinned.version).filter(col(flag) === 1)
+    if (hit.isEmpty) return downstream(flagged)
+    val staging = new java.util.concurrent.FutureTask(() =>
+      catalog.stageUpdate(pinned, hit, Map(flag -> lit(0)), col(flag) === 1))
+    val stager = new Thread(staging, s"graft-clear-$source")
+    stager.setDaemon(true)
+    stager.start()
+    def staged = try staging.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    val out =
+      try downstream(flagged)
+      catch { case t: Throwable =>
+        try staged.discard()
+        catch { case scala.util.control.NonFatal(e) => t.addSuppressed(e) }
+        throw t
+      }
+    staged.commit()
+    out
+  }
+}
+
 /** REFINED stage: consume RAW rows WHERE IS_NEW=1, apply the transform
-  * chain, append to REFINED, then clear IS_NEW — but ONLY for the batch
-  * actually read (keyed by PARENT_RUN_ID), fixing the reference's
-  * read-then-clear race where rows ingested between the read and the
-  * UPDATE were silently skipped
-  * (RAW_SNOWFLAKE_TO_REFINED_SNOWFLAKE.py:379 vs :717).
+  * chain, append to REFINED, then clear IS_NEW on the RAW snapshot that
+  * was read ([[FlagHandoff]]): 4 Spark jobs — the append, the clear's
+  * data and change writes (staged beside the append), the log.
   */
 final class RefinedStage(spark: SparkSession, catalog: TableCatalog,
     log: Option[IngestLog] = None) {
@@ -177,25 +224,21 @@ final class RefinedStage(spark: SparkSession, catalog: TableCatalog,
     val rawTable = spec.target.rawTable.get
     val refinedTable = spec.target.refinedTable.getOrElse(
       throw new IllegalArgumentException("no refined table configured"))
-    val raw = catalog.read(rawTable)
-    val batch = raw.filter(col("IS_NEW") === 1)
-    // one job, no exchange, yields both the consumed run ids and the
-    // batch row count (the refined transform chain is 1:1 —
-    // regex/split/strip/project never add or drop rows — so
-    // n(out) == n(batch))
-    val runStats = graft.util.SmallAgg.countBy(batch, col("PARENT_RUN_ID"))
-    val runIds = runStats.keys.toSeq // bounded: one id per pipeline run
-    if (runIds.isEmpty) {
+    val handoff = new FlagHandoff(catalog, rawTable, "IS_NEW")
+    if (handoff.isEmpty) {
       log.foreach(_.log(ctx, practice, spec.fileType, "REFINED_LOAD", "SKIPPED", 0))
       return StageResult("SKIPPED", 0, "no IS_NEW rows")
     }
-    val transformed = RefinedOps.refinedTransform(batch, spec.target)
-    val out = RefinedOps.withRefinedMetadata(transformed, ctx.parentRunId)
-    catalog.append(refinedTable, out)
-    val n = runStats.values.sum
-    // clear only the runs we consumed
-    catalog.updateWhere(rawTable, Map("IS_NEW" -> lit(0)),
-      col("IS_NEW") === 1 && col("PARENT_RUN_ID").isin(runIds: _*))
+    val n = handoff.run { batch =>
+      // the refined transform chain is 1:1 — regex/split/strip/project
+      // never add or drop rows — so the count observed on the append is
+      // the batch's
+      val obs = org.apache.spark.sql.Observation()
+      val out = RefinedOps.withRefinedMetadata(
+        RefinedOps.refinedTransform(batch, spec.target), ctx.parentRunId)
+      catalog.append(refinedTable, out.observe(obs, count(lit(1)).as("n")))
+      obs.get("n").asInstanceOf[Long]
+    }
     log.foreach(_.log(ctx, practice, spec.fileType, "REFINED_LOAD", "SUCCESS", n))
     StageResult("SUCCESS", n)
   }
@@ -218,11 +261,11 @@ final class StreamingRefinedStage(spark: SparkSession, catalog: TableCatalog,
     val rawTable = spec.target.rawTable.getOrElse(
       throw new IllegalArgumentException("no raw table configured"))
     val schema = catalog.read(rawTable).schema
-    graft.streaming.IncrementalRefined.drainOnce(spark,
+    // the drain's own input count: the refined transform is 1:1, and no
+    // job re-reads the refined store (whose size grows with history)
+    val n = graft.streaming.IncrementalRefined.drainOnce(spark,
       catalog.versionGlob(rawTable), refinedDir, checkpointDir,
       spec.target, schema, ctx.parentRunId)
-    val n = spark.read.parquet(refinedDir)
-      .filter(col("REFINED_PARENT_RUN_ID") === ctx.parentRunId).count()
     log.foreach(_.log(ctx, practice, spec.fileType, "REFINED_STREAM", "SUCCESS", n))
     StageResult("SUCCESS", n)
   }
@@ -231,7 +274,10 @@ final class StreamingRefinedStage(spark: SparkSession, catalog: TableCatalog,
 /** CURATED stage: mapping projection + metadata columns + lookup
   * classification + source filters + optional future-only filter →
   * INSERT INTO curated; RECORD_TYPE distribution; CRM sync through the
-  * sink trait; clear IS_VALID for consumed rows.
+  * sink trait; clear IS_VALID on the REFINED snapshot that was read
+  * ([[FlagHandoff]]). Without a sync, 5 Spark jobs: the lookup's
+  * broadcast, the append, the clear's data and change writes (staged
+  * beside the append), the log.
   * reference: REFINED_SNOWFLAKE_TO_CURATED_SNOWFLAKE.py:1309-1801.
   */
 final class CuratedStage(spark: SparkSession, catalog: TableCatalog,
@@ -243,97 +289,90 @@ final class CuratedStage(spark: SparkSession, catalog: TableCatalog,
     val refinedTable = spec.target.refinedTable.get
     val curatedTable = spec.target.curatedTable.getOrElse(
       throw new IllegalArgumentException("no curated table configured"))
-    val refined = catalog.read(refinedTable)
+    val syncs = spec.target.sync.filter(_.enabled)
+    val (n, dist) = new FlagHandoff(catalog, refinedTable, "IS_VALID").run { flagged =>
+      // source rows: IS_VALID=1 AND config filters (the clear consumes
+      // every flagged row of the pinned snapshot, filtered or not)
+      val valid = flagged
+        .filter(CuratedOps.compileFilter(flagged, spec.target.sourceFilter))
+      // a CRM sync re-reads the batch after the append (the reference
+      // recomputes this SELECT 3-4×, SURVEY §4), so it is cached then;
+      // without one the append is its only reader, and under AQE a cache
+      // is a job of its own
+      if (syncs.nonEmpty) valid.cache()
+      try load(ctx, practice, spec, valid, curatedTable, refinedTable, now, syncs)
+      finally if (syncs.nonEmpty) valid.unpersist()
+    }
+    log.foreach(_.log(ctx, practice, spec.fileType, "CURATED_LOAD", "SUCCESS", n, dist))
+    StageResult("SUCCESS", n, dist)
+  }
 
-    // the batch = all flagged rows AT READ TIME, keyed by the refined
-    // run ids actually consumed (bounded: one id per upstream run).
-    // Rows appended between this read and the flag clear belong to
-    // other run ids and must survive — the same read-then-clear race
-    // the REFINED stage fixes (reference:
-    // RAW_SNOWFLAKE_TO_REFINED_SNOWFLAKE.py:379 vs :717).
-    val flagged = refined.filter(col("IS_VALID") === 1)
-    val consumedRunIds = graft.util.SmallAgg
-      .countBy(flagged, col("REFINED_PARENT_RUN_ID")).keys.toSeq
+  /** Classify, map and append `valid` to the curated table, then run the
+    * CRM sync: the row count and the RECORD_TYPE distribution. */
+  private def load(ctx: RunContext, practice: String, spec: IngestSpec,
+      valid: DataFrame, curatedTable: String, refinedTable: String,
+      now: java.sql.Timestamp, syncs: Option[SyncSpec]): (Long, String) = {
+    val classified = spec.target.curatedLookup match {
+      case Some(lk) => CuratedOps.lookupClassify(valid, catalog.read(lk.lookupTable), lk)
+      case None => valid.withColumn("RECORD_TYPE", lit("NEW"))
+    }
 
-    // source rows: IS_VALID=1 AND config filters
-    val valid = flagged
-      .filter(CuratedOps.compileFilter(refined, spec.target.sourceFilter))
+    // mapped projection keeps RECORD_TYPE from classification
+    val mapped =
+      if (spec.target.curatedMapping.isEmpty) classified
+      else CuratedOps.mappingProjection(classified,
+        spec.target.curatedMapping :+ MappingSpec("RECORD_TYPE", "RECORD_TYPE", None, " ", None))
 
-    // cache: the reference recomputes this SELECT 3-4× (insert,
-    // distribution, sync fetch) — one cache is a pure win (SURVEY §4)
-    valid.cache()
-    try {
-      val classified = spec.target.curatedLookup match {
-        case Some(lk) => CuratedOps.lookupClassify(valid, catalog.read(lk.lookupTable), lk)
-        case None => valid.withColumn("RECORD_TYPE", lit("NEW"))
-      }
+    val withMeta = mapped
+      .withColumn("SOURCE_PRACTICE", lit(practice))
+      .withColumn("SOURCE_TABLE", lit(refinedTable))
+      .withColumn("PARENT_RUN_ID", lit(ctx.parentRunId))
+      .withColumn("CREATED_DATE", lit(now))
 
-      // mapped projection keeps RECORD_TYPE from classification
-      val mapped =
-        if (spec.target.curatedMapping.isEmpty) classified
-        else CuratedOps.mappingProjection(classified,
-          spec.target.curatedMapping :+ MappingSpec("RECORD_TYPE", "RECORD_TYPE", None, " ", None))
+    val future = spec.target.sync.flatMap(_.futureOnly) match {
+      case Some(f) => withMeta.filter(CuratedOps.futureOnlyFilter(withMeta, f, lit(now)))
+      case None => withMeta
+    }
 
-      val withMeta = mapped
-        .withColumn("SOURCE_PRACTICE", lit(practice))
-        .withColumn("SOURCE_TABLE", lit(refinedTable))
-        .withColumn("PARENT_RUN_ID", lit(ctx.parentRunId))
-        .withColumn("CREATED_DATE", lit(now))
+    // RECORD_TYPE distribution (A3) observed ON the append: the
+    // classification can only yield the configured values (or null,
+    // when the mapping does not carry the lookup's result column), so
+    // one conditional sum per value plus the row count cover it with
+    // no second evaluation of the lookup join
+    val values = spec.target.curatedLookup
+      .map(lk => Seq(lk.matchValue, lk.noMatchValue)).getOrElse(Seq("NEW"))
+      .distinct.map(Option(_)) :+ None
+    val obs = org.apache.spark.sql.Observation()
+    catalog.append(curatedTable, future.observe(obs, count(lit(1)).as("n"),
+      values.zipWithIndex.map { case (v, i) =>
+        sum(when(v.fold(col("RECORD_TYPE").isNull)(col("RECORD_TYPE") === _),
+          1L).otherwise(0L)).as(s"v$i")
+      }: _*))
+    val seen = obs.get
+    val n = seen("n").asInstanceOf[Long]
+    val counts = values.indices.map(i =>
+      Option(seen(s"v$i")).fold(0L)(_.asInstanceOf[Long]))
+    if (counts.sum != n) throw new IllegalStateException(
+      s"CURATED RECORD_TYPE distribution covers ${counts.sum} of $n rows")
+    val dist = values.zip(counts).filter(_._2 > 0)
+      .map { case (v, c) => s"${v.orNull}=$c" }.sorted.mkString(",")
 
-      val future = spec.target.sync.flatMap(_.futureOnly) match {
-        case Some(f) => withMeta.filter(CuratedOps.futureOnlyFilter(withMeta, f, lit(now)))
-        case None => withMeta
-      }
-
-      // RECORD_TYPE distribution (A3) observed ON the append: the
-      // classification can only yield the configured values (or null,
-      // when the mapping does not carry the lookup's result column), so
-      // one conditional sum per value plus the row count cover it with
-      // no second evaluation of the lookup join
-      val values = spec.target.curatedLookup
-        .map(lk => Seq(lk.matchValue, lk.noMatchValue)).getOrElse(Seq("NEW"))
-        .distinct.map(Option(_)) :+ None
-      val obs = org.apache.spark.sql.Observation()
-      catalog.append(curatedTable, future.observe(obs, count(lit(1)).as("n"),
-        values.zipWithIndex.map { case (v, i) =>
-          sum(when(v.fold(col("RECORD_TYPE").isNull)(col("RECORD_TYPE") === _),
-            1L).otherwise(0L)).as(s"v$i")
-        }: _*))
-      val seen = obs.get
-      val n = seen("n").asInstanceOf[Long]
-      val counts = values.indices.map(i =>
-        Option(seen(s"v$i")).fold(0L)(_.asInstanceOf[Long]))
-      if (counts.sum != n) throw new IllegalStateException(
-        s"CURATED RECORD_TYPE distribution covers ${counts.sum} of $n rows")
-      val dist = values.zip(counts).filter(_._2 > 0)
-        .map { case (v, c) => s"${v.orNull}=$c" }.sorted.mkString(",")
-
-      // CRM sync through the pluggable sink (never collects to driver)
-      spec.target.sync.filter(_.enabled).foreach { sync =>
-        val payload =
-          if (sync.fieldMappings.isEmpty) future
-          else {
-            val cols = sync.fieldMappings.toSeq.sortBy(_._1).map { case (tgt, fv) =>
-              CuratedOps.fieldValue(future, fv).as(tgt)
-            }
-            future.select(cols: _*)
+    // CRM sync through the pluggable sink (never collects to driver)
+    syncs.foreach { sync =>
+      val payload =
+        if (sync.fieldMappings.isEmpty) future
+        else {
+          val cols = sync.fieldMappings.toSeq.sortBy(_._1).map { case (tgt, fv) =>
+            CuratedOps.fieldValue(future, fv).as(tgt)
           }
-        val (ok, bad) = CrmBatch.deliverPartitioned(payload, "records", None,
-          sync.batchSize, crmSink)
-        log.foreach(_.log(ctx, practice, spec.fileType, "CRM_SYNC",
-          if (bad == 0) "SUCCESS" else "PARTIAL", ok, s"failed=$bad"))
-      }
-
-      // consume the IS_VALID flags for the runs we read — scoped, so
-      // rows flagged by runs arriving mid-stage are left for the next
-      // pass instead of being silently zeroed
-      if (consumedRunIds.nonEmpty)
-        catalog.updateWhere(refinedTable, Map("IS_VALID" -> lit(0)),
-          col("IS_VALID") === 1 &&
-            col("REFINED_PARENT_RUN_ID").isin(consumedRunIds: _*))
-      log.foreach(_.log(ctx, practice, spec.fileType, "CURATED_LOAD", "SUCCESS", n, dist))
-      StageResult("SUCCESS", n, dist)
-    } finally valid.unpersist()
+          future.select(cols: _*)
+        }
+      val (ok, bad) = CrmBatch.deliverPartitioned(payload, "records", None,
+        sync.batchSize, crmSink)
+      log.foreach(_.log(ctx, practice, spec.fileType, "CRM_SYNC",
+        if (bad == 0) "SUCCESS" else "PARTIAL", ok, s"failed=$bad"))
+    }
+    (n, dist)
   }
 }
 
@@ -405,8 +444,11 @@ final case class StreamingRefinedDirs(refinedDir: String, checkpointDir: String)
   * rejecting precheck commits its rows before its first error move.
   * The reference writes one log row per step; here an accepted drop
   * makes 6 catalog commits (RAW, REFINED, the RAW flag clear, CURATED,
-  * the REFINED flag clear, the log) and 13 Spark jobs. A JVM killed
-  * mid-run loses the run's log rows but no data rows. */
+  * the REFINED flag clear, the log) and 10 Spark jobs: precheck 1, RAW
+  * 1, REFINED 3, CURATED 4, the log 1. Each flag clear is pinned to the
+  * source snapshot its stage read, staged beside that stage's append
+  * and committed after it ([[FlagHandoff]]). A JVM killed mid-run loses
+  * the run's log rows but no data rows. */
 final class Pipeline(spark: SparkSession, catalog: TableCatalog,
     log: Option[IngestLog] = None, crmSink: CrmSink = DryRunCrmSink,
     streamingRefined: Option[StreamingRefinedDirs] = None) {

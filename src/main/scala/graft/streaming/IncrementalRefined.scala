@@ -42,14 +42,20 @@ object IncrementalRefined {
   }
 
   /** Run one incremental drain to completion (Trigger.AvailableNow):
-    * processes only files not yet recorded in the checkpoint. */
+    * processes only files not yet recorded in the checkpoint. Returns
+    * the rows it drained — the input rows of its micro-batches, as the
+    * refined transform is 1:1 (the query keeps the last
+    * `spark.sql.streaming.numRecentProgressUpdates` batches' progress,
+    * 100 by default; an AvailableNow drain without a per-trigger file
+    * cap is one batch). */
   def drainOnce(spark: SparkSession, rawDir: String, refinedDir: String,
       checkpointDir: String, target: TargetSpec, rawSchema: StructType,
-      runId: String, pathGlobFilter: Option[String] = None): Unit = {
+      runId: String, pathGlobFilter: Option[String] = None): Long = {
     Tuning.withLeanCheckpoints(spark) {
       val q = start(spark, rawDir, refinedDir, checkpointDir, target,
         rawSchema, runId, pathGlobFilter)
       try q.awaitTermination() finally if (q.isActive) q.stop()
+      q.recentProgress.map(_.numInputRows).sum
     }
   }
 }

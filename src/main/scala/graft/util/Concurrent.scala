@@ -6,7 +6,7 @@ package graft.util
   * semantics for the engine's driver-side movers, head reads and footer
   * harvests. One data-plane use goes through here too: a copy-on-write
   * rewrite submits its data write and its change-row write as two
-  * concurrent Spark jobs (`TableCatalog.commitRewrite`), so the two
+  * concurrent Spark jobs (`TableCatalog.stageRewrite`), so the two
   * single-task jobs share the executors instead of queueing.
   */
 object Concurrent {

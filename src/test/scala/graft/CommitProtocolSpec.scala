@@ -123,4 +123,35 @@ class CommitProtocolSpec extends SparkTestBase {
       spark.conf.unset(s"spark.sql.catalog.$gc.root")
     }
   }
+
+  test("concurrent writes through one catalog all write MICROS timestamps and restore the session setting") {
+    val cat = new TableCatalog(spark, tempDir("cp_micros"))
+    val key = "spark.sql.parquet.outputTimestampType"
+    val before = spark.conf.getOption(key)
+    val frames = (0 until 4).map(t => (0 until 3).map(i =>
+      Seq((t * 10L + i, new java.sql.Timestamp(1700000000000L + i))).toDF("k", "ts")))
+    val barrier = new java.util.concurrent.CyclicBarrier(frames.size)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = frames.zipWithIndex.map { case (dfs, t) =>
+      new Thread(() =>
+        try { barrier.await(); dfs.foreach(cat.append(s"D.S.TS$t", _)) }
+        catch { case e: Throwable => errs.add(e) })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join(120000))
+    assert(errs.isEmpty, errs)
+    assert(spark.conf.getOption(key) == before)
+    val footers = frames.indices.flatMap(t => cat.dataFilePaths(s"D.S.TS$t"))
+      .map(f => graft.connector.GraftParquetIO.fileSchema(f,
+        spark.sparkContext.hadoopConfiguration).getFields.get(1).asPrimitiveType())
+    assert(footers.size == 12)
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    footers.foreach { ts =>
+      assert(ts.getPrimitiveTypeName ==
+        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64, ts)
+      assert(ts.getLogicalTypeAnnotation match {
+        case a: TimestampLogicalTypeAnnotation => a.getUnit == TimeUnit.MICROS
+        case _ => false
+      }, ts)
+    }
+  }
 }

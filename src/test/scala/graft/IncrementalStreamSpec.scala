@@ -86,4 +86,38 @@ class IncrementalStreamSpec extends SparkTestBase {
     assert(r2.last._2.rowCount == 1)
     assert(spark.read.parquet(dirs.refinedDir).count() == 3)
   }
+
+  test("streaming-refined drains count their own rows, reading no earlier refined file") {
+    import graft.catalog.TableCatalog
+    import graft.plans.{Pipeline, RunContext, StreamingRefinedDirs}
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val stage = tempDir("stage")
+    val dirs = StreamingRefinedDirs(tempDir("sref"), tempDir("sckpt"))
+    val cfg =
+      """{"Practices": [{"practice_name": "p", "ingest": [{
+           "file_type": "T", "source_type": "file",
+           "source": {"file_pattern": ".*\\.csv$", "delimiter": ","},
+           "snowflake": {"database": "R", "schema": "S", "table": "T",
+             "load_mode": "append",
+             "refined_database": "RF", "refined_schema": "S", "refined_table": "T"}}]}]}"""
+    val spec = IngestConfig.parse(cfg).practices.head.ingest.head
+    val p = new Pipeline(spark, cat, streamingRefined = Some(dirs))
+    val arc = tempDir("arc")
+    def drain(rows: Int): Long = {
+      java.nio.file.Files.write(java.nio.file.Paths.get(stage, s"d$rows.csv"),
+        (1 to rows).map(i => s"$i,ok").mkString("id,status\n", "\n", "\n")
+          .getBytes("UTF-8"))
+      val r = p.run(RunContext(), "p", spec, stage, None, Some(arc))
+      assert(r.map(_._1) == Seq("RAW", "REFINED_STREAM"))
+      r.last._2.rowCount
+    }
+    assert(drain(2) == 2)
+    // the refined store's data files: opened by no later drain
+    val (counts, ops) = CountingLocalFileSystem.watching(s"${dirs.refinedDir}/part-") {
+      Seq(drain(3), drain(1))
+    }
+    assert(counts == Seq(3L, 1L))
+    assert(ops.getOrElse("open", 0L) == 0L, ops)
+    assert(spark.read.parquet(dirs.refinedDir).count() == 6)
+  }
 }

@@ -242,24 +242,19 @@ class PipelineSpec extends SparkTestBase {
     cat.append(refinedT, rowA)
 
     // a catalog that simulates a concurrent writer: the moment the
-    // curated stage pins its read snapshot, a row from ANOTHER refined
-    // run lands in the table
-    val racing = new TableCatalog(spark, root) {
-      private var injected = false
-      override def read(fq: String): org.apache.spark.sql.DataFrame = {
-        val snapshot = super.read(fq)
-        if (fq == refinedT && !injected) {
-          injected = true
-          super.append(fq, snapshot.limit(1)
-            .withColumn("IS_VALID", lit(1))
-            .withColumn("REFINED_PARENT_RUN_ID", lit("runLate"))
-            .withColumn("APPT_ID", lit("RACE_LATE")))
-        }
-        snapshot
-      }
-    }
+    // curated stage pins its snapshot, a row from ANOTHER refined run
+    // lands in the table
+    val racing = racingCatalog(root, refinedT, _
+      .withColumn("IS_VALID", lit(1))
+      .withColumn("REFINED_PARENT_RUN_ID", lit("runLate"))
+      .withColumn("APPT_ID", lit("RACE_LATE")))
+    val v0 = cat.version(refinedT).get
     val r = new CuratedStage(spark, racing).run(RunContext(), "p", spec)
     assert(r.status == "SUCCESS")
+    assert(r.rowCount == 1)
+    assert(cat.read("CURDB.S.APPT").filter(col("APPT_ID") === "RACE_LATE").isEmpty)
+    // the late append, then the clear, rebased onto it
+    assert(cat.version(refinedT).contains(v0 + 2))
     // the mid-stage row survives the clear (blanket IS_VALID=1 would
     // have zeroed it — the reference's race)
     val still = cat.read(refinedT).filter(col("IS_VALID") === 1)
@@ -268,6 +263,94 @@ class PipelineSpec extends SparkTestBase {
     // and the next pass consumes it normally
     new CuratedStage(spark, racing).run(RunContext(), "p", spec)
     assert(cat.read(refinedT).filter(col("IS_VALID") === 1).count() == 0)
+  }
+
+  /** A catalog over `root` that appends one more row to `table` (a row
+    * of it, changed by `late`) the first time a stage pins `table`'s
+    * snapshot: a concurrent writer landing between the pin and the
+    * clear. */
+  private def racingCatalog(root: String, table: String,
+      late: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : TableCatalog = new TableCatalog(spark, root) {
+    private var injected = false
+    override def snapshot(fq: String): graft.catalog.Snapshot = {
+      val pinned = super.snapshot(fq)
+      if (fq == table && !injected) {
+        injected = true
+        super.append(fq, late(readVersion(fq, pinned.version).limit(1)))
+      }
+      pinned
+    }
+  }
+
+  test("refined flag clear is scoped to the pinned snapshot (read-clear race)") {
+    val root = tempDir("wh")
+    val cat = new TableCatalog(spark, root)
+    val stage = tempDir("stage")
+    writeFile(stage, "a.csv",
+      "appt_id,Appt Provider,Appt Location,Appt Status\n{X},\"P, Q\",L,Scheduled\n")
+    val spec = IngestConfig.parse(configJson).practices.head.ingest.head
+    import spark.implicits._
+    cat.append("LK.S.PATIENTS", Seq("zz").toDF("KNOWN_ID"))
+    new Pipeline(spark, cat).run(RunContext(), "p", spec, stage)
+    val rawT = "RAWDB.S.APPT"
+    val refinedT = "REFDB.S.APPT"
+    assert(cat.read(rawT).filter(col("IS_NEW") === 1).isEmpty)
+
+    // flag a fresh RAW batch for run A
+    cat.append(rawT, cat.read(rawT).limit(1)
+      .withColumn("IS_NEW", lit(1))
+      .withColumn("PARENT_RUN_ID", lit("runA"))
+      .withColumn("appt_id", lit("{RACE_A}")))
+    val v0 = cat.version(rawT).get
+    // a RAW append from another run lands right after the pin
+    val racing = racingCatalog(root, rawT, _
+      .withColumn("IS_NEW", lit(1))
+      .withColumn("PARENT_RUN_ID", lit("runLate"))
+      .withColumn("appt_id", lit("{RACE_LATE}")))
+    val r = new RefinedStage(spark, racing).run(RunContext(), "p", spec)
+    assert(r.status == "SUCCESS")
+    assert(r.rowCount == 1)
+    val refinedIds = cat.read(refinedT).select("APPT_ID").as[String].collect().toSet
+    assert(refinedIds("RACE_A") && !refinedIds("RACE_LATE"))
+    // the late row keeps IS_NEW=1: the clear rewrote only the pinned
+    // snapshot's flagged file, and committed by rebase after the append
+    assert(cat.read(rawT).filter(col("IS_NEW") === 1)
+      .select("PARENT_RUN_ID").as[String].collect().toSeq == Seq("runLate"))
+    assert(cat.version(rawT).contains(v0 + 2))
+    // and the next pass consumes it normally
+    assert(new RefinedStage(spark, racing).run(RunContext(), "p", spec).rowCount == 1)
+    assert(cat.read(rawT).filter(col("IS_NEW") === 1).isEmpty)
+    assert(cat.read(refinedT).filter(col("APPT_ID") === "RACE_LATE").count() == 1)
+  }
+
+  test("a failed downstream append leaves both tables and no staging behind") {
+    val root = tempDir("wh")
+    val cat = new TableCatalog(spark, root)
+    val spec = IngestConfig.parse(configJson).practices.head.ingest.head
+    import spark.implicits._
+    cat.append("LK.S.PATIENTS", Seq("zz").toDF("KNOWN_ID"))
+    def stageFile(id: String): String = {
+      val stage = tempDir("stage")
+      writeFile(stage, "a.csv",
+        s"appt_id,Appt Provider,Appt Location,Appt Status\n{$id},P,L,Scheduled\n")
+      stage
+    }
+    new Pipeline(spark, cat).run(RunContext(), "p", spec, stageFile("OK"))
+    val rawT = "RAWDB.S.APPT"
+    val refinedT = "REFDB.S.APPT"
+    cat.alterAddCheck(refinedT, "no_bad", "APPT_ID <> 'BAD'")
+    assert(new RawStage(spark, cat).run(RunContext(), "p", spec, stageFile("BAD"))
+      .status == "SUCCESS")
+    val before = Seq(rawT, refinedT).map(t => t -> cat.version(t).get)
+    // the append violates the target's CHECK while the clear is staged
+    intercept[Exception](new RefinedStage(spark, cat).run(RunContext(), "p", spec))
+    assert(Seq(rawT, refinedT).map(t => t -> cat.version(t).get) == before)
+    assert(cat.read(rawT).filter(col("IS_NEW") === 1)
+      .select("APPT_ID").as[String].collect().toSeq == Seq("{BAD}"))
+    assert(cat.read(refinedT).select("APPT_ID").as[String].collect().toSeq == Seq("OK"))
+    val staging = new java.io.File(root, "_staging")
+    assert(Option(staging.list()).forall(_.isEmpty), Option(staging.list()).map(_.toSeq))
   }
 
   /** A customer drop of the oracle practice (`QueriesPipeline`): `n`
@@ -342,14 +425,14 @@ class PipelineSpec extends SparkTestBase {
     drop(0); drop(1) // tables exist: the third drop is a steady-state one
     val (jobs, shuffles) = jobsOf(drop(2))
     // PRECHECK: line counts + log; RAW: append + log (the header is read
-    // on the driver); REFINED: run stats + append + the flag clear's data
-    // and change writes + log; CURATED: consumed run ids + the append's
-    // lookup (broadcast, write) + the flag clear's two writes + log
-    assert(jobs == Map("PRECHECK" -> 2, "RAW" -> 2, "REFINED" -> 5, "CURATED" -> 7))
+    // on the driver); REFINED: append + the flag clear's data and change
+    // writes (staged beside it) + log; CURATED: the append's lookup
+    // (broadcast, write) + the flag clear's two writes + log
+    assert(jobs == Map("PRECHECK" -> 2, "RAW" -> 2, "REFINED" -> 4, "CURATED" -> 5))
     assert(shuffles.isEmpty, s"shuffle stages by group: $shuffles")
   }
 
-  test("one accepted Pipeline.run drop is 13 Spark jobs and 6 commits") {
+  test("one accepted Pipeline.run drop is 10 Spark jobs and 6 commits") {
     val cat = new TableCatalog(spark, tempDir("wh"))
     val logTable = "LOG.S.INGEST_LOG"
     val log = new IngestLog(spark, cat, logTable)
@@ -367,8 +450,8 @@ class PipelineSpec extends SparkTestBase {
     val (jobs, shuffles) = jobsOf { r = drop(2) }
     assert(r.map(_._1) == Seq("PRECHECK", "RAW", "REFINED", "CURATED"))
     assert(r.forall(_._2.status == "SUCCESS"), r)
-    // PRECHECK 1, RAW 1, REFINED 4, CURATED 6, the run's log commit 1
-    assert(jobs == Map("none" -> 13))
+    // PRECHECK 1, RAW 1, REFINED 3, CURATED 4, the run's log commit 1
+    assert(jobs == Map("none" -> 10))
     assert(shuffles.isEmpty, s"shuffle stages: $shuffles")
     // RAW append and flag clear, REFINED append and flag clear, CURATED
     // append, one log commit
