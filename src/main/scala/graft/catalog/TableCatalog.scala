@@ -1957,13 +1957,23 @@ class TableCatalog(spark: SparkSession, root: String,
   /** Build (incrementally) the per-file bloom index on `column` for the
     * live version's chain. Files already carrying an entry in their
     * owning version's sidecar are skipped, so steady-state cost after
-    * an append is O(delta files), and ONE Spark job hashes all missing
-    * files' keys and builds every bloom in a single pass (grouped by
-    * `_metadata.file_path` — no job-per-file). Bitsets are sized from
-    * `_STATS` footer row counts at ~10 bits/row: a 1M-row 128 MB file
-    * carries a ~1.25 MB sidecar entry, index-not-data sized, which is
-    * why the per-file blooms may come back through the driver. Returns
-    * the number of files indexed by this call. */
+    * an append is O(delta files). ONE Spark job with no shuffle stage
+    * builds every missing file's bitset: each task sets the bits of the
+    * rows it reads into one bitset per file (it parses a file's
+    * `_metadata.file_path` when the path changes, not per row), and
+    * the driver ORs the bitsets of a file split across tasks as task
+    * results arrive (a bloom over a union of rows is the OR of the
+    * blooms over its parts), holding one bitset per file. Bitsets are
+    * sized from `_STATS` footer row counts at ~10 bits/row: a 1M-row
+    * 128 MB file carries a ~1.25 MB sidecar entry, index-not-data
+    * sized, which is why the per-file blooms may come back through the
+    * driver. Each task returns a full-size bitset for every file it
+    * touched, even one it read only a few row groups of, so the task
+    * results (counted against `spark.driver.maxResultSize`) total up to
+    * (tasks per file) x (bitset size) per file, where a single collect
+    * of finished blooms sent one bitset per file; the driver still
+    * holds one bitset per file. Returns the number of files indexed by
+    * this call. */
   def buildBloomIndex(fq: String, column: String): Int = {
     val s = snapshot(fq)
     require(!s.partitionColumns.contains(column),
@@ -1981,32 +1991,25 @@ class TableCatalog(spark: SparkSession, root: String,
       while (m < n * 10) m <<= 1
       f.key -> (m / 64).toInt
     }.toMap
-    import spark.implicits._
-    val nh = TableCatalog.BloomHashes
-    val built = readPhysical(s, missing,
-        _.select(col("_metadata.file_path").as("f"),
-          xxhash64(col(colPhys).cast("string")).as("h")))
-      .as[(String, Long)]
-      .map { case (f, h) => (new Path(f).toUri.getPath, h) } // drop scheme
-      .groupByKey(_._1)
-      .mapGroups { (f, it) =>
-        val bits = Array.ofDim[Long](wordsOf(f)) // |missing|-sized closure map
-        val m = bits.length * 64L
-        it.foreach { case (_, h) =>
-          val h2 = (h >>> 32) | 1L
-          var i = 0
-          while (i < nh) {
-            val pos = java.lang.Math.floorMod(h + i * h2, m).toInt
-            bits(pos >> 6) |= 1L << (pos & 63)
-            i += 1
-          }
+    val rows = readPhysical(s, missing,
+        _.select(col("_metadata.file_path"),
+          xxhash64(col(colPhys).cast("string"))))
+      .queryExecution.toRdd
+    val built = scala.collection.mutable.HashMap.empty[String, Array[Long]]
+    spark.sparkContext.runJob(rows,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+        TableCatalog.bloomPartials(it, wordsOf),
+      (_: Int, part: Map[String, Array[Long]]) => part.foreach { case (f, bits) =>
+        built.get(f) match { // a file split across tasks: OR its parts
+          case Some(acc) => bits.indices.foreach(i => acc(i) |= bits(i))
+          case None => built(f) = bits
         }
-        (f, bits)
-      }.collect()
+      })
     built.toSeq.groupBy { case (f, _) => versionAncestor(new Path(f)) }
       .foreach { case (dir, entries) =>
+        val rebuilt = entries.map(_._1).toSet
         val keep = bloomEntries(dir).filterNot { case (f, c, _) =>
-          c == colPhys && entries.exists(_._1 == f) }
+          c == colPhys && rebuilt(f) }
         val all = keep ++ entries.map { case (f, b) => (f, colPhys, b) }
         val lines = all.sortBy(t => (t._1, t._2)).map { case (f, c, bits) =>
           val bb = java.nio.ByteBuffer.allocate(bits.length * 8)
@@ -2960,6 +2963,37 @@ object TableCatalog {
     val m = words * 64L
     val h2 = (h >>> 32) | 1L // odd second hash → full-period double hashing
     (0 until BloomHashes).map(i => java.lang.Math.floorMod(h + i * h2, m).toInt)
+  }
+
+  /** One task's bloom bitsets over its rows of (`_metadata.file_path`,
+    * key hash), by file key, each `wordsOf(key)` words long. A file's
+    * rows arrive together, so the raw path is compared with the previous
+    * row's and parsed into its key once per file, not once per row. */
+  private[catalog] def bloomPartials(
+      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      wordsOf: Map[String, Int]): Map[String, Array[Long]] = {
+    val byKey = scala.collection.mutable.HashMap.empty[String, Array[Long]]
+    var raw: org.apache.spark.unsafe.types.UTF8String = null
+    var bits: Array[Long] = null
+    var m = 0L
+    rows.foreach { r =>
+      val f = r.getUTF8String(0)
+      if (raw == null || f != raw) {
+        raw = f.clone() // the row's buffer is reused
+        val key = new Path(raw.toString).toUri.getPath // drop scheme
+        bits = byKey.getOrElseUpdate(key, Array.ofDim[Long](wordsOf(key)))
+        m = bits.length * 64L
+      }
+      val h = r.getLong(1)
+      val h2 = (h >>> 32) | 1L
+      var i = 0
+      while (i < BloomHashes) { // the positions bloomBitPositions probes
+        val pos = java.lang.Math.floorMod(h + i * h2, m).toInt
+        bits(pos >> 6) |= 1L << (pos & 63)
+        i += 1
+      }
+    }
+    byKey.toMap
   }
 
   /** May a bloom bitset hold `value` (in its canonical string form)? */

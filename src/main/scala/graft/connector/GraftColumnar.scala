@@ -2,7 +2,7 @@ package graft.connector
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapred.{FileSplit, JobConf}
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetInputFormat
@@ -84,7 +84,9 @@ class GraftColumnarReader(slices: Seq[GraftSlice], schema: StructType,
       .getOrElse(dataFields.length + partIdx(f.name)))
     needsPerm = !outPerm.zipWithIndex.forall { case (p, i) => p == i }
 
-    val conf = new Configuration(hadoopConf) // per-slice mutations below
+    // per-slice mutations below; a JobConf, so TaskAttemptContextImpl
+    // takes it as is instead of copying it once more
+    val conf = new JobConf(hadoopConf)
     // the conf keys SpecificParquetRecordReaderBase.initialize reads:
     // Spark's ParquetReadSupport clips the file schema to the
     // requested Catalyst schema (nested pruning included); columns the

@@ -714,9 +714,12 @@ class GraftReaderFactory(schema: StructType, limit: Int,
     physOf: Map[String, String] = Map.empty)
     extends PartitionReaderFactory {
   // null only when constructed by old callers/tests: executor falls
-  // back to classpath defaults, exactly the pre-propagation behavior
+  // back to classpath defaults, exactly the pre-propagation behavior.
+  // The readers never mutate it (the row reader's opens copy it, the
+  // columnar reader builds a per-slice JobConf from it), so each reader
+  // shares the shipped instance instead of copying it.
   private def hadoopConf: Configuration =
-    if (conf == null) new Configuration() else new Configuration(conf.value)
+    if (conf == null) new Configuration() else conf.value
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {

@@ -332,15 +332,6 @@ class Round8Spec extends SparkTestBase {
     assert(cat.readVersion(t, 18).count() == 19)
   }
 
-  private def withConf(kvs: (String, String)*)(body: => Unit): Unit = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   // ---- partitioned streaming sink -----------------------------------------
 
   test("streaming sink writes hive-partitioned tables, exactly once") {

@@ -11,16 +11,6 @@ import graft.operators.Dedup
 class SortedVerifySpec extends SparkTestBase {
   import spark.implicits._
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   // one- to three-symbol strings over an alphabet whose UTF-16 order
   // and UTF-8 byte order disagree: U+FF21 sorts above the surrogate
   // pair of U+1F600 in UTF-16, below its 4-byte UTF-8 form
